@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -23,7 +21,13 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Harness.cores
+    // SPARK_GRAFT_ONLY=a,b,c restricts the run (scaling decades over
+    // partial table sets, e.g. the 100x documents/events/embeddings dir,
+    // where the TPC-H-family queries have no inputs); driver runs use
+    // the full registry.
+    val names = SparkEntry.queries.keys.toSeq.sorted
+      .filter(Harness.selectedQueries)
     // ENVIRONMENT SELF-CERTIFICATION — measured before the session spins
     // up and recorded in the JSON line. BENCH_r15 was taken while a
     // leftover 8-core Verify JVM churned the same box, and its 2.05×
@@ -66,45 +70,7 @@ object Bench {
       System.err.println(f"[bench] WARNING: contended box at start — " +
         f"load1=$loadAtStart%.2f, other JVMs=$otherJvms; timings below " +
         "measure the CONTENTION, not the engine")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // the production registration path (README "SQL surface"): the
-      // injected vec_*/token/shingle functions and the asof strategy are
-      // session-wide, and the registered sql_surface query runs pure SQL
-      // text against them
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // SANDBOX-LAYOUT CONFIG — do not copy into a deployment. This
-      // harness's inputs are MB-scale, so heavy per-row work (regex,
-      // char-gram hashing, 64-dim vector folds, 1000-query broadcast
-      // ranking) lands on ONE 128 MB-default split and runs single-core
-      // (measured 2622 s -> 86 s on sim_knn at the 100x decade). 8 MB
-      // splits fix that HERE; on a 100 TB corpus the same setting means
-      // ~12.5M tasks per scan — at scale keep the default split size and
-      // rely on the per-operator widen() (Similarity.scala), which
-      // repartitions only when a scan yields fewer splits than cores.
-      // openCost=1m keeps many-small-file dirs from collapsing into a
-      // single packed partition for the same reason. See README
-      // "Operational notes".
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      // pinned at session build (Tables.events requires it): driver
-      // corpora have stored events.ts as parquet TIMESTAMP(NANOS)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Spark 4.x writes a companion .checksum per checkpoint file (state
-      // deltas, offset/commit logs, sink metadata) to detect filesystem
-      // corruption. On this harness's local tmpdir that doubles the
-      // small-file IO of every micro-batch commit for no benefit (a local
-      // ext4 read-back corrupting silently is not the failure mode the
-      // bench guards); the stream-stream join alone commits 4 state
-      // stores x 8 partitions x ~6 batches per run. A deployment on an
-      // object store SHOULD leave the default (true) on.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus)
 
     // Warmup: JVM/codegen/scan-path initialization off the clock.
     // (first table that exists — partial-table scaling dirs have no
@@ -114,21 +80,6 @@ object Bench {
       .map(t => new java.io.File(s"$sfDir/$t.parquet")).find(_.exists())
       .foreach(f => spark.read.parquet(f.getPath).count())
 
-    // SPARK_GRAFT_ONLY=a,b,c restricts the run (scaling decades over
-    // partial table sets, e.g. the 100x documents/events/embeddings dir,
-    // where the TPC-H-family queries have no inputs); driver runs use
-    // the full registry.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // a typo'd ONLY name would otherwise silently yield an empty/partial
-    // run that looks like a legitimate benchmark result
-    only.foreach { o =>
-      val unknown = o.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in the registry: ${unknown.toSeq.sorted.mkString(",")}")
-    }
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
     // A query that throws is recorded as -1, never as a normal-looking
     // elapsed time (a failure must be distinguishable in the JSON).
     //
@@ -149,14 +100,10 @@ object Bench {
           (System.nanoTime() - t0) / 1e9
         }
         catch { case _: Throwable => -1.0 }
-      // Same post-query sweep as Verify: queries share state across the
-      // registry only through FILES, never cached RDDs, so freeing each
-      // query's pinned blocks (localCheckpoint frames) is output-neutral
-      // — and Bench accumulates the same block-manager residue over its
-      // up-to-3 passes per query that killed the sf10 Verify run.
-      // Outside the timed window: harness hygiene, not query cost.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // Bench accumulates the same block-manager residue over its up-to-3
+      // passes per query that killed the sf10 Verify run. Outside the
+      // timed window: harness hygiene, not query cost.
+      Harness.unpersistAll(spark)
       elapsed
     }
     val p1 = names.map(n => n -> run(n)).toMap
@@ -219,20 +166,23 @@ object Bench {
     // Full-precision, uncapped dump for offline analysis (scaling curves):
     // SPARK_GRAFT_BENCH_OUT=path writes every query's timing to a file,
     // where the stdout line stays within the driver's tail budget. When
-    // the env var is unset the dump still lands at a FIXED sidecar under
-    // java.io.tmpdir — a parse failure on the stdout side (the r16
-    // driver adjudication lost its whole round-over-round table to one)
-    // then never orphans the measurement. Additions only; the stdout
-    // schema is unchanged.
+    // the env var is unset the dump still lands at a sidecar under
+    // java.io.tmpdir, named by the application id so concurrent Bench
+    // JVMs never clobber each other — a parse failure on the stdout side
+    // (the r16 driver adjudication lost its whole round-over-round table
+    // to one) then never orphans the measurement. A failed write is
+    // logged and never suppresses the stdout line. Additions only; the
+    // stdout schema is unchanged.
     val sidecar = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      new java.io.File(sys.props("java.io.tmpdir"), "graft_bench_last.json")
-        .getAbsolutePath)
-    locally {
-      val full = results.map { case (k, v) => "\"" + k + "\":" + num("%.3f", v) }
-        .mkString("{", ",", "}")
-      val json = s"""{"total":$total,"queries":$full,"failed":$failedJson,"streaming_sec":$streamingSec,"streaming_n":$streamingN$prevRegistryJson$env,"sf":"$sfDir","cpus":$cpus}"""
-      java.nio.file.Files.write(java.nio.file.Paths.get(sidecar),
-        json.getBytes("UTF-8"))
+      new java.io.File(sys.props("java.io.tmpdir"),
+        s"graft_bench_${spark.sparkContext.applicationId}.json").getAbsolutePath)
+    val full = results.map { case (k, v) => "\"" + k + "\":" + num("%.3f", v) }
+      .mkString("{", ",", "}")
+    val json = s"""{"total":$total,"queries":$full,"failed":$failedJson,"streaming_sec":$streamingSec,"streaming_n":$streamingN$prevRegistryJson$env,"sf":"$sfDir","cpus":$cpus}"""
+    scala.util.Try(java.nio.file.Files.write(java.nio.file.Paths.get(sidecar),
+      json.getBytes("UTF-8"))) match {
+      case scala.util.Success(_) => System.err.println(s"[bench] sidecar: $sidecar")
+      case scala.util.Failure(e) => System.err.println(s"[bench] sidecar write to $sidecar failed: $e")
     }
     // stop() BEFORE the metric line: Spark shutdown must not interleave
     // anything with (or after) the one JSON line the driver tails —

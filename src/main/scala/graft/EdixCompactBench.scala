@@ -1,15 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.rmTree
 import org.apache.spark.sql.functions._
 
 /** Compaction benchmark for the STORED embed near-dup index
-  * (`runMain graft.EdixCompactBench <sfDir> <batches>`): the
-  * [[NdixCompactBench]] protocol applied to the third stored-artifact
-  * family — prices what N append batches cost every
-  * [[graft.operators.Dedup.probeEmbedDups]] (one candidate equi-join per
-  * storage root per probe, plus the per-root file opens) and what
-  * [[graft.operators.Dedup.embedDupCompact]] buys back.
+  * (`runMain graft.EdixCompactBench <sfDir> <batches>`): "a continuous
+  * ingest has committed N append batches; what does every probe pay for
+  * the N extra roots, and what does the fold buy back?" — prices what N
+  * append batches cost every [[graft.operators.Dedup.probeEmbedDups]]
+  * (one candidate equi-join per storage root per probe, plus the
+  * per-root file opens) and what [[graft.operators.Dedup.embedDupCompact]]
+  * buys back.
   *
   * Setup mirrors the registered dedup_embed_incremental split: the
   * corpus (vec_id % 10 =!= 0) is indexed as a build over its even half
@@ -26,22 +27,6 @@ import org.apache.spark.sql.functions._
   * operating points live in COMPACT.md. */
 object EdixCompactBench {
 
-  private def session(): SparkSession = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      // SANDBOX-LAYOUT CONFIG (see Bench): not deployment advice
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   private def time(f: => Unit): Double = {
     val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
   }
@@ -49,14 +34,10 @@ object EdixCompactBench {
   private def fmt(v: Double, d: Int = 1) =
     String.format(java.util.Locale.ROOT, s"%.${d}f", Double.box(v))
 
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-  }
-
   def main(args: Array[String]): Unit = {
     val Array(dir, batchesStr) = args.take(2)
     val batches = batchesStr.toInt
-    val spark = session()
+    val spark = Harness.session(Harness.cores)
     import operators.Dedup
     val emb = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("embedding"))

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Plan auditor: dumps `explain(formatted)` for EVERY registered batch
   * query so plan quality (pushdown, pruning, broadcast selection, codegen
@@ -48,20 +47,9 @@ object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("/tmp/explain_audit.md")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      // production registration path — the registry includes sql_surface,
-      // which resolves only under the injected functions (see Bench)
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // pinned at session build (Tables.events requires it): driver
-      // corpora have stored events.ts as parquet TIMESTAMP(NANOS)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // pinned like the test suites: EXPLAIN.md quotes partition counts,
+    // so the dump must not depend on the host's core count
+    val spark = Harness.session(8)
     val rest = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(SparkEntry.streamingQueries).filterNot(Audited.contains)
     val sb = new StringBuilder("# Plan audit\n")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.rmTree
 import org.apache.spark.sql.functions._
 
 /** Incremental-ingest cost benchmark for the stored IVF index
@@ -44,31 +44,12 @@ object IvfAppendBench {
 
   private val K = 5
 
-  private def session(): SparkSession = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      // SANDBOX-LAYOUT CONFIG (see Bench): not deployment advice
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   private def time(f: => Unit): Double = {
     val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
   }
 
   private def fmt(v: Double, d: Int = 1) =
     String.format(java.util.Locale.ROOT, s"%.${d}f", Double.box(v))
-
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-  }
 
   def main(args: Array[String]): Unit = {
     if (args.length == 2) return drift(args(0), args(1).toInt, None)
@@ -81,7 +62,7 @@ object IvfAppendBench {
     if (args.length == 4 && args(2) == "refit")
       return refit(args(0), args(1).toInt, args(3).toDouble)
     val Array(dir) = args
-    val spark = session()
+    val spark = Harness.session(Harness.cores)
 
     val e = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
@@ -130,7 +111,7 @@ object IvfAppendBench {
     * is the ceiling a scheduled re-ivfBuild recovers. */
   private def drift(dir: String, installments: Int,
                     shiftFrac: Option[Double]): Unit = {
-    val spark = session()
+    val spark = Harness.session(Harness.cores)
     val raw = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
     val baseQueries = raw.filter(col("vec_id") % 50 === 0 && col("vec_id") < 2000)
@@ -284,7 +265,7 @@ object IvfAppendBench {
     * the rebuild's own concentration as the refit's target. Committed
     * numbers live in RECALL.md (refit section). */
   private def refit(dir: String, installments: Int, frac: Double): Unit = {
-    val spark = session()
+    val spark = Harness.session(Harness.cores)
     val raw = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
     val dim = 64
@@ -372,7 +353,7 @@ object IvfAppendBench {
   }
 
   private def compact(dir: String, batches: Int, shiftFrac: Option[Double]): Unit = {
-    val spark = session()
+    val spark = Harness.session(Harness.cores)
     val raw = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
     val e = shiftFrac match {

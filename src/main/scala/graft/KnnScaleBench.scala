@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Fixed-query-set ANN serving benchmark on a PLANTED-NEAR-NEIGHBOR
@@ -33,19 +32,7 @@ object KnnScaleBench {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: KnnScaleBench <sfDir>...")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      // SANDBOX-LAYOUT CONFIG (see Bench): vector-fold scans are far
-      // heavier per byte than the 128 MB split default assumes at this
-      // harness's MB-scale footprints. Not deployment advice.
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cores)
 
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -107,11 +94,8 @@ object KnnScaleBench {
       // the staged corpus copy (and the index built from it) served its
       // measurements — delete both, or one full corpus copy per
       // (JVM, dir) run leaks into tmpdir (≈10 GB at the 2×10⁷ row)
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete()
-      }
-      rmTree(staged)
-      rmTree(new java.io.File(idx))
+      core.rmTree(staged)
+      core.rmTree(new java.io.File(idx))
       s"""{"dir":"$dir","corpus":$n,"nlist":$nlist,"nprobe":$nprobe,""" +
         s""""fit_sec":${fmt(fitSec)},"exact_sec":${fmt(tExact)},""" +
         s""""ivf_probe_sec":${fmt(tProbe)},"recall_at5":${fmt(recall, 3)},""" +

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Recall@k / latency sweep for the approximate kNN variants against the
@@ -19,14 +18,7 @@ object RecallBench {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: RecallBench <sfDir>...")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cores)
 
     def fmt(v: Double, d: Int = 3) =
       String.format(java.util.Locale.ROOT, s"%.${d}f", Double.box(v))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up generator: writes an N-times larger copy of a
@@ -44,14 +44,7 @@ object ScaleData {
       case Some(list) => list.split(",").map(_.trim).toSet
       case None => _ => true
     }
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cores)
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
     // Scaled FACT tables are written as MULTIPLE files: a single-file

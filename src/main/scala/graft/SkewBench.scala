@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** AQE-vs-salting crossover measurement (the operational question a
@@ -28,15 +28,8 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_SKEW_ROWS", "20000000").toLong
     val dimK = 100000L
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cores)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
     // half the fact rows hit key 0; the rest spread uniformly
     def fact: DataFrame = spark.range(n).select(

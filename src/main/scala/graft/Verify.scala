@@ -1,70 +1,31 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // production registration path — sql_surface runs pure SQL text
-      // against the extension-injected functions (see Bench)
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // SANDBOX-LAYOUT CONFIG (see Bench for the full rationale): MB-
-      // scale inputs + heavy per-row work would serialize onto one core
-      // under the 128 MB default. Not deployment advice — at 100 TB keep
-      // the default split size; per-operator widen() covers the
-      // principled case.
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      // pinned at session build (Tables.events requires it): driver
-      // corpora have stored events.ts as parquet TIMESTAMP(NANOS)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-tmpdir harness: skip the per-checkpoint-file .checksum
-      // companions (see the Bench builder note; deployments on object
-      // stores keep the default)
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // GC-pause tolerance: a correctness dump is not latency-sensitive,
-      // but the 100x decade's giant window sorts can drive full-GC
-      // pauses long enough that the LOCAL executor misses 60 heartbeats
-      // at the 10s default and exits ("unable to send heartbeats to
-      // driver more than 60 times" — observed at sf10: SparkContext shut
-      // down mid-registry, every later query dead). 60s intervals give
-      // the same 60-miss budget an hour of cumulative pause tolerance.
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=a,b,c restricts the dump (local scaling-dir runs
     // over partial table sets or targeted re-checks); driver runs leave
-    // it unset and dump everything. Unknown names fail fast, like Bench.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { o =>
-      val unknown = o.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in the registry: ${unknown.toSeq.sorted.mkString(",")}")
-      // A partial dump REPLACES oracle_sql.json with only the subset; if
-      // the outDir already holds other queries' parquet, a later
-      // check_oracle run would validate just the subset while the stale
-      // full outputs sit alongside — a partial run silently reading as a
-      // full pass. Refuse rather than inherit: partial runs need a fresh
-      // (or same-subset) outDir.
-      val stale = Option(new java.io.File(outDir).list()).getOrElse(Array.empty[String])
-        .filter(SparkEntry.queries.keySet).filterNot(o).sorted
-      require(stale.isEmpty,
-        s"outDir $outDir already contains dumps outside SPARK_GRAFT_ONLY " +
-          s"(${stale.take(5).mkString(", ")}${if (stale.length > 5) ", ..." else ""}); " +
-          "use a fresh outDir for partial runs")
-    }
+    // it unset and dump everything.
+    val selected = Harness.selectedQueries
+    val spark = Harness.session(Harness.cores)
+    new java.io.File(outDir).mkdirs()
+    // A partial dump REPLACES oracle_sql.json with only the subset; if
+    // the outDir already holds other queries' parquet, a later
+    // check_oracle run would validate just the subset while the stale
+    // full outputs sit alongside — a partial run silently reading as a
+    // full pass. Refuse rather than inherit: partial runs need a fresh
+    // (or same-subset) outDir. A full run selects every name, so it
+    // never trips this.
+    val stale = Option(new java.io.File(outDir).list()).getOrElse(Array.empty[String])
+      .filter(SparkEntry.queries.keySet).filterNot(selected).sorted
+    require(stale.isEmpty,
+      s"outDir $outDir already contains dumps outside SPARK_GRAFT_ONLY " +
+        s"(${stale.take(5).mkString(", ")}${if (stale.length > 5) ", ..." else ""}); " +
+        "use a fresh outDir for partial runs")
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
         // The sweep below keeps this invariant; enforcing it at every
         // query START turns "a future query pins a frame for cross-query
@@ -85,8 +46,7 @@ object Verify {
         // fails TWICE is a real defect and stays missing (the chain's
         // dump-count gate catches it).
         val ok = Iterator.range(0, 2).exists { attempt =>
-          if (attempt > 0) spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
+          if (attempt > 0) Harness.unpersistAll(spark, blocking = true)
           try {
             fn(spark, sfDir).coalesce(1).write.mode("overwrite")
               .parquet(s"$outDir/$name")
@@ -107,21 +67,9 @@ object Verify {
           // slip through every gate on the strength of its own debris
           // (oracled queries are still caught by the hash compare either
           // way). Deleting makes the count gate genuinely fire.
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(new java.io.File(s"$outDir/$name"))
+          core.rmTree(new java.io.File(s"$outDir/$name"))
         }
-        // Free the finished query's pinned blocks (localCheckpoint /
-        // persist frames). Registered queries share state across the
-        // registry ONLY through files (IVF index dirs, staged feeds) —
-        // never through cached RDDs — so the sweep is output-neutral.
-        // Without it, block-manager residue accumulates across the
-        // registry and the heaviest-shuffle queries die at the big
-        // decades (observed: 129-query sf10 run failed dedup_ngram at
-        // 16g while the same query passed isolated at the same commit).
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        Harness.unpersistAll(spark)
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -136,7 +84,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
+      .filter { case (k, _) => selected(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -112,6 +112,13 @@ package object core {
     }
   }
 
+  /** Delete `f` and everything under it; a missing path is a no-op. */
+  def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmTree))
+    f.delete()
+    ()
+  }
+
   private val sinkCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Unique memory-sink name per invocation (Bench runs a query up to 3

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.rmTree
 
 /** Reusable deduplication operators over arbitrary DataFrames — the
   * library surface behind `DedupQueries` (NS mandate).
@@ -720,12 +721,6 @@ object Dedup {
     val plan = c.queryExecution.analyzed.canonicalized.toString
     java.security.MessageDigest.getInstance("MD5")
       .digest(plan.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete()
-    ()
   }
 
   /** CHECKED manifest commit for BOTH dedup manifests —

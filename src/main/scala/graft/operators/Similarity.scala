@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.rmTree
 import graft.functions.VectorFunctions._
 
 /** Reusable similarity-search operators (NS mandate) — the library surface
@@ -717,12 +718,6 @@ object Similarity {
     writeManifest(indexDir,
       IvfManifest(n, fp, nlist, dim, FingerprintVersion, nlist0 = nlist))
     validated.put(indexDir, (corpusKey(c), nlist))
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete()
-    ()
   }
 
   /** Session-scoped record of indexDirs whose manifest has already been

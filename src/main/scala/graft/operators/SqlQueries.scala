@@ -4,13 +4,14 @@ import graft.core._
 import graft.sources.Tables
 
 /** The session-wide SQL surface a production user gets from
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` (or
+  * `withExtensions(new GraftExtensions)` on the session builder (or
   * `--conf spark.sql.extensions=graft.GraftExtensions`), proven
   * end-to-end: `sql_surface` is PURE SQL TEXT over a registered temp
   * view, resolved entirely by the extension-injected functions — no
-  * Scala Column API anywhere in the query. The harness sessions
-  * (Bench / Verify / the test base) are built through that exact
-  * production path, so the registered query exercises what a real
+  * Scala Column API anywhere in the query. The harness session
+  * ([[graft.Harness]], shared by every main and the test suites) is
+  * built through that exact production path, so the registered query
+  * exercises what a real
   * `spark.sql` caller sees, and its DuckDB oracle holds the injected
   * functions to the same bit-exactness contract as the Column API
   * (the folds are the same codegen'd expressions either way).

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import graft.core.rmTree
 import graft.operators.Similarity
 
 /** Streaming ingest into a stored IVF index: every arriving micro-batch
@@ -85,11 +86,5 @@ object IvfIngest {
       .start()
     try WeatherStream.runChunked(q, Seq(feed))
     finally q.stop()
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete()
-    ()
   }
 }

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.core.rmTree
 
 /** Structured-Streaming surface of the engine (SURVEY.md §2A O8-O13, O23;
   * §7.1 step 7): the reference is a 15-minute-trigger micro-batch pipeline
@@ -110,11 +111,6 @@ object WeatherStream {
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[RainState, RainObs](
         OutputMode.Append, GroupStateTimeout.NoTimeout)(updateRain)
-  }
-
-  private[streaming] def wipe(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-    f.delete(); ()
   }
 
   /** Default chunk count for the registered queries' replay feeds: 3
@@ -271,8 +267,16 @@ object WeatherStream {
       staged.put(stage.getAbsolutePath, bs)
       bs
     }
+    // The epilogue is staged only alongside the chunks. If the bounds were
+    // cached by an epilogue-less construction over the same dir, the final
+    // watermark batch would never run and the stream would silently emit
+    // no windows; fail here instead.
+    if (epilogue.isDefined &&
+        !Option(epiDir.listFiles()).exists(_.exists(_.getName.startsWith("part-"))))
+      throw new IllegalStateException(
+        s"epilogue dir ${epiDir.getAbsolutePath} holds no part- file")
     val live = new java.io.File(dir, "live")
-    wipe(live)
+    rmTree(live)
     live.mkdirs()
     val stream = s.readStream
       .schema(readings.schema)
@@ -313,12 +317,8 @@ object WeatherStream {
     * nothing, and swallows IllegalStateException for a tmpRoot call that
     * lands after shutdown has begun (the hook could not run anyway). */
   private lazy val wipeHook: Unit =
-    try Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      wipedRoots.forEach(p => rm(new java.io.File(p)))
-    }))
+    try Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      wipedRoots.forEach(p => rmTree(new java.io.File(p)))))
     catch { case _: IllegalStateException => () }
   private def tmpRoot(s: org.apache.spark.sql.SparkSession): java.io.File = {
     val root = new java.io.File(sys.props("java.io.tmpdir"),
@@ -361,7 +361,7 @@ object WeatherStream {
   def drainToParquet(df: DataFrame, name: String, feeds: ChunkedFeed*): DataFrame = {
     val s = df.sparkSession
     val base = new java.io.File(tmpRoot(s), s"sink_$name")
-    wipe(base)
+    rmTree(base)
     val q = startParquetSink(df, base)
     try runChunked(q, feeds) finally q.stop()
     readParquetSink(s, base)
@@ -382,7 +382,7 @@ object WeatherStream {
                             feeds: ChunkedFeed*): DataFrame = {
     val s = df.sparkSession
     val base = new java.io.File(tmpRoot(s), s"sink_$name")
-    wipe(base)
+    rmTree(base)
     val q1 = startParquetSink(df, base)
     try {
       var i = 0
@@ -414,7 +414,7 @@ object WeatherStream {
                         feeds: ChunkedFeed*): DataFrame = {
     val s = df.sparkSession
     val base = new java.io.File(tmpRoot(s), s"sink_$name")
-    wipe(base)
+    rmTree(base)
     val out = new java.io.File(base, "out")
     val q = df.writeStream
       .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>

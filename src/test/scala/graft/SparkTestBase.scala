@@ -11,26 +11,8 @@ trait SparkTestBase {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-tests")
-      // production registration path — specs exercising sql_surface (and
-      // any SQL-text use of the injected functions) see the same
-      // session-wide surface Bench/Verify run with
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      // pinned at session build (Tables.events requires it): driver
-      // corpora have stored events.ts as parquet TIMESTAMP(NANOS)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-tmpdir harness: skip per-checkpoint-file .checksum
-      // companions (see the Bench builder note)
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The Bench/Verify session (same confs, so the suites run what Bench
+    * measures), with the suites' own warehouse path. */
+  lazy val session: SparkSession =
+    Harness.session(8, "spark.sql.warehouse.dir" -> "/tmp/graft_warehouse")
 }

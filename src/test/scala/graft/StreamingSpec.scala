@@ -310,6 +310,24 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(streamed === batch)
   }
 
+  test("a feed whose epilogue was never staged fails fast, naming the dir") {
+    // An epilogue-less construction caches the staged bounds for the dir;
+    // a later construction over the same dir that asks for an epilogue
+    // would otherwise get a feed whose final chunk publishes nothing, so
+    // its closing watermark batch never runs and no window is emitted.
+    val ev = (0 until 8).map(i => (i.toLong, ts(i), 1.0)).toDF("event_id", "ts", "value")
+    val dir = java.nio.file.Files.createTempDirectory("epilogue_").toFile
+    val src = new java.io.File(dir, "src").getAbsolutePath
+    WeatherStream.chunkedFileFeedDF(ev, "ts", src)
+    val epiDir = new java.io.File(src, "chunks/epilogue").getAbsolutePath
+    val e = intercept[IllegalStateException] {
+      WeatherStream.chunkedFileFeedDF(ev, "ts", src,
+        epilogue = Some(Seq((99L, ts(23, day = 9), 0.0)).toDF("event_id", "ts", "value")))
+    }
+    assert(e.getMessage.contains(epiDir))
+    graft.core.rmTree(dir)
+  }
+
   test("registered wx_rain_daily_stream is row-identical to batch wx_rain_daily") {
     // exact Row equality, doubles included — the BigDecimal state carries
     // the batch DECIMAL(25,6) semantics, so the shared oracle hash-matches

@@ -59,11 +59,6 @@ class TablesVintageSpec extends AnyFunSuite with SparkTestBase {
           .as[Long].collect().toSeq
         assert(got === micros)
       }
-    } finally {
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete()
-      }
-      rmTree(tmpRoot)
-    }
+    } finally core.rmTree(tmpRoot)
   }
 }
