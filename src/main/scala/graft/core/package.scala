@@ -102,8 +102,18 @@ package object core {
     * another driver thread would snapshot the temporary value. Every
     * harness here (Bench/Verify/tests) runs queries sequentially; a
     * concurrent driver should scope the conf via `s.newSession()`
-    * instead. */
+    * instead. The assumption is checked where it is cheap to check: a
+    * stream already active on the session at entry means queries are not
+    * running one at a time, and throws IllegalStateException naming
+    * `key`. */
   def withSessionConf[T](s: SparkSession, key: String, value: String)(body: => T): T = {
+    val active = s.streams.active
+    if (active.nonEmpty)
+      throw new IllegalStateException(
+        s"withSessionConf($key): ${active.length} stream(s) already active on this " +
+          s"session (${active.map(q => Option(q.name).getOrElse(q.id.toString)).mkString(", ")}); " +
+          "it sets the shared session conf and assumes one query at a time; " +
+          "scope the conf via s.newSession() instead")
     val prev = s.conf.getOption(key)
     s.conf.set(key, value)
     try body finally prev match {

@@ -2,9 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The shared harness pieces that need no session: query selection and
-  * the recursive delete. */
-class HarnessSpec extends AnyFunSuite {
+/** The shared harness pieces: query selection, the recursive delete and
+  * the single-query check of `core.withSessionConf` (the only case that
+  * starts the shared session). */
+class HarnessSpec extends AnyFunSuite with SparkTestBase {
 
   private val registry = Set("agg_groupby", "join_inner", "topk")
 
@@ -39,5 +40,20 @@ class HarnessSpec extends AnyFunSuite {
     core.rmTree(root)
     assert(!root.exists())
     core.rmTree(root)
+  }
+
+  test("withSessionConf refuses to run while a stream is active on the session") {
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val before = spark.conf.getOption(key)
+    val q = spark.readStream.format("rate").load()
+      .writeStream.format("noop").queryName("harness_active_stream").start()
+    try {
+      val e = intercept[IllegalStateException] {
+        core.withSessionConf(spark, key, "false")(fail("body must not run"))
+      }
+      assert(e.getMessage.contains(key))
+      assert(e.getMessage.contains("harness_active_stream"))
+      assert(spark.conf.getOption(key) === before)
+    } finally q.stop()
   }
 }
