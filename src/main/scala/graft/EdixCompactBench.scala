@@ -60,7 +60,7 @@ object EdixCompactBench {
         if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
         else if (f.getName.startsWith("part-")) 1L
         else 0L
-      val m = Dedup.readEdManifest(idx).get
+      val m = Dedup.EmbedDup.read(idx).get
       val roots = Seq(s"$idx/vectors.parquet", s"$idx/buckets") ++
         m.batches.flatMap(b => Seq(s"$idx/batches/$b/buckets.parquet",
           s"$idx/batches/$b/vectors.parquet"))
@@ -84,7 +84,7 @@ object EdixCompactBench {
     val (filesAfter, rootsAfter) = readSet()
     val wallAfter = probeWall()
     require(probe() == pairsBefore, "compact changed probe results")
-    val m = Dedup.readEdManifest(idx).get
+    val m = Dedup.EmbedDup.read(idx).get
     require(m.batches.size == 1 && m.batches.head.startsWith("c"),
       s"unexpected post-compact manifest: $m")
     rmTree(new java.io.File(idx))

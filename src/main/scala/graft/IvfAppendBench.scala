@@ -324,7 +324,7 @@ object IvfAppendBench {
     val recBefore = nearDupRecall()
     val tRefit = time(
       operators.Similarity.ivfRefit(spark, idx, capFactor = 4.0, maxSplit = 32))
-    val m1 = operators.Similarity.readManifest(idx).get
+    val m1 = operators.Similarity.Ivf.read(idx).get
     val (cells1, top20After, hot1) = occ(idx)
     val wallAfter = probeWall()
     val recAfter = nearDupRecall()
@@ -406,7 +406,7 @@ object IvfAppendBench {
         if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
         else if (f.getName.endsWith(".parquet") || f.getName.startsWith("part-")) 1L
         else 0L
-      val m0 = operators.Similarity.readManifest(idx).get
+      val m0 = operators.Similarity.Ivf.read(idx).get
       val roots = Seq(s"$idx/cells.parquet", s"$idx/cells_i8.parquet") ++
         m0.batches.flatMap(b => Seq(s"$idx/batches/$b/cells.parquet",
           s"$idx/batches/$b/cells_i8.parquet"))
@@ -428,7 +428,7 @@ object IvfAppendBench {
     val filesAfter = dataFiles()
     val wallAfter = probeWall()
     require(probe() == pairsBefore, "compact changed probe results")
-    val m = operators.Similarity.readManifest(idx).get
+    val m = operators.Similarity.Ivf.read(idx).get
     require(m.batches.size == 1 && m.appendedRows == arriving.count(),
       s"unexpected post-compact manifest: $m")
     // skew report over the folded root: hottest cell vs the salting cap,

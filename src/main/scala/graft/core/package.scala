@@ -77,28 +77,24 @@ package object core {
   def r6(c: Column): Column = rN(c, 6)
 
   /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to
-    * `n`, restoring the previous value afterwards. Used by the streaming
+    * `n` ([[withSessionConf]], so it inherits the active-stream check).
+    * Used by the streaming
     * queries: a Structured Streaming query fixes its STATE partition
     * count from this conf at start, and the harness corpora need far
     * fewer state partitions than the batch default — per-batch task
     * overhead (32 state-store tasks × ~6 micro-batches × stateful ops)
     * otherwise dominates their bench time. At production scale the
     * session default is simply left alone. */
-  def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
+  def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T =
+    withSessionConf(s, "spark.sql.shuffle.partitions", n.toString)(body)
 
   /** Run `body` with one session conf temporarily set, restoring (or
-    * unsetting) afterwards — the generalized [[withShufflePartitions]].
-    * A Structured Streaming query snapshots session confs at start, so
-    * wrapping a stream's start+drain scopes the setting to that query.
+    * unsetting) afterwards. A Structured Streaming query snapshots
+    * session confs at start, so wrapping a stream's start+drain scopes
+    * the setting to that query.
     *
-    * SINGLE-THREADED-DRIVER assumption (same as
-    * [[withShufflePartitions]]): the mutation is on the SHARED session
-    * conf, so a query started concurrently on the same session from
+    * SINGLE-THREADED-DRIVER assumption: the mutation is on the SHARED
+    * session conf, so a query started concurrently on the same session from
     * another driver thread would snapshot the temporary value. Every
     * harness here (Bench/Verify/tests) runs queries sequentially; a
     * concurrent driver should scope the conf via `s.newSession()`

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.rmTree
@@ -13,6 +13,8 @@ import graft.core.rmTree
   * product), verification computes the exact measure on candidates only.
   */
 object Dedup {
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Earliest-row-per-key exact dedup: deterministic spelling of
     * `dropDuplicates(keys)` (same shuffle-on-key plan shape, but the
@@ -594,29 +596,19 @@ object Dedup {
   }
 
   // =====================================================================
-  // STORED near-dup index: [[NearDupIndex]] as a parquet artifact with an
-  // IVF-style manifest — the continuous-ingest maturity the IVF family
-  // has ([[Similarity.ivfBuild]]/[[Similarity.ivfAppend]]), applied to
-  // the dedup family. At 100 TB this is the difference between O(batch)
-  // and O(corpus) per probing session: without it, every new JVM
-  // re-shingles the whole corpus before its first probe.
+  // STORED near-dup index: [[NearDupIndex]] as a parquet artifact — a
+  // [[StoredIndex]] family, like the IVF index. At 100 TB this is the
+  // difference between O(batch) and O(corpus) per probing session:
+  // without it, every new JVM re-shingles the whole corpus before its
+  // first probe.
   // =====================================================================
 
-  /** The stored-index manifest: what [[nearDupIndexWrite]] indexed, plus
-    * every [[nearDupAppend]] batch committed since. (rows, fingerprint)
-    * identify the corpus — the fingerprint is the wraparound SUM of
-    * xxhash64(id, text) per doc ([[Similarity.corpusStats]]'s limb
-    * spelling), so append updates are ADDITIVE: the appended manifest
-    * equals what a from-scratch build over the union would stamp, and
-    * [[nearDupValid]] of the union frame accepts the appended index with
-    * no rebuild. `fracPpm` is maxDocFrac in parts-per-million (the
-    * manifest is integers-only — no float-text round-trip); `idType` is
-    * the id column's SQL type, needed to re-register the bucketed
-    * shingle table in a NEW session. (`appendedRows`, `batches`, `seq`,
-    * `lastRows`, `lastFp`) have exactly the [[Similarity.IvfManifest]]
-    * semantics: staleness signal, reader commit log, monotone append
-    * counter, replay-detection pair; `mseq` is the CAS commit sequence
-    * ([[casCommit]] — every mutation claims `_commits/m<mseq+1>`). */
+  /** The stored near-dup manifest: the [[StoredIndex]] commit log
+    * (identity = fingerprint of (idCol, textCol)) plus the build
+    * parameters. `fracPpm` is maxDocFrac in parts-per-million (integers
+    * only — no float-text round-trip); `idType` is the id column's SQL
+    * type, needed to re-register the bucketed shingle table in a NEW
+    * session. */
   final case class NearDupManifest(rows: Long, fingerprint: Long, k: Int,
                                    fracPpm: Long, buckets: Int,
                                    idCol: String, textCol: String,
@@ -627,252 +619,118 @@ object Dedup {
                                    lastRows: Long = 0L,
                                    lastFp: Long = 0L,
                                    mseq: Long = 0L)
+      extends StoredIndex.Manifest[NearDupManifest] {
+    def withLog(l: StoredIndex.CommitLog): NearDupManifest =
+      copy(rows = l.rows, fingerprint = l.fingerprint, appendedRows = l.appendedRows,
+        batches = l.batches, seq = l.seq, lastRows = l.lastRows, lastFp = l.lastFp,
+        mseq = l.mseq)
+  }
 
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+  /** The near-dup family of [[StoredIndex]]: base `hot.parquet`,
+    * `sizes.parquet` and the bucketed `shingles/` table; batch roots hold
+    * `shingles.parquet` and `sizes.parquet`. */
+  object NearDup extends StoredIndex[NearDupManifest]("ndix") {
+    protected def layoutVersion: Int = 1
+    protected def params(m: NearDupManifest): Seq[(String, Any)] =
+      Seq("k" -> m.k, "frac_ppm" -> m.fracPpm, "buckets" -> m.buckets,
+        "id_col" -> m.idCol, "text_col" -> m.textCol, "id_type" -> m.idType)
+    protected def decode(d: StoredIndex.Doc, l: StoredIndex.CommitLog): Option[NearDupManifest] =
+      for (k <- d.int("k"); ppm <- d.long("frac_ppm"); b <- d.int("buckets");
+           ic <- d.str("id_col"); tc <- d.str("text_col"); it <- d.str("id_type"))
+        yield NearDupManifest(l.rows, l.fingerprint, k, ppm, b, ic, tc, it).withLog(l)
+    protected def baseArtifacts(m: NearDupManifest): Seq[String] =
+      Seq("hot.parquet", "sizes.parquet", "shingles")
+    protected def batchArtifacts: Seq[String] = Seq("shingles.parquet", "sizes.parquet")
+  }
 
   private def fracPpm(maxDocFrac: Double): Long = math.round(maxDocFrac * 1e6)
 
-  /** One-pass corpus identity for the manifest: (row count, wraparound
-    * sum of xxhash64(id, text)) — four 16-bit limb sums recombined on the
-    * driver, the [[Similarity]] fingerprint spelling (order-independent,
-    * multiplicity-sensitive, no decimal aggregation). */
-  private def docStats(df: DataFrame, idCol: String, textCol: String): (Long, Long) = {
-    val h = xxhash64(col(idCol), col(textCol))
-    def limb(i: Int): Column =
-      coalesce(sum(shiftrightunsigned(h, 16 * i).bitwiseAND(lit(0xFFFFL))), lit(0L))
-    val r = df.agg(count(lit(1)), limb(0), limb(1), limb(2), limb(3)).head()
-    (r.getLong(0), r.getLong(1) + (r.getLong(2) << 16) +
-      (r.getLong(3) << 32) + (r.getLong(4) << 48))
+  /** Write a stored index's base rows as a BUCKETED external parquet
+    * table at `path` (one file per bucket, sorted within), registered in
+    * the session catalog as `tbl` — the candidate equi-join on `keys`
+    * then reads the corpus side EXCHANGE-FREE in any session, where an
+    * in-session repartition cannot survive a restart (or even a re-plan:
+    * checkpoints report UnknownPartitioning under AQE). */
+  private def writeBucketed(df: DataFrame, tbl: String, path: String,
+                            buckets: Int, keys: Seq[String]): Unit = {
+    df.sparkSession.sql(s"DROP TABLE IF EXISTS $tbl")
+    rmTree(new java.io.File(path))
+    df.repartition(buckets, keys.map(col): _*)
+      .write.bucketBy(buckets, keys.head, keys.tail: _*).sortBy(keys.head, keys.tail: _*)
+      .option("path", path).format("parquet").mode("overwrite").saveAsTable(tbl)
   }
 
-  private def ndManifestPath(dir: String) =
-    java.nio.file.Paths.get(dir, "manifest.json")
-
-  /** ATOMIC manifest replace — the index's commit point (the
-    * [[Similarity.writeManifest]] protocol: sibling tmp + rename). */
-  private def writeNdManifest(dir: String, m: NearDupManifest): Unit = {
-    val batchesJson = m.batches.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"rows":${m.rows},"fingerprint":${m.fingerprint},""" +
-      s""""k":${m.k},"frac_ppm":${m.fracPpm},"buckets":${m.buckets},""" +
-      s""""id_col":"${m.idCol}","text_col":"${m.textCol}",""" +
-      s""""id_type":"${m.idType}","mv":1,"mseq":${m.mseq},""" +
-      s""""appended_rows":${m.appendedRows},"seq":${m.seq},""" +
-      s""""last_rows":${m.lastRows},"last_fp":${m.lastFp},""" +
-      s""""batches":$batchesJson}"""
-    val p = ndManifestPath(dir)
-    java.nio.file.Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling("manifest.json.tmp")
-    java.nio.file.Files.write(tmp, json.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
-
-  private[graft] def readNdManifest(dir: String): Option[NearDupManifest] = {
-    val p = ndManifestPath(dir)
-    if (!java.nio.file.Files.exists(p)) None
-    else {
-      val s = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      def f(k: String) = s""""$k":(-?\\d+)""".r.findFirstMatchIn(s).map(_.group(1))
-      def str(k: String) = s""""$k":"([^"]*)"""".r.findFirstMatchIn(s).map(_.group(1))
-      val batches = """"batches":\[([^\]]*)\]""".r.findFirstMatchIn(s)
-        .map(_.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty).toSeq)
-        .getOrElse(Nil)
-      for (r <- f("rows"); fp <- f("fingerprint"); k <- f("k");
-           ppm <- f("frac_ppm"); b <- f("buckets");
-           ic <- str("id_col"); tc <- str("text_col"); it <- str("id_type"))
-        yield NearDupManifest(r.toLong, fp.toLong, k.toInt, ppm.toLong, b.toInt,
-          ic, tc, it,
-          f("appended_rows").map(_.toLong).getOrElse(0L), batches,
-          f("seq").map(_.toLong).getOrElse(batches.size.toLong),
-          f("last_rows").map(_.toLong).getOrElse(0L),
-          f("last_fp").map(_.toLong).getOrElse(0L),
-          // LEGACY seed (the IVF family's r16 lesson): a pre-CAS-era
-          // manifest whose appends may already have claimed markers
-          // m1..mN must seed mseq from the append count, never 0
-          f("mseq").map(_.toLong).getOrElse(
-            f("seq").map(_.toLong).getOrElse(batches.size.toLong)))
+  /** The bucketed table [[writeBucketed]] wrote, re-registered by DDL
+    * when this session's catalog lacks it (bucket metadata lives in the
+    * catalog, not the files). `cols` are (name, SQL type) in file order. */
+  private def bucketedTable(s: SparkSession, tbl: String, path: String,
+                            buckets: Int, keys: Seq[String],
+                            cols: Seq[(String, String)]): DataFrame = {
+    if (!s.catalog.tableExists(tbl)) {
+      val ks = keys.map(k => s"`$k`").mkString(", ")
+      s.sql(s"CREATE TABLE $tbl (${cols.map { case (c, t) => s"`$c` $t" }.mkString(", ")}) " +
+        s"USING parquet CLUSTERED BY ($ks) SORTED BY ($ks) INTO $buckets BUCKETS " +
+        s"LOCATION '$path'")
     }
+    s.table(tbl)
   }
 
-  /** The session-catalog name of the stored index's bucketed shingle
-    * table (bucket metadata lives in the CATALOG, not the files — a
-    * plain parquet read of the same files reports no partitioning, which
-    * is exactly why the in-session repartition couldn't stay
-    * exchange-free; see [[NearDupIndex]]'s scaladoc). Namespaced by the
-    * index dir's digest: one stored index ↔ one table name, any session. */
-  private[graft] def shingleTable(dir: String): String = {
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-      .digest(new java.io.File(dir).getAbsolutePath.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    s"graft_ndix_$md5"
-  }
-
-  /** Session-scoped record of index dirs already validated against a
-    * corpus frame — dir → (canonical-plan digest, k, fracPpm); the
-    * [[Similarity.ivfValid]] memo pattern (repeat serves of the same
-    * logical corpus skip the validation scan). */
-  private val ndValidated =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Int, Long)]()
-
-  private def ndCorpusKey(c: DataFrame): String = {
-    val plan = c.queryExecution.analyzed.canonicalized.toString
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(plan.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
-
-  /** CHECKED manifest commit for BOTH dedup manifests —
-    * [[Similarity.casWriteManifest]]'s sequencer protocol, shared: the
-    * mutation claims `_commits/m<mseq+1>` with CREATE_NEW (the
-    * filesystem's atomic create-if-absent) carrying its deterministic
-    * token. Exactly one writer per mseq wins; the loser throws with the
-    * winner's token and its staged (invisible) data intact for a retry
-    * against the fresh manifest — before this guard two racing appends
-    * could both commit and one batch's manifest delta was silently lost.
-    * Own-token recovery (a crashed attempt retried) re-publishes
-    * idempotently UNLESS the live manifest is already past the expected
-    * mseq — the original commit landed, so replaying would regress the
-    * manifest and erase any later commit. `liveMseq` re-reads the live
-    * manifest's mseq; `publish` performs the actual manifest replace
-    * (called with the claimed mseq). */
-  private[graft] def casCommit(dir: String, expectedMseq: Long, token: String,
-                        liveMseq: => Option[Long])(
-                        publish: Long => Unit): Unit = {
-    val marker = java.nio.file.Paths.get(dir, "_commits", s"m${expectedMseq + 1}")
-    java.nio.file.Files.createDirectories(marker.getParent)
-    try {
-      java.nio.file.Files.write(marker, token.getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE_NEW)
-      ()
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        val winner = new String(
-          java.nio.file.Files.readAllBytes(marker), "UTF-8")
-        if (winner != token)
-          throw new IllegalStateException(
-            s"dedup manifest CAS lost: commit seq ${expectedMseq + 1} under " +
-              s"$dir was already claimed by '$winner' (this writer: " +
-              s"'$token') — concurrent mutation detected; re-read the " +
-              "manifest and retry this mutation against the fresh state")
-    }
-    if (liveMseq.exists(_ > expectedMseq))
-      log.info(s"dedup manifest CAS: commit seq ${expectedMseq + 1} under " +
-        s"$dir already published — idempotent replay, not rewriting")
-    else publish(expectedMseq + 1)
-  }
-
-  /** Session-scoped stored-index location for a dataset tag (under
-    * java.io.tmpdir, namespaced by application id + tag digest — the
-    * [[Similarity.ivfIndexDir]] scheme). */
-  def nearDupIndexDir(s: org.apache.spark.sql.SparkSession, tag: String): String = {
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-      .digest(tag.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_${s.sparkContext.applicationId}/ndix_$md5").getAbsolutePath
-  }
+  /** Session-scoped stored-index location for a dataset tag
+    * ([[StoredIndex.dirFor]], `ndix_` namespace). */
+  def nearDupIndexDir(s: SparkSession, tag: String): String = NearDup.dirFor(s, tag)
 
   /** PERSIST the [[NearDupIndex]] for a corpus under `dir`:
     *  - `hot.parquet` (s): the hot-shingle census — tiny, broadcast at
     *    probe time;
     *  - `shingles/`: the stop-filtered hashed corpus shingles (idCol, s)
-    *    as a BUCKETED-BY-`s` external parquet table (`buckets` buckets,
-    *    sorted, one file per bucket) — the candidate equi-join then
-    *    reads the corpus side EXCHANGE-FREE in any session (ScaleSpec
-    *    pins the bucketed join; DedupSpec pins it for this artifact),
-    *    where an in-session repartition cannot survive a restart (or
-    *    even a re-plan: checkpoints report UnknownPartitioning under
-    *    AQE);
+    *    as a table BUCKETED BY `s` ([[writeBucketed]]; ScaleSpec pins the
+    *    bucketed join, DedupSpec pins it for this artifact);
     *  - `sizes.parquet` (idCol, n): per-doc stop-filtered shingle counts;
-    *  - `manifest.json`: the corpus identity + parameters
-    *    ([[NearDupManifest]]) that [[nearDupValid]] checks before an
-    *    existing index is trusted.
+    *  - `manifest.json` ([[NearDupManifest]]), which [[nearDupValid]]
+    *    checks before an existing index is trusted.
     * Build cost: ONE corpus shingling (the in-session builder's
     * checkpointed frames feed all three writes) plus one 2-column
     * identity scan. Run once per corpus snapshot; every later session
-    * [[nearDupIndexLoad]]s and pays only its own batches.
-    * SINGLE-WRITER per index dir, like the IVF family. */
+    * [[nearDupIndexLoad]]s and pays only its own batches. */
   def nearDupIndexWrite(corpus: DataFrame, idCol: String, textCol: String,
                         dir: String, k: Int = 3, maxDocFrac: Double = 0.1,
                         buckets: Int = 32): Unit = {
-    val s = corpus.sparkSession
-    val (n, fp) = docStats(corpus, idCol, textCol)
+    val (n, fp, _) = StoredIndex.fingerprint(corpus, idCol, textCol)
     require(n > 0, "nearDupIndexWrite: empty corpus")
     val ix = nearDupIndex(corpus, idCol, textCol, k, maxDocFrac)
     ix.hot.write.mode("overwrite").parquet(s"$dir/hot.parquet")
     ix.sizes.write.mode("overwrite").parquet(s"$dir/sizes.parquet")
-    val tbl = shingleTable(dir)
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    rmTree(new java.io.File(s"$dir/shingles"))
-    // one file per bucket (repartition on s first), sorted within — the
-    // probe's sort-merge join then needs neither exchange nor sort on
-    // the corpus side
-    ix.shingles.repartition(buckets, col("s"))
-      .write.bucketBy(buckets, "s").sortBy("s")
-      .option("path", s"$dir/shingles").format("parquet")
-      .mode("overwrite").saveAsTable(tbl)
-    // a rebuild supersedes appended batches (same ordering as ivfBuild:
-    // clear BEFORE the manifest commit — a crash in between fails
-    // closed); the CAS sequencer tree resets with the rest of the index
-    rmTree(new java.io.File(s"$dir/batches"))
-    rmTree(new java.io.File(s"$dir/_staging"))
-    rmTree(new java.io.File(s"$dir/_commits"))
-    writeNdManifest(dir, NearDupManifest(n, fp, k, fracPpm(maxDocFrac),
-      buckets, idCol, textCol, corpus.schema(idCol).dataType.sql))
-    ndValidated.put(dir, (ndCorpusKey(corpus), k, fracPpm(maxDocFrac)))
-    ()
+    writeBucketed(ix.shingles, NearDup.table(dir), s"$dir/shingles", buckets, Seq("s"))
+    NearDup.publishBuild(dir, NearDupManifest(n, fp, k, fracPpm(maxDocFrac),
+      buckets, idCol, textCol, corpus.schema(idCol).dataType.sql),
+      corpus, (idCol, textCol), k, fracPpm(maxDocFrac))
   }
 
   /** Serve a stored index: hot/sizes from parquet, the corpus shingles
-    * through the catalog's BUCKETED table (re-registered via DDL in a
-    * fresh session — bucket metadata lives in the catalog), plus one
-    * shingle root per committed append batch (see [[NearDupIndex]] for
-    * why roots stay separate). O(metadata): nothing is scanned until the
-    * first probe, and no probe ever re-shingles the corpus. */
-  def nearDupIndexLoad(s: org.apache.spark.sql.SparkSession, dir: String): NearDupIndex = {
-    val m = readNdManifest(dir).getOrElse(sys.error(
-      s"nearDupIndexLoad: no readable manifest under $dir — build first"))
-    val tbl = shingleTable(dir)
-    if (!s.catalog.tableExists(tbl))
-      s.sql(s"CREATE TABLE $tbl (`${m.idCol}` ${m.idType}, `s` BIGINT) " +
-        s"USING parquet CLUSTERED BY (s) SORTED BY (s) INTO ${m.buckets} " +
-        s"BUCKETS LOCATION '$dir/shingles'")
-    val base = s.table(tbl)
-    val roots = base +: m.batches.map(b =>
-      s.read.parquet(s"$dir/batches/$b/shingles.parquet"))
-    val sizes = (s.read.parquet(s"$dir/sizes.parquet") +: m.batches.map(b =>
-      s.read.parquet(s"$dir/batches/$b/sizes.parquet"))).reduce(_ unionByName _)
+    * through the catalog's BUCKETED table, plus one shingle root per
+    * committed append batch (see [[NearDupIndex]] for why roots stay
+    * separate). O(metadata): nothing is scanned until the first probe,
+    * and no probe ever re-shingles the corpus. */
+  def nearDupIndexLoad(s: SparkSession, dir: String): NearDupIndex = {
+    val m = NearDup.load(dir, "nearDupIndexLoad")
+    val roots = bucketedTable(s, NearDup.table(dir), s"$dir/shingles", m.buckets,
+      Seq("s"), Seq(m.idCol -> m.idType, "s" -> "BIGINT")) +:
+      NearDup.batchPaths(dir, m, "shingles.parquet").map(s.read.parquet(_))
+    val sizes = (s"$dir/sizes.parquet" +: NearDup.batchPaths(dir, m, "sizes.parquet"))
+      .map(s.read.parquet(_)).reduce(_ unionByName _)
     NearDupIndex(m.idCol, m.k, s.read.parquet(s"$dir/hot.parquet"),
       roots.reduce(_ unionByName _), sizes, roots)
   }
 
-  /** True iff a stored index under `dir` is complete and its manifest
-    * matches exactly this corpus at these parameters — the trust check
-    * behind [[nearDupIndexIfAbsent]]. Completeness covers the base
-    * artifacts AND every manifest-listed batch root (exactly what
-    * serving reads — a torn append is invisible, a manifest naming a
-    * missing root fails closed into a rebuild). Costs one 2-column
-    * corpus scan on a miss, memoized per (dir, corpus frame). */
+  /** True iff a stored index under `dir` is complete and holds exactly
+    * this corpus at these parameters ([[StoredIndex.valid]]) — the trust
+    * check behind [[nearDupIndexIfAbsent]]. */
   def nearDupValid(corpus: DataFrame, idCol: String, textCol: String,
-                   dir: String, k: Int = 3, maxDocFrac: Double = 0.1): Boolean = {
-    val key = ndCorpusKey(corpus)
-    if (ndValidated.get(dir) == (key, k, fracPpm(maxDocFrac))) return true
-    def committed(p: String) = new java.io.File(s"$p/_SUCCESS").exists()
-    val valid = readNdManifest(dir).exists { m =>
+                   dir: String, k: Int = 3, maxDocFrac: Double = 0.1): Boolean =
+    NearDup.valid(dir, corpus, (idCol, textCol), k, fracPpm(maxDocFrac)) { m =>
       m.k == k && m.fracPpm == fracPpm(maxDocFrac) &&
-        m.idCol == idCol && m.textCol == textCol &&
-        committed(s"$dir/hot.parquet") && committed(s"$dir/sizes.parquet") &&
-        committed(s"$dir/shingles") &&
-        m.batches.forall(b => committed(s"$dir/batches/$b/shingles.parquet") &&
-          committed(s"$dir/batches/$b/sizes.parquet")) && {
-          val (n, fp) = docStats(corpus, idCol, textCol)
-          m.rows == n && m.fingerprint == fp
-        }
+        m.idCol == idCol && m.textCol == textCol
     }
-    if (valid) ndValidated.put(dir, (key, k, fracPpm(maxDocFrac)))
-    valid
-  }
 
   /** [[nearDupIndexWrite]] unless a VALID stored index for exactly this
     * corpus is already present, then [[nearDupIndexLoad]] — the
@@ -887,12 +745,10 @@ object Dedup {
   }
 
   /** INCREMENTAL index maintenance: shingle a batch of ACCEPTED docs
-    * against the STORED census and append it to the index — the dedup
-    * analogue of [[Similarity.ivfAppend]] (stage → promote → one atomic
-    * manifest commit; deterministic batch id, so a retry overwrites its
-    * own torn leftovers; a batch matching the (lastRows, lastFp) replay
-    * pair is a logged no-op — the foreachBatch at-least-once window).
-    * Cost is O(batch): the corpus artifacts are never touched.
+    * against the STORED census and append it to the index — the
+    * [[StoredIndex]] append (stage → promote → CAS commit; deterministic
+    * batch id; replay pair). Cost is O(batch): the corpus artifacts are
+    * never touched.
     *
     * CENSUS-DRIFT CONTRACT: the hot-shingle census is a CORPUS property
     * and stays FROZEN at build time — appends filter against it but
@@ -907,137 +763,77 @@ object Dedup {
     * the IVF family (alert on the fraction, re-[[nearDupIndexWrite]]
     * past the budget). On stationary appends (no shingle crossing the
     * frozen cap) an appended index probes IDENTICALLY to a rebuilt one
-    * (DedupSpec pins it). SINGLE-WRITER per index dir. */
-  def nearDupAppend(batch: DataFrame, dir: String): Unit = {
-    val m = readNdManifest(dir).getOrElse(sys.error(
-      s"nearDupAppend: no readable manifest under $dir — build first"))
-    val (bn, bfp) = docStats(batch, m.idCol, m.textCol)
-    if (bn == 0) return
-    if (m.lastRows == bn && m.lastFp == bfp) {
-      log.warn(s"nearDupAppend: batch (rows=$bn, fp=$bfp) matches the last " +
-        s"committed batch under $dir — treating as an at-least-once replay, " +
-        "skipping")
-      return
+    * (DedupSpec pins it). */
+  def nearDupAppend(batch: DataFrame, dir: String): Unit =
+    NearDup.publish(dir, nearDupAppendStage(batch, dir))
+
+  /** Append phase 1 — STAGE the batch's shingle and size rows
+    * ([[StoredIndex.stage]]). */
+  private[graft] def nearDupAppendStage(batch: DataFrame, dir: String)
+      : Option[(NearDupManifest, String, Long, Long)] = {
+    val m = NearDup.load(dir, "nearDupAppend")
+    val (bn, bfp, _) = StoredIndex.fingerprint(batch, m.idCol, m.textCol)
+    NearDup.stage(dir, m, bn, bfp) { staging =>
+      val bs = shingleHashes(batch, m.idCol, m.textCol, m.k)
+        .join(broadcast(batch.sparkSession.read.parquet(s"$dir/hot.parquet")),
+          Seq("s"), "left_anti")
+        .select(col(m.idCol), col("s")).localCheckpoint(true)
+      bs.write.mode("overwrite").parquet(s"$staging/shingles.parquet")
+      bs.groupBy(m.idCol).agg(count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(s"$staging/sizes.parquet")
     }
-    val s = batch.sparkSession
-    val batchId = f"b${m.seq + 1}%04d_${bn}_${java.lang.Long.toHexString(bfp)}"
-    val staging = s"$dir/_staging/$batchId"
-    val bs = shingleHashes(batch, m.idCol, m.textCol, m.k)
-      .join(broadcast(s.read.parquet(s"$dir/hot.parquet")), Seq("s"), "left_anti")
-      .select(col(m.idCol), col("s")).localCheckpoint(true)
-    bs.write.mode("overwrite").parquet(s"$staging/shingles.parquet")
-    bs.groupBy(m.idCol).agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$staging/sizes.parquet")
-    // promote (invisible until the manifest lists it), then commit
-    val target = new java.io.File(s"$dir/batches/$batchId")
-    rmTree(target)
-    java.nio.file.Files.createDirectories(target.getParentFile.toPath)
-    java.nio.file.Files.move(java.nio.file.Paths.get(staging), target.toPath)
-    casCommit(dir, m.mseq, batchId, readNdManifest(dir).map(_.mseq)) { ms =>
-      writeNdManifest(dir, m.copy(rows = m.rows + bn,
-        fingerprint = m.fingerprint + bfp,
-        appendedRows = m.appendedRows + bn, batches = m.batches :+ batchId,
-        seq = m.seq + 1, lastRows = bn, lastFp = bfp, mseq = ms))
-    }
-    ndValidated.remove(dir)
-    ()
   }
 
   /** MAINTENANCE fold: compact every committed [[nearDupAppend]] batch
-    * root into ONE root — [[Similarity.ivfCompact]]'s protocol applied
-    * to the dedup index. Without it a long-running ingest accumulates
-    * one root per append forever, and [[probeNearDups]] pays one
-    * candidate join PER ROOT per probe; after the fold it pays exactly
-    * two (the bucketed base + the compacted root).
-    *
-    * Probe-IDENTICAL by construction: the census, the shingle multiset,
-    * and the per-doc sizes are all unchanged — compaction is pure
-    * LAYOUT, so unlike [[nearDupAppend]]'s stationarity contract it
-    * needs no distribution assumption (DedupSpec pins exact equality
-    * against a never-compacted twin). Does NOT reset `appendedRows`:
-    * census-drift staleness is a property of the FROZEN census, which
-    * only a re-[[nearDupIndexWrite]] refits — the gauge keeps alerting
-    * after a fold, by design.
-    *
-    * Commit protocol (the [[nearDupAppend]] spelling): stage → promote
-    * → one atomic manifest replace; a torn fold is invisible (the
-    * manifest still lists the input roots) and a row-count read-back
-    * guards against committing a partial write. DEFERRED sweep (reader
-    * grace period): the roots this fold supersedes stay on disk for one
-    * more compaction cycle — only dirs older than this fold's inputs
-    * are removed — so a probe planned against the pre-compact manifest
-    * keeps every file for a full maintenance interval. SINGLE-WRITER
-    * per index dir. */
-  def nearDupCompact(s: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val m = readNdManifest(dir).getOrElse(sys.error(
-      s"nearDupCompact: no readable manifest under $dir"))
-    if (m.batches.size < 2) return
-    val compactId = f"c${m.seq}%04d_${m.appendedRows}_" +
-      java.lang.Long.toHexString(m.fingerprint)
-    val staging = s"$dir/_staging/$compactId"
-    def foldRead(a: String): DataFrame =
-      m.batches.map(b => s.read.parquet(s"$dir/batches/$b/$a"))
-        .reduce(_ unionByName _)
-    val expect = foldRead("shingles.parquet").count()
-    // file count tracks the base table's bucket count — the appended
-    // mass is the small side, this only bounds small-file growth
-    foldRead("shingles.parquet").repartition(m.buckets, col("s"))
-      .write.mode("overwrite").parquet(s"$staging/shingles.parquet")
-    foldRead("sizes.parquet")
-      .write.mode("overwrite").parquet(s"$staging/sizes.parquet")
-    val folded = s.read.parquet(s"$staging/shingles.parquet").count()
-    require(folded == expect,
-      s"nearDupCompact: folded $folded shingle rows but the inputs hold " +
-        s"$expect — the fold write under $dir is torn; not committing")
-    val target = new java.io.File(s"$dir/batches/$compactId")
-    rmTree(target)
-    java.nio.file.Files.createDirectories(target.getParentFile.toPath)
-    java.nio.file.Files.move(java.nio.file.Paths.get(staging), target.toPath)
-    casCommit(dir, m.mseq, compactId, readNdManifest(dir).map(_.mseq)) { ms =>
-      writeNdManifest(dir, m.copy(batches = Seq(compactId), mseq = ms))
+    * root into ONE ([[StoredIndex.compact]]). Without it a long-running
+    * ingest accumulates one root per append forever, and
+    * [[probeNearDups]] pays one candidate join PER ROOT per probe; after
+    * the fold it pays exactly two (the bucketed base + the compacted
+    * root). Probe-IDENTICAL by construction: the census, the shingle
+    * multiset and the per-doc sizes are unchanged — compaction is pure
+    * LAYOUT, so unlike [[nearDupAppend]]'s stationarity contract it needs
+    * no distribution assumption (DedupSpec pins exact equality against a
+    * never-compacted twin). Does NOT reset `appendedRows`: census-drift
+    * staleness is a property of the FROZEN census, which only a
+    * re-[[nearDupIndexWrite]] refits. */
+  def nearDupCompact(s: SparkSession, dir: String): Unit =
+    NearDup.compact(s, dir, "nearDupCompact") { (m, staging) =>
+      val expect = NearDup.readBatches(s, dir, m, "shingles.parquet").count()
+      // file count tracks the base table's bucket count — the appended
+      // mass is the small side, this only bounds small-file growth
+      NearDup.readBatches(s, dir, m, "shingles.parquet").repartition(m.buckets, col("s"))
+        .write.mode("overwrite").parquet(s"$staging/shingles.parquet")
+      NearDup.readBatches(s, dir, m, "sizes.parquet")
+        .write.mode("overwrite").parquet(s"$staging/sizes.parquet")
+      ("shingles.parquet", expect)
     }
-    // corpus identity (rows, fingerprint, k, fracPpm) is unchanged by a
-    // fold, so an existing ndValidated memo stays correct — not cleared
-    Option(new java.io.File(s"$dir/batches").listFiles()).foreach(
-      _.filterNot(f => f.getName == compactId || m.batches.contains(f.getName))
-        .foreach(rmTree))
-    log.info(s"nearDupCompact: folded ${m.batches.size} batch roots " +
-      s"(${m.appendedRows} appended docs) into $compactId under $dir")
-  }
 
-  /** ONE-ROW health report over a stored near-dup index — the
-    * operational gauge ([[Similarity.ivfStats]]'s pattern): manifest
-    * identity + the staleness fraction that alerts the re-build
-    * ([[nearDupAppend]]'s census-drift contract), plus artifact row
-    * counts (parquet metadata counts — no shingle bytes read). */
-  def nearDupStats(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val m = readNdManifest(dir).getOrElse(sys.error(
-      s"nearDupStats: no readable manifest under $dir"))
-    val hotN = s.read.parquet(s"$dir/hot.parquet").count()
-    val baseShingles = s.read.parquet(s"$dir/shingles").count()
-    val appendedShingles =
-      if (m.batches.isEmpty) 0L
-      else m.batches.map(b =>
-        s.read.parquet(s"$dir/batches/$b/shingles.parquet").count()).sum
-    Seq((m.rows, m.appendedRows,
-        if (m.rows == 0) 0.0 else m.appendedRows.toDouble / m.rows,
-        m.batches.size, m.k, hotN, baseShingles, appendedShingles))
-      .toDF("rows", "appended_rows", "appended_fraction", "batch_roots",
-        "k", "hot_shingles", "base_shingles", "appended_shingles")
+  /** ONE-ROW health report over a stored near-dup index: the shared
+    * [[StoredIndex.stats]] columns (the staleness fraction alerts the
+    * rebuild — [[nearDupAppend]]'s census-drift contract), then `k` and
+    * artifact row counts (parquet metadata counts — no shingle bytes
+    * read). */
+  def nearDupStats(s: SparkSession, dir: String): DataFrame = {
+    val m = NearDup.load(dir, "nearDupStats")
+    NearDup.stats(s, m, "k" -> m.k,
+      "hot_shingles" -> s.read.parquet(s"$dir/hot.parquet").count(),
+      "base_shingles" -> s.read.parquet(s"$dir/shingles").count(),
+      "appended_shingles" ->
+        NearDup.batchPaths(dir, m, "shingles.parquet").map(s.read.parquet(_).count()).sum)
   }
 
   // =====================================================================
   // STORED embedding near-dup index: [[embedPairsBanded]]'s banded
-  // sign-LSH blocking as a persisted artifact — the THIRD instance of the
-  // stored-artifact pattern (after the IVF index and the text
-  // [[NearDupIndex]]), giving continuous-ingest SEMANTIC dedup the same
-  // O(batch)-per-restart economics: without it, every probing session
-  // re-bands the whole corpus before its first batch.
+  // sign-LSH blocking as a persisted artifact — the third [[StoredIndex]]
+  // family (after the IVF index and the text [[NearDupIndex]]), giving
+  // continuous-ingest SEMANTIC dedup the same O(batch)-per-restart
+  // economics: without it, every probing session re-bands the whole
+  // corpus before its first batch.
   // =====================================================================
 
-  /** The stored embed-index manifest. (rows, fingerprint) identify the
-    * RAW corpus (hygiene filtering is internal — additivity must hold
+  /** The stored embed-index manifest: the [[StoredIndex]] commit log
+    * plus the banding parameters. (rows, fingerprint) identify the RAW
+    * corpus (hygiene filtering is internal — additivity must hold
     * over the frames callers actually pass); `bits` is FROZEN at build
     * from the hygiene-filtered corpus count ([[embedBits]]'s law — the
     * banding analogue of the text index's frozen census: appends band
@@ -1047,7 +843,9 @@ object Dedup {
     * SQL types (JSON arrays — a parameterized type like DECIMAL(10,2)
     * contains a comma, so a comma-joined string would re-split into
     * garbage and corrupt the DDL [[embedDupIndexLoad]] issues) for the
-    * catalog DDL; the rest follows [[NearDupManifest]]. */
+    * catalog DDL; the rest follows [[NearDupManifest]]. A legacy (mv:1)
+    * manifest's comma-joined `block_cols`/`block_types` strings still
+    * read, which was only ever correct for comma-free types. */
   final case class EmbedDupManifest(rows: Long, fingerprint: Long,
                                     bands: Int, bits: Int, dim: Int,
                                     buckets: Int, idCol: String,
@@ -1060,6 +858,35 @@ object Dedup {
                                     lastRows: Long = 0L,
                                     lastFp: Long = 0L,
                                     mseq: Long = 0L)
+      extends StoredIndex.Manifest[EmbedDupManifest] {
+    def withLog(l: StoredIndex.CommitLog): EmbedDupManifest =
+      copy(rows = l.rows, fingerprint = l.fingerprint, appendedRows = l.appendedRows,
+        batches = l.batches, seq = l.seq, lastRows = l.lastRows, lastFp = l.lastFp,
+        mseq = l.mseq)
+  }
+
+  /** The embed family of [[StoredIndex]]: base `vectors.parquet` and the
+    * bucketed `buckets/` table; batch roots hold `buckets.parquet` and
+    * `vectors.parquet`. */
+  object EmbedDup extends StoredIndex[EmbedDupManifest]("edix") {
+    protected def layoutVersion: Int = 2
+    protected def params(m: EmbedDupManifest): Seq[(String, Any)] =
+      Seq("bands" -> m.bands, "bits" -> m.bits, "dim" -> m.dim, "buckets" -> m.buckets,
+        "id_col" -> m.idCol, "vec_col" -> m.vecCol, "id_type" -> m.idType,
+        "block_cols" -> m.blockCols, "block_types" -> m.blockTypes)
+    protected def decode(d: StoredIndex.Doc, l: StoredIndex.CommitLog): Option[EmbedDupManifest] = {
+      def list(k: String) = d.strs(k).orElse(d.str(k).map(
+        _.split(",").map(_.trim).filter(_.nonEmpty).toSeq)).getOrElse(Nil)
+      for (ba <- d.int("bands"); bi <- d.int("bits"); dim <- d.int("dim");
+           bu <- d.int("buckets"); ic <- d.str("id_col"); vc <- d.str("vec_col");
+           it <- d.str("id_type"))
+        yield EmbedDupManifest(l.rows, l.fingerprint, ba, bi, dim, bu, ic, vc, it,
+          list("block_cols"), list("block_types")).withLog(l)
+    }
+    protected def baseArtifacts(m: EmbedDupManifest): Seq[String] =
+      Seq("vectors.parquet", "buckets")
+    protected def batchArtifacts: Seq[String] = Seq("buckets.parquet", "vectors.parquet")
+  }
 
   /** The in-memory handle [[probeEmbedDups]] serves from: the corpus
     * vectors (idCol, vecCol, blockCols...) for the cosine verify and the
@@ -1166,184 +993,68 @@ object Dedup {
         ix.blockCols.map(col) :+ col("cos"): _*)
   }
 
-  private def edManifestPath(dir: String) =
-    java.nio.file.Paths.get(dir, "manifest.json")
-
-  private def writeEdManifest(dir: String, m: EmbedDupManifest): Unit = {
-    def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"rows":${m.rows},"fingerprint":${m.fingerprint},""" +
-      s""""bands":${m.bands},"bits":${m.bits},"dim":${m.dim},""" +
-      s""""buckets":${m.buckets},"id_col":"${m.idCol}",""" +
-      s""""vec_col":"${m.vecCol}","id_type":"${m.idType}",""" +
-      s""""block_cols":${arr(m.blockCols)},""" +
-      s""""block_types":${arr(m.blockTypes)},"mv":2,"mseq":${m.mseq},""" +
-      s""""appended_rows":${m.appendedRows},"seq":${m.seq},""" +
-      s""""last_rows":${m.lastRows},"last_fp":${m.lastFp},""" +
-      s""""batches":${arr(m.batches)}}"""
-    val p = edManifestPath(dir)
-    java.nio.file.Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling("manifest.json.tmp")
-    java.nio.file.Files.write(tmp, json.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
-
-  private[graft] def readEdManifest(dir: String): Option[EmbedDupManifest] = {
-    val p = edManifestPath(dir)
-    if (!java.nio.file.Files.exists(p)) None
-    else {
-      val s = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      def f(k: String) = s""""$k":(-?\\d+)""".r.findFirstMatchIn(s).map(_.group(1))
-      def str(k: String) = s""""$k":"([^"]*)"""".r.findFirstMatchIn(s).map(_.group(1))
-      def jarr(k: String): Option[Seq[String]] =
-        s""""$k":\\[([^\\]]*)\\]""".r.findFirstMatchIn(s).map(
-          _.group(1).split("\",\"").map(_.trim.stripPrefix("\"")
-            .stripSuffix("\"")).filter(_.nonEmpty).toSeq)
-      // mv:2 stores block_cols/block_types as JSON arrays (a
-      // parameterized type like DECIMAL(10,2) contains a comma); the
-      // mv:1 legacy form was a comma-joined string — split it on comma,
-      // which was only ever correct for comma-free types
-      def list(k: String) = jarr(k).orElse(str(k).map(
-        _.split(",").map(_.trim).filter(_.nonEmpty).toSeq)).getOrElse(Nil)
-      val batches = jarr("batches").getOrElse(Nil)
-      for (r <- f("rows"); fp <- f("fingerprint"); ba <- f("bands");
-           bi <- f("bits"); d <- f("dim"); bu <- f("buckets");
-           ic <- str("id_col"); vc <- str("vec_col"); it <- str("id_type"))
-        yield EmbedDupManifest(r.toLong, fp.toLong, ba.toInt, bi.toInt,
-          d.toInt, bu.toInt, ic, vc, it,
-          list("block_cols"), list("block_types"),
-          f("appended_rows").map(_.toLong).getOrElse(0L), batches,
-          f("seq").map(_.toLong).getOrElse(batches.size.toLong),
-          f("last_rows").map(_.toLong).getOrElse(0L),
-          f("last_fp").map(_.toLong).getOrElse(0L),
-          f("mseq").map(_.toLong).getOrElse(
-            f("seq").map(_.toLong).getOrElse(batches.size.toLong)))
-    }
-  }
-
-  /** Catalog name of the stored embed index's bucketed bucket table
-    * (the [[shingleTable]] scheme — bucket metadata lives in the
-    * catalog). */
-  private[graft] def embedBucketTable(dir: String): String = {
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-      .digest(new java.io.File(dir).getAbsolutePath.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    s"graft_edix_$md5"
-  }
-
-  private val edValidated =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Int, Long, String)]()
-
-  /** Session-scoped stored-index location for a dataset tag (the
-    * [[nearDupIndexDir]] scheme, `edix_` namespace). */
-  def embedDupIndexDir(s: org.apache.spark.sql.SparkSession, tag: String): String = {
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-      .digest(tag.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_${s.sparkContext.applicationId}/edix_$md5").getAbsolutePath
-  }
+  /** Session-scoped stored-index location for a dataset tag
+    * ([[StoredIndex.dirFor]], `edix_` namespace). */
+  def embedDupIndexDir(s: SparkSession, tag: String): String = EmbedDup.dirFor(s, tag)
 
   /** PERSIST the [[EmbedDupIndex]] for a corpus under `dir`:
     *  - `vectors.parquet` (idCol, vecCol, blockCols...): the
     *    hygiene-filtered corpus vectors the probe's cosine verify joins;
     *  - `buckets/`: the banded bucket rows (idCol, blockCols..., bk) as
-    *    a BUCKETED-BY-(`bk`, blockCols) external table — the candidate equi-join
-    *    reads the corpus side exchange-free in any session (the
-    *    [[nearDupIndexWrite]] layout rule);
+    *    a table BUCKETED BY (`bk`, blockCols) — ALL of the candidate
+    *    join's keys ([[writeBucketed]]): since Spark 3.3 co-partitioning
+    *    requires every cluster key by default
+    *    (spark.sql.requireAllClusterKeysForCoPartition), so a bucket spec
+    *    on bk alone is planner-disabled for the (blockCols, bk) join;
     *  - `manifest.json`: corpus identity + FROZEN banding parameters
     *    ([[EmbedDupManifest]]).
     * Build cost: one corpus banding pass + one identity scan. Run once
     * per corpus snapshot; every later session [[embedDupIndexLoad]]s and
-    * pays only its own batches. SINGLE-WRITER per index dir. */
+    * pays only its own batches. */
   def embedDupIndexWrite(corpus: DataFrame, idCol: String, vecCol: String,
                          blockCols: Seq[String], dir: String,
                          bands: Int = EmbedBands,
                          targetOccupancy: Long = EmbedOccupancy,
                          dim: Int = EmbedDim, buckets: Int = 16): Unit = {
-    val s = corpus.sparkSession
-    val (n, fp) = docStats(corpus, idCol, vecCol)
+    val (n, fp, _) = StoredIndex.fingerprint(corpus, idCol, vecCol)
     require(n > 0, "embedDupIndexWrite: empty corpus")
     val ix = embedDupIndex(corpus, idCol, vecCol, blockCols, bands,
       targetOccupancy, dim)
     ix.vectors.write.mode("overwrite").parquet(s"$dir/vectors.parquet")
-    val tbl = embedBucketTable(dir)
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    rmTree(new java.io.File(s"$dir/buckets"))
-    // bucketed by (bk, blockCols...) — ALL of the candidate join's keys:
-    // since Spark 3.3 co-partitioning requires every cluster key by
-    // default (spark.sql.requireAllClusterKeysForCoPartition), so a
-    // bucket spec on bk alone is planner-disabled for the (blockCols,
-    // bk) join and the corpus side would re-shuffle anyway
-    ix.buckets.repartition(buckets, col("bk") +: blockCols.map(col): _*)
-      .write.bucketBy(buckets, "bk", blockCols: _*).sortBy("bk", blockCols: _*)
-      .option("path", s"$dir/buckets").format("parquet")
-      .mode("overwrite").saveAsTable(tbl)
-    rmTree(new java.io.File(s"$dir/batches"))
-    rmTree(new java.io.File(s"$dir/_staging"))
-    rmTree(new java.io.File(s"$dir/_commits"))
-    writeEdManifest(dir, EmbedDupManifest(n, fp, bands, ix.bits, dim,
+    writeBucketed(ix.buckets, EmbedDup.table(dir), s"$dir/buckets", buckets,
+      "bk" +: blockCols)
+    EmbedDup.publishBuild(dir, EmbedDupManifest(n, fp, bands, ix.bits, dim,
       buckets, idCol, vecCol, corpus.schema(idCol).dataType.sql,
-      blockCols, blockCols.map(c => corpus.schema(c).dataType.sql)))
-    edValidated.put(dir, (ndCorpusKey(corpus), bands, targetOccupancy,
-      blockCols.mkString(",")))
-    ()
+      blockCols, blockCols.map(c => corpus.schema(c).dataType.sql)),
+      corpus, (idCol, vecCol), blockCols, bands, targetOccupancy)
   }
 
   /** Serve a stored embed index: vectors from parquet, the base bucket
-    * rows through the catalog's BUCKETED table (re-registered via DDL in
-    * a fresh session), one bucket root per committed append batch.
-    * O(metadata) — no probe ever re-bands the corpus. */
-  def embedDupIndexLoad(s: org.apache.spark.sql.SparkSession,
-                        dir: String): EmbedDupIndex = {
-    val m = readEdManifest(dir).getOrElse(sys.error(
-      s"embedDupIndexLoad: no readable manifest under $dir — build first"))
-    val tbl = embedBucketTable(dir)
-    if (!s.catalog.tableExists(tbl)) {
-      val blockDdl = m.blockCols.zip(m.blockTypes)
-        .map { case (c, t) => s"`$c` $t, " }.mkString
-      val clusterCols = ("bk" +: m.blockCols).map(c => s"`$c`").mkString(", ")
-      s.sql(s"CREATE TABLE $tbl (`${m.idCol}` ${m.idType}, $blockDdl" +
-        s"`bk` BIGINT) USING parquet CLUSTERED BY ($clusterCols) " +
-        s"SORTED BY ($clusterCols) " +
-        s"INTO ${m.buckets} BUCKETS LOCATION '$dir/buckets'")
-    }
-    val base = s.table(tbl)
-    val roots = base +: m.batches.map(b =>
-      s.read.parquet(s"$dir/batches/$b/buckets.parquet"))
-    val vectors = (s.read.parquet(s"$dir/vectors.parquet") +:
-      m.batches.map(b => s.read.parquet(s"$dir/batches/$b/vectors.parquet")))
-      .reduce(_ unionByName _)
+    * rows through the catalog's BUCKETED table, one bucket root per
+    * committed append batch. O(metadata) — no probe ever re-bands the
+    * corpus. */
+  def embedDupIndexLoad(s: SparkSession, dir: String): EmbedDupIndex = {
+    val m = EmbedDup.load(dir, "embedDupIndexLoad")
+    val roots = bucketedTable(s, EmbedDup.table(dir), s"$dir/buckets", m.buckets,
+      "bk" +: m.blockCols,
+      ((m.idCol -> m.idType) +: m.blockCols.zip(m.blockTypes)) :+ ("bk" -> "BIGINT")) +:
+      EmbedDup.batchPaths(dir, m, "buckets.parquet").map(s.read.parquet(_))
+    val vectors = (s"$dir/vectors.parquet" +: EmbedDup.batchPaths(dir, m, "vectors.parquet"))
+      .map(s.read.parquet(_)).reduce(_ unionByName _)
     EmbedDupIndex(m.idCol, m.vecCol, m.blockCols, m.bands, m.bits, m.dim,
       vectors, roots.reduce(_ unionByName _), roots)
   }
 
-  /** Trust check for a stored embed index — the [[nearDupValid]]
-    * contract: completeness over base + every manifest-listed batch
-    * root, parameters equal, corpus (rows, fingerprint) equal. Memoized
-    * per (dir, corpus frame). */
+  /** Trust check for a stored embed index ([[StoredIndex.valid]]): the
+    * banding parameters and columns equal, the corpus identical. */
   def embedDupValid(corpus: DataFrame, idCol: String, vecCol: String,
                     blockCols: Seq[String], dir: String,
                     bands: Int = EmbedBands,
-                    targetOccupancy: Long = EmbedOccupancy): Boolean = {
-    val key = ndCorpusKey(corpus)
-    val memo = (key, bands, targetOccupancy, blockCols.mkString(","))
-    if (edValidated.get(dir) == memo) return true
-    def committed(p: String) = new java.io.File(s"$p/_SUCCESS").exists()
-    val valid = readEdManifest(dir).exists { m =>
+                    targetOccupancy: Long = EmbedOccupancy): Boolean =
+    EmbedDup.valid(dir, corpus, (idCol, vecCol), blockCols, bands, targetOccupancy) { m =>
       m.bands == bands && m.idCol == idCol && m.vecCol == vecCol &&
-        m.blockCols == blockCols &&
-        committed(s"$dir/vectors.parquet") && committed(s"$dir/buckets") &&
-        m.batches.forall(b => committed(s"$dir/batches/$b/buckets.parquet") &&
-          committed(s"$dir/batches/$b/vectors.parquet")) && {
-          val (n, fp) = docStats(corpus, idCol, vecCol)
-          m.rows == n && m.fingerprint == fp
-        }
+        m.blockCols == blockCols
     }
-    if (valid) edValidated.put(dir, memo)
-    valid
-  }
 
   /** [[embedDupIndexWrite]] unless a VALID stored index for exactly this
     * corpus is present, then [[embedDupIndexLoad]]. */
@@ -1362,130 +1073,64 @@ object Dedup {
 
   /** INCREMENTAL maintenance of the stored embed index: band a batch of
     * ACCEPTED vectors with the FROZEN bits and append bucket + vector
-    * rows — the [[nearDupAppend]] protocol verbatim (stage → promote →
-    * one atomic manifest commit; deterministic batch id; (lastRows,
-    * lastFp) replay pair for the foreachBatch at-least-once window;
-    * additive fingerprint so [[embedDupValid]] of the union accepts the
-    * appended index). O(batch); the corpus artifacts are never touched.
-    * The frozen-bits drift contract mirrors the text family's frozen
-    * census: bucket occupancy decays with `appendedRows / rows`, the
-    * manifest fraction is the alert, re-[[embedDupIndexWrite]] is the
-    * remedy. SINGLE-WRITER per index dir. */
-  def embedDupAppend(batch: DataFrame, dir: String): Unit = {
-    val m = readEdManifest(dir).getOrElse(sys.error(
-      s"embedDupAppend: no readable manifest under $dir — build first"))
-    val (bn, bfp) = docStats(batch, m.idCol, m.vecCol)
-    if (bn == 0) return
-    if (m.lastRows == bn && m.lastFp == bfp) {
-      log.warn(s"embedDupAppend: batch (rows=$bn, fp=$bfp) matches the " +
-        s"last committed batch under $dir — treating as an at-least-once " +
-        "replay, skipping")
-      return
+    * rows — the [[StoredIndex]] append. O(batch); the corpus artifacts
+    * are never touched. The frozen-bits drift contract mirrors the text
+    * family's frozen census: bucket occupancy decays with `appendedRows /
+    * rows`, the manifest fraction is the alert, re-[[embedDupIndexWrite]]
+    * is the remedy. */
+  def embedDupAppend(batch: DataFrame, dir: String): Unit =
+    EmbedDup.publish(dir, embedDupAppendStage(batch, dir))
+
+  /** Append phase 1 — STAGE the batch's bucket and vector rows
+    * ([[StoredIndex.stage]]). */
+  private[graft] def embedDupAppendStage(batch: DataFrame, dir: String)
+      : Option[(EmbedDupManifest, String, Long, Long)] = {
+    val m = EmbedDup.load(dir, "embedDupAppend")
+    val (bn, bfp, _) = StoredIndex.fingerprint(batch, m.idCol, m.vecCol)
+    EmbedDup.stage(dir, m, bn, bfp) { staging =>
+      val b = embedFinite(batch, m.vecCol)
+        .select((m.idCol +: m.vecCol +: m.blockCols).map(col): _*)
+        .localCheckpoint(true)
+      embedSigs(b, m.idCol, m.vecCol, m.blockCols, m.bands, m.bits, m.dim)
+        .write.mode("overwrite").parquet(s"$staging/buckets.parquet")
+      b.write.mode("overwrite").parquet(s"$staging/vectors.parquet")
     }
-    val batchId = f"b${m.seq + 1}%04d_${bn}_${java.lang.Long.toHexString(bfp)}"
-    val staging = s"$dir/_staging/$batchId"
-    val b = embedFinite(batch, m.vecCol)
-      .select((m.idCol +: m.vecCol +: m.blockCols).map(col): _*)
-      .localCheckpoint(true)
-    embedSigs(b, m.idCol, m.vecCol, m.blockCols, m.bands, m.bits, m.dim)
-      .write.mode("overwrite").parquet(s"$staging/buckets.parquet")
-    b.write.mode("overwrite").parquet(s"$staging/vectors.parquet")
-    val target = new java.io.File(s"$dir/batches/$batchId")
-    rmTree(target)
-    java.nio.file.Files.createDirectories(target.getParentFile.toPath)
-    java.nio.file.Files.move(java.nio.file.Paths.get(staging), target.toPath)
-    casCommit(dir, m.mseq, batchId, readEdManifest(dir).map(_.mseq)) { ms =>
-      writeEdManifest(dir, m.copy(rows = m.rows + bn,
-        fingerprint = m.fingerprint + bfp,
-        appendedRows = m.appendedRows + bn, batches = m.batches :+ batchId,
-        seq = m.seq + 1, lastRows = bn, lastFp = bfp, mseq = ms))
-    }
-    edValidated.remove(dir)
-    ()
   }
 
   /** MAINTENANCE fold for the stored embed index: compact every
-    * committed [[embedDupAppend]] batch root into ONE root —
-    * [[nearDupCompact]]'s protocol applied to the embed family,
-    * completing the stored-artifact operational loop (build / append /
-    * compact / stats) for the THIRD index. Without it a long-running
-    * semantic-dedup ingest accumulates one root per append forever and
-    * [[probeEmbedDups]] pays one candidate join PER ROOT per probe;
-    * after the fold it pays exactly two (bucketed base + compacted
-    * root).
-    *
-    * Probe-IDENTICAL by construction: bands/bits are FROZEN in the
-    * manifest and the fold is pure layout (bucket multiset and vector
-    * set unchanged) — like the text family's and unlike the append
-    * path, no stationarity assumption is needed (DedupSpec pins exact
-    * equality against a never-compacted twin, and the registered
-    * dedup_embed_index_compact query carries a full DuckDB oracle).
-    * Keeps `appendedRows`: frozen-bits occupancy drift is a property of
-    * the BUILD, which only a re-[[embedDupIndexWrite]] refits — the
-    * gauge keeps alerting after a fold, by design. Stage → promote →
-    * one CAS'd manifest commit ([[casCommit]]); a torn fold is
-    * invisible; a row-count read-back guards against committing a
-    * partial write; DEFERRED sweep (reader grace period: only dirs
-    * older than this fold's inputs are removed, so a probe planned
-    * against the pre-compact manifest keeps every file for one full
-    * maintenance interval). SINGLE-WRITER per index dir. */
-  def embedDupCompact(s: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val m = readEdManifest(dir).getOrElse(sys.error(
-      s"embedDupCompact: no readable manifest under $dir"))
-    if (m.batches.size < 2) return
-    val compactId = f"c${m.seq}%04d_${m.appendedRows}_" +
-      java.lang.Long.toHexString(m.fingerprint)
-    val staging = s"$dir/_staging/$compactId"
-    def foldRead(a: String): DataFrame =
-      m.batches.map(b => s.read.parquet(s"$dir/batches/$b/$a"))
-        .reduce(_ unionByName _)
-    val expect = foldRead("buckets.parquet").count()
-    // file count tracks the base table's bucket count — the appended
-    // mass is the small side, this only bounds small-file growth
-    foldRead("buckets.parquet")
-      .repartition(m.buckets, ("bk" +: m.blockCols).map(col): _*)
-      .write.mode("overwrite").parquet(s"$staging/buckets.parquet")
-    foldRead("vectors.parquet")
-      .write.mode("overwrite").parquet(s"$staging/vectors.parquet")
-    val folded = s.read.parquet(s"$staging/buckets.parquet").count()
-    require(folded == expect,
-      s"embedDupCompact: folded $folded bucket rows but the inputs hold " +
-        s"$expect — the fold write under $dir is torn; not committing")
-    val target = new java.io.File(s"$dir/batches/$compactId")
-    rmTree(target)
-    java.nio.file.Files.createDirectories(target.getParentFile.toPath)
-    java.nio.file.Files.move(java.nio.file.Paths.get(staging), target.toPath)
-    casCommit(dir, m.mseq, compactId, readEdManifest(dir).map(_.mseq)) { ms =>
-      writeEdManifest(dir, m.copy(batches = Seq(compactId), mseq = ms))
+    * committed [[embedDupAppend]] batch root into ONE
+    * ([[StoredIndex.compact]]). Without it [[probeEmbedDups]] pays one
+    * candidate join PER ROOT per probe; after the fold it pays exactly
+    * two (bucketed base + compacted root). Probe-IDENTICAL by
+    * construction: bands/bits are FROZEN in the manifest and the fold is
+    * pure layout (DedupSpec pins exact equality against a never-compacted
+    * twin, and the registered dedup_embed_index_compact query carries a
+    * full DuckDB oracle). Keeps `appendedRows`: frozen-bits occupancy
+    * drift is a property of the BUILD, which only a
+    * re-[[embedDupIndexWrite]] refits. */
+  def embedDupCompact(s: SparkSession, dir: String): Unit =
+    EmbedDup.compact(s, dir, "embedDupCompact") { (m, staging) =>
+      val expect = EmbedDup.readBatches(s, dir, m, "buckets.parquet").count()
+      // file count tracks the base table's bucket count — the appended
+      // mass is the small side, this only bounds small-file growth
+      EmbedDup.readBatches(s, dir, m, "buckets.parquet")
+        .repartition(m.buckets, ("bk" +: m.blockCols).map(col): _*)
+        .write.mode("overwrite").parquet(s"$staging/buckets.parquet")
+      EmbedDup.readBatches(s, dir, m, "vectors.parquet")
+        .write.mode("overwrite").parquet(s"$staging/vectors.parquet")
+      ("buckets.parquet", expect)
     }
-    // corpus identity (rows, fingerprint, bands, bits) is unchanged by a
-    // fold, so an existing edValidated memo stays correct — not cleared
-    Option(new java.io.File(s"$dir/batches").listFiles()).foreach(
-      _.filterNot(f => f.getName == compactId || m.batches.contains(f.getName))
-        .foreach(rmTree))
-    log.info(s"embedDupCompact: folded ${m.batches.size} batch roots " +
-      s"(${m.appendedRows} appended vectors) into $compactId under $dir")
-  }
 
-  /** ONE-ROW health report over a stored embed index — the operational
-    * gauge ([[nearDupStats]]'s pattern): manifest identity + the
-    * staleness fraction that alerts the rebuild (the frozen-bits drift
-    * contract), plus artifact row counts (parquet metadata counts — no
-    * vector bytes read). */
-  def embedDupStats(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val m = readEdManifest(dir).getOrElse(sys.error(
-      s"embedDupStats: no readable manifest under $dir"))
-    val baseBuckets = s.read.parquet(s"$dir/buckets").count()
-    val appendedBuckets =
-      if (m.batches.isEmpty) 0L
-      else m.batches.map(b =>
-        s.read.parquet(s"$dir/batches/$b/buckets.parquet").count()).sum
-    Seq((m.rows, m.appendedRows,
-        if (m.rows == 0) 0.0 else m.appendedRows.toDouble / m.rows,
-        m.batches.size, m.bands, m.bits, m.dim, baseBuckets, appendedBuckets))
-      .toDF("rows", "appended_rows", "appended_fraction", "batch_roots",
-        "bands", "bits", "dim", "base_buckets", "appended_buckets")
+  /** ONE-ROW health report over a stored embed index: the shared
+    * [[StoredIndex.stats]] columns (the frozen-bits drift alert), then
+    * the banding parameters and artifact row counts (parquet metadata
+    * counts — no vector bytes read). */
+  def embedDupStats(s: SparkSession, dir: String): DataFrame = {
+    val m = EmbedDup.load(dir, "embedDupStats")
+    EmbedDup.stats(s, m, "bands" -> m.bands, "bits" -> m.bits, "dim" -> m.dim,
+      "base_buckets" -> s.read.parquet(s"$dir/buckets").count(),
+      "appended_buckets" ->
+        EmbedDup.batchPaths(dir, m, "buckets.parquet").map(s.read.parquet(_).count()).sum)
   }
 
   /** Embedding-cosine near-dup pairs, blocked: every within-block pair is

@@ -283,31 +283,12 @@ object Similarity {
       k)
   }
 
-  /** One-pass corpus statistics for the index manifest: (row count,
-    * content fingerprint, max vector width). The fingerprint is the
-    * WRAPAROUND SUM (mod 2⁶⁴) of `xxhash64(id, emb)` — order-independent
-    * (sum is commutative) but, unlike the original bit_xor spelling,
-    * multiplicity-sensitive: XOR cancels pairwise, so two corpora that
-    * differ only in even-multiplicity duplicated rows shared a
-    * fingerprint and could silently serve each other's index.
-    *
-    * Spelled as FOUR 16-bit LIMB SUMS over plain longs, recombined with
-    * Java wraparound `+`/`<<` on the driver — exactly the low 64 bits of
-    * the true sum, with no decimal aggregation anywhere (the previous
-    * decimal(38,0) spelling was measured as a 2.1× regression on the
-    * probe path: decimal sum buffers are object-heavy vs a codegen'd
-    * long add). Each limb is ≤ 2¹⁶−1, so the per-limb long sum is
-    * ANSI-overflow-safe to ~1.4e14 rows — far past any corpus this
-    * manifest guards. */
+  /** One-pass (row count, [[StoredIndex.fingerprint]] of (id, emb), max
+    * vector width) of an (id, emb) frame. */
   private def corpusStats(c: DataFrame): (Long, Long, Int) = {
-    val h = xxhash64(col("id"), col("emb"))
-    def limb(i: Int): Column =
-      coalesce(sum(shiftrightunsigned(h, 16 * i).bitwiseAND(lit(0xFFFFL))), lit(0L))
-    val r = c.agg(count(lit(1)), limb(0), limb(1), limb(2), limb(3),
-      coalesce(max(size(col("emb"))), lit(0))).head()
-    val fp = r.getLong(1) + (r.getLong(2) << 16) +
-      (r.getLong(3) << 32) + (r.getLong(4) << 48)
-    (r.getLong(0), fp, r.getInt(5))
+    val (n, fp, r) = StoredIndex.fingerprint(c, "id", "emb",
+      coalesce(max(size(col("emb"))), lit(0)))
+    (n, fp, r.getInt(0))
   }
 
   /** Fingerprint ALGORITHM version stamped into the manifest: 1 was the
@@ -317,33 +298,17 @@ object Similarity {
     * change masquerading as corpus drift. */
   private[operators] val FingerprintVersion = 2
 
-  /** The stored-index manifest: what [[ivfBuild]] indexed, plus every
-    * [[ivfAppend]] batch committed since. Validated by
-    * [[ivfBuildIfAbsent]] before an existing index is trusted. `fpv` is
-    * the fingerprint-algorithm version (absent in pre-versioning
-    * manifests → 1).
-    *
-    * `appendedRows`/`batches` are the STALENESS SIGNAL: the build stamps
-    * both empty, every commit adds the batch additively, and
-    * `appendedRows / rows` ([[ivfAppendedFraction]]) is the fraction of
-    * the index assigned under drifted centroids — the quantity a
-    * deployment alerts on to schedule the periodic re-[[ivfBuild]]
-    * (RECALL.md carries the measured recall-vs-appended-fraction curve
-    * that calibrates the threshold).
-    *
-    * The manifest is ALSO the reader's commit log: serving reads the base
-    * cell artifacts plus exactly the `batches` listed here, so data that
-    * reached the directory without its manifest update (a torn append)
-    * is invisible — see [[ivfAppend]]'s crash-recovery contract.
-    *
-    * `seq` counts appends ever committed since the build (monotone — it
-    * survives [[ivfCompact]], unlike `batches.size`, so batch ids never
-    * collide across a compaction). `lastRows`/`lastFp` are the last
-    * committed append batch's row count and content fingerprint — the
-    * REPLAY-DETECTION pair ([[ivfAppendStage]]): both survive compaction
-    * too, so a streaming replay that straddles a compact is still caught.
-    * (0, 0) means "no append since build" (an empty batch never commits,
-    * so a real batch always has rows > 0). */
+  /** The IVF manifest: the [[StoredIndex]] commit log plus what
+    * [[ivfBuild]] fitted — `nlist`/`dim`, `fpv` (fingerprint-algorithm
+    * version, absent → 1), `mv` (read-side layout version, see
+    * [[ManifestVersion]]), and the [[ivfRefit]] state: `cbv` (current
+    * codebook version), `nlist0` (the BUILT nlist), `refitRows` (base
+    * rows refits relocated into batch space) and `refits` (seq → split
+    * cells, the read rule of [[readRoot]]). `appendedRows / rows`
+    * ([[ivfAppendedFraction]]) is the fraction of the index assigned
+    * under drifted centroids — RECALL.md carries the measured
+    * recall-vs-appended-fraction curve that calibrates the rebuild
+    * threshold. */
   final case class IvfManifest(rows: Long, fingerprint: Long, nlist: Int,
                                dim: Int, fpv: Int = 1,
                                appendedRows: Long = 0L,
@@ -357,6 +322,12 @@ object Similarity {
                                nlist0: Int = 0,
                                refitRows: Long = 0L,
                                refits: Seq[(Long, Seq[Int])] = Nil)
+      extends StoredIndex.Manifest[IvfManifest] {
+    def withLog(l: StoredIndex.CommitLog): IvfManifest =
+      copy(rows = l.rows, fingerprint = l.fingerprint, appendedRows = l.appendedRows,
+        batches = l.batches, seq = l.seq, lastRows = l.lastRows, lastFp = l.lastFp,
+        mseq = l.mseq)
+  }
 
   /** Manifest LAYOUT version. v1 = everything before the explicit field
     * (including manifests that already carry last_rows/last_fp); v2 =
@@ -366,144 +337,36 @@ object Similarity {
     * key on the `lastRows == 0` sentinel, which conflates "pre-upgrade
     * manifest" with "last batch was empty" — unreachable today (an
     * empty batch never commits) but one refactor away from wrong. `mv`
-    * is read-side state: [[writeManifest]] always stamps the CURRENT
-    * version (every write emits the full current layout), so any
-    * manifest mutation upgrades it. */
+    * is read-side state: every manifest write stamps the CURRENT
+    * version, so any manifest mutation upgrades it. */
   private[graft] val ManifestVersion = 2
 
-  private def manifestPath(indexDir: String) =
-    java.nio.file.Paths.get(indexDir, "manifest.json")
-
-  /** ATOMIC manifest replace (write sibling tmp, rename over): the
-    * manifest is the index's commit point — a reader (or a crash) must
-    * see either the old complete manifest or the new one, never a torn
-    * write. POSIX/HDFS rename gives exactly that; an object-store
-    * deployment fronts the manifest with its store's conditional-put. */
-  private def writeManifest(indexDir: String, m: IvfManifest): Unit = {
-    val batchesJson = m.batches.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val refitsJson = m.refits
-      .map { case (rs, cs) => s"""{"seq":$rs,"cells":[${cs.mkString(",")}]}""" }
-      .mkString("[", ",", "]")
-    val json = s"""{"rows":${m.rows},"fingerprint":${m.fingerprint},""" +
-      s""""nlist":${m.nlist},"dim":${m.dim},"fpv":${m.fpv},""" +
-      s""""mv":$ManifestVersion,"mseq":${m.mseq},""" +
-      s""""appended_rows":${m.appendedRows},"seq":${m.seq},""" +
-      s""""last_rows":${m.lastRows},"last_fp":${m.lastFp},""" +
-      s""""cbv":${m.cbv},"nlist0":${m.nlist0},""" +
-      s""""refit_rows":${m.refitRows},"refits":$refitsJson,""" +
-      s""""batches":$batchesJson}"""
-    val p = manifestPath(indexDir)
-    java.nio.file.Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling("manifest.json.tmp")
-    java.nio.file.Files.write(tmp, json.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
-
-  /** CHECKED manifest replace — turns the single-writer contract into an
-    * enforced one. The manifest read-modify-write is not atomic ACROSS
-    * writers; before this guard, two racing appends could both commit and
-    * one batch's manifest delta was silently lost (after which
-    * [[ivfValid]] of the true union fails closed into a rebuild —
-    * correct, but an O(corpus) fit paid for a coordination bug). The CAS:
-    * every mutation claims a sequencer file `_commits/m<mseq+1>` with
-    * CREATE_NEW — the filesystem's atomic create-if-absent — whose
-    * content is the mutation's deterministic token (batch/compact id).
-    * Exactly one writer per mseq can create it; the loser gets
-    * FileAlreadyExistsException and FAILS LOUDLY with the winner's token,
-    * its staged (uncommitted, invisible) data intact for a retry against
-    * the fresh manifest. A crash BETWEEN claim and manifest write is
-    * recovered by the token match: the same mutation retried re-reads the
-    * old manifest, claims the same mseq, finds its OWN token, and
-    * proceeds to the manifest write (idempotent — stage dirs are
-    * overwrite-by-id). [[ivfBuild]] resets the sequencer tree with the
-    * rest of the index. POSIX/HDFS give CREATE_NEW exactly-once; an
-    * object-store deployment maps this to its conditional-put. */
-  private def casWriteManifest(indexDir: String, expected: IvfManifest,
-                               next: IvfManifest, token: String): Unit = {
-    val marker = java.nio.file.Paths.get(
-      indexDir, "_commits", s"m${expected.mseq + 1}")
-    java.nio.file.Files.createDirectories(marker.getParent)
-    try {
-      java.nio.file.Files.write(marker, token.getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE_NEW)
-      ()
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        val winner = new String(
-          java.nio.file.Files.readAllBytes(marker), "UTF-8")
-        if (winner != token)
-          throw new IllegalStateException(
-            s"ivf manifest CAS lost: commit seq ${expected.mseq + 1} under " +
-              s"$indexDir was already claimed by '$winner' (this writer: " +
-              s"'$token') — concurrent mutation detected; re-read the " +
-              "manifest and retry this mutation against the fresh state")
-      // winner == token: our own crashed attempt — fall through and
-      // (re-)publish the manifest, UNLESS the original commit actually
-      // succeeded and a LATER mutation has since committed: replaying a
-      // stale internal commit would then rewrite the manifest with
-      // old-based content (mseq regresses), silently erasing the later
-      // commit. The guard re-reads the live manifest; at-or-past our
-      // target mseq means our publish (and possibly more) already
-      // landed, so the replay is a no-op.
-    }
-    readManifest(indexDir).filter(_.mseq > expected.mseq) match {
-      case Some(cur) =>
-        log.info(s"ivf manifest CAS: commit seq ${expected.mseq + 1} under " +
-          s"$indexDir already published (live mseq ${cur.mseq}) — " +
-          "idempotent replay, not rewriting")
-      case None =>
-        writeManifest(indexDir, next.copy(mseq = expected.mseq + 1))
-    }
-  }
-
-  private[graft] def readManifest(indexDir: String): Option[IvfManifest] = {
-    val p = manifestPath(indexDir)
-    if (!java.nio.file.Files.exists(p)) None
-    else {
-      val s = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      // f() finds the FIRST occurrence of `"k":<int>` — safe because
-      // writeManifest emits every top-level numeric field BEFORE the
-      // `refits` array (whose entries also carry a "seq" key)
-      def f(k: String) = s""""$k":(-?\\d+)""".r.findFirstMatchIn(s).map(_.group(1))
-      val batches = """"batches":\[([^\]]*)\]""".r.findFirstMatchIn(s)
-        .map(_.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty).toSeq)
-        .getOrElse(Nil)
-      // refit entries are the only `{"seq":N,"cells":[...]}` shapes in the
-      // document, so a global scan is unambiguous
-      val refits = """\{"seq":(\d+),"cells":\[([^\]]*)\]\}""".r
-        .findAllMatchIn(s).map { mm =>
-          (mm.group(1).toLong,
-            mm.group(2).split(",").map(_.trim).filter(_.nonEmpty)
-              .map(_.toInt).toSeq)
-        }.toSeq
-      for (r <- f("rows"); fp <- f("fingerprint"); nl <- f("nlist"); d <- f("dim"))
-        yield IvfManifest(r.toLong, fp.toLong, nl.toInt, d.toInt,
-          f("fpv").map(_.toInt).getOrElse(1),
-          f("appended_rows").map(_.toLong).getOrElse(0L), batches,
-          // pre-`seq` manifests never compacted, so batches.size IS the
-          // append count; absent last_* fields fall back to the legacy
-          // batch-id-suffix replay check (see ivfAppendStage)
-          f("seq").map(_.toLong).getOrElse(batches.size.toLong),
-          f("last_rows").map(_.toLong).getOrElse(0L),
-          f("last_fp").map(_.toLong).getOrElse(0L),
-          f("mv").map(_.toInt).getOrElse(1),
-          // pre-CAS manifests: seed the sequencer at the append count
-          // (seq, falling back to batches.size exactly like seq itself
-          // does) — a mixed-era dir whose appends already claimed
-          // markers m1..mN must not re-claim them, and a wholly legacy
-          // dir has no sequencer tree at all, so any seed is safe there
-          f("mseq").map(_.toLong)
-            .orElse(f("seq").map(_.toLong))
-            .getOrElse(batches.size.toLong),
-          f("cbv").map(_.toLong).getOrElse(0L),
-          f("nlist0").map(_.toInt).getOrElse(0),
-          f("refit_rows").map(_.toLong).getOrElse(0L),
-          refits)
-    }
+  /** The IVF family of [[StoredIndex]]: base artifacts `cells.parquet`,
+    * `cells_i8.parquet` and the current codebook; every batch root holds
+    * both cell artifacts. On a legacy (v1) manifest without the replay
+    * pair, a batch whose fingerprint suffixes the last batch id is read
+    * as the replay (fingerprint-only; rows unknown). */
+  object Ivf extends StoredIndex[IvfManifest]("ivf") {
+    protected def layoutVersion: Int = ManifestVersion
+    protected def params(m: IvfManifest): Seq[(String, Any)] =
+      Seq("nlist" -> m.nlist, "dim" -> m.dim, "fpv" -> m.fpv)
+    override protected def trailer(m: IvfManifest): Seq[(String, Any)] =
+      Seq("cbv" -> m.cbv, "nlist0" -> m.nlist0, "refit_rows" -> m.refitRows,
+        "refits" -> m.refits.map { case (rs, cs) => StoredIndex.Obj("seq" -> rs, "cells" -> cs) })
+    protected def decode(d: StoredIndex.Doc, l: StoredIndex.CommitLog): Option[IvfManifest] =
+      for (nl <- d.int("nlist"); dim <- d.int("dim"))
+        yield IvfManifest(l.rows, l.fingerprint, nl, dim, d.int("fpv").getOrElse(1),
+          mv = d.int("mv").getOrElse(1), cbv = d.long("cbv").getOrElse(0L),
+          nlist0 = d.int("nlist0").getOrElse(0),
+          refitRows = d.long("refit_rows").getOrElse(0L),
+          refits = d.docs("refits").flatMap(r => r.long("seq").map(_ -> r.ints("cells"))))
+          .withLog(l)
+    protected def baseArtifacts(m: IvfManifest): Seq[String] =
+      Seq("cells.parquet", "cells_i8.parquet", codebookName(m))
+    protected def batchArtifacts: Seq[String] = Seq("cells.parquet", "cells_i8.parquet")
+    override protected def legacyReplay(m: IvfManifest, fp: Long): Boolean =
+      m.mv < ManifestVersion && m.lastRows == 0 &&
+        m.batches.lastOption.exists(_.endsWith("_" + StoredIndex.hex(fp)))
   }
 
   /** Fraction of the stored index that was [[ivfAppend]]ed after the last
@@ -511,13 +374,12 @@ object Similarity {
     * readable manifest). Deployments compare it against the RECALL.md
     * drift curve's budget and re-build past their threshold. */
   def ivfAppendedFraction(indexDir: String): Option[Double] =
-    readManifest(indexDir).map(m =>
-      if (m.rows == 0) 0.0 else m.appendedRows.toDouble / m.rows)
+    Ivf.read(indexDir).map(Ivf.appendedFraction)
 
   /** ONE-ROW health report over a stored index — the operational gauge
     * the serving tier alerts on. Columns:
-    *  - `rows`/`appended_rows`/`appended_fraction`/`batch_roots`/`nlist`/
-    *    `dim`: straight off the manifest (no data scan);
+    *  - the shared [[StoredIndex.stats]] columns, then `nlist`/`dim`:
+    *    straight off the manifest (no data scan);
     *  - `occupied_cells`, `top_share`: cell-occupancy census of the WHOLE
     *    index — `top_share` is the fraction of all indexed rows living in
     *    the `topCells` fullest cells;
@@ -548,9 +410,7 @@ object Similarity {
     * long-lived serving session running the gauge periodically leaked
     * one pinned RDD per invocation into the block manager. */
   def ivfStats(s: SparkSession, indexDir: String, topCells: Int = 20): DataFrame = {
-    import s.implicits._
-    val m = readManifest(indexDir).getOrElse(sys.error(
-      s"ivfStats: no readable manifest under $indexDir"))
+    val m = Ivf.load(indexDir, "ivfStats")
     require(topCells < m.nlist,
       s"ivfStats: topCells=$topCells must be < nlist=${m.nlist} — with " +
         "topCells >= nlist, top_share is identically 1.0 and the " +
@@ -569,35 +429,20 @@ object Similarity {
     // the live batch-space total (appends + refit-relocated rows)
     val (aOcc, aTopShare) =
       if (m.batches.isEmpty) (0L, 0.0)
-      else census(
-        m.batches.map(b =>
-            readRoot(s, s"$indexDir/batches/$b/cells.parquet", rootSeq(b), m))
-          .reduce(_ unionByName _).select("cell"),
-        m.appendedRows + m.refitRows)
-    Seq((m.rows, m.appendedRows,
-        if (m.rows == 0) 0.0 else m.appendedRows.toDouble / m.rows,
-        m.batches.size, m.nlist, m.dim, occ, topShare, aOcc, aTopShare))
-      .toDF("rows", "appended_rows", "appended_fraction", "batch_roots",
-        "nlist", "dim", "occupied_cells", "top_share",
-        "appended_occupied_cells", "appended_top_share")
-  }
-
-  /** Every root holding cell data for artifact `a` ("cells.parquet" /
-    * "cells_i8.parquet"): the base build output plus each COMMITTED
-    * append batch. Readers go through this — a batch directory the
-    * manifest does not list (a torn append) is invisible. Each root is a
-    * complete `cell=`-partitioned parquet tree, so a multi-root read
-    * keeps partition discovery AND the probe's cell pruning per root. */
-  private def cellRoots(indexDir: String, a: String): Seq[String] = {
-    val batches = readManifest(indexDir).map(_.batches).getOrElse(Nil)
-    s"$indexDir/$a" +: batches.map(b => s"$indexDir/batches/$b/$a")
+      else census(liveCells(s, indexDir, m, "cells.parquet", batchesOnly = true)
+        .select("cell"), m.appendedRows + m.refitRows)
+    Ivf.stats(s, m, "nlist" -> m.nlist, "dim" -> m.dim, "occupied_cells" -> occ,
+      "top_share" -> topShare, "appended_occupied_cells" -> aOcc,
+      "appended_top_share" -> aTopShare)
   }
 
   /** Mutation sequence number a root was committed at: the base build is
     * 0, batch roots carry it as their id prefix (`b<seq>_`, `c<seq>_`,
     * `r<seq>_`). [[ivfRefit]]'s exclusion rule keys on it. */
   private def rootSeq(batchId: String): Long =
-    "^[bcr](\\d+)".r.findFirstMatchIn(batchId).map(_.group(1).toLong).getOrElse(0L)
+    if ("bcr".contains(batchId.take(1)))
+      batchId.drop(1).takeWhile(_.isDigit).toLongOption.getOrElse(0L)
+    else 0L
 
   /** Cells whose data in a root committed at `seq` is SUPERSEDED by a
     * later refit root: every refit with refitSeq > seq relocated its
@@ -616,44 +461,70 @@ object Similarity {
     if (dead.isEmpty) df else df.filter(!col("cell").isin(dead: _*))
   }
 
-  /** (path, commit seq) of every root holding artifact `a`. */
-  private def rootsWithSeq(indexDir: String, a: String,
-                           m: IvfManifest): Seq[(String, Long)] =
-    (s"$indexDir/$a", 0L) +:
-      m.batches.map(b => (s"$indexDir/batches/$b/$a", rootSeq(b)))
+  /** The LIVE data of cell artifact `a` ("cells.parquet" /
+    * "cells_i8.parquet") over the base root (unless `batchesOnly`) and
+    * each root the manifest lists — a batch dir it does not list (a torn
+    * append) is invisible. Each root is a complete `cell=`-partitioned
+    * parquet tree, read separately and UNIONed: Spark's partition
+    * inference rejects sibling partitioned roots in one read, and a
+    * common `basePath` would misread `batches/<id>` as partition dirs. A
+    * fresh index (no batches) stays a single plain scan. Cell pruning
+    * across the union comes from the probes' STATIC cell-set filter (see
+    * [[probedCellSet]]) — runtime DPP cannot reach scans under a Union. */
+  private def liveCells(s: SparkSession, indexDir: String, m: IvfManifest,
+                        a: String, batchesOnly: Boolean = false): DataFrame =
+    ((if (batchesOnly) Nil else Seq((s"$indexDir/$a", 0L))) ++
+      m.batches.map(b => (s"$indexDir/batches/$b/$a", rootSeq(b))))
+      .map { case (p, sq) => readRoot(s, p, sq, m) }.reduce(_ unionByName _)
 
-  private def manifestOrEmpty(indexDir: String): IvfManifest =
-    readManifest(indexDir).getOrElse(IvfManifest(0L, 0L, 0, 0))
-
-  /** Path of the CURRENT codebook artifact: the build writes
-    * `codebook.parquet` (version 0); every [[ivfRefit]] stages a new
+  /** The CURRENT codebook artifact: the build writes `codebook.parquet`
+    * (version 0); every [[ivfRefit]] stages a new
     * `codebook_v<cbv>.parquet` and flips the manifest — old versions
     * stay behind for readers that planned against the old manifest. */
-  private def codebookPath(indexDir: String, m: IvfManifest): String =
-    if (m.cbv == 0L) s"$indexDir/codebook.parquet"
-    else s"$indexDir/codebook_v${m.cbv}.parquet"
+  private def codebookName(m: IvfManifest): String =
+    if (m.cbv == 0L) "codebook.parquet" else s"codebook_v${m.cbv}.parquet"
 
-  /** The stored float-cell data as ONE frame (base + committed batches) —
-    * what [[ivfProbe]] serves from; exposed for inspection/tests.
-    *
-    * Each root is read separately and UNIONed (Spark's partition
-    * inference rejects sibling partitioned roots in one read, and a
-    * common `basePath` would misread `batches/<id>` as partition dirs).
-    * A fresh index (no batches) stays a single plain scan. Cell pruning
-    * across the union comes from the probes' STATIC cell-set filter
-    * (see [[probedCellSet]]) — runtime DPP cannot reach scans under a
-    * Union, so the probes don't rely on it. */
-  private[graft] def ivfCells(s: SparkSession, indexDir: String): DataFrame = {
-    val m = manifestOrEmpty(indexDir)
-    rootsWithSeq(indexDir, "cells.parquet", m)
-      .map { case (p, sq) => readRoot(s, p, sq, m) }.reduce(_ unionByName _)
+  /** The current codebook's centroids, in cell order, checked against the
+    * manifest's nlist. */
+  private def centroids(s: SparkSession, indexDir: String, m: IvfManifest,
+                        what: String): Array[Array[Double]] = {
+    val rows = s.read.parquet(s"$indexDir/${codebookName(m)}")
+      .select("cell", "ctr").orderBy("cell").collect()
+    require(rows.length == m.nlist,
+      s"$what: codebook has ${rows.length} cells, manifest says ${m.nlist}")
+    rows.map(_.getSeq[Double](1).toArray)
   }
 
+  /** The stored float-cell data as ONE frame (base + committed batches) —
+    * what [[ivfProbe]] serves from; exposed for inspection/tests. */
+  private[graft] def ivfCells(s: SparkSession, indexDir: String): DataFrame =
+    liveCells(s, indexDir, Ivf.load(indexDir, "ivfCells"), "cells.parquet")
+
   /** The stored int8-cell data as one frame (base + committed batches). */
-  private[graft] def ivfCellsI8(s: SparkSession, indexDir: String): DataFrame = {
-    val m = manifestOrEmpty(indexDir)
-    rootsWithSeq(indexDir, "cells_i8.parquet", m)
-      .map { case (p, sq) => readRoot(s, p, sq, m) }.reduce(_ unionByName _)
+  private[graft] def ivfCellsI8(s: SparkSession, indexDir: String): DataFrame =
+    liveCells(s, indexDir, Ivf.load(indexDir, "ivfCellsI8"), "cells_i8.parquet")
+
+  /** Write both cell artifacts of one root from ONE assignment pass:
+    * `cells` (id, emb, cell) is clustered by cell into `parts` tasks first,
+    * so each cell lands in exactly one task → one file per cell per
+    * artifact (without it every shuffle task holds rows of many cells and
+    * the partitioned write emits one file per (task × cell) — measured
+    * 86k ~6 KB files at 2M rows, nlist=1414, which made the pruned probe
+    * file-open-bound). At corpus sizes where one cell outgrows a healthy
+    * file, add a within-cell salt to the repartition; pruning is
+    * unaffected. (localCheckpoint blocks die with their executor: a
+    * long-running cluster build should checkpoint reliably instead.) */
+  private def writeCells(cells: DataFrame, parts: Int, root: String): Unit = {
+    val persisted = cells.repartition(parts, col("cell")).localCheckpoint(true)
+    persisted.write.mode("overwrite").partitionBy("cell")
+      .parquet(s"$root/cells.parquet")
+    persisted
+      .withColumn("scale", Embeddings.i8Scale(col("emb")))
+      .withColumn("qcode",
+        quantize(col("emb"), col("scale")).cast("array<tinyint>"))
+      .select("id", "qcode", "scale", "cell")
+      .write.mode("overwrite").partitionBy("cell")
+      .parquet(s"$root/cells_i8.parquet")
   }
 
   /** OFFLINE index build: fit the coarse quantizer and persist the index
@@ -670,9 +541,9 @@ object Similarity {
     *    per-vector scale 127/max|xᵢ|), ~4× smaller than the float cells.
     *    [[ivfProbeI8]] serves from this artifact alone: the per-vector
     *    scale cancels in cosine, so candidate scores need no float read;
-    *  - `manifest.json`: (rows, fingerprint, nlist, dim) of the corpus
-    *    this index was built from — [[ivfBuildIfAbsent]]'s staleness
-    *    check.
+    *  - `manifest.json` ([[IvfManifest]]): the corpus identity and nlist
+    *    [[ivfValid]] checks; publishing it resets the batch tree
+    *    ([[StoredIndex.publishBuild]]).
     * Run once per corpus snapshot (the offline-fit contract); every
     * serving batch then pays only [[ivfProbe]]/[[ivfProbeI8]]. */
   def ivfBuild(corpus: DataFrame, indexDir: String, nlist: Int,
@@ -682,118 +553,40 @@ object Similarity {
     require(n > 0, "ivfBuild: empty corpus")
     val (codebook, cells) = ivfFit(c, nlist, maxIter, n)
     codebook.write.mode("overwrite").parquet(s"$indexDir/codebook.parquet")
-    // Cluster by cell BEFORE materializing: without this, every shuffle
-    // task holds rows of many cells and the partitionBy write emits one
-    // file per (task × cell) — measured 86k ~6 KB files at 2M rows,
-    // nlist=1414, which made the pruned probe read file-open-bound (the
-    // probe scans ~nprobe·|queries| cells, each a pile of tiny files) and
-    // dominated the build itself. Hashing cells into nlist partitions
-    // lands each cell in exactly one task → one file per cell. At corpus
-    // sizes where one cell outgrows a healthy file (~cells of
-    // corpus/nlist bytes), add a within-cell salt column to the
-    // repartition and accept files-per-cell = salt count; the probe's
-    // partition pruning is unaffected.
-    // (localCheckpoint blocks die with their executor: a long-running
-    // cluster build should use reliable checkpoint() or persist the
-    // assignment to storage so executor loss recomputes instead of
-    // failing the job.)
-    val persisted = cells.repartition(nlist, col("cell"))
-      .localCheckpoint(true) // one assignment pass feeds both writes
-    persisted.write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$indexDir/cells.parquet")
-    persisted
-      .withColumn("scale", Embeddings.i8Scale(col("emb")))
-      .withColumn("qcode",
-        quantize(col("emb"), col("scale")).cast("array<tinyint>"))
-      .select("id", "qcode", "scale", "cell")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$indexDir/cells_i8.parquet")
-    // a rebuild supersedes every previously appended batch: clear the
-    // batch/staging trees BEFORE the manifest commit (a crash in between
-    // leaves a manifest listing deleted batches — completeness then fails
-    // closed into another rebuild, never serves the torn state)
-    rmTree(new java.io.File(s"$indexDir/batches"))
-    rmTree(new java.io.File(s"$indexDir/_staging"))
-    rmTree(new java.io.File(s"$indexDir/_commits"))
-    writeManifest(indexDir,
-      IvfManifest(n, fp, nlist, dim, FingerprintVersion, nlist0 = nlist))
-    validated.put(indexDir, (corpusKey(c), nlist))
+    writeCells(cells, nlist, indexDir)
+    Ivf.publishBuild(indexDir,
+      IvfManifest(n, fp, nlist, dim, FingerprintVersion, nlist0 = nlist),
+      c, ("id", "emb"), nlist)
   }
-
-  /** Session-scoped record of indexDirs whose manifest has already been
-    * validated (or freshly built) against a corpus FRAME in this JVM:
-    * indexDir → (canonical-plan digest, nlist). A repeat serve of the
-    * same logical corpus skips the validation scan entirely — the scan
-    * is cheap next to the fit it guards, but it is a full-corpus read
-    * per serving batch, and the registered `sim_knn_ivf` query serves
-    * the same corpus every bench pass. A DIFFERENT corpus frame (even
-    * under the same indexDir) misses the cache and pays the full
-    * manifest check, so the mutated-corpus rebuild contract is
-    * unchanged; a corpus whose FILES mutate under an unchanged path
-    * within one session is the documented out-of-scope case (version
-    * snapshot paths — see [[ivfBuildIfAbsent]]). */
-  private val validated =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Int)]()
 
   /** Session-scoped count memo keyed on the canonicalized-plan digest —
     * the sizing counts in [[knn]] re-executed a derived corpus/query
     * frame's full lineage TWICE per invocation (they exist only to pick
     * a shuffle width, so staleness is impossible within a session: the
     * same logical plan re-counts to the same value for the immutable
-    * file-backed frames the serving paths read). Same contract as
-    * [[validated]]: files mutating under an unchanged path within one
-    * session are out of scope. */
+    * file-backed frames the serving paths read). Same contract as the
+    * [[StoredIndex]] validation memo: files mutating under an unchanged
+    * path within one session are out of scope. */
   private val counted =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   private def memoCount(df: DataFrame): Long =
-    counted.computeIfAbsent(corpusKey(df), _ => df.count()).longValue()
-
-  /** Digest of the corpus's canonicalized logical plan — equal for
-    * re-constructions of the same read within a session, different for
-    * any structurally different frame. */
-  private def corpusKey(c: DataFrame): String = {
-    val plan = c.queryExecution.analyzed.canonicalized.toString
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(plan.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
+    counted.computeIfAbsent(StoredIndex.planKey(df), _ => df.count()).longValue()
 
   /** True iff a stored index under `indexDir` is complete and its manifest
     * matches exactly this corpus at this nlist — the trust check behind
     * [[ivfBuildIfAbsent]], public so callers composing their own build
     * policy (e.g. build-then-[[ivfAppend]] ingest pipelines) can test
-    * validity without committing to a fit. Validity = both cell artifacts
-    * have committed (`_SUCCESS`), the manifest's fingerprint algorithm is
-    * current, and the corpus's (rows, fingerprint) equal the manifest's.
-    * Costs one 2-column corpus scan on a miss, MEMOIZED per (indexDir,
-    * corpus frame) in the session (see [[validated]]); a repeat check of
-    * the same frame is free. */
-  def ivfValid(corpus: DataFrame, indexDir: String, nlist: Int): Boolean = {
-    val c = corpus.toDF("id", "emb")
-    val key = corpusKey(c)
-    if (validated.get(indexDir) == (key, nlist)) return true
-    // completeness covers the base artifacts AND every manifest-listed
-    // batch (cellRoots = exactly what serving reads): a manifest that
-    // names a missing/uncommitted batch dir fails closed into a rebuild
-    val complete = Seq("cells.parquet", "cells_i8.parquet")
-      .forall(a => cellRoots(indexDir, a)
-        .forall(r => new java.io.File(s"$r/_SUCCESS").exists()))
-    val valid = complete && readManifest(indexDir).exists { m =>
-      // nlist is compared against the BUILT codebook size (nlist0):
-      // ivfRefit grows the current nlist by splitting hot cells, and a
-      // refit index must keep serving the caller that built at the
-      // original nlist — a refit is maintenance, not a different index
-      val builtNlist = if (m.nlist0 > 0) m.nlist0 else m.nlist
-      m.fpv == FingerprintVersion && builtNlist == nlist &&
-        new java.io.File(
-          s"${codebookPath(indexDir, m)}/_SUCCESS").exists() && {
-        val (n, fp, _) = corpusStats(c)
-        m.rows == n && m.fingerprint == fp
-      }
+    * validity without committing to a fit. Beyond [[StoredIndex.valid]]'s
+    * completeness and identity, the manifest's fingerprint algorithm must
+    * be current. nlist is compared against the BUILT codebook size
+    * (nlist0): [[ivfRefit]] grows the current nlist by splitting hot
+    * cells, and a refit index must keep serving the caller that built at
+    * the original nlist — a refit is maintenance, not a different index. */
+  def ivfValid(corpus: DataFrame, indexDir: String, nlist: Int): Boolean =
+    Ivf.valid(indexDir, corpus.toDF("id", "emb"), ("id", "emb"), nlist) { m =>
+      m.fpv == FingerprintVersion && (if (m.nlist0 > 0) m.nlist0 else m.nlist) == nlist
     }
-    if (valid) validated.put(indexDir, (key, nlist))
-    valid
-  }
 
   /** [[ivfBuild]] unless a VALID index for exactly this corpus is already
     * present ([[ivfValid]]) — the registered query's spelling of "fit
@@ -833,324 +626,112 @@ object Similarity {
     * re-[[ivfBuild]] on distribution shift (for probe cost), not a
     * rebuild on fraction alone.
     *
-    * The manifest update is ADDITIVE BY CONSTRUCTION: [[corpusStats]]'
-    * fingerprint is a wraparound SUM of per-row hashes, so
-    * fp(corpus ∪ batch) = fp(corpus) + fp(batch) (mod 2⁶⁴) — the updated
-    * manifest is EXACTLY what [[ivfBuild]] over the union would stamp,
-    * and [[ivfValid]] of the union frame accepts the appended index with
-    * no rebuild (SimilaritySpec pins both). Multiplicity-sensitivity
-    * means re-appending the same batch yields a manifest no single-copy
-    * corpus matches — a double ingest fails closed into a rebuild, never
-    * serves silently.
-    *
-    * Each append lands ≤1 file per cell per artifact (the batch is
-    * hashed into nlist cell partitions first — the [[ivfBuild]] layout
-    * rule) in its OWN batch directory `batches/<id>/`; files-per-cell
-    * grows by one per batch and compacts at the periodic rebuild.
-    *
-    * CRASH RECOVERY — stage, then commit: the batch's cell files are
-    * written under `_staging/<id>/`, promoted to `batches/<id>/`, and
-    * only then does the ATOMIC manifest replace ([[writeManifest]])
-    * publish them — readers ([[cellRoots]]) see exactly the
-    * manifest-listed batches, so a crash ANYWHERE before the manifest
-    * write leaves the old index fully valid and serving ([[ivfValid]] of
-    * the pre-append corpus stays true; SimilaritySpec kills a simulated
-    * append at both seams and pins it). The batch id is DETERMINISTIC —
-    * seq number (batches committed so far) + the batch's own
-    * fingerprint — so a retry of a torn append overwrites its own
-    * leftovers and re-stages O(batch), never an O(corpus) rebuild.
-    *
-    * SINGLE-WRITER contract — now CHECKED, not just documented: the
-    * commit goes through [[casWriteManifest]]'s create-if-absent
-    * sequencer, so of two racing appends (or an append racing a compact)
-    * exactly one commits and the loser throws with its staged data
-    * intact for a retry against the fresh manifest — the silent
-    * lost-delta (which [[ivfValid]] then turned into an O(corpus)
-    * rebuild) is no longer reachable. A rebuild racing an append remains
-    * out of scope (the rebuild resets the sequencer; deployments pause
-    * ingest around the rare scheduled re-[[ivfBuild]]). */
+    * Each append lands ≤1 file per cell per artifact in its OWN root
+    * `batches/<id>/` ([[writeCells]]); files-per-cell grows by one per
+    * batch until [[ivfCompact]] folds them. The commit follows the
+    * [[StoredIndex]] append rule (additive fingerprint, replay pair,
+    * stage → promote → CAS commit); SimilaritySpec kills a simulated
+    * append at both seams and pins that the old index keeps serving. */
   def ivfAppend(batch: DataFrame, indexDir: String): Unit =
-    ivfAppendStage(batch, indexDir).foreach { case (m, id, bn, bfp) =>
-      ivfAppendPromote(indexDir, id)
-      ivfAppendCommit(indexDir, m, id, bn, bfp)
-    }
+    Ivf.publish(indexDir, ivfAppendStage(batch, indexDir))
 
   /** Append phase 1 — STAGE: assign the batch with the stored codebook
     * and write its cell files under `_staging/<batchId>/` (overwrite —
-    * retry-safe). Returns None for an empty batch (a no-op append).
-    * Package-private so the torn-append spec can crash between phases. */
+    * retry-safe). None for an empty batch or a replay
+    * ([[StoredIndex.stage]]). Package-private so the torn-append specs can
+    * crash between phases. */
   private[graft] def ivfAppendStage(batch: DataFrame, indexDir: String)
       : Option[(IvfManifest, String, Long, Long)] = {
     val b = batch.toDF("id", "emb")
-    val m = readManifest(indexDir).getOrElse(sys.error(
-      s"ivfAppend: no readable manifest under $indexDir — build first"))
+    val m = Ivf.load(indexDir, "ivfAppend")
     require(m.fpv == FingerprintVersion,
       s"ivfAppend: manifest fingerprint algorithm v${m.fpv} != current " +
         s"v$FingerprintVersion — rebuild the index")
     val (bn, bfp, bdim) = corpusStats(b)
-    if (bn == 0) return None
-    // REPLAY IDEMPOTENCE: re-appending the batch that was committed LAST
-    // is a no-op. This is exactly the at-least-once window of a streaming
-    // ingest (foreachBatch replays its most recent micro-batch after a
-    // crash between the manifest commit and the checkpoint commit —
-    // graft.streaming.IvfIngest); the manifest's (lastRows, lastFp) pair
-    // identifies the replay — BOTH must match, so a different consecutive
-    // batch must collide on the 64-bit fingerprint AND the exact row
-    // count to be misread (the wraparound-sum fingerprint is weaker than
-    // a digest against structured collisions; the row count closes the
-    // equal-hash-sum-different-cardinality family). The pair survives
-    // [[ivfCompact]], so a replay straddling a compaction is still
-    // caught. A batch equal to an OLDER committed batch still appends
-    // (multiplicity-sensitive manifest, as before) — only the
-    // consecutive-duplicate case, which no correct ingest produces on
-    // purpose, is read as a replay, and the skip is LOGGED, never silent.
-    val replay =
-      (m.lastRows == bn && m.lastFp == bfp) ||
-        // legacy manifests (layout v1 without the last_* fields): the
-        // old batch-id-suffix check — fingerprint-only, rows unknown.
-        // On a v2 manifest (0, 0) means "no append since build" and the
-        // fallback never applies.
-        (m.mv < ManifestVersion && m.lastRows == 0 &&
-          m.batches.lastOption.exists(
-            _.endsWith("_" + java.lang.Long.toHexString(bfp))))
-    if (replay) {
-      log.warn(s"ivfAppend: batch (rows=$bn, fp=$bfp) matches the last " +
-        s"committed batch under $indexDir — treating as an at-least-once " +
-        "replay, skipping (re-ingest of identical consecutive batches is " +
-        "indistinguishable from a replay by design)")
-      return None
+    Ivf.stage(indexDir, m, bn, bfp) { staging =>
+      require(bdim == m.dim,
+        s"ivfAppend: batch vector width $bdim != index dim ${m.dim}")
+      val ctrs = centroids(b.sparkSession, indexDir, m, "ivfAppend")
+      writeCells(b.select(col("id"), col("emb"),
+        argMinDistSq(col("emb"), ctrs).getField("j").as("cell")), m.nlist, staging)
     }
-    require(bdim == m.dim,
-      s"ivfAppend: batch vector width $bdim != index dim ${m.dim}")
-    val s = b.sparkSession
-    val ctrRows = s.read.parquet(codebookPath(indexDir, m))
-      .select("cell", "ctr").orderBy("cell").collect()
-    require(ctrRows.length == m.nlist,
-      s"ivfAppend: codebook has ${ctrRows.length} cells, manifest says ${m.nlist}")
-    val ctrs: Array[Array[Double]] = ctrRows.map(_.getSeq[Double](1).toArray)
-    // deterministic id: a retry of this exact (index state, batch) pair
-    // re-derives the same id and overwrites its own torn leftovers. The
-    // row count rides in the id alongside the fingerprint (harder to
-    // collide, and a human can read batch sizes off the directory tree);
-    // the seq prefix is the manifest's monotone append counter, so ids
-    // stay unique across compactions too.
-    val batchId =
-      f"b${m.seq + 1}%04d_${bn}_${java.lang.Long.toHexString(bfp)}"
-    val staging = s"$indexDir/_staging/$batchId"
-    val cells = b.select(col("id"), col("emb"),
-      argMinDistSq(col("emb"), ctrs).getField("j").as("cell"))
-    val persisted = cells.repartition(m.nlist, col("cell"))
-      .localCheckpoint(true) // one assignment pass feeds both artifacts
-    persisted.write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$staging/cells.parquet")
-    persisted
-      .withColumn("scale", Embeddings.i8Scale(col("emb")))
-      .withColumn("qcode",
-        quantize(col("emb"), col("scale")).cast("array<tinyint>"))
-      .select("id", "qcode", "scale", "cell")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$staging/cells_i8.parquet")
-    Some((m, batchId, bn, bfp))
   }
 
-  /** Append phase 2 — PROMOTE: move the staged batch dir under
-    * `batches/`. Still invisible to readers (the manifest doesn't list
-    * it yet), so this move needs no atomicity; a leftover target from a
-    * previous torn attempt is deleted first (it was never committed —
-    * ids are seq-prefixed, so a COMMITTED dir can never collide). */
-  private[graft] def ivfAppendPromote(indexDir: String, batchId: String): Unit = {
-    val target = new java.io.File(s"$indexDir/batches/$batchId")
-    rmTree(target)
-    java.nio.file.Files.createDirectories(target.getParentFile.toPath)
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(s"$indexDir/_staging/$batchId"), target.toPath)
-    ()
-  }
-
-  /** Append phase 3 — COMMIT: the atomic manifest replace that publishes
-    * the batch (rows/fingerprint/appendedRows add; the batch id joins
-    * the read set). This single rename IS the append's commit point. */
-  private[graft] def ivfAppendCommit(indexDir: String, m: IvfManifest,
-                                     batchId: String, bn: Long, bfp: Long): Unit = {
-    casWriteManifest(indexDir, m,
-      m.copy(rows = m.rows + bn, fingerprint = m.fingerprint + bfp,
-        appendedRows = m.appendedRows + bn, batches = m.batches :+ batchId,
-        seq = m.seq + 1, lastRows = bn, lastFp = bfp),
-      token = batchId)
-    // the stored index no longer corresponds to any frame validated
-    // before this append
-    validated.remove(indexDir)
-    ()
-  }
-
-  /** FOLD the committed append batches into ONE batch root — the
-    * file-count bound continuous ingest needs. Every [[ivfAppend]] adds
-    * a `batches/<id>/` root (one file per touched cell per artifact), so
-    * under streaming ingest ([[graft.streaming.IvfIngest]] — one append
-    * per micro-batch forever) probe file-open cost grows without bound:
-    * the serving read is a UNION of per-root scans (static cell-set
-    * pruning, no DPP under a Union — [[ivfCells]]), and each probed cell
-    * opens one file per root. Compaction rewrites the appended rows into
-    * a single root, capping serving at TWO roots (base + compacted)
-    * regardless of how many batches ever landed — and it never touches
-    * the base: compaction IO is O(appended bytes), not O(corpus), which
-    * at 100 TB is the difference between a background chore and a
-    * rewrite nobody schedules. (COMPACT.md carries the measured
-    * file-count and probe-wall deltas.) The fold's re-cluster is
-    * SIZE-AWARE: cells past 4× the mean appended load are salted across
-    * multiple tasks/files, so a distribution-shifted index (RECALL.md
-    * shift mode) compacts with bounded max task input instead of
-    * funneling its hot cells through single giant tasks — see the
-    * inline census note; COMPACT.md carries the shifted-index
-    * measurement.
+  /** FOLD the committed append batches into ONE batch root
+    * ([[StoredIndex.compact]]: stage → promote → CAS commit, row-count
+    * read-back, deferred sweep, commit-log identity unchanged). Under
+    * streaming ingest ([[graft.streaming.IvfIngest]] — one append per
+    * micro-batch forever) the serving read is a UNION of per-root scans
+    * (static cell-set pruning, no DPP under a Union — [[liveCells]]) and
+    * each probed cell opens one file per root; the fold caps serving at
+    * TWO roots (base + compacted) and never touches the base, so its IO
+    * is O(appended bytes), not O(corpus). (COMPACT.md carries the
+    * measured file-count and probe-wall deltas.) `appendedRows`
+    * deliberately survives: those rows were assigned under never-refit
+    * centroids, and compaction moves bytes, not cell boundaries — the
+    * staleness alert ([[ivfAppendedFraction]]) must keep firing.
     *
-    * FINGERPRINT-NEUTRAL BY CONSTRUCTION: the folded root holds exactly
-    * the union of the batch rows, so rows / fingerprint / appendedRows /
-    * seq / lastRows / lastFp are all UNCHANGED — the new manifest differs
-    * only in `batches` (now one id). `appendedRows` deliberately
-    * survives: those rows were assigned under never-refit centroids, and
-    * compaction moves bytes, not cell boundaries — the staleness alert
-    * ([[ivfAppendedFraction]]) must keep firing. Replay detection
-    * (lastRows, lastFp) survives too, so a streaming replay straddling a
-    * compact is still a no-op.
-    *
-    * CRASH RECOVERY — the same stage/promote/commit protocol as append:
-    * the folded cells are written under `_staging/<compactId>/`, promoted
-    * to `batches/<compactId>/` (invisible — unlisted), and published by
-    * the one atomic manifest replace. A crash anywhere before that
-    * leaves the old manifest serving the old (correct) batch list. The
-    * compact id is deterministic from the manifest state (seq + appended
-    * rows + index fingerprint), so a retry overwrites its own torn
-    * leftovers.
-    *
-    * READER GRACE PERIOD — the sweep is DEFERRED one compaction cycle:
-    * the batch dirs this fold supersedes are NOT deleted at commit; the
-    * post-commit sweep removes only dirs that are neither the new fold
-    * nor its inputs — i.e. the PREVIOUS fold's inputs (plus any
-    * crash-after-commit orphans). A concurrent probe that planned its
-    * union scan against the pre-compact manifest ([[ivfCells]] resolves
-    * roots at plan time) therefore keeps every file it planned until the
-    * NEXT compact commits — an entire ingest-loop compaction interval —
-    * instead of failing mid-query with FileNotFoundException the moment
-    * the fold lands. Compaction is the ONLY steady-state delete
-    * ([[ivfAppend]] never removes data), so with the deferral the
-    * continuous-ingest loop ([[graft.streaming.IvfIngest]]) serves probes
-    * concurrently with maintenance; only [[ivfBuild]] (a rare scheduled
-    * rebuild, which clears the whole batch tree) still requires a
-    * serving pause. Disk overhead of the grace: at most one compaction
-    * interval's worth of superseded batch bytes.
-    *
-    * LEGACY MANIFESTS (layout version `mv` < [[ManifestVersion]]): the
-    * fold would destroy the batch-id-suffix fallback replay check — the
-    * compact id's suffix encodes the WHOLE-INDEX fingerprint, not the
-    * last batch's — so the replay pair is BACKFILLED from the last
-    * committed batch's own data (one O(batch) stat pass, subsumed by the
-    * fold read) before the fold commits, and the commit stamps the
-    * current layout version. A streaming replay straddling the upgrading
-    * compact is then caught exactly like on a current-format manifest.
-    * Keying on `mv` (not the earlier `lastRows == 0` sentinel) keeps
+    * IVF-only parts. The fold reads LIVE rows (a pre-refit root's split
+    * cells are superseded) and must reproduce `appendedRows + refitRows`
+    * of them. The re-cluster is SIZE-AWARE (see the inline census note;
+    * COMPACT.md carries the shifted-index measurement). And on a LEGACY
+    * manifest (layout `mv` < [[ManifestVersion]]) the fold would destroy
+    * the batch-id-suffix fallback replay check — the compact id's suffix
+    * encodes the WHOLE-INDEX fingerprint, not the last batch's — so the
+    * replay pair is BACKFILLED from the last committed batch's own data
+    * before the fold commits, and the commit stamps the current layout
+    * version. Keying on `mv` (not a `lastRows == 0` sentinel) keeps
     * "pre-upgrade manifest" distinct from "no append since build": a v2
-    * manifest's (0, 0) pair is trusted as-is, never recomputed into a
-    * different meaning (SimilaritySpec pins both cases).
-    *
-    * Row-count guard: the staged fold must hold exactly
-    * `appendedRows` rows (batches always hold precisely the rows appended
-    * since the last build — the build clears them, appends add them,
-    * compaction preserves them), so torn batch data fails the compact
-    * loudly instead of committing a short fold.
-    *
-    * SINGLE-WRITER, like every `indexDir` mutation. No-op below two
-    * committed batches — there is nothing to fold. */
-  def ivfCompact(s: SparkSession, indexDir: String): Unit = {
-    val m0 = readManifest(indexDir).getOrElse(sys.error(
-      s"ivfCompact: no readable manifest under $indexDir"))
-    if (m0.batches.size < 2) return
-    // legacy-manifest backfill (see scaladoc): recover the replay pair
-    // from the last committed batch's data before the fold erases the
-    // batch-id-suffix fallback's referent. Keyed on the LAYOUT VERSION,
-    // not a lastRows sentinel — a current-format (0, 0) pair means "no
-    // append since build" and is trusted as-is.
-    val m =
+    * manifest's (0, 0) pair is trusted as-is (SimilaritySpec pins both). */
+  def ivfCompact(s: SparkSession, indexDir: String): Unit =
+    Ivf.compact(s, indexDir, "ivfCompact", m0 =>
       if (m0.mv < ManifestVersion) {
         val (lr, lfp, _) = corpusStats(s.read.parquet(
           s"$indexDir/batches/${m0.batches.last}/cells.parquet"))
         m0.copy(lastRows = lr, lastFp = lfp)
-      } else m0
-    val compactId = f"c${m.seq}%04d_${m.appendedRows}_" +
-      java.lang.Long.toHexString(m.fingerprint)
-    val staging = s"$indexDir/_staging/$compactId"
-    // per-root reads + union (sibling partitioned roots — the ivfCells
-    // rule), LIVE rows only: a pre-refit batch root's split-cell rows are
-    // superseded by the refit root and must not be folded back in
-    def foldRead(a: String): DataFrame =
-      m.batches.map(b =>
-          readRoot(s, s"$indexDir/batches/$b/$a", rootSeq(b), m))
-        .reduce(_ unionByName _)
-    // live rows the fold must reproduce: appends' own rows plus the
-    // base-origin rows refits relocated into batch space
-    val expectRows = m.appendedRows + m.refitRows
-    // SIZE-AWARE RE-CLUSTER (hot-cell task/file split): the fold hashes
-    // cells into tasks so each cell lands in ONE task → one file per cell
-    // per artifact (the ivfBuild layout rule) — the right layout while the
-    // appended mass tracks the base's spread, but a DISTRIBUTION-SHIFTED
-    // index crams most appended rows into few cells (measured 53.6%
-    // top-20 share, RECALL.md shift mode), making those cells single
-    // giant tasks to compact and single giant files to probe. So cells
-    // holding more than 4× the mean appended load are SALTED across
-    // ceil(cnt / 4·mean) subtasks — max task input is bounded at ~4× the
-    // mean cell load between rebuilds, and a hot cell's partition dir
-    // simply holds several files (dir-level cell pruning unaffected; the
-    // probe reads the same rows either way). A stationary index has no
-    // cell past the cap and keeps the exact one-file-per-cell layout.
-    // The census costs one partition-column-only pass over the batch
-    // roots (footer reads — the ivfStats economics); the split map is at
-    // most nlist/4 entries, broadcast.
-    val meanLoad = math.max(1L, expectRows / m.nlist)
-    val capRows = 4L * meanLoad
-    val splits: Map[Int, Long] = foldRead("cells.parquet").groupBy("cell")
-      .agg(count(lit(1)).as("cnt")).collect()
-      .collect { case r if r.getLong(1) > capRows =>
-        r.getInt(0) -> (r.getLong(1) + capRows - 1) / capRows }
-      .toMap
-    val extraTasks = splits.valuesIterator.map(_ - 1).sum
-    for (a <- Seq("cells.parquet", "cells_i8.parquet")) {
-      val u = foldRead(a)
-      val clustered =
-        if (splits.isEmpty) u.repartition(m.nlist, col("cell"))
-        else {
-          import s.implicits._
-          val sdf = broadcast(splits.toSeq.toDF("cell", "__nsplit"))
-          u.join(sdf, Seq("cell"), "left")
-            .withColumn("__salt", when(col("__nsplit").isNull, lit(0L))
-              .otherwise(pmod(xxhash64(col("id")), col("__nsplit"))))
-            .repartition((m.nlist + extraTasks).toInt, col("cell"), col("__salt"))
-            .drop("__nsplit", "__salt")
-        }
-      clustered.write.mode("overwrite").partitionBy("cell").parquet(s"$staging/$a")
+      } else m0) { (m, staging) =>
+      def foldRead(a: String) = liveCells(s, indexDir, m, a, batchesOnly = true)
+      val expectRows = m.appendedRows + m.refitRows
+      // SIZE-AWARE RE-CLUSTER (hot-cell task/file split): the fold hashes
+      // cells into tasks so each cell lands in ONE task → one file per cell
+      // per artifact (the writeCells layout rule) — the right layout while
+      // the appended mass tracks the base's spread, but a
+      // DISTRIBUTION-SHIFTED index crams most appended rows into few cells
+      // (measured 53.6% top-20 share, RECALL.md shift mode), making those
+      // cells single giant tasks to compact and single giant files to
+      // probe. So cells holding more than 4× the mean appended load are
+      // SALTED across ceil(cnt / 4·mean) subtasks — max task input is
+      // bounded at ~4× the mean cell load between rebuilds, and a hot
+      // cell's partition dir simply holds several files (dir-level cell
+      // pruning unaffected). A stationary index has no cell past the cap
+      // and keeps the exact one-file-per-cell layout. The census costs one
+      // partition-column-only pass over the batch roots (footer reads —
+      // the ivfStats economics); the split map is at most nlist/4
+      // entries, broadcast.
+      val capRows = 4L * math.max(1L, expectRows / m.nlist)
+      val splits: Map[Int, Long] = foldRead("cells.parquet").groupBy("cell")
+        .agg(count(lit(1)).as("cnt")).collect()
+        .collect { case r if r.getLong(1) > capRows =>
+          r.getInt(0) -> (r.getLong(1) + capRows - 1) / capRows }
+        .toMap
+      val extraTasks = splits.valuesIterator.map(_ - 1).sum
+      for (a <- Seq("cells.parquet", "cells_i8.parquet")) {
+        val u = foldRead(a)
+        val clustered =
+          if (splits.isEmpty) u.repartition(m.nlist, col("cell"))
+          else {
+            import s.implicits._
+            val sdf = broadcast(splits.toSeq.toDF("cell", "__nsplit"))
+            u.join(sdf, Seq("cell"), "left")
+              .withColumn("__salt", when(col("__nsplit").isNull, lit(0L))
+                .otherwise(pmod(xxhash64(col("id")), col("__nsplit"))))
+              .repartition((m.nlist + extraTasks).toInt, col("cell"), col("__salt"))
+              .drop("__nsplit", "__salt")
+          }
+        clustered.write.mode("overwrite").partitionBy("cell").parquet(s"$staging/$a")
+      }
+      ("cells.parquet", expectRows)
     }
-    val folded = s.read.parquet(s"$staging/cells.parquet").count()
-    require(folded == expectRows,
-      s"ivfCompact: folded ${folded} rows but the manifest says " +
-        s"$expectRows live in batch roots (${m.appendedRows} appended + " +
-        s"${m.refitRows} refit-relocated) — batch data under $indexDir " +
-        "is torn; not committing")
-    ivfAppendPromote(indexDir, compactId)
-    // CAS against the manifest state the fold READ (m0 — the backfilled
-    // `m` differs only in recovered replay fields): an append that
-    // committed while the fold ran would otherwise be silently dropped
-    // from the batch list
-    casWriteManifest(indexDir, m0, m.copy(batches = Seq(compactId)),
-      token = compactId)
-    // DEFERRED post-commit sweep (reader grace period — see scaladoc):
-    // keep the dirs this fold just superseded (m.batches) for one more
-    // compaction cycle; remove only older unlisted dirs — the previous
-    // fold's inputs plus any crash-after-commit orphans
-    Option(new java.io.File(s"$indexDir/batches").listFiles()).foreach(
-      _.filterNot(f => f.getName == compactId || m.batches.contains(f.getName))
-        .foreach(rmTree))
-    log.info(s"ivfCompact: folded ${m.batches.size} batches " +
-      s"(${m.appendedRows} rows) into $compactId under $indexDir")
-  }
 
   /** HOT-CELL PARTIAL REFIT — restore the probe's nprobe/nlist
     * scan-fraction economics at O(hot cells) cost, not O(corpus).
@@ -1201,14 +782,10 @@ object Similarity {
     * this trades at most ANN recall at the margin, measured in
     * SimilaritySpec against planted near-dups.
     *
-    * CRASH RECOVERY: the stage → promote → CAS-commit protocol of
-    * [[ivfAppend]], with a deterministic refit id from the manifest
-    * state — a retry overwrites its own torn leftovers; a crash
-    * anywhere before the manifest commit leaves the old index serving.
+    * CRASH RECOVERY: the [[StoredIndex]] stage → promote → CAS-commit
+    * protocol, with a deterministic refit id from the manifest state.
     * Old codebook versions are left behind for readers that planned
-    * against the old manifest (same grace posture as compaction's
-    * deferred sweep). SINGLE-WRITER per index, CAS-checked like every
-    * other mutation.
+    * against the old manifest (the reader grace period).
     *
     * @return the number of cells split (0 = no cell past the cap; the
     *         index is untouched). */
@@ -1217,8 +794,7 @@ object Similarity {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     import s.implicits._
-    val m = readManifest(indexDir).getOrElse(sys.error(
-      s"ivfRefit: no readable manifest under $indexDir"))
+    val m = Ivf.load(indexDir, "ivfRefit")
     require(m.fpv == FingerprintVersion,
       s"ivfRefit: manifest fingerprint algorithm v${m.fpv} != current " +
         s"v$FingerprintVersion — rebuild the index")
@@ -1226,7 +802,7 @@ object Similarity {
       s"ivfRefit: capFactor=$capFactor and maxSplit=$maxSplit must be > 0")
     // live-occupancy census: partition-column-only scan (footer reads,
     // the ivfStats economics), ≤ nlist rows collected
-    val counts: Map[Int, Long] = ivfCells(s, indexDir).groupBy("cell")
+    val counts: Map[Int, Long] = liveCells(s, indexDir, m, "cells.parquet").groupBy("cell")
       .agg(count(lit(1)).as("cnt")).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     val cap = (capFactor * math.max(1L, m.rows / math.max(1, m.nlist))).toLong
@@ -1236,11 +812,8 @@ object Similarity {
       log.info(s"ivfRefit: no cell above ${cap} rows under $indexDir — no-op")
       return 0
     }
-    val cbRows = s.read.parquet(codebookPath(indexDir, m))
-      .select("cell", "ctr").orderBy("cell").collect()
-    require(cbRows.length == m.nlist,
-      s"ivfRefit: codebook has ${cbRows.length} cells, manifest says ${m.nlist}")
-    val live = ivfCells(s, indexDir).select("id", "emb", "cell")
+    val cbCtrs = centroids(s, indexDir, m, "ivfRefit")
+    val live = liveCells(s, indexDir, m, "cells.parquet").select("id", "emb", "cell")
     val target = fitSampleSize(2)
     val M = 1L << 40
     // per hot cell: sample-fit a 2-means on the cell's own rows. A cell
@@ -1275,8 +848,7 @@ object Similarity {
       return 0
     }
     val hotRows = split.map(counts).sum
-    val newCtrs = scala.collection.mutable.ArrayBuffer(
-      cbRows.map(_.getSeq[Double](1).toArray): _*)
+    val newCtrs = scala.collection.mutable.ArrayBuffer.from(cbCtrs)
     // one bounded argmin pass relabels each split cell's rows between
     // (old id, fresh id)
     val pieces = fits.zipWithIndex.map { case ((c, two), i) =>
@@ -1287,24 +859,10 @@ object Similarity {
         when(argMinDistSq(col("emb"), two).getField("j") === 0, lit(c))
           .otherwise(lit(newId)).as("cell"))
     }
-    val refitId = f"r${m.seq + 1}%04d_${hotRows}_" +
-      java.lang.Long.toHexString(m.fingerprint)
-    val staging = s"$indexDir/_staging/$refitId"
-    // one relabel pass feeds both artifacts (the ivfBuild layout rule:
-    // cluster by cell before the partitioned write — one task per
-    // output cell, so a split cell's children land as one file each)
-    val persisted = pieces.reduce(_ unionByName _)
-      .repartition(2 * split.size, col("cell"))
-      .localCheckpoint(true)
-    persisted.write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$staging/cells.parquet")
-    persisted
-      .withColumn("scale", Embeddings.i8Scale(col("emb")))
-      .withColumn("qcode",
-        quantize(col("emb"), col("scale")).cast("array<tinyint>"))
-      .select("id", "qcode", "scale", "cell")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$staging/cells_i8.parquet")
+    val refitId = f"r${m.seq + 1}%04d_${hotRows}_${StoredIndex.hex(m.fingerprint)}"
+    val staging = Ivf.stagingDir(indexDir, refitId)
+    // one task per output cell: a split cell's children land as one file each
+    writeCells(pieces.reduce(_ unionByName _), 2 * split.size, staging)
     val staged = s.read.parquet(s"$staging/cells.parquet").count()
     require(staged == hotRows,
       s"ivfRefit: staged $staged rows but the census counted $hotRows " +
@@ -1317,7 +875,7 @@ object Similarity {
     // winner's cell labels stay live — a silent centroid/label mismatch.
     // The staged file moves to its final name in the promote step below,
     // which refuses to replace a COMMITTED version.
-    val cbStagingPath = s"$indexDir/_staging/${refitId}_codebook.parquet"
+    val cbStagingPath = Ivf.stagingDir(indexDir, s"${refitId}_codebook.parquet")
     newCtrs.toSeq.zipWithIndex.map { case (ctr, j) => (j, ctr) }
       .toDF("cell", "ctr").coalesce(1)
       .write.mode("overwrite")
@@ -1337,15 +895,15 @@ object Similarity {
     val cbTarget = java.nio.file.Paths.get(
       s"$indexDir/codebook_v${m.cbv + 1}.parquet")
     if (java.nio.file.Files.exists(cbTarget)) {
-      require(readManifest(indexDir).forall(_.cbv <= m.cbv),
+      require(Ivf.read(indexDir).forall(_.cbv <= m.cbv),
         s"ivfRefit: codebook v${m.cbv + 1} under $indexDir is already " +
           "COMMITTED by a racing refit — retry against the fresh manifest")
       rmTree(cbTarget.toFile) // torn leftover of a crashed attempt
     }
     java.nio.file.Files.move(
       java.nio.file.Paths.get(cbStagingPath), cbTarget)
-    ivfAppendPromote(indexDir, refitId)
-    casWriteManifest(indexDir, m, m.copy(
+    Ivf.promote(indexDir, refitId)
+    Ivf.commit(indexDir, m, m.copy(
       nlist = m.nlist + split.size,
       nlist0 = if (m.nlist0 > 0) m.nlist0 else m.nlist,
       cbv = m.cbv + 1,
@@ -1366,9 +924,9 @@ object Similarity {
     * bounded top-k on the candidates. Output shape matches [[knn]]. */
   def ivfProbe(s: SparkSession, indexDir: String, queries: DataFrame,
                k: Int, nprobe: Int): DataFrame = {
-    val codebook = s.read.parquet(
-      codebookPath(indexDir, manifestOrEmpty(indexDir)))
-    val cells = ivfCells(s, indexDir)
+    val m = Ivf.load(indexDir, "ivfProbe")
+    val codebook = s.read.parquet(s"$indexDir/${codebookName(m)}")
+    val cells = liveCells(s, indexDir, m, "cells.parquet")
       .select(col("id"), col("emb"), col("cell"))
     ivfRank(cells, codebook, queries, k, nprobe)
   }
@@ -1395,9 +953,9 @@ object Similarity {
     * serving bottleneck. Output shape matches [[knn]]. */
   def ivfProbeI8(s: SparkSession, indexDir: String, queries: DataFrame,
                  k: Int, nprobe: Int): DataFrame = {
-    val codebook = s.read.parquet(
-      codebookPath(indexDir, manifestOrEmpty(indexDir)))
-    val codes = ivfCellsI8(s, indexDir)
+    val m = Ivf.load(indexDir, "ivfProbeI8")
+    val codebook = s.read.parquet(s"$indexDir/${codebookName(m)}")
+    val codes = liveCells(s, indexDir, m, "cells_i8.parquet")
       .select(col("id").as("neighbor_id"), col("qcode").as("c_code"), col("cell"))
     val qd = queries.toDF("q_id", "q_emb")
       .select(col("q_id"), col("q_emb").cast("array<double>").as("q_emb"))
@@ -1411,18 +969,9 @@ object Similarity {
       k)
   }
 
-  /** Session-scoped index location for a dataset tag: under
-    * java.io.tmpdir, namespaced by the Spark application id (no cross-JVM
-    * collisions) and a 128-bit digest of the tag (a 32-bit `hashCode`
-    * could collide two dataset dirs within one session; MD5 cannot in
-    * practice — and [[ivfBuildIfAbsent]]'s manifest check backstops even
-    * that). */
-  def ivfIndexDir(s: SparkSession, tag: String): String = {
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-      .digest(tag.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_${s.sparkContext.applicationId}/ivf_$md5").getAbsolutePath
-  }
+  /** Session-scoped index location for a dataset tag
+    * ([[StoredIndex.dirFor]], `ivf_` namespace). */
+  def ivfIndexDir(s: SparkSession, tag: String): String = Ivf.dirFor(s, tag)
 
   /** Self-contained IVF approximate top-k (fit + probe in one plan, no
     * persisted artifacts) — the parameter-sweep form RecallBench drives;

@@ -303,7 +303,7 @@ object SqlQueries {
         Dedup.nearDupIndexIfAbsent(
           docs.filter(org.apache.spark.sql.functions.col("doc_id") % 10 =!= 0),
           "doc_id", "text", ixDir)
-        val tbl = Dedup.shingleTable(ixDir)
+        val tbl = Dedup.NearDup.table(ixDir)
         s.sql(
           s"""WITH bw AS (
              |  SELECT doc_id, filter(split(text, ' '), x -> x <> '') AS words
@@ -363,9 +363,9 @@ object SqlQueries {
         Dedup.embedDupIndexIfAbsent(
           emb.filter(org.apache.spark.sql.functions.col("vec_id") % 10 =!= 0),
           "vec_id", "embedding", Seq("label"), ixDir)
-        val m = Dedup.readEdManifest(ixDir).getOrElse(sys.error(
+        val m = Dedup.EmbedDup.read(ixDir).getOrElse(sys.error(
           s"sql_embed_probe: no manifest under $ixDir"))
-        val tbl = Dedup.embedBucketTable(ixDir)
+        val tbl = Dedup.EmbedDup.table(ixDir)
         val bm = Dedup.EmbedBitsMax
         s.sql(
           s"""WITH b AS (

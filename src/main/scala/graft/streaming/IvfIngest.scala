@@ -78,7 +78,7 @@ object IvfIngest {
     val q = feed.df.writeStream
       .foreachBatch { (b: Dataset[Row], _: Long) =>
         Similarity.ivfAppend(b.toDF(), indexDir)
-        if (maxBatches > 0 && Similarity.readManifest(indexDir)
+        if (maxBatches > 0 && Similarity.Ivf.read(indexDir)
             .exists(_.batches.size > maxBatches))
           Similarity.ivfCompact(b.sparkSession, indexDir)
       }

@@ -244,7 +244,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     // simulate a NEW session: drop the catalog entry the write registered
     // — the load must re-register the bucketed table via DDL from the
     // manifest alone (bucket metadata lives in the catalog, not files)
-    spark.sql(s"DROP TABLE IF EXISTS ${Dedup.shingleTable(dir)}")
+    spark.sql(s"DROP TABLE IF EXISTS ${Dedup.NearDup.table(dir)}")
     val ix = Dedup.nearDupIndexLoad(spark, dir)
     assert(probeRows(Dedup.probeNearDups(ix, batch, "text")) === inSession)
     // the candidate equi-join reads the corpus side EXCHANGE-FREE: only
@@ -262,6 +262,8 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       "a different corpus must not validate")
     assert(!Dedup.nearDupValid(corpus, "doc_id", "text", dir, k = 4),
       "different shingle width must not validate")
+    assert(!Dedup.nearDupValid(corpus, "doc_id", "source", dir),
+      "a different text column must not validate (the memo keys it too)")
   }
 
   test("nearDupAppend: appended ≡ rebuilt on stationary appends; replay no-op; union validates") {
@@ -283,8 +285,8 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(pa.nonEmpty && pa === pr,
       "appended-index probe must equal the rebuilt-index probe")
     // the appended manifest IS the union build's (fingerprint additivity)
-    val ma = Dedup.readNdManifest(dirA).get
-    val mr = Dedup.readNdManifest(dirR).get
+    val ma = Dedup.NearDup.read(dirA).get
+    val mr = Dedup.NearDup.read(dirR).get
     assert((ma.rows, ma.fingerprint) === (mr.rows, mr.fingerprint))
     assert(ma.appendedRows === grow.count() && ma.batches.size === 1)
     // ... so the union frame validates the appended index, no rebuild
@@ -292,7 +294,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     // at-least-once replay window: re-appending the LAST committed batch
     // is a logged no-op
     Dedup.nearDupAppend(grow, dirA)
-    assert(Dedup.readNdManifest(dirA).get === ma)
+    assert(Dedup.NearDup.read(dirA).get === ma)
   }
 
   test("nearDupStats: gauge arithmetic off the manifest and artifacts") {
@@ -325,10 +327,10 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     }
     val before = probeRows(Dedup.probeNearDups(Dedup.nearDupIndexLoad(spark, dirU), batch, "text"))
     assert(before.nonEmpty)
-    val m1 = Dedup.readNdManifest(dirC).get
+    val m1 = Dedup.NearDup.read(dirC).get
     assert(m1.batches.size === 2)
     Dedup.nearDupCompact(spark, dirC)
-    val m2 = Dedup.readNdManifest(dirC).get
+    val m2 = Dedup.NearDup.read(dirC).get
     // ONE compacted root; corpus identity and the staleness signal are
     // UNCHANGED (compaction is layout-only — the census stays frozen, so
     // the gauge must keep alerting)
@@ -355,11 +357,11 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     for (b <- m1.batches)
       assert(!new java.io.File(s"$dirC/batches/$b").exists(),
         s"root $b older than the new fold's inputs must be swept")
-    assert(Dedup.readNdManifest(dirC).get.batches.size === 1)
+    assert(Dedup.NearDup.read(dirC).get.batches.size === 1)
     // guard: fewer than two roots is a no-op (nothing to fold)
-    val m3 = Dedup.readNdManifest(dirC).get
+    val m3 = Dedup.NearDup.read(dirC).get
     Dedup.nearDupCompact(spark, dirC)
-    assert(Dedup.readNdManifest(dirC).get === m3)
+    assert(Dedup.NearDup.read(dirC).get === m3)
   }
 
   test("null/empty text degrades totally: no crashes, sane memberships") {
@@ -469,7 +471,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     Dedup.embedDupIndexWrite(corpus, "vec_id", "embedding", Seq("label"), dir)
     // simulate a NEW session: drop the catalog entry — the load must
     // re-register the bucketed bucket table via DDL from the manifest
-    spark.sql(s"DROP TABLE IF EXISTS ${Dedup.embedBucketTable(dir)}")
+    spark.sql(s"DROP TABLE IF EXISTS ${Dedup.EmbedDup.table(dir)}")
     val ix = Dedup.embedDupIndexLoad(spark, dir)
     assert(key(Dedup.probeEmbedDups(ix, batch, -1.0)) === inSession,
       "stored-index probe must equal the in-session probe exactly")
@@ -492,6 +494,8 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(Dedup.embedDupValid(corpus, "vec_id", "embedding", Seq("label"), dir))
     assert(!Dedup.embedDupValid(emb, "vec_id", "embedding", Seq("label"), dir),
       "a different corpus must not validate")
+    assert(!Dedup.embedDupValid(corpus, "label", "embedding", Seq("label"), dir),
+      "a different id column must not validate (the memo keys it too)")
     // planted near-dups served through the stored index: nudged clones of
     // corpus vectors must come back as their originals' best match
     assert(emb.head().getSeq[Float](2).length === Dedup.EmbedDim)
@@ -512,7 +516,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     // APPEND: the batch joins the index (frozen bits), fingerprint
     // additivity validates the union, and appended vectors are findable
     Dedup.embedDupAppend(batch, dir)
-    val ma = Dedup.readEdManifest(dir).get
+    val ma = Dedup.EmbedDup.read(dir).get
     assert(ma.appendedRows === batch.count() && ma.batches.size === 1)
     assert(Dedup.embedDupValid(emb, "vec_id", "embedding", Seq("label"), dir),
       "the union frame must validate the appended index (additive fingerprint)")
@@ -527,7 +531,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     }
     // at-least-once replay window: re-appending the LAST batch is a no-op
     Dedup.embedDupAppend(batch, dir)
-    assert(Dedup.readEdManifest(dir).get === ma)
+    assert(Dedup.EmbedDup.read(dir).get === ma)
   }
 
   test("manifest CAS: of two racing dedup mutations exactly one commits, the loser throws; stale own-token replay is a no-op") {
@@ -537,35 +541,33 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("ndix_cas_")
       .toFile.getAbsolutePath
     Dedup.nearDupIndexWrite(corpus, "doc_id", "text", dir)
-    val m0 = Dedup.readNdManifest(dir).get
+    val m0 = Dedup.NearDup.read(dir).get
     // writer A lands normally (claims m<m0.mseq+1>)
     Dedup.nearDupAppend(b1, dir)
-    val m1 = Dedup.readNdManifest(dir).get
+    val m1 = Dedup.NearDup.read(dir).get
     assert(m1.mseq === m0.mseq + 1 && m1.batches.size === 1)
     // writer B raced A: staged against m0, commits with the STALE
     // expected mseq — must throw with A's token, manifest untouched
     // (before the CAS this silently erased A's delta)
     val e = intercept[IllegalStateException] {
-      Dedup.casCommit(dir, m0.mseq, "b_stale_racer",
-        Dedup.readNdManifest(dir).map(_.mseq))(_ =>
+      Dedup.NearDup.casCommit(dir, m0.mseq, "b_stale_racer")(_ =>
         fail("the CAS loser must never publish"))
     }
     assert(e.getMessage.contains("CAS lost"))
-    assert(Dedup.readNdManifest(dir).get === m1, "loser left the manifest alone")
+    assert(Dedup.NearDup.read(dir).get === m1, "loser left the manifest alone")
     // the loser retries against the FRESH manifest (the real path:
     // nearDupAppend re-reads) and lands
     Dedup.nearDupAppend(b2, dir)
-    val m2 = Dedup.readNdManifest(dir).get
+    val m2 = Dedup.NearDup.read(dir).get
     assert(m2.mseq === m1.mseq + 1 && m2.batches.size === 2)
     // own-token replay of an ALREADY-PUBLISHED commit: the marker holds
     // our token but the live manifest is past the expected mseq — the
     // replay must NOT rewrite (a rewrite would regress mseq and silently
     // erase m2's later commit)
     var published = false
-    Dedup.casCommit(dir, m0.mseq, m1.batches.head,
-      Dedup.readNdManifest(dir).map(_.mseq))(_ => published = true)
+    Dedup.NearDup.casCommit(dir, m0.mseq, m1.batches.head)(_ => published = true)
     assert(!published, "stale own-token replay must be a no-op")
-    assert(Dedup.readNdManifest(dir).get === m2)
+    assert(Dedup.NearDup.read(dir).get === m2)
     // the index stayed valid and serving through all of it
     assert(Dedup.nearDupValid(docs, "doc_id", "text", dir))
     assert(probeRows(Dedup.probeNearDups(Dedup.nearDupIndexLoad(spark, dir),
@@ -582,14 +584,14 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       .toFile.getAbsolutePath
     Dedup.embedDupIndexWrite(corpus, "vec_id", "embedding",
       Seq("label", "price_band"), dir)
-    val m = Dedup.readEdManifest(dir).get
+    val m = Dedup.EmbedDup.read(dir).get
     // the comma inside the parameterized type must survive verbatim —
     // the mv:1 comma-joined form split this into ("DECIMAL(10", "2)")
     // and corrupted the CREATE TABLE DDL in a fresh session
     assert(m.blockCols === Seq("label", "price_band"))
     assert(m.blockTypes === Seq("INT", "DECIMAL(10,2)"))
     // fresh-session path: the DDL re-registration must parse and serve
-    spark.sql(s"DROP TABLE IF EXISTS ${Dedup.embedBucketTable(dir)}")
+    spark.sql(s"DROP TABLE IF EXISTS ${Dedup.EmbedDup.table(dir)}")
     val ix = Dedup.embedDupIndexLoad(spark, dir)
     assert(Dedup.probeEmbedDups(ix, batch, -1.0).count() > 0)
   }
@@ -612,10 +614,10 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val before = key(Dedup.probeEmbedDups(
       Dedup.embedDupIndexLoad(spark, dirU), batch, -1.0))
     assert(before.nonEmpty)
-    val m1 = Dedup.readEdManifest(dirC).get
+    val m1 = Dedup.EmbedDup.read(dirC).get
     assert(m1.batches.size === 2)
     Dedup.embedDupCompact(spark, dirC)
-    val m2 = Dedup.readEdManifest(dirC).get
+    val m2 = Dedup.EmbedDup.read(dirC).get
     // ONE compacted root; corpus identity, frozen bits, and the
     // staleness signal are UNCHANGED (the fold is layout-only)
     assert(m2.batches.size === 1 && m2.batches.head.startsWith("c"))
@@ -639,11 +641,11 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     for (b <- m1.batches)
       assert(!new java.io.File(s"$dirC/batches/$b").exists(),
         s"root $b older than the new fold's inputs must be swept")
-    assert(Dedup.readEdManifest(dirC).get.batches.size === 1)
+    assert(Dedup.EmbedDup.read(dirC).get.batches.size === 1)
     // guard: fewer than two roots is a no-op
-    val m3 = Dedup.readEdManifest(dirC).get
+    val m3 = Dedup.EmbedDup.read(dirC).get
     Dedup.embedDupCompact(spark, dirC)
-    assert(Dedup.readEdManifest(dirC).get === m3)
+    assert(Dedup.EmbedDup.read(dirC).get === m3)
     // stats gauge arithmetic off the manifest and artifacts
     val st = Dedup.embedDupStats(spark, dirC).head()
     assert(st.getLong(0) === m3.rows)

@@ -3,8 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The shared harness pieces: query selection, the recursive delete and
-  * the single-query check of `core.withSessionConf` (the only case that
-  * starts the shared session). */
+  * the single-query check of `core.withSessionConf` and
+  * `core.withShufflePartitions` (the only case that starts the shared
+  * session). */
 class HarnessSpec extends AnyFunSuite with SparkTestBase {
 
   private val registry = Set("agg_groupby", "join_inner", "topk")
@@ -54,6 +55,13 @@ class HarnessSpec extends AnyFunSuite with SparkTestBase {
       assert(e.getMessage.contains(key))
       assert(e.getMessage.contains("harness_active_stream"))
       assert(spark.conf.getOption(key) === before)
+      val shuffleKey = "spark.sql.shuffle.partitions"
+      val shuffleBefore = spark.conf.getOption(shuffleKey)
+      val e2 = intercept[IllegalStateException] {
+        core.withShufflePartitions(spark, 3)(fail("body must not run"))
+      }
+      assert(e2.getMessage.contains(shuffleKey))
+      assert(spark.conf.getOption(shuffleKey) === shuffleBefore)
     } finally q.stop()
   }
 }

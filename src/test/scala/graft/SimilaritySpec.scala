@@ -208,7 +208,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     val idx = java.nio.file.Files.createTempDirectory("ivf_mf_").toFile.getAbsolutePath
     val queries = emb.filter(col("vec_id") % 50 === 0)
     Similarity.ivfBuildIfAbsent(emb, idx, nlist = 16)
-    val m1 = Similarity.readManifest(idx)
+    val m1 = Similarity.Ivf.read(idx)
     assert(m1.isDefined && m1.get.nlist === 16)
     // same corpus, same nlist: trusted, no rebuild (manifest unchanged
     // file mtime-wise is hard to observe; instead check the negative —
@@ -216,7 +216,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // that indexes the new rows)
     val mutated = emb.filter(col("vec_id") >= 100) // dropped rows: new fingerprint
     Similarity.ivfBuildIfAbsent(mutated, idx, nlist = 16)
-    val m2 = Similarity.readManifest(idx)
+    val m2 = Similarity.Ivf.read(idx)
     assert(m2.isDefined && m2.get.rows < m1.get.rows,
       s"manifest not refreshed: $m1 -> $m2")
     // the rebuilt index serves the mutated corpus: no dropped id appears
@@ -270,15 +270,15 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     Similarity.ivfBuild(base, idx, nlist = 16)
     Similarity.ivfAppend(batch, idx)
     // an empty append is a no-op on the manifest
-    val mAfter = Similarity.readManifest(idx).get
+    val mAfter = Similarity.Ivf.read(idx).get
     Similarity.ivfAppend(batch.filter(lit(false)), idx)
-    assert(Similarity.readManifest(idx).get === mAfter)
+    assert(Similarity.Ivf.read(idx).get === mAfter)
     // the appended manifest carries EXACTLY the (rows, fingerprint, dim) a
     // from-scratch build over the union stamps: rows add, and the
     // wraparound-SUM fingerprint is additive over the disjoint union
     val idx2 = java.nio.file.Files.createTempDirectory("ivf_app3_").toFile.getAbsolutePath
     Similarity.ivfBuild(emb, idx2, nlist = 16)
-    val mu = Similarity.readManifest(idx2).get
+    val mu = Similarity.Ivf.read(idx2).get
     assert((mAfter.rows, mAfter.fingerprint, mAfter.dim) ===
       (mu.rows, mu.fingerprint, mu.dim))
     // so the union frame validates against the appended index (build-once
@@ -298,7 +298,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     assert(mAfter.appendedRows === batch.count())
     assert(Similarity.ivfAppendedFraction(idx).get ===
       batch.count().toDouble / emb.count())
-    assert(Similarity.readManifest(idx2).get.appendedRows === 0L)
+    assert(Similarity.Ivf.read(idx2).get.appendedRows === 0L)
     assert(Similarity.ivfAppendedFraction(idx2).get === 0.0)
   }
 
@@ -318,8 +318,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     Similarity.ivfAppend(batch, idxA)
     val idxU = tmp("ivf_union_")
     Similarity.ivfBuild(emb, idxU, nlist = 16)
-    val (ms, ma, mu) = (Similarity.readManifest(idxS).get,
-      Similarity.readManifest(idxA).get, Similarity.readManifest(idxU).get)
+    val (ms, ma, mu) = (Similarity.Ivf.read(idxS).get,
+      Similarity.Ivf.read(idxA).get, Similarity.Ivf.read(idxU).get)
     // the corpus-identity fields agree across all three ingestion paths
     assert((ms.rows, ms.fingerprint, ms.dim) === (ma.rows, ma.fingerprint, ma.dim))
     assert((ms.rows, ms.fingerprint, ms.dim) === (mu.rows, mu.fingerprint, mu.dim))
@@ -339,7 +339,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     Similarity.ivfAppend(
       spark.read.parquet(s"$idxS/batches/${ms.batches.last}/cells.parquet")
         .select(col("id").as("vec_id"), col("emb").as("embedding")), idxS)
-    assert(Similarity.readManifest(idxS).get === ms)
+    assert(Similarity.Ivf.read(idxS).get === ms)
   }
 
   test("ivfCompact folds committed batches into one root: serving identical, manifest preserved") {
@@ -349,7 +349,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // three separate appends -> three batch roots
     Seq(0, 10, 20).foreach(r =>
       Similarity.ivfAppend(emb.filter(col("vec_id") % 30 === r), idx))
-    val m0 = Similarity.readManifest(idx).get
+    val m0 = Similarity.Ivf.read(idx).get
     assert(m0.batches.size === 3 && m0.seq === 3L)
     val queries = emb.filter(col("vec_id") % 50 === 0)
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -362,7 +362,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     val preCompactReader = Similarity.ivfCells(spark, idx)
 
     Similarity.ivfCompact(spark, idx)
-    val m1 = Similarity.readManifest(idx).get
+    val m1 = Similarity.Ivf.read(idx).get
     // ONLY the batch list changes (plus the CAS sequencer's mseq, which
     // every manifest mutation bumps): rows/fingerprint/appendedRows/seq/
     // lastRows/lastFp all survive (fingerprint-neutral by construction)
@@ -385,10 +385,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // replay detection SURVIVES the compact: re-appending the last
     // pre-compaction batch is still a no-op
     Similarity.ivfAppend(emb.filter(col("vec_id") % 30 === 20), idx)
-    assert(Similarity.readManifest(idx).get === m1)
+    assert(Similarity.Ivf.read(idx).get === m1)
     // a second compact is a no-op (nothing to fold)
     Similarity.ivfCompact(spark, idx)
-    assert(Similarity.readManifest(idx).get === m1)
+    assert(Similarity.Ivf.read(idx).get === m1)
     // and a genuinely NEW batch appends normally afterwards, with a seq
     // that never collides across the compaction
     val baseRows = emb.filter(col("vec_id") < 5).collect()
@@ -397,7 +397,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
       val w = v.clone(); w(0) = w(0) + 0.01f; (id + 10000L, w.toSeq)
     }
     Similarity.ivfAppend(planted.toSeq.toDF("vec_id", "embedding"), idx)
-    val m2 = Similarity.readManifest(idx).get
+    val m2 = Similarity.Ivf.read(idx).get
     assert(m2.batches.size === 2 && m2.seq === 4L)
     assert(m2.rows === m1.rows + planted.length)
     val got = Similarity.ivfProbe(spark, idx,
@@ -409,7 +409,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // compaction cycle old) while keeping ITS OWN inputs for the next
     // grace period — the deferral is exactly one cycle, not unbounded
     Similarity.ivfCompact(spark, idx)
-    val m3 = Similarity.readManifest(idx).get
+    val m3 = Similarity.Ivf.read(idx).get
     assert(m3.batches.size === 1)
     assert(new java.io.File(s"$idx/batches").listFiles().map(_.getName).toSet
       === (m2.batches.toSet + m3.batches.head))
@@ -425,10 +425,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     Similarity.ivfBuild(base, idx, nlist = 16)
     Seq(0, 10, 20).foreach(r =>
       Similarity.ivfAppend(emb.filter(col("vec_id") % 30 === r), idx))
-    val m = Similarity.readManifest(idx).get
+    val m = Similarity.Ivf.read(idx).get
     assert(m.lastRows > 0L)
     // rewrite the manifest in the LEGACY shape: no seq/last_* fields
-    // (readManifest then reports lastRows = lastFp = 0, seq = |batches|)
+    // (Ivf.read then reports lastRows = lastFp = 0, seq = |batches|)
     val batchesJson = m.batches.map("\"" + _ + "\"").mkString("[", ",", "]")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(idx, "manifest.json"),
@@ -436,19 +436,19 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
         s""""nlist":${m.nlist},"dim":${m.dim},"fpv":${m.fpv},""" +
         s""""appended_rows":${m.appendedRows},"batches":$batchesJson}""")
         .getBytes("UTF-8"))
-    val legacy = Similarity.readManifest(idx).get
+    val legacy = Similarity.Ivf.read(idx).get
     assert(legacy.lastRows === 0L && legacy.lastFp === 0L)
     assert(legacy.seq === m.batches.size.toLong)
 
     Similarity.ivfCompact(spark, idx)
-    val mc = Similarity.readManifest(idx).get
+    val mc = Similarity.Ivf.read(idx).get
     // the fold BACKFILLED the replay pair from the last batch's own data
     assert(mc.batches.size === 1)
     assert((mc.lastRows, mc.lastFp) === (m.lastRows, m.lastFp))
     // ... so a streaming replay straddling the upgrading compact is a
     // no-op, exactly like on a current-format manifest
     Similarity.ivfAppend(emb.filter(col("vec_id") % 30 === 20), idx)
-    assert(Similarity.readManifest(idx).get === mc)
+    assert(Similarity.Ivf.read(idx).get === mc)
     // and the corpus identity is untouched: the union frame validates
     assert(Similarity.ivfValid(emb.filter(lit(true)), idx, nlist = 16))
   }
@@ -521,7 +521,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     val feedDir = tmp("ivf_cfeed_")
     graft.streaming.IvfIngest.ingestChunked(batch, "vec_id", idxC, feedDir,
       maxBatches = 1)
-    val mc = Similarity.readManifest(idxC).get
+    val mc = Similarity.Ivf.read(idxC).get
     assert(mc.batches.size === 1, s"stream batches not folded: ${mc.batches}")
     assert(mc.appendedRows === batch.count())
     assert(mc.seq >= 2, "compaction must not hide that multiple appends committed")
@@ -529,7 +529,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     val idxA = tmp("ivf_coneshot_")
     Similarity.ivfBuild(base, idxA, nlist = 16)
     Similarity.ivfAppend(batch, idxA)
-    val ma = Similarity.readManifest(idxA).get
+    val ma = Similarity.Ivf.read(idxA).get
     assert((mc.rows, mc.fingerprint, mc.dim) === (ma.rows, ma.fingerprint, ma.dim))
     val queries = emb.filter(col("vec_id") % 50 === 0)
     def pairs(idx: String) = Similarity.ivfProbe(spark, idx, queries, 5, nprobe = 2)
@@ -541,7 +541,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // file as committed in the retained checkpoint and appends NOTHING
     graft.streaming.IvfIngest.ingestChunked(batch, "vec_id", idxC, feedDir,
       maxBatches = 1, freshCheckpoint = false)
-    assert(Similarity.readManifest(idxC).get === mc)
+    assert(Similarity.Ivf.read(idxC).get === mc)
   }
 
   test("a torn ivfAppend is invisible to readers and a retry recovers at O(batch)") {
@@ -549,13 +549,13 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     val base = emb.filter(col("vec_id") % 10 =!= 0)
     val batch = emb.filter(col("vec_id") % 10 === 0)
     Similarity.ivfBuild(base, idx, nlist = 16)
-    val m0 = Similarity.readManifest(idx).get
+    val m0 = Similarity.Ivf.read(idx).get
     val served0 = Similarity.ivfCells(spark, idx).count()
 
     // CRASH 1: between staging and promotion — the batch files exist
     // under _staging/, nothing under batches/, manifest untouched
     val Some((m, id, bn, bfp)) = Similarity.ivfAppendStage(batch, idx)
-    assert(Similarity.readManifest(idx).get === m0)
+    assert(Similarity.Ivf.read(idx).get === m0)
     assert(Similarity.ivfValid(base, idx, nlist = 16),
       "old index must stay valid through a torn append (crash after stage)")
     assert(Similarity.ivfCells(spark, idx).count() === served0,
@@ -563,9 +563,9 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
 
     // CRASH 2: between promotion and the manifest commit — batches/<id>
     // exists on disk but the manifest (the read set) does not list it
-    Similarity.ivfAppendPromote(idx, id)
+    Similarity.Ivf.promote(idx, id)
     assert(new java.io.File(s"$idx/batches/$id/cells.parquet/_SUCCESS").exists())
-    assert(Similarity.readManifest(idx).get === m0)
+    assert(Similarity.Ivf.read(idx).get === m0)
     // force a fresh validation scan (ivfValid memoizes per frame): a new
     // frame of the same base data misses the cache
     assert(Similarity.ivfValid(base.filter(lit(true)), idx, nlist = 16),
@@ -576,7 +576,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // RETRY: the full append over the same batch re-derives the same id,
     // overwrites its own leftovers, and commits — O(batch), no rebuild
     Similarity.ivfAppend(batch, idx)
-    val m1 = Similarity.readManifest(idx).get
+    val m1 = Similarity.Ivf.read(idx).get
     assert(m1.batches === Seq(id), "retry must reuse the deterministic id")
     assert((m1.rows, m1.fingerprint) === (m.rows + bn, m.fingerprint + bfp))
     assert(Similarity.ivfValid(emb, idx, nlist = 16))
@@ -628,7 +628,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     Similarity.ivfBuild(emb.filter(col("vec_id") % 10 =!= 0), idx, nlist = 16)
     Seq(0, 10).foreach(r =>
       Similarity.ivfAppend(emb.filter(col("vec_id") % 20 === r), idx))
-    val m = Similarity.readManifest(idx).get
+    val m = Similarity.Ivf.read(idx).get
     assert(m.mv === Similarity.ManifestVersion && m.lastRows > 0L)
     // rewrite the manifest with the replay pair ZEROED but the CURRENT
     // layout version: on v2, (0, 0) means "no append since build" — a
@@ -643,14 +643,14 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
         .replace(s""""last_fp":${m.lastFp}""", """"last_fp":0""")
         .getBytes("UTF-8"))
     Similarity.ivfCompact(spark, idx)
-    val mc = Similarity.readManifest(idx).get
+    val mc = Similarity.Ivf.read(idx).get
     assert(mc.batches.size === 1)
     assert((mc.lastRows, mc.lastFp) === (0L, 0L), "v2 pair must survive as-is")
     // ... and with the pair meaning "no append", re-sending the last
     // batch is NOT read as a replay: it commits (multiplicity-sensitive
     // manifest), instead of being silently skipped off a backfilled pair
     Similarity.ivfAppend(emb.filter(col("vec_id") % 20 === 10), idx)
-    assert(Similarity.readManifest(idx).get.batches.size === 2)
+    assert(Similarity.Ivf.read(idx).get.batches.size === 2)
   }
 
   test("ivfProbe pins an RDD-backed queries frame (leaf Catalyst cannot see)") {
@@ -715,7 +715,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
     val before = pairs()
     Similarity.ivfCompact(spark, idx)
-    val mc = Similarity.readManifest(idx).get
+    val mc = Similarity.Ivf.read(idx).get
     assert(mc.batches.size === 1)
     val foldRoot = new java.io.File(s"$idx/batches/${mc.batches.head}/cells.parquet")
     val filesPerCell = foldRoot.listFiles().filter(_.getName.startsWith("cell="))
@@ -750,7 +750,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     Similarity.ivfAppend(far, idx)
     Similarity.ivfAppend(emb.filter(col("vec_id") % 10 === 0), idx)
     val union = emb.union(far)
-    val m0 = Similarity.readManifest(idx).get
+    val m0 = Similarity.Ivf.read(idx).get
     def liveCellCounts() = Similarity.ivfCells(spark, idx)
       .groupBy("cell").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -770,7 +770,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
 
     val splits = Similarity.ivfRefit(spark, idx, capFactor = 2.0, maxSplit = 4)
     assert(splits > 0, "the clump cell must be past 2x the mean load")
-    val m1 = Similarity.readManifest(idx).get
+    val m1 = Similarity.Ivf.read(idx).get
     // a refit moves LABELS, never rows: corpus identity is untouched and
     // the union frame still validates at the BUILT nlist
     assert((m1.rows, m1.fingerprint) === (m0.rows, m0.fingerprint))
@@ -796,7 +796,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // compact AFTER refit: the fold excludes superseded copies, accounts
     // relocated base rows (refitRows), and serving is unchanged
     Similarity.ivfCompact(spark, idx)
-    val mc = Similarity.readManifest(idx).get
+    val mc = Similarity.Ivf.read(idx).get
     assert(mc.batches.size === 1)
     assert(Similarity.ivfCells(spark, idx).count() === m0.rows)
     assert(top1() === exactTop1, "probe unchanged through the post-refit fold")
@@ -816,15 +816,15 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // race that used to cost a silent rebuild
     val Some((m1, id1, n1, fp1)) = Similarity.ivfAppendStage(b1, idx)
     val Some((m2, id2, n2, fp2)) = Similarity.ivfAppendStage(b2, idx)
-    Similarity.ivfAppendPromote(idx, id1)
-    Similarity.ivfAppendCommit(idx, m1, id1, n1, fp1) // winner
-    Similarity.ivfAppendPromote(idx, id2)
+    Similarity.Ivf.promote(idx, id1)
+    Similarity.Ivf.commitAppend(idx, m1, id1, n1, fp1) // winner
+    Similarity.Ivf.promote(idx, id2)
     val e = intercept[IllegalStateException] {
-      Similarity.ivfAppendCommit(idx, m2, id2, n2, fp2) // loser: must throw
+      Similarity.Ivf.commitAppend(idx, m2, id2, n2, fp2) // loser: must throw
     }
     assert(e.getMessage.contains("CAS lost"))
     // the index is exactly build ∪ b1 — the loser's batch is invisible
-    val m = Similarity.readManifest(idx).get
+    val m = Similarity.Ivf.read(idx).get
     assert(m.batches === Seq(id1))
     assert(Similarity.ivfValid(
       emb.filter(col("vec_id") % 10 =!= 0 || col("vec_id") % 20 === 0),
@@ -834,13 +834,13 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     assert(Similarity.ivfValid(emb.filter(lit(true)), idx, nlist = 16))
     // crash-between-claim-and-publish: re-running the SAME commit finds
     // its own token on the sequencer and (re-)publishes idempotently
-    val mPre = Similarity.readManifest(idx).get
+    val mPre = Similarity.Ivf.read(idx).get
     val Some((m3, id3, n3, fp3)) =
       Similarity.ivfAppendStage(emb.filter(col("vec_id") % 20 === 5), idx)
-    Similarity.ivfAppendPromote(idx, id3)
-    Similarity.ivfAppendCommit(idx, m3, id3, n3, fp3)
-    Similarity.ivfAppendCommit(idx, m3, id3, n3, fp3) // retry: no throw
-    val mPost = Similarity.readManifest(idx).get
+    Similarity.Ivf.promote(idx, id3)
+    Similarity.Ivf.commitAppend(idx, m3, id3, n3, fp3)
+    Similarity.Ivf.commitAppend(idx, m3, id3, n3, fp3) // retry: no throw
+    val mPost = Similarity.Ivf.read(idx).get
     assert(mPost.batches === mPre.batches :+ id3,
       "an idempotent commit retry must not duplicate the batch")
     assert(mPost.mseq === mPre.mseq + 1)
@@ -862,10 +862,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     val idx = java.nio.file.Files.createTempDirectory("ivf_clump_")
       .toFile.getAbsolutePath
     Similarity.ivfBuild(corpus, idx, nlist = 4)
-    val m0 = Similarity.readManifest(idx).get
+    val m0 = Similarity.Ivf.read(idx).get
     // cap 2x the 120-row mean: the 400-row clump cell is the hot set
     val n = Similarity.ivfRefit(spark, idx, capFactor = 2.0, maxSplit = 4)
-    val m1 = Similarity.readManifest(idx).get
+    val m1 = Similarity.Ivf.read(idx).get
     assert(n === 0, "a pure-duplicate clump admits no split")
     assert(m1 === m0, "a refit that split nothing must leave the manifest alone")
     assert(Similarity.ivfCells(spark, idx).count() === m0.rows)
