@@ -76,18 +76,6 @@ package object core {
 
   def r6(c: Column): Column = rN(c, 6)
 
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to
-    * `n` ([[withSessionConf]], so it inherits the active-stream check).
-    * Used by the streaming
-    * queries: a Structured Streaming query fixes its STATE partition
-    * count from this conf at start, and the harness corpora need far
-    * fewer state partitions than the batch default — per-batch task
-    * overhead (32 state-store tasks × ~6 micro-batches × stateful ops)
-    * otherwise dominates their bench time. At production scale the
-    * session default is simply left alone. */
-  def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T =
-    withSessionConf(s, "spark.sql.shuffle.partitions", n.toString)(body)
-
   /** Run `body` with one session conf temporarily set, restoring (or
     * unsetting) afterwards. A Structured Streaming query snapshots
     * session confs at start, so wrapping a stream's start+drain scopes
@@ -124,13 +112,6 @@ package object core {
     f.delete()
     ()
   }
-
-  private val sinkCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Unique memory-sink name per invocation (Bench runs a query up to 3
-    * times in one session; memory sink names are session-global). */
-  def uniqueSinkName(prefix: String): String =
-    s"${prefix}_${sinkCounter.incrementAndGet()}"
 
   /** Collect modules into the SparkEntry maps. */
   def registry(modules: Seq[Seq[Q]]): (Map[String, QueryFn], Map[String, String]) = {

@@ -170,12 +170,8 @@ object DedupQueries {
           .select(col("ts"), col("user_id"), col("event_type"))
         val input = WeatherStream.chunkedFileFeedDF(
           ev, "ts", WeatherStream.stagingDir("dedup_keys", dir))
-        // parquet-sink drain: the distinct-key set is O(key cardinality),
-        // unbounded at scale — keep it off the driver
-        withShufflePartitions(s, WeatherStream.statePartitions(s, input)) {
-          WeatherStream.drainToParquet(
-            input.df.dropDuplicates("user_id", "event_type"), "dedup_keys_stream", input)
-        }
+        WeatherStream.drain(input.df.dropDuplicates("user_id", "event_type"),
+          "dedup_keys_stream", WeatherStream.FileSink(), input)
           .select(col("user_id"), col("event_type"))
           .orderBy("user_id", "event_type")
       },
@@ -364,10 +360,10 @@ object DedupQueries {
         val input = WeatherStream.chunkedFileFeedDF(
           docs.filter(col("doc_id") % 10 === 0).select("doc_id", "text"),
           "doc_id", WeatherStream.stagingDir("dedup_inc_stream", dir))
-        WeatherStream.drainForeachBatch(input.df, "dedup_incremental_stream",
-          b => Dedup.probeNearDups(ix, b, "text")
+        WeatherStream.drain(input.df, "dedup_incremental_stream",
+          WeatherStream.PerBatch(b => Dedup.probeNearDups(ix, b, "text")
             .select(col("doc_id"), col("dup_of"), col("inter"),
-              col("n_batch"), col("n_corpus"), r6(col("jaccard")).as("jaccard")),
+              col("n_batch"), col("n_corpus"), r6(col("jaccard")).as("jaccard"))),
           input)
           .orderBy("doc_id")
       },
@@ -517,10 +513,10 @@ object DedupQueries {
         val input = WeatherStream.chunkedFileFeedDF(
           e.filter(col("vec_id") % 10 === 0), "vec_id",
           WeatherStream.stagingDir("embed_inc_stream", dir))
-        WeatherStream.drainForeachBatch(input.df, "dedup_embed_incremental_stream",
-          b => Dedup.probeEmbedDups(ix, b, -1.0)
+        WeatherStream.drain(input.df, "dedup_embed_incremental_stream",
+          WeatherStream.PerBatch(b => Dedup.probeEmbedDups(ix, b, -1.0)
             .select(col("vec_id"), col("dup_of"), col("label"),
-              r6(col("cos")).as("cosine")),
+              r6(col("cos")).as("cosine"))),
           input)
           .orderBy("vec_id")
       },

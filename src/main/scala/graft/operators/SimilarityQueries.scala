@@ -240,10 +240,10 @@ object SimilarityQueries {
         val input = WeatherStream.chunkedFileFeedDF(
           e.filter(col("vec_id") % 50 === 0), "vec_id",
           WeatherStream.stagingDir("knn_stream", dir))
-        WeatherStream.drainForeachBatch(input.df, "sim_knn_stream",
-          b => Similarity.ivfProbe(s, idx, b, K, nprobe = 2)
+        WeatherStream.drain(input.df, "sim_knn_stream",
+          WeatherStream.PerBatch(b => Similarity.ivfProbe(s, idx, b, K, nprobe = 2)
             .select(col("q_id"), col("rank"), col("neighbor_id"),
-              r6(col("cos")).as("cosine")),
+              r6(col("cos")).as("cosine"))),
           input)
           .orderBy("q_id", "rank")
       },

@@ -158,12 +158,8 @@ object WeatherQueries {
           .select(col("event_id"), col("user_id"), col("ts"), col("value"))
         val input = WeatherStream.chunkedFileFeed(
           readings, WeatherStream.stagingDir("wx_rain", dir))
-        // parquet-sink drain: output is O(input) (one obs per event), so
-        // a driver-resident memory sink would cap it at driver heap
-        withShufflePartitions(s, WeatherStream.statePartitions(s, input)) {
-          WeatherStream.drainToParquet(
-            WeatherStream.rainDailyStream(input.typed).toDF(), "wx_rain_stream", input)
-        }
+        WeatherStream.drain(WeatherStream.rainDailyStream(input.typed).toDF(),
+          "wx_rain_stream", WeatherStream.FileSink(), input)
           .select(col("event_id"), col("user_id"), col("day"),
             col("total_rain_mm"), col("daily_rain_mm"), col("rain_rate_mmh"))
           .orderBy("event_id")
@@ -172,7 +168,7 @@ object WeatherQueries {
 
     // The wx_rain_daily_stream pipeline KILLED after 2 of 4 chunk
     // arrivals and RESTARTED from the same checkpoint + sink dirs
-    // (WeatherStream.drainToParquetRestart): checkpoint recovery of the
+    // (WeatherStream.FileSink(stopAfter)): checkpoint recovery of the
     // flatMapGroupsWithState rain state + the file-sink metadata log must
     // reproduce the uninterrupted run exactly, so this query shares the
     // BATCH oracle SQL — making fault recovery a driver-checked
@@ -185,11 +181,8 @@ object WeatherQueries {
           .select(col("event_id"), col("user_id"), col("ts"), col("value"))
         val input = WeatherStream.chunkedFileFeed(
           readings, WeatherStream.stagingDir("wx_rain_restart", dir))
-        withShufflePartitions(s, WeatherStream.statePartitions(s, input)) {
-          WeatherStream.drainToParquetRestart(
-            WeatherStream.rainDailyStream(input.typed).toDF(),
-            "wx_rain_stream_restart", stopAfter = 2, input)
-        }
+        WeatherStream.drain(WeatherStream.rainDailyStream(input.typed).toDF(),
+          "wx_rain_stream_restart", WeatherStream.FileSink(stopAfter = Some(2)), input)
           .select(col("event_id"), col("user_id"), col("day"),
             col("total_rain_mm"), col("daily_rain_mm"), col("rain_rate_mmh"))
           .orderBy("event_id")

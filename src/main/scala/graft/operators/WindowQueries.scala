@@ -302,20 +302,12 @@ object WindowQueries {
     // sum state is order-independent). Append mode only emits
     // watermark-closed windows, so a single far-future sentinel row rides
     // in the last chunk to push the watermark past every real window; the
-    // sentinel's own window never closes and is never emitted.
-    //
-    // No-data micro-batches OFF (the join_stream_stream treatment,
-    // r17): every feed advance otherwise pays a ~0.4 s empty re-run of
-    // the incremental plan just to apply the advanced watermark — at
-    // cluster scale one scheduled task per state partition, per
-    // advance. For an append-mode agg only the FINAL advance emits
-    // anything, so that one is made a real data batch instead: a
-    // second sentinel (+14 d) rides in an EPILOGUE chunk that arrives
-    // after every quantile chunk. Processing it applies sentinel #1's
-    // watermark (maxTs+7d-2h > every real window end), emitting all
-    // real windows in that data batch. Neither sentinel's own window
-    // ever closes, so neither is ever emitted — output identical
-    // (oracle re-proven), 3-4 empty plan executions saved per run.
+    // sentinel's own window never closes and is never emitted. The
+    // drain's epilogue rule: a second sentinel (+14 d) rides in an
+    // EPILOGUE chunk that arrives after every quantile chunk. Processing
+    // it applies sentinel #1's watermark (maxTs+7d-2h > every real window
+    // end), emitting all real windows in that data batch. Neither
+    // sentinel's own window ever closes, so neither is ever emitted.
     StreamQ("win_tumbling_stream",
       (s, dir) => {
         import graft.streaming.WeatherStream
@@ -335,13 +327,7 @@ object WindowQueries {
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
           .select(unix_timestamp(col("window.start")).as("ws"),
             col("event_type"), col("n"), col("sum_value"))
-        // parquet-sink drain: window count grows with the time range —
-        // executor-side output, nothing driver-resident
-        withSessionConf(s, "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
-          withShufflePartitions(s, WeatherStream.statePartitions(s, input)) {
-            graft.streaming.WeatherStream.drainToParquet(agg, "win_tumbling_stream", input)
-          }
-        }
+        WeatherStream.drain(agg, "win_tumbling_stream", WeatherStream.FileSink(), input)
           // defensive: a sentinel window never closes today, but a batch
           // run after the epilogue (checkpoint re-run, no-data batches
           // back on) would close sentinel #1's window and emit it; null-safe
@@ -380,25 +366,9 @@ object WindowQueries {
           .select(col("p_id"), col("user_id"),
             unix_micros(col("p_ts")).as("p_ts_us"),
             col("c_id"), unix_micros(col("c_ts")).as("c_ts_us"))
-        // parquet-sink drain: the match set is O(input) at scale; both
-        // feeds advance in step so the global watermark keeps moving.
-        // No-data micro-batches OFF for this query: an APPEND-mode INNER
-        // join emits every match in the data batch where it arrives —
-        // the watermark-triggered empty batches only evict state, never
-        // produce or release output rows (unlike the windowed-agg
-        // streams, where they are what emits closed windows — those keep
-        // the default). Measured per empty batch: ~0.4 s of full-DAG
-        // scheduling over every state partition (micro-batch listener,
-        // sf0.1), one per feed advance — pure overhead here at any
-        // scale; on a cluster the same batches schedule state-store
-        // tasks across all executors for no output. State still drains:
-        // eviction happens lazily inside subsequent data batches, and
-        // the query is torn down at drain end anyway.
-        withSessionConf(s, "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
-          withShufflePartitions(s, WeatherStream.statePartitions(s, p, c)) {
-            graft.streaming.WeatherStream.drainToParquet(joined, "join_stream_stream", p, c)
-          }
-        }.orderBy("p_id", "c_id")
+        // both feeds advance in step so the global watermark keeps moving
+        WeatherStream.drain(joined, "join_stream_stream", WeatherStream.FileSink(), p, c)
+          .orderBy("p_id", "c_id")
       },
       Some("""SELECT p.event_id AS p_id, p.user_id, epoch_us(p.ts) AS p_ts_us,
              |  c.event_id AS c_id, epoch_us(c.ts) AS c_ts_us
@@ -425,10 +395,8 @@ object WindowQueries {
         val joined = input.df.join(broadcast(dim), "event_type")
           .select(col("event_id"), col("event_type"), col("value"),
             r6(col("type_avg")).as("type_avg"))
-        // parquet-sink drain: one output row per input event — O(input)
-        withShufflePartitions(s, WeatherStream.statePartitions(s, input)) {
-          graft.streaming.WeatherStream.drainToParquet(joined, "join_stream_static", input)
-        }.orderBy("event_id")
+        WeatherStream.drain(joined, "join_stream_static", WeatherStream.FileSink(), input)
+          .orderBy("event_id")
       },
       Some(s"""SELECT e.event_id, e.event_type, e.value,
               |  round(d.type_avg * 1e6) / 1e6 AS type_avg
@@ -466,11 +434,11 @@ object WindowQueries {
           .localCheckpoint(true)
         val input = WeatherStream.chunkedFileFeedDF(purchases, "ts",
           WeatherStream.stagingDir("asof_stream", dir))
-        WeatherStream.drainForeachBatch(input.df, "join_asof_stream",
-          b => Asof.join(b, clicks, "user_id", "ts")
+        WeatherStream.drain(input.df, "join_asof_stream",
+          WeatherStream.PerBatch(b => Asof.join(b, clicks, "user_id", "ts")
             .select(col("event_id"), col("user_id"),
               unix_micros(col("ts")).as("ts_us"),
-              col("r_click_id").as("click_id")),
+              col("r_click_id").as("click_id"))),
           input)
           .orderBy("event_id")
       },
@@ -496,10 +464,11 @@ object WindowQueries {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
         import org.apache.spark.sql.streaming.GroupStateTimeout
+        import graft.streaming.WeatherStream
         val readings = Tables.events(s, dir)
           .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-        val feed = graft.streaming.WeatherStream.chunkedFileFeed(
-          readings, graft.streaming.WeatherStream.stagingDir("topk_stream", dir))
+        val feed = WeatherStream.chunkedFileFeed(
+          readings, WeatherStream.stagingDir("topk_stream", dir))
         val agg = new graft.functions.TopKAggregator(3)
         val updates = feed.typed.map(r => (r.user_id, r.value, r.event_id))
           .groupByKey(_._1)
@@ -511,16 +480,9 @@ object WindowQueries {
             state.update((folded, n))
             (key, n, folded.toSeq.map(_._1), folded.toSeq.map(_._2))
           }
-        val sinkName = uniqueSinkName("topk_stream")
-        withShufflePartitions(s, graft.streaming.WeatherStream.statePartitions(s, feed)) {
-          val q = updates.toDF("user_id", "n_seen", "scores", "ids")
-            .writeStream.format("memory").queryName(sinkName)
-            .outputMode("update").start()
-          try graft.streaming.WeatherStream.runChunked(q, Seq(feed))
-          finally q.stop()
-        }
         val w = Window.partitionBy("user_id").orderBy(desc("n_seen"))
-        s.table(sinkName)
+        WeatherStream.drain(updates.toDF("user_id", "n_seen", "scores", "ids"),
+          "topk_stream", WeatherStream.PerBatch(), feed)
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1)
           .select(col("user_id"), posexplode(arrays_zip(col("ids"), col("scores"))))
@@ -570,11 +532,9 @@ object WindowQueries {
     // watermark-closing sentinel trick as win_tumbling_stream: append
     // mode only emits closed sessions, so a far-future row rides in the
     // last chunk; its own session never closes and is filtered out.
-    // No-data micro-batches OFF + epilogue sentinel #2 (+14 d): the
-    // win_tumbling_stream treatment — the final watermark advance rides
-    // a real data batch, every per-advance empty plan execution is
-    // saved, neither sentinel's session ever closes. Output identical
-    // (shares the batch gaps-and-islands oracle; re-proven).
+    // Epilogue sentinel #2 (+14 d), as in win_tumbling_stream: the final
+    // watermark advance rides a real data batch, and neither sentinel's
+    // session ever closes.
     StreamQ("win_session_stream",
       (s, dir) => {
         import graft.streaming.WeatherStream
@@ -595,12 +555,7 @@ object WindowQueries {
           .select(col("user_id"),
             unix_micros(col("session_window.start")).as("session_start_us"),
             col("n"), col("sum_value"))
-        // parquet-sink drain: session count is O(input) at scale
-        withSessionConf(s, "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
-          withShufflePartitions(s, WeatherStream.statePartitions(s, input)) {
-            graft.streaming.WeatherStream.drainToParquet(agg, "win_session_stream", input)
-          }
-        }
+        WeatherStream.drain(agg, "win_session_stream", WeatherStream.FileSink(), input)
           .filter(col("user_id") =!= -1L)
           .orderBy("user_id", "session_start_us")
       },

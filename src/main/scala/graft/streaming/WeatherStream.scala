@@ -1,10 +1,11 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, EventTimeWatermark}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.core.rmTree
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import graft.core.{rmTree, withSessionConf}
 
 /** Structured-Streaming surface of the engine (SURVEY.md §2A O8-O13, O23;
   * §7.1 step 7): the reference is a 15-minute-trigger micro-batch pipeline
@@ -19,6 +20,48 @@ import graft.core.rmTree
   * at :244). The windowed aggregations reuse the exact operators the batch
   * path uses (`window`, `session_window`), so batch and streaming results
   * are directly comparable — which StreamingSpec exploits.
+  *
+  * Every registered stream runs through [[drain]], which owns the
+  * stream-run policy once for all of them:
+  *  - Sink shapes. An append-mode parquet FILE sink ([[FileSink]]) is
+  *    exactly-once through the sink's metadata log, and the driver never
+  *    holds the output (a memory sink would cap it at driver heap). It
+  *    optionally stops mid-feed and restarts from the same checkpoint +
+  *    sink dirs, so checkpoint recovery is a driver-checked query. A
+  *    PER-BATCH sink ([[PerBatch]]) runs foreachBatch into `batch=<id>`
+  *    directories with overwrite — replay-idempotent, since foreachBatch
+  *    is at-least-once and a replayed batch rewrites its own dir — in
+  *    update mode, so a mapGroupsWithState plan can use it (Spark treats
+  *    update as append for stateless plans).
+  *  - Dirs. Sink + checkpoint dirs are per (application, query name) and
+  *    wiped before each run: Bench drives a query several times per
+  *    session, a sink cannot be re-driven from a stale checkpoint against
+  *    a reset feed, and a fresh dir per run would leak an output copy.
+  *  - No-data micro-batches are OFF. Each watermark advance would
+  *    otherwise pay a full plan execution over empty sources (measured
+  *    ~0.4 s per feed advance at sf0.1; on a cluster one task per state
+  *    partition). A stream-stream inner join emits every match in the
+  *    batch where it arrives, so those batches only evict state, which
+  *    later data batches do lazily. Streams with neither a watermark nor
+  *    a timeout never get a no-data batch anyway.
+  *  - Epilogue rule. An append-mode aggregation over a watermark emits a
+  *    window only once the watermark passes it, and with no-data batches
+  *    off the last advance must ride a data batch: one of its feeds must
+  *    end in an epilogue chunk ([[chunkedFileFeedDF]]), else [[drain]]
+  *    throws before starting.
+  *  - Sizing. The state-partition count (`spark.sql.shuffle.partitions`
+  *    at start, which a per-batch sink's batch jobs also inherit) is one
+  *    partition per ~8 MB of staged feed parquet (filesystem metadata,
+  *    no scan), clamped to [4, max(4, defaultParallelism)]. A small
+  *    count wins at bench scale — tiny per-key state pays more
+  *    task-launch and checkpoint-file overhead than parallelism buys —
+  *    but a constant serialized the family at the 100x corpus
+  *    (second-decade ratios 9–15, BENCH_SCALING). On a cluster the same
+  *    rule holds with the landing-zone size, the ceiling being the
+  *    executor-core total.
+  * Both confs are set on the shared session for the run and restored
+  * after, so [[drain]] assumes one query at a time and throws if a
+  * stream is already active.
   */
 object WeatherStream {
 
@@ -138,16 +181,19 @@ object WeatherStream {
     * Each chunk is exactly one parquet file (the staging write hash-
     * partitions on the chunk id, so a chunk never splits across files),
     * hence one `advance()` + `processAllAvailable()` = one micro-batch —
-    * cross-batch state carry in the consumers is genuinely exercised. */
+    * cross-batch state carry in the consumers is genuinely exercised.
+    * `hasEpilogue` says whether the last chunk is an epilogue (see
+    * [[chunkedFileFeedDF]]). */
   final class ChunkedFeed private[streaming] (
       val df: DataFrame,
       chunkDirs: IndexedSeq[java.io.File],
-      live: java.io.File) {
+      live: java.io.File,
+      val hasEpilogue: Boolean) {
     private var next = 0
     def nChunks: Int = chunkDirs.length
     /** Total bytes of the staged chunk data files — filesystem metadata
-      * only, no scan. The streaming queries size their state-partition
-      * count from this (see [[statePartitions]]). */
+      * only, no scan. [[drain]] sizes the state-partition count from
+      * this. */
     def stagedBytes: Long = chunkDirs.map { d =>
       Option(d.listFiles()).getOrElse(Array.empty)
         .filter(_.getName.startsWith("part-")).map(_.length()).sum
@@ -232,18 +278,14 @@ object WeatherStream {
     *
     * `epilogue`, when given, is staged as ONE extra chunk that arrives
     * strictly AFTER every quantile chunk (its own parquet dir, same
-    * schema). Purpose: the watermarked windowed-agg streams run with
-    * no-data micro-batches DISABLED (each watermark advance otherwise
-    * pays a full extra plan execution over empty sources — measured
-    * ~0.4 s per feed advance at sf0.1, and at cluster scale one task
-    * per state partition — that for an append-mode agg only matters
-    * once, at end-of-feed); the epilogue chunk carries a single
-    * beyond-every-window sentinel row, so the FINAL watermark advance
-    * happens inside a real data batch and the closed windows are
-    * emitted there. The epilogue rows follow the same contract as the
-    * in-feed sentinel the callers already use: event time far enough
-    * out that their own window/session can never close, hence they are
-    * never emitted. */
+    * schema): the end-of-feed chunk a watermarked aggregation needs
+    * under [[drain]]'s no-data rule (object scaladoc). It carries a
+    * single beyond-every-window sentinel row, so the FINAL watermark
+    * advance happens inside a real data batch and the closed windows
+    * are emitted there. The epilogue rows follow the same contract as
+    * the in-feed sentinel the callers already use: event time far
+    * enough out that their own window/session can never close, hence
+    * they are never emitted. */
   def chunkedFileFeedDF(readings: DataFrame, tsCol: String, dir: String,
                         nChunks: Int = DefaultChunks,
                         epilogue: Option[DataFrame] = None): ChunkedFeed = {
@@ -284,19 +326,22 @@ object WeatherStream {
       .parquet(live.getAbsolutePath)
     new ChunkedFeed(stream,
       (0 to bounds.length).map(k => new java.io.File(stage, s"chunk=$k")) ++
-        epilogue.map(_ => epiDir).toSeq, live)
+        epilogue.map(_ => epiDir).toSeq, live, epilogue.isDefined)
   }
 
-  /** Drive `q` through its feeds to completion: each round advances every
-    * feed by one chunk (multi-input queries like the stream-stream join
-    * see both sides progress in step, keeping the global watermark
-    * moving) and processes all arrived data before the next arrival. */
-  def runChunked(q: org.apache.spark.sql.streaming.StreamingQuery,
-                 feeds: Seq[ChunkedFeed]): Unit = {
+  /** Drive `q` through its feeds: each round advances every feed by one
+    * chunk (multi-input queries like the stream-stream join see both
+    * sides progress in step, keeping the global watermark moving) and
+    * processes all arrived data before the next arrival. Stops after
+    * `rounds` arrivals, else once every feed is exhausted. */
+  def runChunked(q: StreamingQuery,
+                 feeds: Seq[ChunkedFeed], rounds: Int = Int.MaxValue): Unit = {
+    var i = 0
     var advanced = true
-    while (advanced) {
+    while (i < rounds && advanced) {
       advanced = feeds.foldLeft(false)((any, f) => f.advance() || any)
       if (advanced) q.processAllAvailable()
+      i += 1
     }
     q.processAllAvailable()
   }
@@ -320,7 +365,7 @@ object WeatherStream {
     try Runtime.getRuntime.addShutdownHook(new Thread(() =>
       wipedRoots.forEach(p => rmTree(new java.io.File(p)))))
     catch { case _: IllegalStateException => () }
-  private def tmpRoot(s: org.apache.spark.sql.SparkSession): java.io.File = {
+  private def tmpRoot(s: SparkSession): java.io.File = {
     val root = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_${s.sparkContext.applicationId}")
     wipedRoots.add(root.getAbsolutePath)
@@ -333,7 +378,7 @@ object WeatherStream {
     * tests can stop mid-feed and start a second query over the SAME dirs
     * (exactly-once via the file-sink metadata log + state checkpoint). */
   def startParquetSink(df: DataFrame,
-                       base: java.io.File): org.apache.spark.sql.streaming.StreamingQuery =
+                       base: java.io.File): StreamingQuery =
     df.writeStream.format("parquet")
       .option("path", new java.io.File(base, "out").getAbsolutePath)
       .option("checkpointLocation", new java.io.File(base, "ckpt").getAbsolutePath)
@@ -342,110 +387,72 @@ object WeatherStream {
   /** Read a completed parquet sink back (the FileStreamSink metadata log
     * makes this exactly-once: orphan files from an interrupted batch are
     * not listed). */
-  def readParquetSink(s: org.apache.spark.sql.SparkSession,
+  def readParquetSink(s: SparkSession,
                       base: java.io.File): DataFrame =
     s.read.parquet(new java.io.File(base, "out").getAbsolutePath)
 
-  /** Run an append-mode streaming frame to completion through a PARQUET
-    * file sink, feeding its chunked inputs in arrival order, and read the
-    * committed result back — the scale-correct harness drain for streams
-    * whose output is O(input): rows land on (distributed at scale)
-    * storage straight from the executors, and the driver never
-    * materializes the result — unlike a memory sink, whose table lives in
-    * driver memory and caps output size at driver heap. Sink + checkpoint
-    * dirs are deterministic per (application, query name) and wiped
-    * before each run (Bench drives a query up to 3 times per session; a
-    * parquet sink cannot be re-driven from a stale checkpoint against a
-    * reset input feed, and a fresh-dir-per-run scheme would leak an
-    * output copy per invocation). */
-  def drainToParquet(df: DataFrame, name: String, feeds: ChunkedFeed*): DataFrame = {
-    val s = df.sparkSession
-    val base = new java.io.File(tmpRoot(s), s"sink_$name")
-    rmTree(base)
-    val q = startParquetSink(df, base)
-    try runChunked(q, feeds) finally q.stop()
-    readParquetSink(s, base)
-  }
+  /** Where [[drain]] lands a stream's rows (the two shapes are described
+    * in the object scaladoc). */
+  sealed trait Sink
 
-  /** [[drainToParquet]] with a KILL-AND-RESTART in the middle: the first
-    * query is stopped after `stopAfter` chunk arrivals, a SECOND query is
-    * started over the SAME checkpoint + sink dirs, and the remaining
-    * chunks drain through it. Recovery is Structured Streaming's own
-    * machinery — the state store restores per-key state, the file-sink
-    * metadata log keeps output exactly-once across the restart — so the
-    * result must be byte-identical to an uninterrupted run (and to the
-    * batch spelling; the registered `*_restart` query shares the batch
-    * oracle). This is the fault-tolerance fact a production deployment
-    * actually relies on, expressed as a driver-checked query rather than
-    * only a scalatest. */
-  def drainToParquetRestart(df: DataFrame, name: String, stopAfter: Int,
-                            feeds: ChunkedFeed*): DataFrame = {
+  /** Append-mode parquet file sink, exactly-once through its metadata
+    * log. `stopAfter = Some(n)` kills the query after n chunk arrivals
+    * and drains the rest through a second query over the same dirs. */
+  final case class FileSink(stopAfter: Option[Int] = None) extends Sink
+
+  /** foreachBatch sink: `perBatch` (a batch transformation, e.g. a
+    * batch-only operator like the merge as-of join) is applied to each
+    * micro-batch, which lands in its own `batch=<id>` directory. */
+  final case class PerBatch(perBatch: DataFrame => DataFrame = identity) extends Sink
+
+  /** Run `df` to completion through `sink`, feeding `feeds` in arrival
+    * order, and read the committed result back. Dirs, state partitions
+    * and no-data batches follow the rules in the object scaladoc. Throws
+    * IllegalStateException naming `name` if `df` aggregates over a
+    * watermark and no feed carries an epilogue, and naming the conf key
+    * if a stream is already active on the session. */
+  def drain(df: DataFrame, name: String, sink: Sink, feeds: ChunkedFeed*): DataFrame = {
     val s = df.sparkSession
+    val closesOnWatermark = df.queryExecution.analyzed.exists {
+      case a: Aggregate => a.child.exists(_.isInstanceOf[EventTimeWatermark])
+      case _            => false
+    }
+    if (closesOnWatermark && !feeds.exists(_.hasEpilogue))
+      throw new IllegalStateException(
+        s"drain($name): a watermarked append aggregation needs a feed with an " +
+          "epilogue chunk; with no-data micro-batches off its last windows are " +
+          "never emitted without one")
+    def run(q: StreamingQuery, rounds: Int = Int.MaxValue): Unit =
+      try runChunked(q, feeds, rounds) finally q.stop()
     val base = new java.io.File(tmpRoot(s), s"sink_$name")
-    rmTree(base)
-    val q1 = startParquetSink(df, base)
-    try {
-      var i = 0
-      var advanced = true
-      while (i < stopAfter && advanced) {
-        advanced = feeds.foldLeft(false)((any, f) => f.advance() || any)
-        if (advanced) q1.processAllAvailable()
-        i += 1
+    withSessionConf(s, "spark.sql.shuffle.partitions", statePartitions(s, feeds).toString) {
+      withSessionConf(s, "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
+        rmTree(base)
+        sink match {
+          case FileSink(stopAfter) =>
+            stopAfter.foreach(n => run(startParquetSink(df, base), n))
+            run(startParquetSink(df, base))
+            readParquetSink(s, base)
+          case PerBatch(perBatch) =>
+            val out = new java.io.File(base, "out")
+            run(df.writeStream
+              .foreachBatch { (b: Dataset[Row], id: Long) =>
+                perBatch(b.toDF()).write.mode("overwrite")
+                  .parquet(new java.io.File(out, s"batch=$id").getAbsolutePath)
+                ()
+              }
+              .outputMode("update")
+              .option("checkpointLocation", new java.io.File(base, "ckpt").getAbsolutePath)
+              .start())
+            // partition inference turns batch=<id> into a column; it is
+            // harness bookkeeping, not part of the result
+            s.read.parquet(out.getAbsolutePath).drop("batch")
+        }
       }
-    } finally q1.stop() // kill mid-feed: later chunks have not arrived
-    val q2 = startParquetSink(df, base) // SAME dirs: checkpoint recovery
-    try runChunked(q2, feeds) finally q2.stop()
-    readParquetSink(s, base)
+    }
   }
 
-  /** Run a streaming frame through a FOREACHBATCH sink that applies
-    * `perBatch` — a BATCH transformation, e.g. a batch-only custom
-    * operator like the merge as-of join — to each micro-batch, landing
-    * every batch's result under its own `batch=<id>` directory, and read
-    * the union back. Writing each micro-batch into ITS OWN directory
-    * with OVERWRITE is the replay-idempotence contract foreachBatch
-    * needs on plain parquet: foreachBatch is at-least-once, and a
-    * replayed micro-batch (same id) rewrites its own directory instead
-    * of appending a duplicate — the standard production spelling for
-    * foreachBatch outputs that cannot go through the file sink's
-    * metadata log. */
-  def drainForeachBatch(df: DataFrame, name: String,
-                        perBatch: DataFrame => DataFrame,
-                        feeds: ChunkedFeed*): DataFrame = {
-    val s = df.sparkSession
-    val base = new java.io.File(tmpRoot(s), s"sink_$name")
-    rmTree(base)
-    val out = new java.io.File(base, "out")
-    val q = df.writeStream
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        perBatch(b.toDF()).write.mode("overwrite")
-          .parquet(new java.io.File(out, s"batch=$id").getAbsolutePath)
-        ()
-      }
-      .option("checkpointLocation", new java.io.File(base, "ckpt").getAbsolutePath)
-      .start()
-    try runChunked(q, feeds) finally q.stop()
-    // partition inference turns batch=<id> into a column; it is harness
-    // bookkeeping, not part of the result
-    s.read.parquet(out.getAbsolutePath).drop("batch")
-  }
-
-  /** Streaming state-partition count sized to the staged feed volume.
-    * A small fixed count (4) wins at bench scale — tiny per-key state
-    * pays more task-launch and checkpoint-file overhead than parallelism
-    * buys — but a CONSTANT serializes stateful work once a micro-batch
-    * outgrows a handful of tasks: with the constant, the 100× corpus
-    * measured second-decade ratios of 9–15 across the streaming family
-    * (BENCH_SCALING), i.e. the fixed partition count had become the
-    * bottleneck, not the data. Size from the staged chunk bytes instead
-    * (filesystem metadata, no extra scan): one state partition per ~8 MB
-    * of staged parquet, clamped to [4, max(4, defaultParallelism)]. On
-    * a real cluster the same rule holds with the landing-zone size —
-    * the clamp ceiling becomes the executor-core total. (The ceiling
-    * itself is floored at 4: on a sub-4-core session the floor wins and
-    * state is mildly oversubscribed rather than under-split.) */
-  def statePartitions(s: org.apache.spark.sql.SparkSession,
-                      feeds: ChunkedFeed*): Int = {
+  private def statePartitions(s: SparkSession, feeds: Seq[ChunkedFeed]): Int = {
     val bytes = feeds.map(_.stagedBytes).sum
     math.min(math.max(4, (bytes / (8L << 20)).toInt),
       math.max(4, s.sparkContext.defaultParallelism))
@@ -459,7 +466,7 @@ object WeatherStream {
     * cross-JVM collisions; the sfDir hash separates datasets within one
     * session. */
   def stagingDir(name: String, sfDir: String): String = {
-    val s = org.apache.spark.sql.SparkSession.active
+    val s = SparkSession.active
     new java.io.File(tmpRoot(s),
       s"feed_${name}_${Integer.toHexString(sfDir.hashCode)}").getAbsolutePath
   }

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The shared harness pieces: query selection, the recursive delete and
   * the single-query check of `core.withSessionConf` and
-  * `core.withShufflePartitions` (the only case that starts the shared
+  * `WeatherStream.drain` (the only case that starts the shared
   * session). */
 class HarnessSpec extends AnyFunSuite with SparkTestBase {
 
@@ -58,7 +58,8 @@ class HarnessSpec extends AnyFunSuite with SparkTestBase {
       val shuffleKey = "spark.sql.shuffle.partitions"
       val shuffleBefore = spark.conf.getOption(shuffleKey)
       val e2 = intercept[IllegalStateException] {
-        core.withShufflePartitions(spark, 3)(fail("body must not run"))
+        graft.streaming.WeatherStream.drain(spark.readStream.format("rate").load(),
+          "harness_drain", graft.streaming.WeatherStream.FileSink())
       }
       assert(e2.getMessage.contains(shuffleKey))
       assert(spark.conf.getOption(shuffleKey) === shuffleBefore)

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.UUID
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Smoke-level coverage: the flagship entry and every registered query must
@@ -19,17 +24,61 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
   test("every query in the registry executes at sf0.001") {
     val mustBeNonEmpty = SparkEntry.queries.keySet --
       Set("join_anti", "set_except", "dedup_embed") // legitimately empty/small
-    SparkEntry.queries.foreach { case (name, fn) =>
-      // collect, not count: under count() Catalyst prunes every output
-      // column no operator references, so a broken column would pass
-      val n = fn(spark, SF).collect().length
-      assert(n >= 0, s"$name failed")
-      if (mustBeNonEmpty(name)) assert(n > 0, s"$name returned no rows")
-    }
+    // the same runs also check the streams: exactly the StreamQ-flagged
+    // queries start one, and none of them executes an empty micro-batch
+    val batches = new StreamBatches
+    spark.streams.addListener(batches)
+    try {
+      SparkEntry.queries.foreach { case (name, fn) =>
+        batches.current = name
+        // collect, not count: under count() Catalyst prunes every output
+        // column no operator references, so a broken column would pass
+        val n = fn(spark, SF).collect().length
+        assert(n >= 0, s"$name failed")
+        if (mustBeNonEmpty(name)) assert(n > 0, s"$name returned no rows")
+      }
+      // progress events arrive on the listener bus after the query
+      // returns; a run's termination event follows all of its progress
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!batches.allTerminated && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(batches.allTerminated, "a stream's termination event never arrived")
+    } finally spark.streams.removeListener(batches)
+    assert(batches.startedBy === SparkEntry.streamingQueries)
+    assert(batches.emptyBatches.isEmpty,
+      s"executed empty micro-batches: ${batches.emptyBatches}")
   }
 
   test("every oracle key has a matching query") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracle SQL without queries: $orphans")
   }
+}
+
+/** Attributes every stream run to the registered query named by `current`
+  * and records its executed empty micro-batches. `onQueryStarted` runs on
+  * the stream's thread before `start()` returns, so `current` still names
+  * the query that started it; later events are matched by run id. An
+  * executed empty batch is a new batch id whose durations include
+  * `addBatch` and whose input is zero rows; idle progress events repeat
+  * the last batch id and carry no `addBatch`. */
+private final class StreamBatches extends StreamingQueryListener {
+  @volatile var current = ""
+  private val owner = new ConcurrentHashMap[UUID, String]()
+  private val seen = ConcurrentHashMap.newKeySet[(UUID, Long)]()
+  private val terminated = ConcurrentHashMap.newKeySet[UUID]()
+  private val empty = new ConcurrentLinkedQueue[String]()
+
+  override def onQueryStarted(e: QueryStartedEvent): Unit = owner.put(e.runId, current)
+  override def onQueryProgress(e: QueryProgressEvent): Unit = {
+    val p = e.progress
+    if (p.durationMs.containsKey("addBatch") && seen.add((p.runId, p.batchId)) &&
+        p.numInputRows == 0)
+      empty.add(owner.getOrDefault(p.runId, p.runId.toString))
+  }
+  override def onQueryTerminated(e: QueryTerminatedEvent): Unit = terminated.add(e.runId)
+
+  def startedBy: Set[String] = owner.values.asScala.toSet
+  def allTerminated: Boolean = owner.keySet.asScala.forall(terminated.contains)
+  def emptyBatches: Map[String, Int] =
+    empty.asScala.groupBy(identity).map { case (n, xs) => n -> xs.size }
 }

@@ -692,8 +692,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     import graft.streaming.WeatherStream
     val feedDir = java.nio.file.Files.createTempDirectory("ivf_qfeed_").toFile.getAbsolutePath
     val input = WeatherStream.chunkedFileFeedDF(queries, "vec_id", feedDir, nChunks = 3)
-    val streamed = WeatherStream.drainForeachBatch(input.df, "spec_knn_stream",
-      b => Similarity.ivfProbe(spark, idx, b, 5, nprobe = 2), input)
+    val streamed = WeatherStream.drain(input.df, "spec_knn_stream",
+      WeatherStream.PerBatch(b => Similarity.ivfProbe(spark, idx, b, 5, nprobe = 2)), input)
     assert(key(streamed) === oneShot)
     assert(oneShot.nonEmpty)
   }

@@ -310,6 +310,31 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(streamed === batch)
   }
 
+  test("drain refuses a watermarked aggregation whose feeds carry no epilogue") {
+    import org.apache.spark.sql.functions._
+    // The 48-row tumbling-window fixture of the restart drill above. With
+    // no-data micro-batches off, the sentinel's watermark advance would
+    // need a later data batch to emit the last windows; no feed has one.
+    val base = ts(0).getTime
+    def at(mins: Long) = new Timestamp(base + mins * 60000L)
+    val ev = ((0 until 48).map(i => (i.toLong, at(i * 15L), (i % 5) * 1.0))
+      :+ ((99L, at(14L * 24 * 60), 0.0)))
+      .toDF("event_id", "ts", "value")
+    val dir = java.nio.file.Files.createTempDirectory("no_epilogue_").toFile
+    val feed = WeatherStream.chunkedFileFeedDF(
+      ev, "ts", new java.io.File(dir, "src").getAbsolutePath)
+    assert(!feed.hasEpilogue)
+    val agg = feed.df.withWatermark("ts", "30 minutes")
+      .groupBy(window(col("ts"), "1 hour"))
+      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
+    val e = intercept[IllegalStateException] {
+      WeatherStream.drain(agg, "spec_no_epilogue", WeatherStream.FileSink(), feed)
+    }
+    assert(e.getMessage.contains("spec_no_epilogue"))
+    assert(spark.streams.active.isEmpty)
+    graft.core.rmTree(dir)
+  }
+
   test("a feed whose epilogue was never staged fails fast, naming the dir") {
     // An epilogue-less construction caches the staged bounds for the dir;
     // a later construction over the same dir that asks for an epilogue
