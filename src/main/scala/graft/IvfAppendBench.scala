@@ -145,9 +145,8 @@ object IvfAppendBench {
       }
     // stage to parquet so every step (appends, exact scans, probes)
     // reads storage, like a serving deployment (the KnnScaleBench rule)
-    val staged = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_${spark.sparkContext.applicationId}/drift_corpus_${dir.hashCode.toHexString}")
+    val staged = new java.io.File(core.scratchRoot(spark),
+      s"drift_corpus_${dir.hashCode.toHexString}")
     shifted(raw.union(planted)).write.mode("overwrite").parquet(staged.getAbsolutePath)
     val e = spark.read.parquet(staged.getAbsolutePath)
     // queries come FROM THE STAGED CORPUS: in shift mode they carry the
@@ -273,9 +272,8 @@ object IvfAppendBench {
       graft.functions.VectorFunctions.dot(col("embedding"), col("embedding")))))
       .head().getDouble(0)
     val d = frac * meanNorm / math.sqrt(dim.toDouble)
-    val staged = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_${spark.sparkContext.applicationId}/rshift_${dir.hashCode.toHexString}")
+    val staged = new java.io.File(core.scratchRoot(spark),
+      s"rshift_${dir.hashCode.toHexString}")
     raw.withColumn("embedding",
         when(col("vec_id") % 2 === 0,
           expr(s"transform(embedding, x -> x + ${d}d)"))
@@ -369,9 +367,8 @@ object IvfAppendBench {
           graft.functions.VectorFunctions.dot(col("embedding"), col("embedding")))))
           .head().getDouble(0)
         val d = frac * meanNorm / math.sqrt(dim.toDouble)
-        val staged = new java.io.File(
-          sys.props("java.io.tmpdir"),
-          s"graft_${spark.sparkContext.applicationId}/cshift_${dir.hashCode.toHexString}")
+        val staged = new java.io.File(core.scratchRoot(spark),
+          s"cshift_${dir.hashCode.toHexString}")
         dbl.withColumn("embedding",
             when(col("vec_id") % 2 === 0,
               expr(s"transform(embedding, x -> x + ${d}d)"))

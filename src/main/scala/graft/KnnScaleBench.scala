@@ -63,9 +63,8 @@ object KnnScaleBench {
       // its index from disk — flattering exact by the full storage gap
       // at exactly the scales the index exists for. A serving corpus
       // lives in storage; both paths read disk here, like a deployment.
-      val staged = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_${spark.sparkContext.applicationId}/knn_corpus_${dir.hashCode.toHexString}")
+      val staged = new java.io.File(core.scratchRoot(spark),
+        s"knn_corpus_${dir.hashCode.toHexString}")
       e.union(planted).write.mode("overwrite").parquet(staged.getAbsolutePath)
       val corpus = spark.read.parquet(staged.getAbsolutePath)
       val n = corpus.count()

@@ -113,6 +113,37 @@ package object core {
     ()
   }
 
+  /** Roots drained by ONE JVM shutdown hook — a long-lived JVM creating
+    * many sessions accumulates root PATHS in the set, not hook THREADS
+    * (a one-hook-per-application-id spelling leaks a parked thread per
+    * session). */
+  private val wipedRoots = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** Registered at most once per JVM; `lazy` so the registration races
+    * nothing, and swallows IllegalStateException for a scratchRoot call
+    * that lands after shutdown has begun (the hook could not run anyway). */
+  private lazy val wipeHook: Unit =
+    try Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      wipedRoots.forEach(p => rmTree(new java.io.File(p)))))
+    catch { case _: IllegalStateException => () }
+
+  /** The session's scratch root, `java.io.tmpdir/graft_<applicationId>`:
+    * stream staging/sink/checkpoint dirs and session-scoped stored
+    * indexes all live under it. The application id keeps two concurrent
+    * JVMs on one machine from wiping each other's dirs mid-query. Every
+    * call registers the root with the JVM-exit wipe, so a JVM that only
+    * builds an index leaks nothing either: the contents are meaningful
+    * only within the session that wrote them, and a 100x Verify run
+    * otherwise leaves GBs per invocation on a shared machine. A kill -9
+    * still leaves residue; harnesses that care sweep graft_* dirs whose
+    * application is gone. */
+  def scratchRoot(s: SparkSession): java.io.File = {
+    val root = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_${s.sparkContext.applicationId}")
+    wipedRoots.add(root.getAbsolutePath)
+    wipeHook
+    root
+  }
+
   /** Collect modules into the SparkEntry maps. */
   def registry(modules: Seq[Seq[Q]]): (Map[String, QueryFn], Map[String, String]) = {
     val qs = modules.flatten

@@ -110,11 +110,7 @@ object Dedup {
     // hygiene as nearDupClusters; at extreme corpus sizes trade this
     // materialization against recompute deliberately)
     val all = shingleHashes(df, idCol, textCol, k).localCheckpoint(true)
-    val nDocs = all.agg(countDistinct(col(idCol)).as("n_docs"))
-    val hot = all.groupBy("s").agg(countDistinct(col(idCol)).as("df"))
-      .crossJoin(broadcast(nDocs))
-      .filter(col("df") > greatest(col("n_docs") * maxDocFrac, lit(5.0)))
-      .select("s")
+    val hot = stopShingles(all, idCol, maxDocFrac)
     // same again for the capped frame: per-doc sizes + BOTH self-join sides
     val sh = all.join(broadcast(hot), Seq("s"), "left_anti")
       .select(col(idCol), col("s"))
@@ -129,6 +125,17 @@ object Dedup {
         col("inter").cast("double") / (col("n1") + col("n2") - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select("d1", "d2", "inter", "n1", "n2", "jaccard")
+  }
+
+  /** The stop-shingle census over a hashed-shingle frame (idCol, s): the
+    * shingles whose document frequency exceeds
+    * greatest(n_docs · maxDocFrac, 5), as one column `s`. */
+  private def stopShingles(sh: DataFrame, idCol: String, maxDocFrac: Double): DataFrame = {
+    val nDocs = sh.agg(countDistinct(col(idCol)).as("n_docs"))
+    sh.groupBy("s").agg(countDistinct(col(idCol)).as("df"))
+      .crossJoin(broadcast(nDocs))
+      .filter(col("df") > greatest(col("n_docs") * maxDocFrac, lit(5.0)))
+      .select("s")
   }
 
   /** MinHash+LSH near-dup pairs: (d1, d2, j_est, j_exact), exact Jaccard
@@ -279,36 +286,36 @@ object Dedup {
       .select(col(idCol), col("cluster_id"), col("cluster_size"))
   }
 
-  /** Portable 60-bit SimHash signatures: token hash = first 15 hex chars
-    * of md5, parsed as an integer — reproducible in any engine that has
-    * md5 (DuckDB: `CAST('0x' || substr(md5(w),1,15) AS BIGINT)`), which
-    * makes the whole simhash family ORACLE-CHECKABLE cross-engine.
-    * [[simhashPairs]] stays the production path (xxhash64 is one codegen'd
-    * call vs md5+hex-parse per token); this twin anchors its band/hamming
-    * machinery to an independent engine. */
-  def simhashPortableSigs(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+  /** SimHash signatures over `bits` bits: per-document ±1 bit sums of
+    * `tokenHash` (a long over column `word`) run directly over token
+    * occurrences (Σ_occurrences ±1 ≡ Σ_words ±count) — one explode → one
+    * hash-aggregate with `bits` long buffers, instead of a (doc, word)
+    * count shuffle first — then the sign bits fold into one long `sig`. */
+  private def simhashSigs(df: DataFrame, idCol: String, textCol: String,
+                          tokenHash: Column, bits: Int): DataFrame = {
     def bitSum(i: Int) =
       sum(when(shiftrightunsigned(col("h"), i).bitwiseAND(lit(1L)) === 1L, lit(1L))
         .otherwise(lit(-1L)))
     val wc = df
       .select(col(idCol), explode(split(col(textCol), " ")).as("word"))
       .filter(col("word") =!= "")
-      .withColumn("h", expr("cast(conv(substring(md5(word), 1, 15), 16, 10) as bigint)"))
+      .withColumn("h", tokenHash)
     val bitSums = wc.groupBy(idCol).agg(
-      bitSum(0).as("s0"), (1 until 60).map(i => bitSum(i).as(s"s$i")): _*)
-    val sig = (0 until 60)
+      bitSum(0).as("s0"), (1 until bits).map(i => bitSum(i).as(s"s$i")): _*)
+    val sig = (0 until bits)
       .map(i => when(col(s"s$i") > 0, lit(1L << i)).otherwise(lit(0L)))
       .reduce((a, b) => a.bitwiseOR(b))
     bitSums.select(col(idCol), sig.as("sig"))
   }
 
-  /** The simhash verify stage over portable signatures: 4×15-bit band
-    * candidates + hamming via bit_count(xor) — every intermediate is
-    * integer-exact, so the result hash-matches the DuckDB spelling. */
-  def simhashPortablePairs(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val sigs = simhashPortableSigs(df, idCol, textCol)
+  /** The band/hamming stage over [[simhashSigs]] output: 4 bands of
+    * `bits / 4` bits each, candidates = documents sharing any band value,
+    * hamming via bit_count(xor) — (d1, d2, hamming), every intermediate
+    * integer-exact. */
+  private def simhashBandPairs(sigs: DataFrame, idCol: String, bits: Int): DataFrame = {
+    val bandBits = bits / 4
     val bandCols = (0 until 4).map(b =>
-      shiftrightunsigned(col("sig"), 15 * b).bitwiseAND(lit(0x7FFFL)))
+      shiftrightunsigned(col("sig"), bandBits * b).bitwiseAND(lit((1L << bandBits) - 1)))
     val banded = sigs
       .select(col(idCol), col("sig"), posexplode(array(bandCols: _*)))
       .toDF("id", "sig", "band_idx", "band_val")
@@ -320,12 +327,26 @@ object Dedup {
       .distinct()
   }
 
+  /** Portable 60-bit SimHash signatures: token hash = first 15 hex chars
+    * of md5, parsed as an integer — reproducible in any engine that has
+    * md5 (DuckDB: `CAST('0x' || substr(md5(w),1,15) AS BIGINT)`), which
+    * makes the whole simhash family ORACLE-CHECKABLE cross-engine.
+    * [[simhashPairs]] stays the production path (xxhash64 is one codegen'd
+    * call vs md5+hex-parse per token); this twin anchors the band/hamming
+    * machinery both share to an independent engine. */
+  def simhashPortableSigs(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    simhashSigs(df, idCol, textCol,
+      expr("cast(conv(substring(md5(word), 1, 15), 16, 10) as bigint)"), 60)
+
+  /** The simhash verify stage over portable signatures: 4×15-bit band
+    * candidates + hamming via bit_count(xor) — every intermediate is
+    * integer-exact, so the result hash-matches the DuckDB spelling. */
+  def simhashPortablePairs(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    simhashBandPairs(simhashPortableSigs(df, idCol, textCol), idCol, 60)
+
   /** 64-bit SimHash near-dup pairs via 4×16-bit band join: (d1, d2,
     * hamming), hamming <= maxHamming, candidates = documents sharing any
-    * band value. Bit sums run directly over token occurrences
-    * (Σ_occurrences ±1 ≡ Σ_words ±count): one explode → one
-    * hash-aggregate with 64 long buffers, instead of a (doc, word) count
-    * shuffle first — one shuffle total before the band join.
+    * band value; one shuffle before the band join.
     *
     * Band-width sizing at scale: RANDOM band collisions number
     * ~bands · n² / 2^bits, so a FIXED 16-bit band goes quadratic once the
@@ -338,33 +359,9 @@ object Dedup {
     * also fewer chances for a true near-dup to collide) against join
     * fan-out. Same law as MinHash banding. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 8): DataFrame = {
-    def bitSum(i: Int) =
-      sum(when(shiftrightunsigned(col("wh"), i).bitwiseAND(lit(1L)) === 1L, lit(1L))
-        .otherwise(lit(-1L)))
-    val wc = df
-      .select(col(idCol), explode(split(col(textCol), " ")).as("word"))
-      .filter(col("word") =!= "")
-      .withColumn("wh", xxhash64(col("word")))
-    val bitSums = wc.groupBy(idCol).agg(
-      bitSum(0).as("s0"), (1 until 64).map(i => bitSum(i).as(s"s$i")): _*)
-    val simhash = (0 until 64)
-      .map(i => when(col(s"s$i") > 0, lit(1L << i)).otherwise(lit(0L)))
-      .reduce((a, b) => a.bitwiseOR(b))
-    val sigs = bitSums.select(col(idCol), simhash.as("simhash"))
-    val bandCols = (0 until 4).map(b =>
-      shiftrightunsigned(col("simhash"), 16 * b).bitwiseAND(lit(0xFFFFL)))
-    val banded = sigs
-      .select(col(idCol), col("simhash"), posexplode(array(bandCols: _*)))
-      .toDF("id", "simhash", "band_idx", "band_val")
-    banded.toDF("d1", "h1", "bi1", "bv1")
-      .join(banded.toDF("d2", "h2", "bi2", "bv2"),
-        col("bi1") === col("bi2") && col("bv1") === col("bv2") && col("d1") < col("d2"))
-      .select(col("d1"), col("d2"),
-        bit_count(col("h1").bitwiseXOR(col("h2"))).as("hamming"))
-      .distinct()
+                   maxHamming: Int = 8): DataFrame =
+    simhashBandPairs(simhashSigs(df, idCol, textCol, xxhash64(col("word")), 64), idCol, 64)
       .filter(col("hamming") <= maxHamming)
-  }
 
   /** Benchmark decontamination: per corpus document, how much of it
     * appears verbatim (as k-word shingles) in a held-out benchmark set —
@@ -546,11 +543,7 @@ object Dedup {
   def nearDupIndex(corpus: DataFrame, idCol: String, textCol: String,
                    k: Int = 3, maxDocFrac: Double = 0.1): NearDupIndex = {
     val cs0 = shingleHashes(corpus, idCol, textCol, k).localCheckpoint(true)
-    val nDocs = cs0.agg(countDistinct(col(idCol)).as("n_docs"))
-    val hot = cs0.groupBy("s").agg(countDistinct(col(idCol)).as("df"))
-      .crossJoin(broadcast(nDocs))
-      .filter(col("df") > greatest(col("n_docs") * maxDocFrac, lit(5.0)))
-      .select("s").localCheckpoint(true)
+    val hot = stopShingles(cs0, idCol, maxDocFrac).localCheckpoint(true)
     val cs = cs0.join(broadcast(hot), Seq("s"), "left_anti")
       .select(col(idCol), col("s")).localCheckpoint(true)
     val szc = cs.groupBy(idCol).agg(count(lit(1)).as("n")).localCheckpoint(true)

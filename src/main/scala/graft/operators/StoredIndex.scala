@@ -7,7 +7,7 @@ import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.core.rmTree
+import graft.core.{rmTree, scratchRoot}
 
 /** The lifecycle every stored index shares — the IVF index
   * ([[Similarity.Ivf]]), the text near-dup index ([[Dedup.NearDup]]) and
@@ -149,11 +149,10 @@ abstract class StoredIndex[M <: StoredIndex.Manifest[M]](val kind: String) {
   }
 
   /** Session-scoped index location for a dataset tag: under
-    * java.io.tmpdir, namespaced by the application id and a 128-bit
+    * the session's [[graft.core.scratchRoot]], named by a 128-bit
     * digest of the tag ([[valid]] backstops even a digest collision). */
   def dirFor(s: SparkSession, tag: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_${s.sparkContext.applicationId}/${kind}_${md5(tag)}").getAbsolutePath
+    new java.io.File(scratchRoot(s), s"${kind}_${md5(tag)}").getAbsolutePath
 
   /** Session-catalog name of the index's bucketed table: bucket metadata
     * lives in the catalog, not the files, so a new session re-registers

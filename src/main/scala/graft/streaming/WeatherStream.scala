@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, EventTimeWatermark}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
-import graft.core.{rmTree, withSessionConf}
+import graft.core.{rmTree, scratchRoot, withSessionConf}
 
 /** Structured-Streaming surface of the engine (SURVEY.md §2A O8-O13, O23;
   * §7.1 step 7): the reference is a 15-minute-trigger micro-batch pipeline
@@ -346,33 +346,6 @@ object WeatherStream {
     q.processAllAvailable()
   }
 
-  /** Session-scoped temp root: namespaced by the Spark application id so
-    * two concurrent JVMs running Bench/Verify on one machine can never
-    * wipe each other's staging/sink/checkpoint dirs mid-stream. Wiped by
-    * ONE JVM shutdown hook that drains [[wipedRoots]] — a long-lived JVM
-    * creating many sessions accumulates root PATHS in the set, not hook
-    * THREADS (the earlier one-hook-per-application-id spelling leaked a
-    * parked thread per session). The staging/sink/checkpoint contents
-    * are only meaningful within the session that wrote them — a 100x
-    * Verify run otherwise leaves GBs of staged feed copies per
-    * invocation on a shared machine. A kill -9 still leaves residue;
-    * harnesses that care sweep graft_* dirs whose application is gone. */
-  private val wipedRoots = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  /** Registered at most once per JVM; `lazy` so the registration races
-    * nothing, and swallows IllegalStateException for a tmpRoot call that
-    * lands after shutdown has begun (the hook could not run anyway). */
-  private lazy val wipeHook: Unit =
-    try Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      wipedRoots.forEach(p => rmTree(new java.io.File(p)))))
-    catch { case _: IllegalStateException => () }
-  private def tmpRoot(s: SparkSession): java.io.File = {
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_${s.sparkContext.applicationId}")
-    wipedRoots.add(root.getAbsolutePath)
-    wipeHook
-    root
-  }
-
   /** Start `df` as an append-mode parquet-sink query writing under
     * `base` ("out" + "ckpt" subdirs). Exposed so restart-from-checkpoint
     * tests can stop mid-feed and start a second query over the SAME dirs
@@ -424,7 +397,7 @@ object WeatherStream {
           "never emitted without one")
     def run(q: StreamingQuery, rounds: Int = Int.MaxValue): Unit =
       try runChunked(q, feeds, rounds) finally q.stop()
-    val base = new java.io.File(tmpRoot(s), s"sink_$name")
+    val base = new java.io.File(scratchRoot(s), s"sink_$name")
     withSessionConf(s, "spark.sql.shuffle.partitions", statePartitions(s, feeds).toString) {
       withSessionConf(s, "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
         rmTree(base)
@@ -459,7 +432,7 @@ object WeatherStream {
   }
 
   /** One staging directory per (application, feed name, dataset) under
-    * java.io.tmpdir, REUSED across invocations within a session
+    * the session's scratch root, REUSED across invocations within a session
     * (overwrite-mode writes reset it): Bench/Verify invoke each streaming
     * query several times per session, and a fresh temp dir per run would
     * leak a full table copy each time. The application id prevents
@@ -467,7 +440,7 @@ object WeatherStream {
     * session. */
   def stagingDir(name: String, sfDir: String): String = {
     val s = SparkSession.active
-    new java.io.File(tmpRoot(s),
+    new java.io.File(scratchRoot(s),
       s"feed_${name}_${Integer.toHexString(sfDir.hashCode)}").getAbsolutePath
   }
 
