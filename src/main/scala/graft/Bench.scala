@@ -66,6 +66,22 @@ object Bench {
       }.getOrElse(-1L)
       finally src.close()
     } catch { case _: Exception => -1L }
+    // OTHER-PROCESS CPU over the whole run, in cores — perfbench's
+    // `box.other_cpu`: the /proc/stat busy-jiffies delta (every field but
+    // idle and iowait, USER_HZ 100) minus this JVM's own CPU delta, over
+    // wall time. load1/other_jvms/cached_mb are start-only snapshots
+    // (three back-to-back runs of the same code spread 12 % while the
+    // fastest read the worst load1); this one covers the run itself.
+    // -1 = /proc/stat unreadable (non-Linux).
+    def cpuClock(): Option[(Double, Double, Double)] = try {
+      val src = scala.io.Source.fromFile("/proc/stat")
+      val f = try src.getLines().next().trim.split("\\s+").tail.map(_.toLong)
+        finally src.close()
+      val self = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+        .asInstanceOf[com.sun.management.OperatingSystemMXBean].getProcessCpuTime
+      Some((System.nanoTime() / 1e9, (f.sum - f(3) - f(4)) / 100.0, self / 1e9))
+    } catch { case _: Exception => None }
+    val clockAtStart = cpuClock()
     if (otherJvms > 0 || loadAtStart > 2.0)
       System.err.println(f"[bench] WARNING: contended box at start — " +
         f"load1=$loadAtStart%.2f, other JVMs=$otherJvms; timings below " +
@@ -161,7 +177,9 @@ object Bench {
         s""","total_prev_registry":${num("%.3f", sub.map(_._2).sum)},"n_prev_registry":${sub.length}"""
       }
     }
-    val env = s""","load1":${num("%.2f", loadAtStart)},"other_jvms":$otherJvms,"cached_mb":$cachedMb"""
+    val otherCpu = (for ((w0, b0, o0) <- clockAtStart; (w1, b1, o1) <- cpuClock())
+      yield math.max(0.0, ((b1 - b0) - (o1 - o0)) / math.max(1e-9, w1 - w0))).getOrElse(-1.0)
+    val env = s""","load1":${num("%.2f", loadAtStart)},"other_jvms":$otherJvms,"cached_mb":$cachedMb,"other_cpu":${num("%.2f", otherCpu)}"""
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"elided":${ok.length - slowest.length},"failed":$failedJson,"n_queries":${names.length},"streaming_sec":$streamingSec,"streaming_n":$streamingN$prevRegistryJson$env,"sf":"$sfDir"}"""
     // Full-precision, uncapped dump for offline analysis (scaling curves):
     // SPARK_GRAFT_BENCH_OUT=path writes every query's timing to a file,

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.rmTree
 
 /** Reusable deduplication operators over arbitrary DataFrames — the
   * library surface behind `DedupQueries` (NS mandate).
@@ -638,36 +637,6 @@ object Dedup {
 
   private def fracPpm(maxDocFrac: Double): Long = math.round(maxDocFrac * 1e6)
 
-  /** Write a stored index's base rows as a BUCKETED external parquet
-    * table at `path` (one file per bucket, sorted within), registered in
-    * the session catalog as `tbl` — the candidate equi-join on `keys`
-    * then reads the corpus side EXCHANGE-FREE in any session, where an
-    * in-session repartition cannot survive a restart (or even a re-plan:
-    * checkpoints report UnknownPartitioning under AQE). */
-  private def writeBucketed(df: DataFrame, tbl: String, path: String,
-                            buckets: Int, keys: Seq[String]): Unit = {
-    df.sparkSession.sql(s"DROP TABLE IF EXISTS $tbl")
-    rmTree(new java.io.File(path))
-    df.repartition(buckets, keys.map(col): _*)
-      .write.bucketBy(buckets, keys.head, keys.tail: _*).sortBy(keys.head, keys.tail: _*)
-      .option("path", path).format("parquet").mode("overwrite").saveAsTable(tbl)
-  }
-
-  /** The bucketed table [[writeBucketed]] wrote, re-registered by DDL
-    * when this session's catalog lacks it (bucket metadata lives in the
-    * catalog, not the files). `cols` are (name, SQL type) in file order. */
-  private def bucketedTable(s: SparkSession, tbl: String, path: String,
-                            buckets: Int, keys: Seq[String],
-                            cols: Seq[(String, String)]): DataFrame = {
-    if (!s.catalog.tableExists(tbl)) {
-      val ks = keys.map(k => s"`$k`").mkString(", ")
-      s.sql(s"CREATE TABLE $tbl (${cols.map { case (c, t) => s"`$c` $t" }.mkString(", ")}) " +
-        s"USING parquet CLUSTERED BY ($ks) SORTED BY ($ks) INTO $buckets BUCKETS " +
-        s"LOCATION '$path'")
-    }
-    s.table(tbl)
-  }
-
   /** Session-scoped stored-index location for a dataset tag
     * ([[StoredIndex.dirFor]], `ndix_` namespace). */
   def nearDupIndexDir(s: SparkSession, tag: String): String = NearDup.dirFor(s, tag)
@@ -676,8 +645,8 @@ object Dedup {
     *  - `hot.parquet` (s): the hot-shingle census — tiny, broadcast at
     *    probe time;
     *  - `shingles/`: the stop-filtered hashed corpus shingles (idCol, s)
-    *    as a table BUCKETED BY `s` ([[writeBucketed]]; ScaleSpec pins the
-    *    bucketed join, DedupSpec pins it for this artifact);
+    *    as a table BUCKETED BY `s` ([[Scale.writeBucketed]]; ScaleSpec
+    *    pins the bucketed join, DedupSpec pins it for this artifact);
     *  - `sizes.parquet` (idCol, n): per-doc stop-filtered shingle counts;
     *  - `manifest.json` ([[NearDupManifest]]), which [[nearDupValid]]
     *    checks before an existing index is trusted.
@@ -693,7 +662,7 @@ object Dedup {
     val ix = nearDupIndex(corpus, idCol, textCol, k, maxDocFrac)
     ix.hot.write.mode("overwrite").parquet(s"$dir/hot.parquet")
     ix.sizes.write.mode("overwrite").parquet(s"$dir/sizes.parquet")
-    writeBucketed(ix.shingles, NearDup.table(dir), s"$dir/shingles", buckets, Seq("s"))
+    Scale.writeBucketed(ix.shingles, NearDup.table(dir), s"$dir/shingles", buckets, Seq("s"))
     NearDup.publishBuild(dir, NearDupManifest(n, fp, k, fracPpm(maxDocFrac),
       buckets, idCol, textCol, corpus.schema(idCol).dataType.sql),
       corpus, (idCol, textCol), k, fracPpm(maxDocFrac))
@@ -706,7 +675,7 @@ object Dedup {
     * and no probe ever re-shingles the corpus. */
   def nearDupIndexLoad(s: SparkSession, dir: String): NearDupIndex = {
     val m = NearDup.load(dir, "nearDupIndexLoad")
-    val roots = bucketedTable(s, NearDup.table(dir), s"$dir/shingles", m.buckets,
+    val roots = Scale.bucketedTable(s, NearDup.table(dir), s"$dir/shingles", m.buckets,
       Seq("s"), Seq(m.idCol -> m.idType, "s" -> "BIGINT")) +:
       NearDup.batchPaths(dir, m, "shingles.parquet").map(s.read.parquet(_))
     val sizes = (s"$dir/sizes.parquet" +: NearDup.batchPaths(dir, m, "sizes.parquet"))
@@ -910,8 +879,9 @@ object Dedup {
     * 2^[[EmbedBitsMax]], so the compose is collision-free, and a single
     * BIGINT key is what the stored table buckets on (one bucket column →
     * the candidate equi-join reads the base exchange-free). Planes are
-    * the [[embedPairsBanded]] stride (bit j of band b ↔ plane
-    * b·EmbedBitsMax + j), so in-session and stored banding are
+    * the first `bits` of each band at the EmbedBitsMax stride (bit j of
+    * band b ↔ plane b·EmbedBitsMax + j, the mapping the generated DuckDB
+    * oracle reproduces), so pairwise, in-session and stored banding are
     * bit-identical at any frozen `bits`. */
   private def embedSigs(base: DataFrame, idCol: String, vecCol: String,
                         blockCols: Seq[String], bands: Int, bits: Int,
@@ -995,8 +965,8 @@ object Dedup {
     *    hygiene-filtered corpus vectors the probe's cosine verify joins;
     *  - `buckets/`: the banded bucket rows (idCol, blockCols..., bk) as
     *    a table BUCKETED BY (`bk`, blockCols) — ALL of the candidate
-    *    join's keys ([[writeBucketed]]): since Spark 3.3 co-partitioning
-    *    requires every cluster key by default
+    *    join's keys ([[Scale.writeBucketed]]): since Spark 3.3
+    *    co-partitioning requires every cluster key by default
     *    (spark.sql.requireAllClusterKeysForCoPartition), so a bucket spec
     *    on bk alone is planner-disabled for the (blockCols, bk) join;
     *  - `manifest.json`: corpus identity + FROZEN banding parameters
@@ -1014,7 +984,7 @@ object Dedup {
     val ix = embedDupIndex(corpus, idCol, vecCol, blockCols, bands,
       targetOccupancy, dim)
     ix.vectors.write.mode("overwrite").parquet(s"$dir/vectors.parquet")
-    writeBucketed(ix.buckets, EmbedDup.table(dir), s"$dir/buckets", buckets,
+    Scale.writeBucketed(ix.buckets, EmbedDup.table(dir), s"$dir/buckets", buckets,
       "bk" +: blockCols)
     EmbedDup.publishBuild(dir, EmbedDupManifest(n, fp, bands, ix.bits, dim,
       buckets, idCol, vecCol, corpus.schema(idCol).dataType.sql,
@@ -1028,7 +998,7 @@ object Dedup {
     * corpus. */
   def embedDupIndexLoad(s: SparkSession, dir: String): EmbedDupIndex = {
     val m = EmbedDup.load(dir, "embedDupIndexLoad")
-    val roots = bucketedTable(s, EmbedDup.table(dir), s"$dir/buckets", m.buckets,
+    val roots = Scale.bucketedTable(s, EmbedDup.table(dir), s"$dir/buckets", m.buckets,
       "bk" +: m.blockCols,
       ((m.idCol -> m.idType) +: m.blockCols.zip(m.blockTypes)) :+ ("bk" -> "BIGINT")) +:
       EmbedDup.batchPaths(dir, m, "buckets.parquet").map(s.read.parquet(_))
@@ -1230,38 +1200,21 @@ object Dedup {
                        bands: Int = EmbedBands,
                        targetOccupancy: Long = EmbedOccupancy,
                        dim: Int = EmbedDim): DataFrame = {
-    import graft.functions.VectorFunctions.{cosine, dot, lshBuckets}
-    val ps = Similarity.planes(bands, EmbedBitsMax, dim)
-    val sumSq = dot(col(vecCol), col(vecCol))
+    import graft.functions.VectorFunctions.cosine
     // materialized once: feeds the count, BOTH banding sides, and both
     // verify joins (same iterative-plan hygiene as ngramJaccardPairs)
-    val base = df.filter(col(vecCol).isNotNull &&
-        !isnan(sumSq) && sumSq =!= lit(Double.PositiveInfinity))
+    val base = embedFinite(df, vecCol)
       .select((idCol +: vecCol +: blockCols).map(col): _*)
       .localCheckpoint(true)
     val bits = embedBits(base.count(), targetOccupancy)
     // All bands' signatures in ONE native pass over the vector
-    // ([[graft.expressions.LshBuckets]] — bit-identical to the per-plane
-    // `dot(v, array(lits)) >= 0` spelling: same ascending-index double
-    // fold, same `>= 0.0`-is-false-for-NaN). The compact plane matrix
-    // takes the first `bits` planes of each band at the EmbedBitsMax
-    // stride, preserving the bit-j ↔ plane(b·EmbedBitsMax+j) mapping the
-    // generated DuckDB oracle reproduces. At the 100× decade this
-    // replaces bands×bits (= 80 at bits=20) literal-array dot trees —
-    // each a separate vector traversal — with one cache-friendly loop.
-    val bandPlanes = Array.tabulate(bands * bits) { k =>
-      ps(k / bits * EmbedBitsMax + k % bits)
-    }
-    val banded = base.select(
-      col(idCol) +: blockCols.map(col) :+
-        posexplode(lshBuckets(col(vecCol), bandPlanes, bits)): _*)
-      .withColumnRenamed("pos", "band_idx")
-      .withColumnRenamed("col", "band_val")
-    val x = banded.toDF("v1" +: blockCols ++: Seq("band_idx", "band_val"): _*)
-    val y = banded.toDF("v2" +: blockCols.map(_ + "__r") ++: Seq("bi__r", "bv__r"): _*)
+    // ([[embedSigs]]); equal composed `bk` is exactly equal
+    // (band_idx, band_val), so the self-join on it is the banding.
+    val banded = embedSigs(base, idCol, vecCol, blockCols, bands, bits, dim)
+    val x = banded.toDF("v1" +: blockCols :+ "bk": _*)
+    val y = banded.toDF("v2" +: blockCols.map(_ + "__r") :+ "bk__r": _*)
     val on = blockCols.map(c => col(c) === col(c + "__r")).reduce(_ && _) &&
-      col("band_idx") === col("bi__r") && col("band_val") === col("bv__r") &&
-      col("v1") < col("v2")
+      col("bk") === col("bk__r") && col("v1") < col("v2")
     val cand = x.join(y, on)
       .select((Seq("v1", "v2") ++ blockCols).map(col): _*).distinct()
     cand

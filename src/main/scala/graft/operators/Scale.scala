@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.rmTree
 
 /** Scale utilities: the partitioning/skew machinery a 100 TB deployment
   * needs around the operator set (SURVEY.md "Optimize for scale").
@@ -58,13 +59,37 @@ object Scale {
       .drop("__bin", "__rbin")
   }
 
-  /** Write a DataFrame bucketed + sorted by `key` as a managed table —
-    * co-locates future equi-joins/aggregations on `key` (no Exchange at
-    * read time when bucket counts match; proven in ScaleSpec). */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, key).sortBy(key)
-      .format("parquet").saveAsTable(table)
+  /** Write `df` as a BUCKETED external parquet table at `path` (one
+    * file per bucket, sorted within), registered in the session catalog
+    * as `table` after dropping any earlier table and files there. An
+    * equi-join on `keys` then reads this side EXCHANGE-FREE in any
+    * session (proven in ScaleSpec; the stored near-dup and embed-dup
+    * indexes persist their corpus side this way), where an in-session
+    * repartition cannot survive a restart (or even a re-plan:
+    * checkpoints report UnknownPartitioning under AQE). */
+  def writeBucketed(df: DataFrame, table: String, path: String,
+                    buckets: Int, keys: Seq[String]): Unit = {
+    df.sparkSession.sql(s"DROP TABLE IF EXISTS $table")
+    rmTree(new java.io.File(path))
+    df.repartition(buckets, keys.map(col): _*)
+      .write.bucketBy(buckets, keys.head, keys.tail: _*).sortBy(keys.head, keys.tail: _*)
+      .option("path", path).format("parquet").mode("overwrite").saveAsTable(table)
+  }
+
+  /** The bucketed table [[writeBucketed]] wrote, re-registered by DDL
+    * when this session's catalog lacks it (bucket metadata lives in the
+    * catalog, not the files). `cols` are (name, SQL type) in file order. */
+  def bucketedTable(s: SparkSession, table: String, path: String,
+                    buckets: Int, keys: Seq[String],
+                    cols: Seq[(String, String)]): DataFrame = {
+    if (!s.catalog.tableExists(table)) {
+      val ks = keys.map(k => s"`$k`").mkString(", ")
+      s.sql(s"CREATE TABLE $table (${cols.map { case (c, t) => s"`$c` $t" }.mkString(", ")}) " +
+        s"USING parquet CLUSTERED BY ($ks) SORTED BY ($ks) INTO $buckets BUCKETS " +
+        s"LOCATION '$path'")
+    }
+    s.table(table)
+  }
 
   /** Write partitioned-by-column parquet — enables static + dynamic
     * partition pruning on the read path. */

@@ -305,7 +305,7 @@ object Similarity {
     * codebook version), `nlist0` (the BUILT nlist), `refitRows` (base
     * rows refits relocated into batch space) and `refits` (seq → split
     * cells, the read rule of [[readRoot]]). `appendedRows / rows`
-    * ([[ivfAppendedFraction]]) is the fraction of the index assigned
+    * (`Ivf.appendedFraction`) is the fraction of the index assigned
     * under drifted centroids — RECALL.md carries the measured
     * recall-vs-appended-fraction curve that calibrates the rebuild
     * threshold. */
@@ -369,13 +369,6 @@ object Similarity {
         m.batches.lastOption.exists(_.endsWith("_" + StoredIndex.hex(fp)))
   }
 
-  /** Fraction of the stored index that was [[ivfAppend]]ed after the last
-    * full [[ivfBuild]] — the reindex-cadence alert signal (None when no
-    * readable manifest). Deployments compare it against the RECALL.md
-    * drift curve's budget and re-build past their threshold. */
-  def ivfAppendedFraction(indexDir: String): Option[Double] =
-    Ivf.read(indexDir).map(Ivf.appendedFraction)
-
   /** ONE-ROW health report over a stored index — the operational gauge
     * the serving tier alerts on. Columns:
     *  - the shared [[StoredIndex.stats]] columns, then `nlist`/`dim`:
@@ -395,7 +388,7 @@ object Similarity {
     * SCAN-FRACTION guarantee that decays, near-dup recall provably does
     * not (a query and its near-dup co-assign under any fixed codebook).
     * So the rebuild cadence keys on occupancy concentration, not on a
-    * recall cliff that cannot happen; [[ivfAppendedFraction]] alone
+    * recall cliff that cannot happen; `Ivf.appendedFraction` alone
     * cannot distinguish benign growth from shift.
     *
     * Cost: one partition-column-only scan of the index (`cell` is the
@@ -621,7 +614,7 @@ object Similarity {
     * stationary at the 2×10⁶ decade — so the nprobe/nlist scan-fraction
     * guarantee, not recall, is what decays; the refit restores it
     * (4.3%). The manifest's `appendedRows` fraction
-    * ([[ivfAppendedFraction]]) is the alert signal; the deployment
+    * (`Ivf.appendedFraction`) is the alert signal; the deployment
     * contract is [[ivfCompact]] for file-count growth and a
     * re-[[ivfBuild]] on distribution shift (for probe cost), not a
     * rebuild on fraction alone.
@@ -669,7 +662,7 @@ object Similarity {
     * measured file-count and probe-wall deltas.) `appendedRows`
     * deliberately survives: those rows were assigned under never-refit
     * centroids, and compaction moves bytes, not cell boundaries — the
-    * staleness alert ([[ivfAppendedFraction]]) must keep firing.
+    * staleness alert (`Ivf.appendedFraction`) must keep firing.
     *
     * IVF-only parts. The fold reads LIVE rows (a pre-refit root's split
     * cells are superseded) and must reproduce `appendedRows + refitRows`

@@ -41,19 +41,12 @@ class ScaleSpec extends AnyFunSuite with SparkTestBase {
   test("bucketed tables join without a shuffle exchange") {
     val o = Tables.orders(spark, SF)
     val c = Tables.customer(spark, SF)
-    // in-memory catalog doesn't survive JVMs but the warehouse dir does
-    Seq("graft_orders_bkt", "graft_cust_bkt").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(s"/tmp/graft_warehouse/$t")
-      if (loc.exists()) {
-        import scala.reflect.io.Directory
-        new Directory(loc).deleteRecursively()
-      }
-    }
+    // the writer drops each table and clears its path itself
+    val dir = graft.core.scratchRoot(spark)
     Scale.writeBucketed(o.select("o_orderkey", "o_custkey", "o_totalprice"),
-      "graft_orders_bkt", "o_custkey", 8)
+      "graft_orders_bkt", s"$dir/graft_orders_bkt", 8, Seq("o_custkey"))
     Scale.writeBucketed(c.select("c_custkey", "c_name"),
-      "graft_cust_bkt", "c_custkey", 8)
+      "graft_cust_bkt", s"$dir/graft_cust_bkt", 8, Seq("c_custkey"))
     // force SMJ (a broadcast would trivially avoid the shuffle); bucketed
     // layout must make the hash-partitioning Exchange unnecessary
     val joined = spark.table("graft_orders_bkt").hint("merge")

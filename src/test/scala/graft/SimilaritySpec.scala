@@ -296,10 +296,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // exactly the post-build ingested rows, and the fraction accessor
     // reads it back; a fresh full build resets it to zero
     assert(mAfter.appendedRows === batch.count())
-    assert(Similarity.ivfAppendedFraction(idx).get ===
+    assert(Similarity.Ivf.appendedFraction(Similarity.Ivf.read(idx).get) ===
       batch.count().toDouble / emb.count())
     assert(Similarity.Ivf.read(idx2).get.appendedRows === 0L)
-    assert(Similarity.ivfAppendedFraction(idx2).get === 0.0)
+    assert(Similarity.Ivf.appendedFraction(Similarity.Ivf.read(idx2).get) === 0.0)
   }
 
   test("streaming ingest ≡ one-shot append ≡ union build (manifest-level, 7th stream≡batch fact)") {
