@@ -122,6 +122,11 @@ object Bench {
       Harness.unpersistAll(spark)
       elapsed
     }
+    // Janino compiles (JVM-wide count) over the timed passes: a query
+    // re-run in pass 2 compiles only what the code cache missed
+    // (GraftExtensions.CodegenDefaults) or what differs run to run.
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compiles0 = compiles
     val p1 = names.map(n => n -> run(n)).toMap
     // Second pass only where noise can matter: a GC/JIT stall on a
     // sub-0.3s query moves the total by milliseconds, but the same stall
@@ -129,6 +134,7 @@ object Bench {
     // 11.6s for one groupBy). Selective re-run keeps total bench wall
     // close to a single pass.
     val p2 = names.filter(p1(_) > 0.3).map(n => n -> run(n)).toMap
+    val compiled = compiles - compiles0
     // A transient pass-2 failure (-1) must not erase a valid pass-1
     // measurement: only min over non-negative timings.
     val results = names.map(n =>
@@ -180,7 +186,7 @@ object Bench {
     val otherCpu = (for ((w0, b0, o0) <- clockAtStart; (w1, b1, o1) <- cpuClock())
       yield math.max(0.0, ((b1 - b0) - (o1 - o0)) / math.max(1e-9, w1 - w0))).getOrElse(-1.0)
     val env = s""","load1":${num("%.2f", loadAtStart)},"other_jvms":$otherJvms,"cached_mb":$cachedMb,"other_cpu":${num("%.2f", otherCpu)}"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"elided":${ok.length - slowest.length},"failed":$failedJson,"n_queries":${names.length},"streaming_sec":$streamingSec,"streaming_n":$streamingN$prevRegistryJson$env,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"elided":${ok.length - slowest.length},"failed":$failedJson,"n_queries":${names.length},"streaming_sec":$streamingSec,"streaming_n":$streamingN$prevRegistryJson,"compiles":$compiled$env,"sf":"$sfDir"}"""
     // Full-precision, uncapped dump for offline analysis (scaling curves):
     // SPARK_GRAFT_BENCH_OUT=path writes every query's timing to a file,
     // where the stdout line stays within the driver's tail budget. When
@@ -196,7 +202,7 @@ object Bench {
         s"graft_bench_${spark.sparkContext.applicationId}.json").getAbsolutePath)
     val full = results.map { case (k, v) => "\"" + k + "\":" + num("%.3f", v) }
       .mkString("{", ",", "}")
-    val json = s"""{"total":$total,"queries":$full,"failed":$failedJson,"streaming_sec":$streamingSec,"streaming_n":$streamingN$prevRegistryJson$env,"sf":"$sfDir","cpus":$cpus}"""
+    val json = s"""{"total":$total,"queries":$full,"failed":$failedJson,"streaming_sec":$streamingSec,"streaming_n":$streamingN$prevRegistryJson,"compiles":$compiled$env,"sf":"$sfDir","cpus":$cpus}"""
     scala.util.Try(java.nio.file.Files.write(java.nio.file.Paths.get(sidecar),
       json.getBytes("UTF-8"))) match {
       case scala.util.Success(_) => System.err.println(s"[bench] sidecar: $sidecar")

@@ -44,6 +44,22 @@ object ExplainAudit {
     "text_unigram_nll", // census fit + broadcast apply-back + decimal sum
     "emb_kmeans")       // final-assignment pass: scan vs centroid literals
 
+  /** Values that change from run to run of the same code, each replaced
+    * by a fixed token so two audits of one commit diff to nothing and a
+    * plan change stands out in the EXPLAIN.md diff. */
+  private val Volatile = Seq(
+    "#\\d+" -> "#n",                                  // expression ids
+    "\\[plan_id=\\d+\\]" -> "[plan_id=n]",
+    "RDD\\[\\d+\\]" -> "RDD[n]",
+    "( at [\\w$]+) at ([\\w$]+\\.scala):\\d+" -> "$1 at $2",  // RDD call sites
+    "\\$\\$Lambda[$/\\w]*" -> "\\$\\$Lambda",           // lambda class names
+    "@[0-9a-f]{4,8}\\b" -> "@h",                      // object hash codes
+    "graft_local-\\d+" -> "graft_local-n",           // session scratch root
+    "graft_(ndix|edix)_[0-9a-f]{32}" -> "graft_$1_h") // index table names
+
+  def mask(plan: String): String =
+    Volatile.foldLeft(plan) { case (s, (re, to)) => s.replaceAll(re, to) }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("/tmp/explain_audit.md")
@@ -59,8 +75,8 @@ object ExplainAudit {
     (Audited ++ rest).foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+      sb.append(mask(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)))
       sb.append("```\n")
     }
     Files.writeString(Paths.get(out), sb.toString)

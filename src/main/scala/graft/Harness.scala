@@ -22,7 +22,9 @@ object Harness {
       // the production registration path (README "SQL surface"): the
       // injected vec_*/token/shingle functions and the asof strategy are
       // session-wide, and the registered sql_* queries run pure SQL text
-      // against them
+      // against them. Built before getOrCreate's SparkConf, the extension
+      // also sets the generated-code cache defaults
+      // (GraftExtensions.CodegenDefaults).
       .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
