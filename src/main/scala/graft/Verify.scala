@@ -1,5 +1,5 @@
 package graft
-import java.nio.file.{Files, Paths}
+import com.fasterxml.jackson.databind.ObjectMapper
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -71,22 +71,11 @@ object Verify {
         }
         Harness.unpersistAll(spark)
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => selected(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Jackson escapes every control character, so oracle SQL holding a
+    // tab or CR still loads in tools/check_oracle.py's json.load.
+    val oracle = new java.util.TreeMap[String, String]()
+    SparkEntry.oracleSql.foreach { case (k, v) => if (selected(k)) oracle.put(k, v) }
+    new ObjectMapper().writeValue(new java.io.File(s"$outDir/oracle_sql.json"), oracle)
     spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -30,26 +29,19 @@ import org.apache.spark.sql.types._
   * reference object and the generated code is one static call.
   */
 case class ArgMinDistSq(child: Expression, centroids: Array[Array[Double]])
-    extends UnaryExpression {
+    extends UnaryExpression with VecKernel {
   require(centroids.nonEmpty, "arg_min_distsq: empty centroid matrix")
 
   private val k = centroids.length
   private val dim = centroids(0).length
+
+  override protected def vectors: Seq[Expression] = Seq(child)
 
   override def prettyName: String = "arg_min_distsq"
 
   override def dataType: DataType = StructType(Seq(
     StructField("d", DoubleType, nullable = false),
     StructField("j", IntegerType, nullable = false)))
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<float|double>, got ${t.sql}")
-  }
-
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   /** Row-major k×dim centroid matrix, flattened once at plan
     * construction — a single JVM-shared reference object in codegen. */
@@ -65,12 +57,12 @@ case class ArgMinDistSq(child: Expression, centroids: Array[Array[Double]])
   }
 
   override protected def nullSafeEval(input: Any): Any =
-    ArgMinDistSqUtil.argmin(input.asInstanceOf[ArrayData], flat, dim, k, isFloat)
+    ArgMinDistSqUtil.argmin(input.asInstanceOf[ArrayData], flat, dim, k, isFloat(child))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("centroids", flat, "double[]")
     defineCodeGen(ctx, ev, c =>
-      s"graft.expressions.ArgMinDistSqUtil.argmin($c, $ref, $dim, $k, $isFloat)")
+      s"graft.expressions.ArgMinDistSqUtil.argmin($c, $ref, $dim, $k, ${isFloat(child)})")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

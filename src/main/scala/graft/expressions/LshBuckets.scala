@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -25,25 +24,18 @@ import org.apache.spark.sql.types._
   * the per-row work is a tight cache-friendly loop over `double[]`.
   */
 case class LshBuckets(child: Expression, planes: Array[Array[Double]], bits: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with VecKernel {
   require(planes.nonEmpty && bits > 0 && planes.length % bits == 0,
     "lsh_buckets: planes must be a whole number of tables x bits rows")
 
   private val tables = planes.length / bits
   private val dim = planes(0).length
 
+  override protected def vectors: Seq[Expression] = Seq(child)
+
   override def prettyName: String = "lsh_buckets"
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<float|double>, got ${t.sql}")
-  }
-
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   /** Row-major (tables·bits)×dim plane matrix, flattened once at plan
     * construction — a single JVM-shared reference object in codegen. */
@@ -60,12 +52,12 @@ case class LshBuckets(child: Expression, planes: Array[Array[Double]], bits: Int
 
   override protected def nullSafeEval(input: Any): Any =
     LshBucketsUtil.buckets(input.asInstanceOf[ArrayData], flat, dim, bits,
-      tables, isFloat)
+      tables, isFloat(child))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("lshPlanes", flat, "double[]")
     defineCodeGen(ctx, ev, c =>
-      s"graft.expressions.LshBucketsUtil.buckets($c, $ref, $dim, $bits, $tables, $isFloat)")
+      s"graft.expressions.LshBucketsUtil.buckets($c, $ref, $dim, $bits, $tables, ${isFloat(child)})")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -17,29 +17,49 @@ import org.apache.spark.sql.types._
   * codegen: no allocation, no virtual calls, direct `getFloat`/`getDouble`
   * reads off the columnar/unsafe array format.
   *
-  * Both accept `array<float>` and `array<double>` operands in any mix
-  * (embeddings are float; LSH hyperplane literals are double).
+  * Every kernel accepts `array<float>` and `array<double>` vectors in
+  * any mix (embeddings are float; LSH hyperplane literals are double).
+  * That operand rule is checked once, here: each of `vectors` is an
+  * `array<float|double>`, each of `scalars` a double, and a failure names
+  * the function and every operand's type. `elemGetter` (generated code)
+  * and `read` (interpreted path) read a vector element as a double
+  * whichever element type it has.
   */
-trait VecBinaryOp extends BinaryExpression {
-  override def dataType: DataType = DoubleType
+trait VecKernel extends Expression {
+  protected def vectors: Seq[Expression]
+  protected def scalars: Seq[Expression] = Nil
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType | DoubleType, _), ArrayType(FloatType | DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects array<float|double> inputs, got ${l.sql} and ${r.sql}")
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val isVec = (t: DataType) => t match {
+      case ArrayType(FloatType | DoubleType, _) => true
+      case _                                    => false
     }
-
-  protected def elemGetter(e: Expression): String = e.dataType match {
-    case ArrayType(FloatType, _) => "getFloat"
-    case _                       => "getDouble"
+    if (vectors.forall(v => isVec(v.dataType)) && scalars.forall(_.dataType == DoubleType))
+      TypeCheckResult.TypeCheckSuccess
+    else {
+      val expects = vectors.map(_ => "array<float|double>") ++ scalars.map(_ => "double")
+      val got = (vectors ++ scalars).map(_.dataType.sql)
+      TypeCheckResult.TypeCheckFailure(
+        s"$prettyName expects (${expects.mkString(", ")}), got (${got.mkString(", ")})")
+    }
   }
 
-  protected def read(e: Expression, a: ArrayData, i: Int): Double = e.dataType match {
-    case ArrayType(FloatType, _) => a.getFloat(i).toDouble
-    case _                       => a.getDouble(i)
+  protected def isFloat(e: Expression): Boolean = e.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _                       => false
   }
+
+  protected def elemGetter(e: Expression): String =
+    if (isFloat(e)) "getFloat" else "getDouble"
+
+  protected def read(e: Expression, a: ArrayData, i: Int): Double =
+    if (isFloat(e)) a.getFloat(i).toDouble else a.getDouble(i)
+}
+
+/** A double-valued kernel over two vectors. */
+trait VecBinaryOp extends BinaryExpression with VecKernel {
+  override def dataType: DataType = DoubleType
+  override protected def vectors: Seq[Expression] = Seq(left, right)
 }
 
 /** Σ aᵢ·bᵢ over the common prefix, accumulated in double. */
@@ -78,20 +98,10 @@ case class VecDot(left: Expression, right: Expression) extends VecBinaryOp {
 /** max |aᵢ| over the vector — the scale pass of int8 quantization.
   * Same tight-loop shape as [[VecDot]]; 0.0 for an empty array (callers
   * guard division by zero with a `when`). */
-case class VecMaxAbs(child: Expression) extends UnaryExpression {
+case class VecMaxAbs(child: Expression) extends UnaryExpression with VecKernel {
   override def prettyName: String = "vec_max_abs"
   override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects an array<float|double> input, got ${t.sql}")
-  }
-
-  private def getter: String = child.dataType match {
-    case ArrayType(FloatType, _) => "getFloat"
-    case _                       => "getDouble"
-  }
+  override protected def vectors: Seq[Expression] = Seq(child)
 
   override def nullSafeEval(v: Any): Any = {
     val a = v.asInstanceOf[ArrayData]
@@ -99,10 +109,7 @@ case class VecMaxAbs(child: Expression) extends UnaryExpression {
     var i = 0
     val n = a.numElements()
     while (i < n) {
-      val x = math.abs(child.dataType match {
-        case ArrayType(FloatType, _) => a.getFloat(i).toDouble
-        case _                       => a.getDouble(i)
-      })
+      val x = math.abs(read(child, a, i))
       if (x > m) m = x
       i += 1
     }
@@ -119,7 +126,7 @@ case class VecMaxAbs(child: Expression) extends UnaryExpression {
          |int $n = $a.numElements();
          |double $m = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = java.lang.Math.abs((double)$a.$getter($i));
+         |  double $x = java.lang.Math.abs((double)$a.${elemGetter(child)}($i));
          |  if ($x > $m) $m = $x;
          |}
          |${ev.value} = $m;
@@ -133,22 +140,11 @@ case class VecMaxAbs(child: Expression) extends UnaryExpression {
 /** Element-wise aᵢ / s → array<double>. Spelled as DIVISION (not multiply
   * by reciprocal — the two differ in the last ulp) so the DuckDB oracle's
   * `x / norm` reproduces it bit-for-bit. Used for L2 normalization. */
-case class VecDiv(left: Expression, right: Expression) extends BinaryExpression {
+case class VecDiv(left: Expression, right: Expression) extends BinaryExpression with VecKernel {
   override def prettyName: String = "vec_div"
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType | DoubleType, _), DoubleType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (array<float|double>, double), got ${l.sql} and ${r.sql}")
-    }
-
-  private def getter: String = left.dataType match {
-    case ArrayType(FloatType, _) => "getFloat"
-    case _                       => "getDouble"
-  }
+  override protected def vectors: Seq[Expression] = Seq(left)
+  override protected def scalars: Seq[Expression] = Seq(right)
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
@@ -157,11 +153,7 @@ case class VecDiv(left: Expression, right: Expression) extends BinaryExpression 
     val out = new Array[Double](n)
     var i = 0
     while (i < n) {
-      val x = left.dataType match {
-        case ArrayType(FloatType, _) => a.getFloat(i).toDouble
-        case _                       => a.getDouble(i)
-      }
-      out(i) = x / s
+      out(i) = read(left, a, i) / s
       i += 1
     }
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
@@ -176,7 +168,7 @@ case class VecDiv(left: Expression, right: Expression) extends BinaryExpression 
          |int $n = $a.numElements();
          |double[] $tmp = new double[$n];
          |for (int $i = 0; $i < $n; $i++) {
-         |  $tmp[$i] = (double)$a.$getter($i) / $s;
+         |  $tmp[$i] = (double)$a.${elemGetter(left)}($i) / $s;
          |}
          |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($tmp);
        """.stripMargin
@@ -195,22 +187,11 @@ case class VecDiv(left: Expression, right: Expression) extends BinaryExpression 
   * quantized pipelines oracle-checkable cross-engine. NOTE:
   * `java.lang.Math.round` is half-UP (toward +∞ for negatives) and would
   * NOT match either engine. */
-case class VecQuantize(left: Expression, right: Expression) extends BinaryExpression {
+case class VecQuantize(left: Expression, right: Expression) extends BinaryExpression with VecKernel {
   override def prettyName: String = "vec_quantize"
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType | DoubleType, _), DoubleType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (array<float|double>, double), got ${l.sql} and ${r.sql}")
-    }
-
-  private def getter: String = left.dataType match {
-    case ArrayType(FloatType, _) => "getFloat"
-    case _                       => "getDouble"
-  }
+  override protected def vectors: Seq[Expression] = Seq(left)
+  override protected def scalars: Seq[Expression] = Seq(right)
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
@@ -219,10 +200,7 @@ case class VecQuantize(left: Expression, right: Expression) extends BinaryExpres
     val out = new Array[Int](n)
     var i = 0
     while (i < n) {
-      val x = (left.dataType match {
-        case ArrayType(FloatType, _) => a.getFloat(i).toDouble
-        case _                       => a.getDouble(i)
-      }) * s
+      val x = read(left, a, i) * s
       out(i) = (if (x >= 0) math.floor(x + 0.5) else math.ceil(x - 0.5)).toInt
       i += 1
     }
@@ -239,7 +217,7 @@ case class VecQuantize(left: Expression, right: Expression) extends BinaryExpres
          |int $n = $a.numElements();
          |int[] $tmp = new int[$n];
          |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = (double)$a.$getter($i) * $s;
+         |  double $x = (double)$a.${elemGetter(left)}($i) * $s;
          |  $tmp[$i] = (int)($x >= 0 ? java.lang.Math.floor($x + 0.5) : java.lang.Math.ceil($x - 0.5));
          |}
          |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($tmp);

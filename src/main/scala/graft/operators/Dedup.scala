@@ -1096,36 +1096,6 @@ object Dedup {
         EmbedDup.batchPaths(dir, m, "buckets.parquet").map(s.read.parquet(_).count()).sum)
   }
 
-  /** Embedding-cosine near-dup pairs, blocked: every within-block pair is
-    * exactly verified against `threshold` ((v1, v2, blockCols..., cos),
-    * v1 < v2).
-    *
-    * The blocking key IS the scale knob. Candidate pairs are
-    * Σ_b |b|·(|b|−1)/2, so at a FIXED key granularity work grows
-    * quadratically with corpus size — measured on the test corpus (10
-    * labels): 199,666 pairs at sf0.1 → 20,056,600 at 10× data, exactly
-    * the 100× block-size square (wall 20×, local[32] slack absorbing the
-    * rest; BENCH_SCALING.json). Splitting the same corpus into B
-    * equal-size blocks divides the pair count by B. Production therefore
-    * composes a finer key — an IVF cell ([[Similarity.ivfKnn]]'s coarse
-    * quantizer, fit offline) or an LSH bucket — with any semantic key,
-    * bounding block size at a measured recall cost (RECALL.md gives the
-    * recall/latency curve for both bucketing families). */
-  def embedPairs(df: DataFrame, idCol: String, vecCol: String,
-                 blockCols: Seq[String], threshold: Double): DataFrame = {
-    val a = df.select((idCol +: vecCol +: blockCols).map(col): _*)
-      .toDF("v1" +: "emb1" +: blockCols: _*)
-    val b = df.select((idCol +: vecCol +: blockCols).map(col): _*)
-      .toDF("v2" +: "emb2" +: blockCols.map(_ + "__r"): _*)
-    val on = blockCols.map(c => col(c) === col(c + "__r")).reduce(_ && _) &&
-      col("v1") < col("v2")
-    a.join(b, on)
-      .withColumn("cos",
-        graft.functions.VectorFunctions.cosine(col("emb1"), col("emb2")))
-      .filter(col("cos") >= threshold)
-      .select((Seq("v1", "v2") ++ blockCols :+ "cos").map(col): _*)
-  }
-
   /** Maximum sign bits per band: caps the dynamic knob at 2^20 buckets —
     * target occupancy holds up to targetOccupancy·2^20 (≈16M at the
     * default) rows per semantic block before buckets start growing with
@@ -1152,7 +1122,10 @@ object Dedup {
 
   /** Embedding-cosine near-dup pairs with a BOUNDED blocking key: the
     * semantic key(s) composed with a banded sign-LSH bucket of the vector
-    * itself — [[embedPairs]]' documented scale knob applied. Candidates =
+    * itself. The blocking key is the scale knob: verifying every pair
+    * within a block costs Σ_b |b|·(|b|−1)/2 candidates, quadratic in
+    * corpus size at a fixed key granularity (10 labels: 199,666 pairs at
+    * sf0.1 → 20,056,600 at 10× data), and a finer key divides it. Candidates =
     * pairs sharing the semantic key AND at least one of `bands` bucket
     * values (each `bits` hyperplane sign bits, the same fixed-seed plane
     * generator as [[Similarity.lshKnn]]); every candidate is exactly
@@ -1163,8 +1136,8 @@ object Dedup {
     * O(1)-output count scan to read n — so expected per-(band, key)
     * bucket size stays at targetOccupancy whatever the corpus size, and
     * candidate work Σ_blocks |b|² ≈ bands·n·targetOccupancy stays LINEAR
-    * in n. The fixed-granularity quadratic blow-up [[embedPairs]]
-    * measures (100× pairs at 10× data, BENCH_SCALING) is gone by
+    * in n. The quadratic blow-up of label-only blocking (100× pairs at
+    * 10× data, BENCH_SCALING) is gone by
     * construction; BENCH_SCALING pins the measured drop.
     *
     * Why a sign-LSH component and not an IVF cell: bucket assignment is
@@ -1183,11 +1156,12 @@ object Dedup {
     * THEREFORE APPROXIMATE below the near-dup regime: a mid-range pair
     * (cos between `threshold` and ≈0.99) appears only if it collides in
     * a band, so the result is a plane-seed-dependent SUBSET of
-    * [[embedPairs]]' exact label-blocked pair set — by design (those
+    * the exact label-blocked pair set (every same-label pair with cos ≥
+    * `threshold`) — by design (those
     * pairs are what the bound prunes to stay linear), and mirrored
     * exactly by the generated oracle. Consumers needing ALL pairs ≥ a
-    * mid-range threshold must use [[embedPairs]] with a block key they
-    * can afford quadratically.
+    * mid-range threshold must cosine-verify every pair of a block key
+    * they can afford quadratically.
     *
     * Input hygiene, identical on both engines: null vectors and vectors
     * with any non-finite element are excluded up front (sign-bit buckets

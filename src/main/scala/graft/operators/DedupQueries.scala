@@ -431,8 +431,8 @@ object DedupQueries {
     // Embedding-cosine near-dup with the BOUNDED blocking key: label
     // composed with a banded sign-LSH bucket of the vector (4 bands ×
     // ceil(log2(n/16)) bits — the knob GROWS with the corpus), candidates
-    // exactly cosine-verified — Dedup.embedPairs' documented scale knob
-    // APPLIED (expected bucket occupancy pinned at 16, so candidate pairs
+    // exactly cosine-verified — the blocking key used as the scale knob
+    // (expected bucket occupancy pinned at 16, so candidate pairs
     // grow linearly with the corpus where the label-only form grew as
     // block²; BENCH_SCALING pins the measured drop). Still fully
     // hash-oracled: hyperplane sign bits are the same left-to-right
@@ -445,9 +445,9 @@ object DedupQueries {
     // mid-range pairs (cos between the 0.35 threshold and ~0.99) appear
     // only when they band-collide, so the result is a plane-seed-pinned
     // SUBSET of the exact label-blocked pair set — the pruning IS the
-    // linear-scale bound, the oracle mirrors it row-for-row, and
-    // Dedup.embedPairs remains the exact (quadratic-per-block) spelling
-    // for consumers who need every mid-range pair.
+    // linear-scale bound, and the oracle mirrors it row-for-row.
+    // Consumers who need every mid-range pair must verify every
+    // same-label pair, quadratic per block.
     Q("dedup_embed",
       (s, dir) => {
         val e = Tables.embeddings(s, dir).select("vec_id", "label", "embedding")

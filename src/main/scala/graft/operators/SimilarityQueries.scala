@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 import graft.sources.Tables
@@ -37,6 +38,26 @@ object SimilarityQueries {
        |  round(cos * 1e6) / 1e6 AS cosine
        |FROM k WHERE rank <= $K ORDER BY q_id, rank""".stripMargin
 
+  /** The output columns of every kNN query: rank within the query
+    * vector, cosine rounded to 6 places. */
+  private def knnCols = Seq(col("q_id"), col("rank"), col("neighbor_id"),
+    r6(col("cos")).as("cosine"))
+
+  /** The stored IVF index that `sim_knn_ivf_append`, `sim_ivf_stats` and
+    * `sim_knn_stream` share by its `#append` tag: built on the 90 % of
+    * `e` with vec_id % 10 != 0, then the other 10 % appended, gated by
+    * ivfValid(full corpus). Whichever of the three runs first builds and
+    * the others reuse; one recipe, so they can never disagree on the
+    * index state and rebuild the shared dir in turn. */
+  private def appendedIndex(s: SparkSession, dir: String, e: DataFrame): String = {
+    val idx = Similarity.ivfIndexDir(s, dir + "#append")
+    if (!Similarity.ivfValid(e, idx, nlist = 16)) {
+      Similarity.ivfBuild(e.filter(col("vec_id") % 10 =!= 0), idx, nlist = 16)
+      Similarity.ivfAppend(e.filter(col("vec_id") % 10 === 0), idx)
+    }
+    idx
+  }
+
   val all: Seq[Q] = Seq(
     // Exact brute-force top-k: the correctness baseline every ANN variant
     // is measured against (recall in SimilaritySpec). Oracle-checkable
@@ -46,7 +67,7 @@ object SimilarityQueries {
       (s, dir) => {
         val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
         Similarity.knn(e, e.filter(col("vec_id") % 50 === 0), K)
-          .select(col("q_id"), col("rank"), col("neighbor_id"), r6(col("cos")).as("cosine"))
+          .select(knnCols: _*)
           .orderBy("q_id", "rank")
       },
       Some(knnOracle)),
@@ -59,7 +80,7 @@ object SimilarityQueries {
       (s, dir) => {
         val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
         Similarity.knnTopK(e, e.filter(col("vec_id") % 50 === 0), K)
-          .select(col("q_id"), col("rank"), col("neighbor_id"), r6(col("cos")).as("cosine"))
+          .select(knnCols: _*)
           .orderBy("q_id", "rank")
       },
       Some(knnOracle)),
@@ -78,7 +99,7 @@ object SimilarityQueries {
         val idx = Similarity.ivfIndexDir(s, dir)
         Similarity.ivfBuildIfAbsent(e, idx, nlist = 16)
         Similarity.ivfProbe(s, idx, e.filter(col("vec_id") % 50 === 0), K, nprobe = 2)
-          .select(col("q_id"), col("rank"), col("neighbor_id"), r6(col("cos")).as("cosine"))
+          .select(knnCols: _*)
           .orderBy("q_id", "rank")
       },
       None),
@@ -98,7 +119,7 @@ object SimilarityQueries {
         val idx = Similarity.ivfIndexDir(s, dir)
         Similarity.ivfBuildIfAbsent(e, idx, nlist = 16)
         Similarity.ivfProbeI8(s, idx, e.filter(col("vec_id") % 50 === 0), K, nprobe = 2)
-          .select(col("q_id"), col("rank"), col("neighbor_id"), r6(col("cos")).as("cosine"))
+          .select(knnCols: _*)
           .orderBy("q_id", "rank")
       },
       None),
@@ -118,15 +139,9 @@ object SimilarityQueries {
     Q("sim_knn_ivf_append",
       (s, dir) => {
         val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-        val base = e.filter(col("vec_id") % 10 =!= 0)
-        val batch = e.filter(col("vec_id") % 10 === 0)
-        val idx = Similarity.ivfIndexDir(s, dir + "#append")
-        if (!Similarity.ivfValid(e, idx, nlist = 16)) {
-          Similarity.ivfBuild(base, idx, nlist = 16)
-          Similarity.ivfAppend(batch, idx)
-        }
+        val idx = appendedIndex(s, dir, e)
         Similarity.ivfProbe(s, idx, e.filter(col("vec_id") % 50 === 0), K, nprobe = 2)
-          .select(col("q_id"), col("rank"), col("neighbor_id"), r6(col("cos")).as("cosine"))
+          .select(knnCols: _*)
           .orderBy("q_id", "rank")
       },
       None),
@@ -152,7 +167,7 @@ object SimilarityQueries {
             graft.streaming.WeatherStream.stagingDir("ivf_ingest", dir))
         }
         Similarity.ivfProbe(s, idx, e.filter(col("vec_id") % 50 === 0), K, nprobe = 2)
-          .select(col("q_id"), col("rank"), col("neighbor_id"), r6(col("cos")).as("cosine"))
+          .select(knnCols: _*)
           .orderBy("q_id", "rank")
       },
       None),
@@ -178,7 +193,7 @@ object SimilarityQueries {
           Similarity.ivfCompact(s, idx)
         }
         Similarity.ivfProbe(s, idx, e.filter(col("vec_id") % 50 === 0), K, nprobe = 2)
-          .select(col("q_id"), col("rank"), col("neighbor_id"), r6(col("cos")).as("cosine"))
+          .select(knnCols: _*)
           .orderBy("q_id", "rank")
       },
       None),
@@ -190,22 +205,16 @@ object SimilarityQueries {
     // vs shifted 53.6% top-20 share at the 2×10⁶ decade). The census
     // scans only the `cell` partition column (footer reads, no vector
     // bytes), so the gauge is safe to run concurrently with serving.
-    // SHARES sim_knn_ivf_append's index tag: both queries construct the
-    // IDENTICAL index state (build on 90%, one append of the 10%, gated
-    // by ivfValid(full corpus)), so whichever runs first builds and the
-    // other reuses — the gauge is exactly "run health checks against the
-    // index you serve", and a second full build per session would be
-    // pure waste at the big decades. Rows-only check; the census
+    // Reads sim_knn_ivf_append's index (appendedIndex) — the gauge is
+    // exactly "run health checks against the index you serve", and a
+    // second full build per session would be pure waste at the big
+    // decades. Rows-only check; the census
     // arithmetic and the shift alert behavior are pinned in
     // SimilaritySpec.
     Q("sim_ivf_stats",
       (s, dir) => {
         val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-        val idx = Similarity.ivfIndexDir(s, dir + "#append")
-        if (!Similarity.ivfValid(e, idx, nlist = 16)) {
-          Similarity.ivfBuild(e.filter(col("vec_id") % 10 =!= 0), idx, nlist = 16)
-          Similarity.ivfAppend(e.filter(col("vec_id") % 10 === 0), idx)
-        }
+        val idx = appendedIndex(s, dir, e)
         // topCells = 2 at nlist = 16 (the default 20 would cover every
         // cell of this small codebook and report a constant 1.0; a
         // deployment at nlist = √n keeps the default)
@@ -221,9 +230,8 @@ object SimilarityQueries {
     // own query vector and the static stored index, so the union over
     // micro-batches equals the one-shot probe under ANY chunking
     // (SimilaritySpec pins the drained stream ≡ one-shot — the TENTH
-    // streaming ≡ batch fact). SHARES sim_knn_ivf_append's index tag
-    // (identical ivfValid-gated construction): whichever runs first
-    // builds, the others serve. Inside foreachBatch the micro-batch
+    // streaming ≡ batch fact). Serves sim_knn_ivf_append's index
+    // (appendedIndex). Inside foreachBatch the micro-batch
     // frame is RDD-backed, so probeCells pins it (the r15 leaf rule) —
     // the probe's collected cell set and join side always read the same
     // arrived rows. Replay-idempotent (each micro-batch overwrites its
@@ -232,18 +240,13 @@ object SimilarityQueries {
       (s, dir) => {
         import graft.streaming.WeatherStream
         val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-        val idx = Similarity.ivfIndexDir(s, dir + "#append")
-        if (!Similarity.ivfValid(e, idx, nlist = 16)) {
-          Similarity.ivfBuild(e.filter(col("vec_id") % 10 =!= 0), idx, nlist = 16)
-          Similarity.ivfAppend(e.filter(col("vec_id") % 10 === 0), idx)
-        }
+        val idx = appendedIndex(s, dir, e)
         val input = WeatherStream.chunkedFileFeedDF(
           e.filter(col("vec_id") % 50 === 0), "vec_id",
           WeatherStream.stagingDir("knn_stream", dir))
         WeatherStream.drain(input.df, "sim_knn_stream",
           WeatherStream.PerBatch(b => Similarity.ivfProbe(s, idx, b, K, nprobe = 2)
-            .select(col("q_id"), col("rank"), col("neighbor_id"),
-              r6(col("cos")).as("cosine"))),
+            .select(knnCols: _*)),
           input)
           .orderBy("q_id", "rank")
       },
@@ -276,7 +279,7 @@ object SimilarityQueries {
           Similarity.ivfRefit(s, idx, capFactor = 1.0, maxSplit = 4)
         }
         Similarity.ivfProbe(s, idx, e.filter(col("vec_id") % 50 === 0), K, nprobe = 2)
-          .select(col("q_id"), col("rank"), col("neighbor_id"), r6(col("cos")).as("cosine"))
+          .select(knnCols: _*)
           .orderBy("q_id", "rank")
       },
       None),
@@ -286,7 +289,7 @@ object SimilarityQueries {
       (s, dir) => {
         val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
         Similarity.lshKnn(e, e.filter(col("vec_id") % 50 === 0), K)
-          .select(col("q_id"), col("rank"), col("neighbor_id"), r6(col("cos")).as("cosine"))
+          .select(knnCols: _*)
           .orderBy("q_id", "rank")
       },
       None),

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 import graft.core._
 import graft.functions.WeatherFunctions._
 import graft.sources.Tables
+import graft.streaming.WeatherStream
 
 /** Reference-semantics pack: the weather pipeline of
   * `MetOffice_WOW_Connect.txt` re-expressed over the `events` table
@@ -34,6 +35,22 @@ object WeatherQueries {
   private val AltitudeM = 5.0
   private val LatitudeDeg = 61.8989
 
+
+  /** `wx_rain_daily_stream` and its restart twin: the events replayed
+    * through [[WeatherStream.rainDailyStream]] into `sink`. `suffix` keeps
+    * the two queries' staging and sink dirs apart. */
+  private def rainStream(s: SparkSession, dir: String, suffix: String,
+                         sink: WeatherStream.Sink): DataFrame = {
+    val readings = Tables.events(s, dir)
+      .select(col("event_id"), col("user_id"), col("ts"), col("value"))
+    val input = WeatherStream.chunkedFileFeed(
+      readings, WeatherStream.stagingDir(s"wx_rain$suffix", dir))
+    WeatherStream.drain(WeatherStream.rainDailyStream(input.typed).toDF(),
+      s"wx_rain_stream$suffix", sink, input)
+      .select(col("event_id"), col("user_id"), col("day"),
+        col("total_rain_mm"), col("daily_rain_mm"), col("rain_rate_mmh"))
+      .orderBy("event_id")
+  }
 
   /** Shared by `wx_rain_daily` (batch windows) and `wx_rain_daily_stream`
     * (stateful streaming) — ONE oracle for both spellings. */
@@ -144,29 +161,18 @@ object WeatherQueries {
     // same events via a parquet FILE-SOURCE stream, sharing wx_rain_daily's
     // oracle SQL — streaming ≡ batch ≡ DuckDB, hash-exact (the state
     // accumulates with the batch DECIMAL(25,6) semantics, see RainState).
-    // The feed is 4 event-time-range chunk files replayed one per
+    // The feed is 3 event-time-range chunk files replayed one per
     // micro-batch in ARRIVAL order (each chunk is copied into the live
     // dir, processed, then the next arrives — no mtime pinning), so
     // cross-batch state carry is actually exercised with NO driver-side
-    // materialization: the only values collected are 3 quantile
+    // materialization: the only values collected are 2 quantile
     // boundaries. This is the production shape — swap the live dir for a
     // landing directory and the pipeline runs unbounded.
     StreamQ("wx_rain_daily_stream",
-      (s, dir) => {
-        import graft.streaming.WeatherStream
-        val readings = Tables.events(s, dir)
-          .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-        val input = WeatherStream.chunkedFileFeed(
-          readings, WeatherStream.stagingDir("wx_rain", dir))
-        WeatherStream.drain(WeatherStream.rainDailyStream(input.typed).toDF(),
-          "wx_rain_stream", WeatherStream.FileSink(), input)
-          .select(col("event_id"), col("user_id"), col("day"),
-            col("total_rain_mm"), col("daily_rain_mm"), col("rain_rate_mmh"))
-          .orderBy("event_id")
-      },
+      (s, dir) => rainStream(s, dir, "", WeatherStream.FileSink()),
       Some(rainDailySql)),
 
-    // The wx_rain_daily_stream pipeline KILLED after 2 of 4 chunk
+    // The wx_rain_daily_stream pipeline KILLED after 2 of 3 chunk
     // arrivals and RESTARTED from the same checkpoint + sink dirs
     // (WeatherStream.FileSink(stopAfter)): checkpoint recovery of the
     // flatMapGroupsWithState rain state + the file-sink metadata log must
@@ -175,18 +181,7 @@ object WeatherQueries {
     // CORRECTNESS row, not only a scalatest fact (StreamingSpec pins the
     // same drill at fixture scale).
     StreamQ("wx_rain_daily_stream_restart",
-      (s, dir) => {
-        import graft.streaming.WeatherStream
-        val readings = Tables.events(s, dir)
-          .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-        val input = WeatherStream.chunkedFileFeed(
-          readings, WeatherStream.stagingDir("wx_rain_restart", dir))
-        WeatherStream.drain(WeatherStream.rainDailyStream(input.typed).toDF(),
-          "wx_rain_stream_restart", WeatherStream.FileSink(stopAfter = Some(2)), input)
-          .select(col("event_id"), col("user_id"), col("day"),
-            col("total_rain_mm"), col("daily_rain_mm"), col("rain_rate_mmh"))
-          .orderBy("event_id")
-      },
+      (s, dir) => rainStream(s, dir, "_restart", WeatherStream.FileSink(stopAfter = Some(2))),
       Some(rainDailySql)),
 
     // O4: the barometer HTML-scrape parse. The reference slices 5-6 chars

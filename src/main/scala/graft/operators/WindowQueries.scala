@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -18,9 +19,9 @@ import graft.sources.Tables
   *    unbounded-preceding frame after a single shuffle+sort per key — the
   *    union-then-window formulation of merge-asof, which scales linearly
   *    instead of building a per-row range probe.
-  *  - Event-time tumbling/sliding use Spark's `window()` (same operator the
-  *    streaming path uses); session windows use `session_window()`. Batch
-  *    and streaming therefore share plan shapes (SURVEY.md §3).
+  *  - Event-time tumbling/sliding use Spark's `window()`; session windows
+  *    use `session_window()`. The streaming twins call the same operators
+  *    through `graft.streaming` (SURVEY.md §3).
   */
 object WindowQueries {
 
@@ -295,39 +296,21 @@ object WindowQueries {
               |  count(*) AS n, ${dsumSql("value")} AS sum_value
               |FROM events GROUP BY 1, 2 ORDER BY ws, event_type""".stripMargin)),
 
-    // win_tumbling as a STREAMING fact: the identical window()+agg run as
-    // a watermarked Structured Streaming query over the parquet file-source
-    // feed (4 event-time chunks, one per micro-batch), sharing the batch
-    // oracle — windowed streaming ≡ batch ≡ DuckDB, hash-exact (DECIMAL
-    // sum state is order-independent). Append mode only emits
-    // watermark-closed windows, so a single far-future sentinel row rides
-    // in the last chunk to push the watermark past every real window; the
-    // sentinel's own window never closes and is never emitted. The
-    // drain's epilogue rule: a second sentinel (+14 d) rides in an
-    // EPILOGUE chunk that arrives after every quantile chunk. Processing
-    // it applies sentinel #1's watermark (maxTs+7d-2h > every real window
-    // end), emitting all real windows in that data batch. Neither
-    // sentinel's own window ever closes, so neither is ever emitted.
+    // win_tumbling as a STREAMING fact: WeatherStream.hourlyStats, the
+    // identical window()+dsum, run as a watermarked query over the chunked
+    // file feed, one chunk per micro-batch, sharing the batch oracle —
+    // windowed streaming ≡ batch ≡ DuckDB, hash-exact (DECIMAL sum state
+    // is order-independent). WeatherStream.sentinelFeed closes the
+    // windows (its scaladoc has the two-sentinel rule).
     StreamQ("win_tumbling_stream",
       (s, dir) => {
         import graft.streaming.WeatherStream
-        val ev = Tables.events(s, dir).select(col("ts"), col("event_type"), col("value"))
-        val maxTs = ev.agg(max(col("ts"))).head.getTimestamp(0)
-        def sentinel(days: Int) = s.createDataFrame(
-          java.util.Arrays.asList(org.apache.spark.sql.Row(
-            new java.sql.Timestamp(maxTs.getTime + days.toLong * 24 * 3600 * 1000),
-            "__sentinel", 0.0)),
-          ev.schema)
-        val input = WeatherStream.chunkedFileFeedDF(
-          ev.union(sentinel(7)), "ts", WeatherStream.stagingDir("win_tumbling", dir),
-          epilogue = Some(sentinel(14)))
-        val agg = input.df
-          .withWatermark("ts", "2 hours")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-          .select(unix_timestamp(col("window.start")).as("ws"),
-            col("event_type"), col("n"), col("sum_value"))
-        WeatherStream.drain(agg, "win_tumbling_stream", WeatherStream.FileSink(), input)
+        val input = WeatherStream.sentinelFeed(
+          Tables.events(s, dir).select(col("ts"), col("event_type"), col("value")),
+          WeatherStream.stagingDir("win_tumbling", dir), t => Row(t, "__sentinel", 0.0))
+        WeatherStream.drain(
+            WeatherStream.hourlyStats(input.df).withColumn("ws", unix_timestamp(col("ws"))),
+            "win_tumbling_stream", WeatherStream.FileSink(), input)
           // defensive: a sentinel window never closes today, but a batch
           // run after the epilogue (checkpoint re-run, no-data batches
           // back on) would close sentinel #1's window and emit it; null-safe
@@ -450,38 +433,27 @@ object WindowQueries {
              |  ON p.user_id = c.user_id AND p.ts >= c.ts
              |ORDER BY p.event_id""".stripMargin)),
 
-    // Running top-k per key over a STREAM (mapGroupsWithState, state =
-    // the same bounded TopKAggregator buffer batch ranking uses — O(k)
-    // per key forever, no watermark needed: all-history top-k is
-    // monotone). Driver-checked: after draining the chunked file feed,
-    // each key's LAST emission (identified by a per-key monotone seen
-    // counter carried in state) must equal the batch window ranking —
-    // the third streaming ≡ batch ≡ DuckDB fact, covering stateful
-    // typed aggregation. Replay duplicates cannot displace entries
-    // (TopKAggregator set semantics, AggregatorProps).
+    // Running top-k per key over a STREAM: StreamingTopK.runningTopK,
+    // whose state is the same bounded TopKAggregator buffer batch ranking
+    // uses — O(k) per key forever, no watermark needed: all-history top-k
+    // is monotone. Oracle-checked: after draining the chunked file feed,
+    // each key's LAST emission (largest n_seen) must equal the batch
+    // window ranking — the third streaming ≡ batch ≡ DuckDB fact, covering
+    // stateful typed aggregation. Replay duplicates cannot displace
+    // entries (TopKAggregator set semantics, AggregatorProps).
     StreamQ("topk_stream",
       (s, dir) => {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
-        import org.apache.spark.sql.streaming.GroupStateTimeout
-        import graft.streaming.WeatherStream
+        import graft.streaming.{StreamingTopK, WeatherStream}
         val readings = Tables.events(s, dir)
           .select(col("event_id"), col("user_id"), col("ts"), col("value"))
         val feed = WeatherStream.chunkedFileFeed(
           readings, WeatherStream.stagingDir("topk_stream", dir))
-        val agg = new graft.functions.TopKAggregator(3)
-        val updates = feed.typed.map(r => (r.user_id, r.value, r.event_id))
-          .groupByKey(_._1)
-          .mapGroupsWithState[(Array[(Double, Long)], Long), (Long, Long, Seq[Double], Seq[Long])](
-            GroupStateTimeout.NoTimeout) { (key, it, state) =>
-            val (buf0, seen0) = state.getOption.getOrElse((agg.zero, 0L))
-            var n = seen0
-            val folded = it.foldLeft(buf0) { (b, r) => n += 1; agg.reduce(b, (r._2, r._3)) }
-            state.update((folded, n))
-            (key, n, folded.toSeq.map(_._1), folded.toSeq.map(_._2))
-          }
+        val updates = StreamingTopK.runningTopK(
+          s, feed.typed.map(r => (r.user_id, r.value, r.event_id)), 3)
         val w = Window.partitionBy("user_id").orderBy(desc("n_seen"))
-        WeatherStream.drain(updates.toDF("user_id", "n_seen", "scores", "ids"),
+        WeatherStream.drain(updates.toDF("user_id", "n_seen", "ids", "scores"),
           "topk_stream", WeatherStream.PerBatch(), feed)
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1)
@@ -524,36 +496,20 @@ object WindowQueries {
         .orderBy("user_id", "session_start_us"),
       Some(sessionSql)),
 
-    // Session windows as a STREAMING query over the chunked file feed —
-    // the hardest windowing case: session state must MERGE across
-    // micro-batches (a session that starts in chunk 2 and continues in
-    // chunk 3 is one window). Shares win_session's gaps-and-islands
-    // oracle — the fifth streaming ≡ batch ≡ DuckDB fact. Same
-    // watermark-closing sentinel trick as win_tumbling_stream: append
-    // mode only emits closed sessions, so a far-future row rides in the
-    // last chunk; its own session never closes and is filtered out.
-    // Epilogue sentinel #2 (+14 d), as in win_tumbling_stream: the final
-    // watermark advance rides a real data batch, and neither sentinel's
-    // session ever closes.
+    // Session windows as a STREAMING query over the chunked file feed:
+    // WeatherStream.sessionStats, the hardest windowing case — session
+    // state must MERGE across micro-batches. Shares win_session's
+    // gaps-and-islands oracle — the fifth streaming ≡ batch ≡ DuckDB fact.
+    // WeatherStream.sentinelFeed closes the sessions, as for
+    // win_tumbling_stream.
     StreamQ("win_session_stream",
       (s, dir) => {
         import graft.streaming.WeatherStream
-        val ev = Tables.events(s, dir).select(col("ts"), col("user_id"), col("value"))
-        val maxTs = ev.agg(max(col("ts"))).head.getTimestamp(0)
-        def sentinel(days: Int) = s.createDataFrame(
-          java.util.Arrays.asList(org.apache.spark.sql.Row(
-            new java.sql.Timestamp(maxTs.getTime + days.toLong * 24 * 3600 * 1000),
-            -1L, 0.0)),
-          ev.schema)
-        val input = WeatherStream.chunkedFileFeedDF(
-          ev.union(sentinel(7)), "ts", WeatherStream.stagingDir("win_session", dir),
-          epilogue = Some(sentinel(14)))
-        val agg = input.df
-          .withWatermark("ts", "2 hours")
-          .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-          .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-          .select(col("user_id"),
-            unix_micros(col("session_window.start")).as("session_start_us"),
+        val input = WeatherStream.sentinelFeed(
+          Tables.events(s, dir).select(col("ts"), col("user_id"), col("value")),
+          WeatherStream.stagingDir("win_session", dir), t => Row(t, -1L, 0.0))
+        val agg = WeatherStream.sessionStats(input.df)
+          .select(col("user_id"), unix_micros(col("session_start")).as("session_start_us"),
             col("n"), col("sum_value"))
         WeatherStream.drain(agg, "win_session_stream", WeatherStream.FileSink(), input)
           .filter(col("user_id") =!= -1L)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, EventTimeWatermark}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
-import graft.core.{rmTree, scratchRoot, withSessionConf}
+import graft.core.{dsum, rmTree, scratchRoot, withSessionConf}
 
 /** Structured-Streaming surface of the engine (SURVEY.md §2A O8-O13, O23;
   * §7.1 step 7): the reference is a 15-minute-trigger micro-batch pipeline
@@ -20,6 +20,14 @@ import graft.core.{rmTree, scratchRoot, withSessionConf}
   * at :244). The windowed aggregations reuse the exact operators the batch
   * path uses (`window`, `session_window`), so batch and streaming results
   * are directly comparable — which StreamingSpec exploits.
+  *
+  * Each registered stream's operator lives here, in `graft.streaming`,
+  * and the registration calls it rather than re-spelling it:
+  * `wx_rain_daily_stream` runs [[rainDailyStream]], `win_tumbling_stream`
+  * [[hourlyStats]], `win_session_stream` [[sessionStats]] and
+  * `topk_stream` [[StreamingTopK.runningTopK]], so the specs test what
+  * the registry runs. The two window streams close their windows with
+  * the two-sentinel rule of [[sentinelFeed]].
   *
   * Every registered stream runs through [[drain]], which owns the
   * stream-run policy once for all of them:
@@ -282,10 +290,7 @@ object WeatherStream {
     * under [[drain]]'s no-data rule (object scaladoc). It carries a
     * single beyond-every-window sentinel row, so the FINAL watermark
     * advance happens inside a real data batch and the closed windows
-    * are emitted there. The epilogue rows follow the same contract as
-    * the in-feed sentinel the callers already use: event time far
-    * enough out that their own window/session can never close, hence
-    * they are never emitted. */
+    * are emitted there ([[sentinelFeed]] builds both sentinels). */
   def chunkedFileFeedDF(readings: DataFrame, tsCol: String, dir: String,
                         nChunks: Int = DefaultChunks,
                         epilogue: Option[DataFrame] = None): ChunkedFeed = {
@@ -446,12 +451,15 @@ object WeatherStream {
 
   /** Event-time tumbling aggregation with a watermark: late rows beyond
     * `lateness` are dropped — the generalized form of the reference's
-    * stale-measurement guard (:244). */
+    * stale-measurement guard (:244). The operator of the registered
+    * `win_tumbling_stream`; sums are [[graft.core.dsum]], so the window
+    * state is order-independent and the output equals batch
+    * `win_tumbling` row for row. */
   def hourlyStats(events: DataFrame, lateness: String = "2 hours"): DataFrame =
     events
       .withWatermark("ts", lateness)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
+      .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
       .select(col("window.start").as("ws"), col("event_type"), col("n"), col("sum_value"))
 
   /** Streaming exact dedup with bounded state: duplicate keys arriving
@@ -462,12 +470,41 @@ object WeatherStream {
                   lateness: String = "2 hours"): DataFrame =
     events.withWatermark("ts", lateness).dropDuplicatesWithinWatermark(keys)
 
-  /** Gap-based session aggregation (30 min) with watermark. */
+  /** Gap-based session aggregation (30 min) with watermark: session
+    * state MERGES across micro-batches, so a session that starts in one
+    * chunk and continues in the next is one window. The operator of the
+    * registered `win_session_stream`, with the same [[graft.core.dsum]]
+    * sums as batch `win_session`. */
   def sessionStats(events: DataFrame, lateness: String = "2 hours"): DataFrame =
     events
       .withWatermark("ts", lateness)
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-      .select(col("session_window.start").as("session_start"), col("user_id"),
+      .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
+      .select(col("user_id"), col("session_window.start").as("session_start"),
               col("n"), col("sum_value"))
+
+  /** The feed of a watermark-closed window stream over `events` (a `ts`
+    * column plus the window's other columns), staged under `dir`.
+    * `sentinel` builds one row of `events`' schema at a given event time;
+    * it must carry a key no real row has, so the caller can tell it apart.
+    *
+    * An append-mode window is emitted only once the watermark passes its
+    * end, and under [[drain]]'s no-data rule the final advance must ride
+    * a data batch. Two sentinels do both:
+    *  - sentinel #1 (max(ts) + 7 d) rides in the last quantile chunk and
+    *    sets the watermark past every real window end (lateness < 7 d);
+    *  - sentinel #2 (max(ts) + 14 d) is the epilogue chunk, which arrives
+    *    after every quantile chunk: processing it applies #1's watermark,
+    *    so every real window is emitted in that data batch.
+    * Neither sentinel's own window ever closes, so neither is emitted.
+    * One `max(ts)` scan is the only job this runs before staging. */
+  def sentinelFeed(events: DataFrame, dir: String,
+                   sentinel: Timestamp => Row): ChunkedFeed = {
+    val maxTs = events.agg(max(col("ts"))).head.getTimestamp(0)
+    def at(days: Int) = events.sparkSession.createDataFrame(
+      java.util.Arrays.asList(
+        sentinel(new Timestamp(maxTs.getTime + days.toLong * 24 * 3600 * 1000))),
+      events.schema)
+    chunkedFileFeedDF(events.union(at(7)), "ts", dir, epilogue = Some(at(14)))
+  }
 }

@@ -50,6 +50,19 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(row.getSeq[Int](2) === Seq(3, -3, 1)) // half away from zero
   }
 
+  test("vector kernels reject a non-array operand at analysis, naming the function") {
+    import spark.implicits._
+    Seq(("a", 1.0)).toDF("s", "x").createOrReplaceTempView("ext_vec_bad")
+    Seq("vec_dot(s, s)", "vec_cosine(s, s)", "vec_distsq(s, s)", "vec_max_abs(s)",
+        "vec_div(s, x)", "vec_quantize(s, x)", "lsh_buckets(s, 2, 4, 8)").foreach { call =>
+      val fn = call.takeWhile(_ != '(')
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(s"SELECT $call FROM ext_vec_bad")
+      }
+      assert(e.getMessage.contains(s"$fn expects"), e.getMessage)
+    }
+  }
+
   test("shingle_hash is a SQL function and matches a reference FNV-1a fold") {
     val row = spark.sql(
       "SELECT shingle_hash(array('a', 'b', 'c', 'd'), 3) AS h").head()

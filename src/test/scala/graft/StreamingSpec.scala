@@ -140,11 +140,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(chunkOf(1L) !== chunkOf(2L),
       s"test setup: the session pair must straddle a chunk boundary, got $chunkOf")
-    val agg = input.df
-      .withWatermark("ts", "2 hours")
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("user_id"), col("session_window.start").as("start"), col("n"))
+    // sessionStats: (user_id, session_start, n, sum_value)
+    val agg = WeatherStream.sessionStats(input.df)
     val q = agg.writeStream.format("memory").queryName("session_merge_out")
       .outputMode("append").start()
     try WeatherStream.runChunked(q, Seq(input)) finally q.stop()
@@ -371,6 +368,15 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     streamed.zip(batch).foreach { case (s, b) => assert(s === b) }
   }
 
+  test("registered win_session_stream is row-identical to batch win_session") {
+    // session state merged across micro-batches == batch sessions, exact
+    // Rows (DECIMAL sum state; sentinel sessions never emitted)
+    val streamed = SparkEntry.queries("win_session_stream")(spark, SF).collect()
+    val batch = SparkEntry.queries("win_session")(spark, SF).collect()
+    assert(streamed.length === batch.length)
+    streamed.zip(batch).foreach { case (s, b) => assert(s === b) }
+  }
+
   test("WowSink posts per-partition and drops (not retries) on transport failure") {
     import graft.streaming.WowSink
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -417,7 +423,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(Long, Double, Long)]
     val q = graft.streaming.StreamingTopK.runningTopK(spark, input.toDS(), 2)
-      .toDF("key", "ids", "scores")
+      .toDF("key", "n_seen", "ids", "scores")
       .writeStream.format("memory").queryName("topk_out").outputMode("update").start()
     try {
       input.addData((1L, 0.5, 10L), (1L, 0.9, 11L), (1L, 0.1, 13L), (2L, 0.3, 20L))
@@ -425,7 +431,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       input.addData((1L, 0.7, 12L), (2L, 0.8, 21L))
       q.processAllAvailable()
       val updates = spark.table("topk_out").collect()
-        .map(r => (r.getLong(0), r.getSeq[Long](1)))
+        .map(r => (r.getLong(0), r.getSeq[Long](2)))
       // batch 1: key 1 kept (11, 10) of 3 seen; batch 2 displaced 10 by 12
       assert(updates.contains((1L, Seq(11L, 10L))), updates.toSeq)
       assert(updates.contains((1L, Seq(11L, 12L))), updates.toSeq)
