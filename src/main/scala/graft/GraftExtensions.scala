@@ -51,6 +51,20 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         builder(exprs)
       })
 
+  /** Literal arguments parameterize the generated code (a shingle width,
+    * an entity list, a plane matrix), so they must be literals; `what`
+    * names the argument in the error. */
+  private def intLit(e: Expression, what: String): Int = e match {
+    case Literal(i: Int, IntegerType) => i
+    case other => throw new IllegalArgumentException(
+      s"$what must be an integer literal, got $other")
+  }
+  private def strLit(e: Expression, what: String): String = e match {
+    case Literal(s: UTF8String, StringType) => s.toString
+    case other => throw new IllegalArgumentException(
+      s"$what must be string literals, got $other")
+  }
+
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.CodegenDefaults.foreach { case (k, v) => sys.props.getOrElseUpdate(k, v) }
     ext.injectFunction(fn("vec_dot", es => VecDot(es(0), es(1))))
@@ -59,22 +73,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(fn("vec_max_abs", es => VecMaxAbs(es(0)), arity = 1))
     ext.injectFunction(fn("vec_div", es => VecDiv(es(0), es(1))))
     ext.injectFunction(fn("vec_quantize", es => VecQuantize(es(0), es(1))))
-    ext.injectFunction(fn("shingle_hash", es => es(1) match {
-      case Literal(k: Int, IntegerType) => ShingleHash(es(0), k)
-      case other => throw new IllegalArgumentException(
-        s"shingle_hash(words, k): k must be an integer literal, got $other")
-    }))
-    ext.injectFunction(fn("char_gram_hash", es => es(1) match {
-      case Literal(n: Int, IntegerType) => CharGramHash(es(0), n)
-      case other => throw new IllegalArgumentException(
-        s"char_gram_hash(text, n): n must be an integer literal, got $other")
-    }))
+    ext.injectFunction(fn("shingle_hash",
+      es => ShingleHash(es(0), intLit(es(1), "shingle_hash(words, k): k"))))
+    ext.injectFunction(fn("char_gram_hash",
+      es => CharGramHash(es(0), intLit(es(1), "char_gram_hash(text, n): n"))))
     // ECMAScript toFixed (the WOW wire-format rounding) for SQL callers
-    ext.injectFunction(fn("js_to_fixed", es => es(1) match {
-      case Literal(d: Int, IntegerType) => JsToFixed(es(0), d)
-      case other => throw new IllegalArgumentException(
-        s"js_to_fixed(x, d): d must be an integer literal, got $other")
-    }))
+    ext.injectFunction(fn("js_to_fixed",
+      es => JsToFixed(es(0), intLit(es(1), "js_to_fixed(x, d): d"))))
     // ECMAScript Number::toString (raw-number serialization, e.g. the
     // wire's unformatted humidity field)
     ext.injectFunction(fn("js_number_str", es => JsNumberString(es.head),
@@ -82,23 +87,19 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Variadic: token_mask(text, replacement, entity...) /
     // token_match_count(text, entity...) — entities are string literals
     // (they parameterize the generated code, like shingle_hash's k).
-    def strLit(e: Expression, fname: String): String = e match {
-      case Literal(s: UTF8String, StringType) => s.toString
-      case other => throw new IllegalArgumentException(
-        s"$fname: entity/replacement arguments must be string literals, got $other")
-    }
+    val entityArgs = "entity/replacement arguments"
     ext.injectFunction((FunctionIdentifier("token_mask"),
       new ExpressionInfo("graft", "token_mask"),
       (es: Seq[Expression]) => {
         require(es.length >= 3, "token_mask(text, replacement, entity...)")
-        TokenMask(es.head, es.drop(2).map(strLit(_, "token_mask")),
-          strLit(es(1), "token_mask"))
+        TokenMask(es.head, es.drop(2).map(strLit(_, s"token_mask: $entityArgs")),
+          strLit(es(1), s"token_mask: $entityArgs"))
       }))
     ext.injectFunction((FunctionIdentifier("token_match_count"),
       new ExpressionInfo("graft", "token_match_count"),
       (es: Seq[Expression]) => {
         require(es.length >= 2, "token_match_count(text, entity...)")
-        TokenMatchCount(es.head, es.tail.map(strLit(_, "token_match_count")))
+        TokenMatchCount(es.head, es.tail.map(strLit(_, s"token_match_count: $entityArgs")))
       }))
     // Multi-table hyperplane LSH bucket ids for SQL callers:
     // lsh_buckets(emb, tables, bits, dim[, stride_bits]) — the plane
@@ -116,17 +117,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (es: Seq[Expression]) => {
         require(es.length == 4 || es.length == 5,
           "lsh_buckets(emb, tables, bits, dim[, stride_bits])")
-        def intLit(e: Expression, what: String): Int = e match {
-          case Literal(i: Int, IntegerType) => i
-          case other => throw new IllegalArgumentException(
-            s"lsh_buckets: $what must be an integer literal, got $other")
-        }
-        val tables = intLit(es(1), "tables")
-        val bits = intLit(es(2), "bits")
-        val dim = intLit(es(3), "dim")
+        val tables = intLit(es(1), "lsh_buckets: tables")
+        val bits = intLit(es(2), "lsh_buckets: bits")
+        val dim = intLit(es(3), "lsh_buckets: dim")
         val planes =
           if (es.length == 5) {
-            val stride = intLit(es(4), "stride_bits")
+            val stride = intLit(es(4), "lsh_buckets: stride_bits")
             require(bits <= stride,
               s"lsh_buckets: bits ($bits) must be <= stride_bits ($stride)")
             val ps = graft.operators.Similarity.planes(tables, stride, dim)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 import graft.sources.Tables
@@ -16,6 +17,17 @@ import graft.sources.Tables
   */
 object DedupQueries {
 
+  /** The DuckDB shingles every text-dedup oracle starts from: CTE `sh0`,
+    * the distinct 3-word shingles of each document with at least 3
+    * non-empty words. */
+  private val shingleCtes =
+    """WITH w AS (
+      |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS words
+      |  FROM documents),
+      |sh0 AS (
+      |  SELECT doc_id, unnest(list_distinct(list_transform(
+      |    range(1, len(words) - 1), i -> array_to_string(words[i:i+2], ' ')))) AS shingle
+      |  FROM w WHERE len(words) >= 3)""".stripMargin
 
   /** Shared prelude for the exact-Jaccard oracles. Mirrors
     * [[Dedup.ngramJaccardPairs]] exactly, INCLUDING the stop-shingle
@@ -24,14 +36,7 @@ object DedupQueries {
     * oracle must keep identical semantics on any corpus, not just ones
     * where the guard is a no-op. */
   private val shinglesSql =
-    """WITH w AS (
-      |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS words
-      |  FROM documents),
-      |sh0 AS (
-      |  SELECT doc_id, unnest(list_distinct(list_transform(
-      |    range(1, len(words) - 1),
-      |    i -> array_to_string(words[i:i+2], ' ')))) AS shingle
-      |  FROM w WHERE len(words) >= 3),
+    s"""$shingleCtes,
       |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM sh0),
       |hot AS (
       |  SELECT shingle FROM sh0 CROSS JOIN nd
@@ -72,17 +77,11 @@ object DedupQueries {
     * pass only PRUNES the exact join's probe side; false positives are
     * removed by the join, and a bloom has no false negatives). */
   private[operators] val decontamSql =
-    """WITH w AS (
-      |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS words
-      |  FROM documents),
-      |sh AS (
-      |  SELECT doc_id, unnest(list_distinct(list_transform(
-      |    range(1, len(words) - 1), i -> array_to_string(words[i:i+2], ' ')))) AS shingle
-      |  FROM w WHERE len(words) >= 3),
-      |bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 23 = 0),
+    s"""$shingleCtes,
+      |bench AS (SELECT DISTINCT shingle FROM sh0 WHERE doc_id % 23 = 0),
       |per AS (
       |  SELECT s.doc_id, count(*) AS n_shingles, count(b.shingle) AS n_hits
-      |  FROM sh s LEFT JOIN bench b USING (shingle)
+      |  FROM sh0 s LEFT JOIN bench b USING (shingle)
       |  WHERE s.doc_id % 23 <> 0
       |  GROUP BY 1)
       |SELECT d.doc_id,
@@ -105,13 +104,7 @@ object DedupQueries {
     * spelling probes the same stored artifacts through the catalog. All
     * three are result-identical to this one batch SQL by construction. */
   private[operators] val incrementalSql =
-    """WITH w AS (
-      |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS words
-      |  FROM documents),
-      |sh0 AS (
-      |  SELECT doc_id, unnest(list_distinct(list_transform(
-      |    range(1, len(words) - 1), i -> array_to_string(words[i:i+2], ' ')))) AS shingle
-      |  FROM w WHERE len(words) >= 3),
+    s"""$shingleCtes,
       |cs0 AS (SELECT * FROM sh0 WHERE doc_id % 10 <> 0),
       |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM cs0),
       |hot AS (
@@ -137,6 +130,52 @@ object DedupQueries {
       |SELECT bid AS doc_id, cid AS dup_of, inter, n_batch, n_corpus,
       |       round(jac * 1e6) / 1e6 AS jaccard
       |FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin
+
+  /** Benchmark decontamination: `decontaminate(corpus, benchmark, id,
+    * text)` over every 23rd doc as the benchmark and the rest as corpus. */
+  private def decontamQ(name: String)(
+      decontaminate: (DataFrame, DataFrame, String, String) => DataFrame): Q =
+    Q(name,
+      (s, dir) => {
+        val docs = Tables.documents(s, dir)
+        decontaminate(
+            docs.filter(col("doc_id") % 23 =!= 0),
+            docs.filter(col("doc_id") % 23 === 0), "doc_id", "text")
+          .select(col("doc_id"), col("n_shingles"), col("n_hits"),
+            r6(col("contam_frac")).as("contam_frac"), col("contaminated"))
+          .orderBy("doc_id")
+      },
+      Some(decontamSql))
+
+  /** The stored near-dup index over the 90 % corpus (doc_id % 10 != 0)
+    * that dedup_incremental, its stream and sql_neardup_probe share:
+    * whichever runs first builds, the others validate and load. */
+  private[operators] def incrementalIndex(s: SparkSession, dir: String,
+                                          docs: DataFrame): Dedup.NearDupIndex =
+    Dedup.nearDupIndexIfAbsent(
+      docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text",
+      Dedup.nearDupIndexDir(s, dir))
+
+  /** A near-dup probe's output: each batch doc's best corpus match. */
+  private def nearDupOut(probed: DataFrame): DataFrame =
+    probed.select(col("doc_id"), col("dup_of"), col("inter"),
+      col("n_batch"), col("n_corpus"), r6(col("jaccard")).as("jaccard"))
+
+  /** The stored embed index over the 90 % corpus (vec_id % 10 != 0)
+    * that dedup_embed_incremental, its stream and sql_embed_probe share. */
+  private[operators] def embedIncrementalIndex(s: SparkSession, dir: String,
+                                               e: DataFrame): Dedup.EmbedDupIndex =
+    Dedup.embedDupIndexIfAbsent(
+      e.filter(col("vec_id") % 10 =!= 0), "vec_id", "embedding",
+      Seq("label"), Dedup.embedDupIndexDir(s, dir))
+
+  /** An embed probe's output: each batch vector's best blocked match. */
+  private def embedDupOut(probed: DataFrame): DataFrame =
+    probed.select(col("vec_id"), col("dup_of"), col("label"),
+      r6(col("cos")).as("cosine"))
+
+  private[operators] def embedVectors(s: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(s, dir).select("vec_id", "label", "embedding")
 
   val all: Seq[Q] = Seq(
     // Exact dedup with a deterministic keeper (earliest row per key) — the
@@ -280,17 +319,7 @@ object DedupQueries {
     // 23rd doc). The benchmark side collapses to a broadcast set of
     // shingle hashes — one corpus scan, one per-doc-count shuffle, no
     // self-join (see Dedup.decontaminate for the 100 TB shape).
-    Q("docs_decontam",
-      (s, dir) => {
-        val docs = Tables.documents(s, dir)
-        Dedup.decontaminate(
-            docs.filter(col("doc_id") % 23 =!= 0),
-            docs.filter(col("doc_id") % 23 === 0), "doc_id", "text")
-          .select(col("doc_id"), col("n_shingles"), col("n_hits"),
-            r6(col("contam_frac")).as("contam_frac"), col("contaminated"))
-          .orderBy("doc_id")
-      },
-      Some(decontamSql)),
+    decontamQ("docs_decontam")(Dedup.decontaminate(_, _, _, _)),
 
     // The same decontamination for the regime where even the benchmark's
     // DISTINCT shingle-hash set is past the broadcast threshold: a Bloom
@@ -299,17 +328,7 @@ object DedupQueries {
     // shuffle equi-join sees only the bloom-positive shingles. Output is
     // bit-identical to docs_decontam (no false negatives; the exact join
     // removes false positives), so both share one DuckDB oracle.
-    Q("docs_decontam_bloom",
-      (s, dir) => {
-        val docs = Tables.documents(s, dir)
-        Dedup.decontaminateBloom(
-            docs.filter(col("doc_id") % 23 =!= 0),
-            docs.filter(col("doc_id") % 23 === 0), "doc_id", "text")
-          .select(col("doc_id"), col("n_shingles"), col("n_hits"),
-            r6(col("contam_frac")).as("contam_frac"), col("contaminated"))
-          .orderBy("doc_id")
-      },
-      Some(decontamSql)),
+    decontamQ("docs_decontam_bloom")(Dedup.decontaminateBloom(_, _, _, _)),
 
     // Incremental dedup: every 10th doc arrives as a "new batch" and is
     // checked for near-dups against the remaining 90% "corpus" — the
@@ -325,12 +344,8 @@ object DedupQueries {
     Q("dedup_incremental",
       (s, dir) => {
         val docs = Tables.documents(s, dir)
-        val ix = Dedup.nearDupIndexIfAbsent(
-          docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text",
-          Dedup.nearDupIndexDir(s, dir))
-        Dedup.probeNearDups(ix, docs.filter(col("doc_id") % 10 === 0), "text")
-          .select(col("doc_id"), col("dup_of"), col("inter"),
-            col("n_batch"), col("n_corpus"), r6(col("jaccard")).as("jaccard"))
+        val ix = incrementalIndex(s, dir, docs)
+        nearDupOut(Dedup.probeNearDups(ix, docs.filter(col("doc_id") % 10 === 0), "text"))
           .orderBy("doc_id")
       },
       Some(incrementalSql)),
@@ -349,21 +364,16 @@ object DedupQueries {
       (s, dir) => {
         import graft.streaming.WeatherStream
         val docs = Tables.documents(s, dir)
-        // shares dedup_incremental's STORED index dir: whichever runs
-        // first builds, the other validates + loads — a long-running
-        // ingest restarts its probe loop without ever re-shingling the
-        // corpus (the stored-artifact contract; at 100 TB the difference
-        // between O(batch) and O(corpus) per restart)
-        val ix = Dedup.nearDupIndexIfAbsent(
-          docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text",
-          Dedup.nearDupIndexDir(s, dir))
+        // shares dedup_incremental's STORED index: a long-running ingest
+        // restarts its probe loop without ever re-shingling the corpus
+        // (the stored-artifact contract; at 100 TB the difference between
+        // O(batch) and O(corpus) per restart)
+        val ix = incrementalIndex(s, dir, docs)
         val input = WeatherStream.chunkedFileFeedDF(
           docs.filter(col("doc_id") % 10 === 0).select("doc_id", "text"),
           "doc_id", WeatherStream.stagingDir("dedup_inc_stream", dir))
         WeatherStream.drain(input.df, "dedup_incremental_stream",
-          WeatherStream.PerBatch(b => Dedup.probeNearDups(ix, b, "text")
-            .select(col("doc_id"), col("dup_of"), col("inter"),
-              col("n_batch"), col("n_corpus"), r6(col("jaccard")).as("jaccard"))),
+          WeatherStream.PerBatch(b => nearDupOut(Dedup.probeNearDups(ix, b, "text"))),
           input)
           .orderBy("doc_id")
       },
@@ -420,10 +430,8 @@ object DedupQueries {
           Dedup.nearDupAppend(corpus.filter(col("doc_id") % 3 === 0), ixDir)
           Dedup.nearDupCompact(s, ixDir)
         }
-        Dedup.probeNearDups(Dedup.nearDupIndexLoad(s, ixDir),
-            docs.filter(col("doc_id") % 10 === 0), "text")
-          .select(col("doc_id"), col("dup_of"), col("inter"),
-            col("n_batch"), col("n_corpus"), r6(col("jaccard")).as("jaccard"))
+        nearDupOut(Dedup.probeNearDups(Dedup.nearDupIndexLoad(s, ixDir),
+            docs.filter(col("doc_id") % 10 === 0), "text"))
           .orderBy("doc_id")
       },
       None),
@@ -450,7 +458,7 @@ object DedupQueries {
     // same-label pair, quadratic per block.
     Q("dedup_embed",
       (s, dir) => {
-        val e = Tables.embeddings(s, dir).select("vec_id", "label", "embedding")
+        val e = embedVectors(s, dir)
         Dedup.embedPairsBanded(e, "vec_id", "embedding", Seq("label"), 0.35)
           .select(col("v1"), col("v2"), col("label"), r6(col("cos")).as("cosine"))
           .orderBy("v1", "v2")
@@ -479,13 +487,9 @@ object DedupQueries {
     // pinned in DedupSpec.
     Q("dedup_embed_incremental",
       (s, dir) => {
-        val e = Tables.embeddings(s, dir).select("vec_id", "label", "embedding")
-        val ix = Dedup.embedDupIndexIfAbsent(
-          e.filter(col("vec_id") % 10 =!= 0), "vec_id", "embedding",
-          Seq("label"), Dedup.embedDupIndexDir(s, dir))
-        Dedup.probeEmbedDups(ix, e.filter(col("vec_id") % 10 === 0), -1.0)
-          .select(col("vec_id"), col("dup_of"), col("label"),
-            r6(col("cos")).as("cosine"))
+        val e = embedVectors(s, dir)
+        val ix = embedIncrementalIndex(s, dir, e)
+        embedDupOut(Dedup.probeEmbedDups(ix, e.filter(col("vec_id") % 10 === 0), -1.0))
           .orderBy("vec_id")
       },
       Some(embedIncrementalSql)),
@@ -506,17 +510,13 @@ object DedupQueries {
     StreamQ("dedup_embed_incremental_stream",
       (s, dir) => {
         import graft.streaming.WeatherStream
-        val e = Tables.embeddings(s, dir).select("vec_id", "label", "embedding")
-        val ix = Dedup.embedDupIndexIfAbsent(
-          e.filter(col("vec_id") % 10 =!= 0), "vec_id", "embedding",
-          Seq("label"), Dedup.embedDupIndexDir(s, dir))
+        val e = embedVectors(s, dir)
+        val ix = embedIncrementalIndex(s, dir, e)
         val input = WeatherStream.chunkedFileFeedDF(
           e.filter(col("vec_id") % 10 === 0), "vec_id",
           WeatherStream.stagingDir("embed_inc_stream", dir))
         WeatherStream.drain(input.df, "dedup_embed_incremental_stream",
-          WeatherStream.PerBatch(b => Dedup.probeEmbedDups(ix, b, -1.0)
-            .select(col("vec_id"), col("dup_of"), col("label"),
-              r6(col("cos")).as("cosine"))),
+          WeatherStream.PerBatch(b => embedDupOut(Dedup.probeEmbedDups(ix, b, -1.0))),
           input)
           .orderBy("vec_id")
       },
@@ -530,8 +530,7 @@ object DedupQueries {
     // check; the gauge arithmetic is pinned in DedupSpec.
     Q("dedup_embed_index_stats",
       (s, dir) => {
-        val e = Tables.embeddings(s, dir).select("vec_id", "label", "embedding")
-        val corpus = e.filter(col("vec_id") % 10 =!= 0)
+        val corpus = embedVectors(s, dir).filter(col("vec_id") % 10 =!= 0)
         val ixDir = Dedup.embedDupIndexDir(s, dir + "#eappend")
         if (!Dedup.embedDupValid(corpus, "vec_id", "embedding", Seq("label"), ixDir)) {
           Dedup.embedDupIndexWrite(corpus.filter(col("vec_id") % 2 === 1),
@@ -557,7 +556,7 @@ object DedupQueries {
     // scale, not just by the spec twin.
     Q("dedup_embed_index_compact",
       (s, dir) => {
-        val e = Tables.embeddings(s, dir).select("vec_id", "label", "embedding")
+        val e = embedVectors(s, dir)
         val corpus = e.filter(col("vec_id") % 10 =!= 0)
         val ixDir = Dedup.embedDupIndexDir(s, dir + "#ecompact")
         if (!Dedup.embedDupValid(corpus, "vec_id", "embedding", Seq("label"), ixDir)) {
@@ -567,39 +566,36 @@ object DedupQueries {
           Dedup.embedDupAppend(corpus.filter(col("vec_id") % 3 === 0), ixDir)
           Dedup.embedDupCompact(s, ixDir)
         }
-        Dedup.probeEmbedDups(Dedup.embedDupIndexLoad(s, ixDir),
-            e.filter(col("vec_id") % 10 === 0), -1.0)
-          .select(col("vec_id"), col("dup_of"), col("label"),
-            r6(col("cos")).as("cosine"))
+        embedDupOut(Dedup.probeEmbedDups(Dedup.embedDupIndexLoad(s, ixDir),
+            e.filter(col("vec_id") % 10 === 0), -1.0))
           .orderBy("vec_id")
       },
       Some(embedCompactSql)),
   )
 
-  /** Generated DuckDB twin of [[Dedup.embedPairsBanded]] (4 bands ×
-    * dynamic bits over the shared fixed-seed hyperplanes): the plane
-    * constants are spliced as shortest-round-trip double literals — both
-    * engines parse them to the identical bit pattern, and both compute
-    * the same left-to-right dot fold, so sign bits, band buckets,
-    * candidates and the verified cosine all match exactly. The bit count
-    * reproduces [[Dedup.embedBits]]'s integer law from count(*) (nb CTE),
-    * so the oracle tracks the engine's knob at ANY corpus size, not just
-    * the driver's. */
-  /** Shared generator pieces for the banded-LSH oracles (embedBandedSql
-    * and embedIncrementalSql): (bitsCase, bandCols, bandCase) SQL
-    * fragments over an `e(embedding)` source CTE and an `nb(bits)` CTE —
-    * both oracles must band IDENTICALLY to the engine's shared
-    * [[Dedup.embedSigs]]/[[Dedup.embedPairsBanded]] plane stride. */
-  private def embedSigPieces(bands: Int, dim: Int, occ: Long)
-      : (String, String, String) = {
-    val bitsMax = Dedup.EmbedBitsMax
+  /** The banded-LSH CTEs every embed oracle starts from, generated to
+    * band IDENTICALLY to the engine's shared [[Dedup.embedSigs]] /
+    * [[Dedup.embedPairsBanded]] plane stride: `e` (the finite vectors,
+    * failing loudly on a dimension other than the engine's), `nb` (the
+    * bit count, [[Dedup.embedBits]]'s integer law as a generated CASE
+    * chain over count(*) of `nbSource`), `sig` (per-band sign bits) and
+    * `banded` (one row per vector and band). The plane constants are
+    * spliced as shortest-round-trip double literals — both engines parse
+    * them to the identical bit pattern and compute the same
+    * left-to-right dot fold, so sign bits and band buckets match
+    * exactly. Derived from the SAME named constants the engine defaults
+    * to (Dedup.EmbedBands/EmbedDim/EmbedOccupancy/EmbedBitsMax): an
+    * engine-side default change tracks automatically or fails the oracle
+    * compare loudly — never a silent desync. */
+  private def embedBandedCtes(nbSource: String): String = {
+    val (bands, dim, occ, bitsMax) =
+      (Dedup.EmbedBands, Dedup.EmbedDim, Dedup.EmbedOccupancy, Dedup.EmbedBitsMax)
     val ps = Similarity.planes(bands, bitsMax, dim)
     def dotPlane(p: Int): String = {
       val lst = ps(p).mkString("[", ", ", "]")
       s"""list_sum(list_transform(range(1, ${dim + 1}),
          |        i -> CAST(embedding[i] AS DOUBLE) * (CAST($lst AS DOUBLE[]))[i]))""".stripMargin
     }
-    // Dedup.embedBits as a generated integer CASE chain
     val bitsCase = (1 until bitsMax)
       .map(b => s"WHEN nn <= ${occ << b} THEN $b").mkString(" ")
     def bandVal(b: Int): String = (0 until bitsMax).map { j =>
@@ -607,30 +603,17 @@ object DedupQueries {
     }.mkString("(", "\n      + ", ")")
     val bandCols = (0 until bands).map(b => s"${bandVal(b)} AS b$b").mkString(",\n    ")
     val bandCase = (0 until bands).map(b => s"WHEN $b THEN b$b").mkString(" ")
-    (bitsCase, bandCols, bandCase)
-  }
-
-  private lazy val embedBandedSql: String = {
-    // derived from the SAME named constants the engine defaults to
-    // (Dedup.EmbedBands/EmbedDim/EmbedOccupancy, like EmbedBitsMax
-    // already was): an engine-side default change tracks automatically
-    // or fails the oracle compare loudly — never a silent desync
-    val (bands, dim, occ) =
-      (Dedup.EmbedBands, Dedup.EmbedDim, Dedup.EmbedOccupancy)
-    val bitsMax = Dedup.EmbedBitsMax
-    val (bitsCase, bandCols, bandCase) = embedSigPieces(bands, dim, occ)
     s"""WITH e AS (
        |  SELECT vec_id, label,
        |    CASE WHEN len(embedding) = $dim THEN embedding
-       |         ELSE error('dedup_embed oracle: embedding dim <> $dim') END
+       |         ELSE error('embed dedup oracle: embedding dim <> $dim') END
        |      AS embedding
        |  FROM embeddings
        |  WHERE embedding IS NOT NULL
-       |    AND isfinite(list_sum(list_transform(range(1, len(embedding) + 1),
-       |          i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))))),
+       |    AND isfinite(${SimilarityQueries.dotSql("embedding", "embedding")})),
        |nb AS (
        |  SELECT CASE $bitsCase ELSE $bitsMax END AS bits
-       |  FROM (SELECT count(*) AS nn FROM e)),
+       |  FROM (SELECT count(*) AS nn FROM $nbSource)),
        |sig AS (
        |  SELECT vec_id, label,
        |    $bandCols
@@ -638,7 +621,16 @@ object DedupQueries {
        |banded AS (
        |  SELECT vec_id, label, bi.band_idx,
        |    CASE bi.band_idx $bandCase END AS band_val
-       |  FROM sig CROSS JOIN (SELECT unnest(${(0 until bands).mkString("[", ", ", "]")}) AS band_idx) bi),
+       |  FROM sig CROSS JOIN (SELECT unnest(${(0 until bands).mkString("[", ", ", "]")}) AS band_idx) bi)""".stripMargin
+  }
+
+  /** Generated DuckDB twin of [[Dedup.embedPairsBanded]] (4 bands ×
+    * dynamic bits over the shared fixed-seed hyperplanes): candidates
+    * and the verified cosine match exactly. The bit count comes from the
+    * whole corpus, so the oracle tracks the engine's knob at ANY corpus
+    * size, not just the test corpus's. */
+  private lazy val embedBandedSql: String =
+    s"""${embedBandedCtes("e")},
        |cand AS (
        |  SELECT DISTINCT x.vec_id AS v1, y.vec_id AS v2, x.label
        |  FROM banded x JOIN banded y
@@ -650,48 +642,21 @@ object DedupQueries {
        |  FROM cand c JOIN e a ON a.vec_id = c.v1 JOIN e b ON b.vec_id = c.v2)
        |SELECT v1, v2, label, round(cos * 1e6) / 1e6 AS cosine
        |FROM p WHERE cos >= 0.35 ORDER BY v1, v2""".stripMargin
-  }
 
   /** Generated DuckDB twin of the STORED embed-index probe
     * ([[Dedup.embedDupIndexIfAbsent]] + [[Dedup.probeEmbedDups]], shared
-    * by dedup_embed_incremental and its streaming spelling): the same
-    * plane constants and fold order as [[embedBandedSql]], with two
-    * incremental-specific differences the engine makes — `bits` is
-    * FROZEN from the CORPUS count only (nb's nn filters to
-    * vec_id % 10 <> 0, mirroring the build-time freeze), and candidates
-    * are batch × corpus (no v1 < v2 self-pair rule). Best match per
-    * batch vector: row_number over (cos DESC, cid) on the RAW fold,
-    * rounding only in the output; NO cosine threshold (the registered
-    * report form — see the Q comment). */
-  /** nbWhere selects the BUILD corpus — the subset whose count froze the
-    * bit count at embedDupIndexWrite time: dedup_embed_incremental built
-    * on the full 90%; dedup_embed_index_compact built on its first third
-    * (the appends band with the SAME frozen bits, so only nb differs). */
-  private def embedIncrementalSqlFor(nbWhere: String): String = {
-    val (bands, dim, occ) =
-      (Dedup.EmbedBands, Dedup.EmbedDim, Dedup.EmbedOccupancy)
-    val bitsMax = Dedup.EmbedBitsMax
-    val (bitsCase, bandCols, bandCase) = embedSigPieces(bands, dim, occ)
-    s"""WITH e AS (
-       |  SELECT vec_id, label,
-       |    CASE WHEN len(embedding) = $dim THEN embedding
-       |         ELSE error('embed incremental-family oracle: embedding dim <> $dim') END
-       |      AS embedding
-       |  FROM embeddings
-       |  WHERE embedding IS NOT NULL
-       |    AND isfinite(list_sum(list_transform(range(1, len(embedding) + 1),
-       |          i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))))),
-       |nb AS (
-       |  SELECT CASE $bitsCase ELSE $bitsMax END AS bits
-       |  FROM (SELECT count(*) AS nn FROM e WHERE $nbWhere)),
-       |sig AS (
-       |  SELECT vec_id, label,
-       |    $bandCols
-       |  FROM e CROSS JOIN nb),
-       |banded AS (
-       |  SELECT vec_id, label, bi.band_idx,
-       |    CASE bi.band_idx $bandCase END AS band_val
-       |  FROM sig CROSS JOIN (SELECT unnest(${(0 until bands).mkString("[", ", ", "]")}) AS band_idx) bi),
+    * by dedup_embed_incremental and its streaming spelling): the banding
+    * of [[embedBandedSql]], with two incremental-specific differences the
+    * engine makes — `bits` is FROZEN from the BUILD corpus count only
+    * (`nbWhere` selects it: dedup_embed_incremental built on the full
+    * 90%, dedup_embed_index_compact on its first third, and the appends
+    * band with the SAME frozen bits), and candidates are batch × corpus
+    * (no v1 < v2 self-pair rule). Best match per batch vector:
+    * row_number over (cos DESC, cid) on the RAW fold, rounding only in
+    * the output; NO cosine threshold (the registered report form — see
+    * the Q comment). */
+  private def embedIncrementalSqlFor(nbWhere: String): String =
+    s"""${embedBandedCtes(s"e WHERE $nbWhere")},
        |cand AS (
        |  SELECT DISTINCT y.vec_id AS bid, x.vec_id AS cid, y.label
        |  FROM banded y JOIN banded x
@@ -709,7 +674,6 @@ object DedupQueries {
        |SELECT bid AS vec_id, cid AS dup_of, label,
        |  round(cos * 1e6) / 1e6 AS cosine
        |FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin
-  }
 
   private[operators] lazy val embedIncrementalSql: String =
     embedIncrementalSqlFor("vec_id % 10 <> 0")

@@ -14,16 +14,12 @@ import graft.sources.Tables
   */
 object EmbeddingQueries {
 
+  import SimilarityQueries.{distSqSql, dotSql, maxAbsSql}
+
   private val K = 5
   private val KmK = 8      // k-means clusters
   private val KmIters = 2  // unrolled Lloyd iterations (oracle size ∝ iters)
   private val Dim = 64     // embeddings table vector width
-
-  /** DuckDB twin of [[graft.expressions.VecDistSq]] — same left-to-right
-    * fold over (aᵢ−bᵢ)², so distances are bit-identical. */
-  private def distSqSql(v: String, c: String): String =
-    s"""list_sum(list_transform(range(1, ${Dim + 1}),
-       |      i -> (CAST($v[i] AS DOUBLE) - $c[i]) * (CAST($v[i] AS DOUBLE) - $c[i])))""".stripMargin
 
   /** Generated unrolled-iteration twin of [[Embeddings.kmeans]]: c0 =
     * smallest-id seeds, then per iteration an assignment CTE (argmin by
@@ -72,16 +68,10 @@ object EmbeddingQueries {
     b.toString
   }
 
-  /** DuckDB twin of [[graft.expressions.VecMaxAbs]] (order-independent
-    * max, exact both engines). */
-  private def maxAbsSql(v: String): String =
-    s"list_max(list_transform($v, x -> abs(CAST(x AS DOUBLE))))"
-
   private lazy val normalizeOracle: String =
-    """WITH n AS (
+    s"""WITH n AS (
       |  SELECT vec_id, embedding,
-      |    sqrt(list_sum(list_transform(range(1, len(embedding) + 1),
-      |      j -> CAST(embedding[j] AS DOUBLE) * CAST(embedding[j] AS DOUBLE)))) AS norm
+      |    sqrt(${dotSql("embedding", "embedding")}) AS norm
       |  FROM embeddings),
       |x AS (SELECT vec_id, norm, embedding,
       |        unnest(range(1, len(embedding) + 1)) AS i
@@ -107,26 +97,15 @@ object EmbeddingQueries {
     * per vector, far inside double's 2⁵³ range), so the cosine is
     * bit-identical across engines and fold orders — THIS is the
     * oracle-checkable ANN variant (IVF/LSH are sketch-family, rows-only). */
-  private lazy val knnI8Oracle: String =
-    s"""WITH z AS (
+  private lazy val knnI8Oracle: String = SimilarityQueries.knnSql(
+    s"""z AS (
        |  SELECT vec_id, embedding, ${maxAbsSql("embedding")} AS mx
        |  FROM embeddings),
        |v AS (SELECT vec_id,
        |        list_transform(embedding, x -> round(CAST(x AS DOUBLE) *
        |          (CASE WHEN mx = 0 THEN 0.0 ELSE 127.0 / mx END))) AS emb
        |      FROM z),
-       |q AS (SELECT vec_id AS q_id, emb AS q_emb FROM v WHERE vec_id % 50 = 0),
-       |c AS (SELECT vec_id AS neighbor_id, emb AS c_emb FROM v),
-       |r AS (SELECT q_id, neighbor_id,
-       |        ${SimilarityQueries.cosineSql("q_emb", "c_emb")} AS cos
-       |      FROM c JOIN q ON q_id <> neighbor_id),
-       |k AS (SELECT q_id, neighbor_id, cos,
-       |        row_number() OVER (PARTITION BY q_id
-       |                           ORDER BY cos DESC, neighbor_id) AS rank
-       |      FROM r)
-       |SELECT q_id, CAST(rank AS INTEGER) AS rank, neighbor_id,
-       |  round(cos * 1e6) / 1e6 AS cosine
-       |FROM k WHERE rank <= $K ORDER BY q_id, rank""".stripMargin
+       |""".stripMargin, "v", "emb")
 
   val all: Seq[Q] = Seq(
     // L2 normalization, exploded to scalar (id, norm, i, u) rows so the
@@ -156,15 +135,8 @@ object EmbeddingQueries {
 
     // Exact top-k cosine over int8-quantized vectors (the 4×-memory ANN
     // path at 100 TB); same output contract as sim_knn.
-    Q("sim_knn_i8",
-      (s, dir) => {
-        val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-        Embeddings.knnI8(e, e.filter(col("vec_id") % 50 === 0), K)
-          .select(col("q_id"), col("rank"), col("neighbor_id"),
-            r6(col("cos")).as("cosine"))
-          .orderBy("q_id", "rank")
-      },
-      Some(knnI8Oracle)),
+    SimilarityQueries.knnQ("sim_knn_i8", Some(knnI8Oracle))(
+      (_, _, e, q) => Embeddings.knnI8(e, q, K)),
 
     // Deterministic Lloyd k-means (seed = smallest ids, tie-broken
     // argmin, DECIMAL centroid means) — every iteration reproduced in

@@ -16,8 +16,8 @@ object Scale {
     * `buckets` reducers. Semantics are identical to `big.join(small, key)`
     * for 1:N joins (small side unique per key) — proven in ScaleSpec.
     *
-    * MEASURED guidance (SKEW.md, `graft.SkewBench`: half of all fact
-    * rows on one key, non-broadcastable dim): prefer AQE's skew-join.
+    * MEASURED guidance (SKEW.md: half of all fact rows on one key,
+    * non-broadcastable dim): prefer AQE's skew-join.
     * At 2×10⁸ fact rows AQE beats salting OUTRIGHT — 7.6 s (defaults) /
     * 6.3 s (tuned thresholds) vs salting's 23.2 s — because once the
     * hot partition crosses `skewedPartitionThresholdInBytes` (256 MB

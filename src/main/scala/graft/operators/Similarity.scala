@@ -16,8 +16,8 @@ import graft.functions.VectorFunctions._
   * then each serving batch scans only the probed cells) and `lshKnn`
   * (multi-table random-hyperplane buckets). At 100 TB the index artifacts
   * live on distributed storage next to the corpus and the probe-side scan
-  * is pruned to nprobe/nlist of the data (see KnnScaleBench for the
-  * measured exact-vs-probe crossover).
+  * is pruned to nprobe/nlist of the data (RECALL.md's serving benchmark
+  * has the measured exact-vs-probe crossover).
   */
 object Similarity {
 
@@ -602,7 +602,7 @@ object Similarity {
     * assignment pass (the same native [[graft.expressions.ArgMinDistSq]]
     * codegen the build uses) plus the batch's own bytes. Centroids drift
     * from the union's true k-means as batches accumulate, and the drift
-    * cost is MEASURED (IvfAppendBench drift mode, RECALL.md): up to an
+    * cost is MEASURED (RECALL.md, recall drift under appends): up to an
     * appended fraction of 0.5 on same-distribution ingest, near-dup
     * recall@5 stays 1.000 at every installment and equals the
     * full-rebuild ceiling — cells get less tight, never wrong (the cell
@@ -967,7 +967,7 @@ object Similarity {
   def ivfIndexDir(s: SparkSession, tag: String): String = Ivf.dirFor(s, tag)
 
   /** Self-contained IVF approximate top-k (fit + probe in one plan, no
-    * persisted artifacts) — the parameter-sweep form RecallBench drives;
+    * persisted artifacts) — the parameter-sweep form of RECALL.md's curves;
     * production serving uses [[ivfBuild]]/[[ivfProbe]]. Identical output
     * to building then probing the same corpus (SimilaritySpec pins the
     * round-trip; both paths share [[ivfFit]] incl. its deterministic

@@ -11,22 +11,43 @@ object SimilarityQueries {
 
   private val K = 5
 
-  /** DuckDB twin of [[graft.expressions.VecCosine]]: three sequential
-    * left-to-right double sums over the common prefix (list_sum folds in
-    * list order), then the identical d/sqrt(na*nb) — bit-identical to the
-    * codegen'd loop, which is what makes exact-cosine queries oracleable. */
+  /** The DuckDB twins of the codegen'd vector folds
+    * ([[graft.expressions]]), one set for every oracle: `list_sum`
+    * folds in list order, so a left-to-right double sum over the common
+    * prefix of `a` and `b` is bit-identical to the expressions' loops. */
+  private def prefixSum(a: String, b: String, term: String): String =
+    s"list_sum(list_transform(range(1, least(len($a), len($b)) + 1), i -> $term))"
+  private def d(v: String) = s"CAST($v[i] AS DOUBLE)"
+
+  /** Twin of [[graft.expressions.VecDot]]. */
+  private[operators] def dotSql(a: String, b: String): String =
+    prefixSum(a, b, s"${d(a)} * ${d(b)}")
+
+  /** Twin of [[graft.expressions.VecDistSq]]. */
+  private[operators] def distSqSql(a: String, b: String): String =
+    prefixSum(a, b, s"(${d(a)} - ${d(b)}) * (${d(a)} - ${d(b)})")
+
+  /** Twin of [[graft.expressions.VecMaxAbs]] (order-independent max,
+    * exact in both engines). */
+  private[operators] def maxAbsSql(v: String): String =
+    s"list_max(list_transform($v, x -> abs(CAST(x AS DOUBLE))))"
+
+  /** Twin of [[graft.expressions.VecCosine]]: three sums over the common
+    * prefix of `a` and `b`, then the identical d/sqrt(na*nb), which is
+    * what makes exact-cosine queries oracleable. */
   private[operators] def cosineSql(a: String, b: String): String = {
-    val n = s"least(len($a), len($b))"
-    def s2(x: String, y: String) =
-      s"list_sum(list_transform(range(1, $n + 1), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
+    def s2(x: String, y: String) = prefixSum(a, b, s"${d(x)} * ${d(y)}")
     s"""CASE WHEN ${s2(a, a)} = 0 OR ${s2(b, b)} = 0 THEN 0.0
        |     ELSE ${s2(a, b)} / sqrt(${s2(a, a)} * ${s2(b, b)}) END""".stripMargin
   }
 
-  private lazy val knnOracle: String =
-    s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb
-       |           FROM embeddings WHERE vec_id % 50 = 0),
-       |c AS (SELECT vec_id AS neighbor_id, embedding AS c_emb FROM embeddings),
+  /** The kNN oracle over the vectors `src(vec_id, emb)`, which `ctes`
+    * (each followed by a comma) may define: every 50th vector's top K by
+    * cosine, ties on neighbor_id. */
+  private[operators] def knnSql(ctes: String, src: String, emb: String): String =
+    s"""WITH ${ctes}q AS (SELECT vec_id AS q_id, $emb AS q_emb
+       |           FROM $src WHERE vec_id % 50 = 0),
+       |c AS (SELECT vec_id AS neighbor_id, $emb AS c_emb FROM $src),
        |r AS (SELECT q_id, neighbor_id,
        |        ${cosineSql("q_emb", "c_emb")} AS cos
        |      FROM c JOIN q ON q_id <> neighbor_id),
@@ -38,52 +59,63 @@ object SimilarityQueries {
        |  round(cos * 1e6) / 1e6 AS cosine
        |FROM k WHERE rank <= $K ORDER BY q_id, rank""".stripMargin
 
-  /** The output columns of every kNN query: rank within the query
-    * vector, cosine rounded to 6 places. */
-  private def knnCols = Seq(col("q_id"), col("rank"), col("neighbor_id"),
-    r6(col("cos")).as("cosine"))
+  private lazy val knnOracle = knnSql("", "embeddings", "embedding")
 
-  /** The stored IVF index that `sim_knn_ivf_append`, `sim_ivf_stats` and
-    * `sim_knn_stream` share by its `#append` tag: built on the 90 % of
-    * `e` with vec_id % 10 != 0, then the other 10 % appended, gated by
-    * ivfValid(full corpus). Whichever of the three runs first builds and
-    * the others reuse; one recipe, so they can never disagree on the
-    * index state and rebuild the shared dir in turn. */
-  private def appendedIndex(s: SparkSession, dir: String, e: DataFrame): String = {
-    val idx = Similarity.ivfIndexDir(s, dir + "#append")
+  private def vectors(s: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(s, dir).select("vec_id", "embedding")
+
+  /** A kNN registration: `topK(s, dir, corpus, queries)` ranks every
+    * 50th vector's neighbours as (q_id, rank, neighbor_id, cos); the
+    * output is rank within the query vector and cosine rounded to 6
+    * places. */
+  private[operators] def knnQ(name: String, oracle: Option[String] = None, streaming: Boolean = false)(
+      topK: (SparkSession, String, DataFrame, DataFrame) => DataFrame): Q =
+    Q(name, (s, dir) => {
+        val e = vectors(s, dir)
+        topK(s, dir, e, e.filter(col("vec_id") % 50 === 0))
+          .select(col("q_id"), col("rank"), col("neighbor_id"), r6(col("cos")).as("cosine"))
+          .orderBy("q_id", "rank")
+      }, oracle, streaming)
+
+  private def probe(s: SparkSession, idx: String, queries: DataFrame): DataFrame =
+    Similarity.ivfProbe(s, idx, queries, K, nprobe = 2)
+
+  /** The stored IVF index under `tag`: built on the 90 % of `e` with
+    * vec_id % 10 != 0, then grown by `grow` to the whole corpus. One
+    * ivfValid(full corpus) gates the recipe, so session re-runs go
+    * probe-only. */
+  private def grownIndex(s: SparkSession, dir: String, e: DataFrame, tag: String)(
+      grow: String => Unit): String = {
+    val idx = Similarity.ivfIndexDir(s, dir + tag)
     if (!Similarity.ivfValid(e, idx, nlist = 16)) {
       Similarity.ivfBuild(e.filter(col("vec_id") % 10 =!= 0), idx, nlist = 16)
-      Similarity.ivfAppend(e.filter(col("vec_id") % 10 === 0), idx)
+      grow(idx)
     }
     idx
   }
+
+  private def appendRest(e: DataFrame)(idx: String): Unit =
+    Similarity.ivfAppend(e.filter(col("vec_id") % 10 === 0), idx)
+
+  /** The stored IVF index that `sim_knn_ivf_append`, `sim_ivf_stats` and
+    * `sim_knn_stream` share by its `#append` tag: the other 10 % appended
+    * in one batch. Whichever of the three runs first builds and the
+    * others reuse, so they never rebuild the shared dir in turn. */
+  private def appendedIndex(s: SparkSession, dir: String, e: DataFrame): String =
+    grownIndex(s, dir, e, "#append")(appendRest(e))
 
   val all: Seq[Q] = Seq(
     // Exact brute-force top-k: the correctness baseline every ANN variant
     // is measured against (recall in SimilaritySpec). Oracle-checkable
     // because the cosine is bit-identical (see cosineSql) and rank ties
     // break on neighbor_id in both engines.
-    Q("sim_knn",
-      (s, dir) => {
-        val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-        Similarity.knn(e, e.filter(col("vec_id") % 50 === 0), K)
-          .select(knnCols: _*)
-          .orderBy("q_id", "rank")
-      },
-      Some(knnOracle)),
+    knnQ("sim_knn", Some(knnOracle))((_, _, e, q) => Similarity.knn(e, q, K)),
 
     // Same contract through the bounded TopKAggregator buffer (map-side
     // partial top-k; shuffles k rows per partition×query instead of every
     // pair — the 100 TB ranking path). Shares sim_knn's oracle verbatim:
     // the two formulations must be indistinguishable in output.
-    Q("sim_knn_topk",
-      (s, dir) => {
-        val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-        Similarity.knnTopK(e, e.filter(col("vec_id") % 50 === 0), K)
-          .select(knnCols: _*)
-          .orderBy("q_id", "rank")
-      },
-      Some(knnOracle)),
+    knnQ("sim_knn_topk", Some(knnOracle))((_, _, e, q) => Similarity.knnTopK(e, q, K)),
 
     // IVF variant through the PERSISTED index artifacts: offline fit
     // (codebook + cell-partitioned corpus written once per session as
@@ -91,18 +123,13 @@ object SimilarityQueries {
     // back (partition-pruned cell scan). The registered query IS the
     // serving path: after the first invocation builds the index, every
     // re-run measures probe-only cost — exactly the fit-once/probe-many
-    // contract a 100 TB deployment runs (KnnScaleBench measures the
-    // crossover where this beats exact).
-    Q("sim_knn_ivf",
-      (s, dir) => {
-        val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-        val idx = Similarity.ivfIndexDir(s, dir)
-        Similarity.ivfBuildIfAbsent(e, idx, nlist = 16)
-        Similarity.ivfProbe(s, idx, e.filter(col("vec_id") % 50 === 0), K, nprobe = 2)
-          .select(knnCols: _*)
-          .orderBy("q_id", "rank")
-      },
-      None),
+    // contract a 100 TB deployment runs (RECALL.md's serving benchmark has
+    // the crossover where this beats exact).
+    knnQ("sim_knn_ivf") { (s, dir, e, q) =>
+      val idx = Similarity.ivfIndexDir(s, dir)
+      Similarity.ivfBuildIfAbsent(e, idx, nlist = 16)
+      probe(s, idx, q)
+    },
 
     // The same stored index served from its int8 artifact alone
     // (cells_i8.parquet: quantized codes + per-vector scale, ~4× smaller
@@ -110,19 +137,14 @@ object SimilarityQueries {
     // stored codes) ranked directly over the pruned cells — no float-cell
     // read anywhere (the corpus scale cancels in cosine; a two-stage
     // coarse+rescore split measured slower, see Similarity.ivfProbeI8).
-    // This is the IO-bound 100 TB serving tier; KnnScaleBench measures it
-    // against the float probe and exact. Sketch-family → rows-only check;
+    // This is the IO-bound 100 TB serving tier; RECALL.md's serving
+    // benchmark measures it against the float probe and exact. Sketch-family → rows-only check;
     // recall and round-trip are pinned in SimilaritySpec.
-    Q("sim_knn_ivf_i8",
-      (s, dir) => {
-        val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-        val idx = Similarity.ivfIndexDir(s, dir)
-        Similarity.ivfBuildIfAbsent(e, idx, nlist = 16)
-        Similarity.ivfProbeI8(s, idx, e.filter(col("vec_id") % 50 === 0), K, nprobe = 2)
-          .select(knnCols: _*)
-          .orderBy("q_id", "rank")
-      },
-      None),
+    knnQ("sim_knn_ivf_i8") { (s, dir, e, q) =>
+      val idx = Similarity.ivfIndexDir(s, dir)
+      Similarity.ivfBuildIfAbsent(e, idx, nlist = 16)
+      Similarity.ivfProbeI8(s, idx, q, K, nprobe = 2)
+    },
 
     // Incremental maintenance of the stored index: the corpus arrives in
     // two installments — build on the first, ivfAppend the second
@@ -136,15 +158,7 @@ object SimilarityQueries {
     // rows are first-class: they are found and they find. Sketch family →
     // rows-only check; assignment ≡ stored-codebook argmin, manifest
     // additivity, and appended-row recall are pinned in SimilaritySpec.
-    Q("sim_knn_ivf_append",
-      (s, dir) => {
-        val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-        val idx = appendedIndex(s, dir, e)
-        Similarity.ivfProbe(s, idx, e.filter(col("vec_id") % 50 === 0), K, nprobe = 2)
-          .select(knnCols: _*)
-          .orderBy("q_id", "rank")
-      },
-      None),
+    knnQ("sim_knn_ivf_append")((s, dir, e, q) => probe(s, appendedIndex(s, dir, e), q)),
 
     // STREAMING ingest into the stored index: the same 90/10 split as
     // sim_knn_ivf_append, but the arriving 10% lands through a
@@ -156,21 +170,12 @@ object SimilarityQueries {
     // equal — the seventh streaming ≡ batch fact). ivfValid(union) gates
     // the build+ingest, so session re-runs go probe-only. Sketch family
     // → rows-only check.
-    StreamQ("sim_knn_ivf_stream",
-      (s, dir) => {
-        val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-        val idx = Similarity.ivfIndexDir(s, dir + "#stream")
-        if (!Similarity.ivfValid(e, idx, nlist = 16)) {
-          Similarity.ivfBuild(e.filter(col("vec_id") % 10 =!= 0), idx, nlist = 16)
-          graft.streaming.IvfIngest.ingestChunked(
-            e.filter(col("vec_id") % 10 === 0), "vec_id", idx,
-            graft.streaming.WeatherStream.stagingDir("ivf_ingest", dir))
-        }
-        Similarity.ivfProbe(s, idx, e.filter(col("vec_id") % 50 === 0), K, nprobe = 2)
-          .select(knnCols: _*)
-          .orderBy("q_id", "rank")
-      },
-      None),
+    knnQ("sim_knn_ivf_stream", streaming = true) { (s, dir, e, q) =>
+      val idx = grownIndex(s, dir, e, "#stream")(graft.streaming.IvfIngest.ingestChunked(
+        e.filter(col("vec_id") % 10 === 0), "vec_id", _,
+        graft.streaming.WeatherStream.stagingDir("ivf_ingest", dir)))
+      probe(s, idx, q)
+    },
 
     // COMPACTION of the appended index: the same 90/10 split as
     // sim_knn_ivf_append, but the arriving 10% lands as THREE separate
@@ -182,21 +187,14 @@ object SimilarityQueries {
     // pinned IDENTICAL across the fold (SimilaritySpec), and COMPACT.md
     // carries the measured file-count / probe-wall deltas at the 2×10⁶
     // decade. Sketch family → rows-only check.
-    Q("sim_knn_ivf_compact",
-      (s, dir) => {
-        val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-        val idx = Similarity.ivfIndexDir(s, dir + "#compact")
-        if (!Similarity.ivfValid(e, idx, nlist = 16)) {
-          Similarity.ivfBuild(e.filter(col("vec_id") % 10 =!= 0), idx, nlist = 16)
-          Seq(0, 10, 20).foreach(r =>
-            Similarity.ivfAppend(e.filter(col("vec_id") % 30 === r), idx))
-          Similarity.ivfCompact(s, idx)
-        }
-        Similarity.ivfProbe(s, idx, e.filter(col("vec_id") % 50 === 0), K, nprobe = 2)
-          .select(knnCols: _*)
-          .orderBy("q_id", "rank")
-      },
-      None),
+    knnQ("sim_knn_ivf_compact") { (s, dir, e, q) =>
+      val idx = grownIndex(s, dir, e, "#compact") { idx =>
+        Seq(0, 10, 20).foreach(r =>
+          Similarity.ivfAppend(e.filter(col("vec_id") % 30 === r), idx))
+        Similarity.ivfCompact(s, idx)
+      }
+      probe(s, idx, q)
+    },
 
     // INDEX HEALTH GAUGE: the one-row operational report over the stored
     // appended index — manifest staleness (appended_fraction) PLUS the
@@ -213,8 +211,7 @@ object SimilarityQueries {
     // SimilaritySpec.
     Q("sim_ivf_stats",
       (s, dir) => {
-        val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-        val idx = appendedIndex(s, dir, e)
+        val idx = appendedIndex(s, dir, vectors(s, dir))
         // topCells = 2 at nlist = 16 (the default 20 would cover every
         // cell of this small codebook and report a constant 1.0; a
         // deployment at nlist = √n keeps the default)
@@ -236,21 +233,14 @@ object SimilarityQueries {
     // the probe's collected cell set and join side always read the same
     // arrived rows. Replay-idempotent (each micro-batch overwrites its
     // own batch=<id> output dir). Sketch family → rows-only check.
-    StreamQ("sim_knn_stream",
-      (s, dir) => {
-        import graft.streaming.WeatherStream
-        val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-        val idx = appendedIndex(s, dir, e)
-        val input = WeatherStream.chunkedFileFeedDF(
-          e.filter(col("vec_id") % 50 === 0), "vec_id",
-          WeatherStream.stagingDir("knn_stream", dir))
-        WeatherStream.drain(input.df, "sim_knn_stream",
-          WeatherStream.PerBatch(b => Similarity.ivfProbe(s, idx, b, K, nprobe = 2)
-            .select(knnCols: _*)),
-          input)
-          .orderBy("q_id", "rank")
-      },
-      None),
+    knnQ("sim_knn_stream", streaming = true) { (s, dir, e, q) =>
+      import graft.streaming.WeatherStream
+      val idx = appendedIndex(s, dir, e)
+      val input = WeatherStream.chunkedFileFeedDF(
+        q, "vec_id", WeatherStream.stagingDir("knn_stream", dir))
+      WeatherStream.drain(input.df, "sim_knn_stream",
+        WeatherStream.PerBatch(probe(s, idx, _)), input)
+    },
 
     // HOT-CELL PARTIAL REFIT of the stored index — the maintenance loop
     // the sim_ivf_stats gauge opens, closed: build on 90%, append the
@@ -269,29 +259,15 @@ object SimilarityQueries {
     // the family. Sketch family → rows-only check; row-multiset
     // preservation, probe recall vs exact, census improvement, and the
     // crash/CAS seams are pinned in SimilaritySpec.
-    Q("sim_knn_ivf_refit",
-      (s, dir) => {
-        val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-        val idx = Similarity.ivfIndexDir(s, dir + "#refit")
-        if (!Similarity.ivfValid(e, idx, nlist = 16)) {
-          Similarity.ivfBuild(e.filter(col("vec_id") % 10 =!= 0), idx, nlist = 16)
-          Similarity.ivfAppend(e.filter(col("vec_id") % 10 === 0), idx)
-          Similarity.ivfRefit(s, idx, capFactor = 1.0, maxSplit = 4)
-        }
-        Similarity.ivfProbe(s, idx, e.filter(col("vec_id") % 50 === 0), K, nprobe = 2)
-          .select(knnCols: _*)
-          .orderBy("q_id", "rank")
-      },
-      None),
+    knnQ("sim_knn_ivf_refit") { (s, dir, e, q) =>
+      val idx = grownIndex(s, dir, e, "#refit") { idx =>
+        appendRest(e)(idx)
+        Similarity.ivfRefit(s, idx, capFactor = 1.0, maxSplit = 4)
+      }
+      probe(s, idx, q)
+    },
 
     // Approximate top-k via multi-table hyperplane LSH (8 tables × 8 bits).
-    Q("sim_knn_lsh",
-      (s, dir) => {
-        val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-        Similarity.lshKnn(e, e.filter(col("vec_id") % 50 === 0), K)
-          .select(knnCols: _*)
-          .orderBy("q_id", "rank")
-      },
-      None),
+    knnQ("sim_knn_lsh")((_, _, e, q) => Similarity.lshKnn(e, q, K)),
   )
 }

@@ -23,28 +23,36 @@ import graft.sources.Tables
   * order (see [[SimilarityQueries.cosineSql]]).
   */
 object SqlQueries {
+  import SimilarityQueries.{cosineSql, distSqSql, dotSql, maxAbsSql}
 
-  /** DuckDB list-fold twins over the common prefix, matching the
-    * codegen'd expressions' left-to-right double accumulation. */
-  private def s2(a: String, b: String): String = {
-    val n = s"least(len($a), len($b))"
-    s"list_sum(list_transform(range(1, $n + 1), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
-  }
-  private def distSq(a: String, b: String): String = {
-    val n = s"least(len($a), len($b))"
-    s"list_sum(list_transform(range(1, $n + 1), " +
-      s"i -> (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE))))"
-  }
-  private def maxAbs(v: String): String =
-    s"list_max(list_transform($v, x -> abs(CAST(x AS DOUBLE))))"
+  /** The SQL-text as-of join over the sides of
+    * [[WindowQueries.asofSides]]: `marker` (asof_le backward, asof_ge
+    * forward, asof_near nearest) picks the direction the AsofSqlRule
+    * rewrite gives the merge AsofJoinExec. */
+  private def sqlAsofQ(name: String, marker: String, oracle: String): Q =
+    Q(name,
+      (s, dir) => {
+        Tables.events(s, dir).createOrReplaceTempView("graft_events")
+        s.sql(
+          s"""WITH p AS (SELECT event_id, user_id, ts FROM graft_events
+             |           WHERE event_type = 'purchase'),
+             |     c AS (SELECT user_id AS c_user, ts AS c_ts,
+             |                  max(event_id) AS click_id
+             |           FROM graft_events WHERE event_type = 'click'
+             |           GROUP BY 1, 2)
+             |SELECT p.event_id, p.user_id, unix_micros(p.ts) AS ts_us, click_id
+             |FROM p LEFT JOIN c ON p.user_id = c_user AND $marker(c_ts, p.ts)
+             |ORDER BY event_id""".stripMargin)
+      },
+      Some(oracle))
 
   private val oracle: String =
     s"""WITH q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0)
        |SELECT vec_id,
-       |  round(${maxAbs("embedding")} * 1e6) / 1e6 AS max_abs,
-       |  round(${s2("embedding", "embedding")} * 1e6) / 1e6 AS norm_sq,
-       |  round(${SimilarityQueries.cosineSql("embedding", "q_emb")} * 1e6) / 1e6 AS cos_q0,
-       |  round(${distSq("embedding", "q_emb")} * 1e6) / 1e6 AS dist_q0
+       |  round(${maxAbsSql("embedding")} * 1e6) / 1e6 AS max_abs,
+       |  round(${dotSql("embedding", "embedding")} * 1e6) / 1e6 AS norm_sq,
+       |  round(${cosineSql("embedding", "q_emb")} * 1e6) / 1e6 AS cos_q0,
+       |  round(${distSqSql("embedding", "q_emb")} * 1e6) / 1e6 AS dist_q0
        |FROM embeddings CROSS JOIN q
        |ORDER BY vec_id""".stripMargin
 
@@ -76,54 +84,14 @@ object SqlQueries {
     // AsofJoinExec (one shuffle + sort per side, no range-match blow-up
     // — GraftExtensionsSpec pins the physical plan node). A production
     // SQL caller gets the 100 TB merge shape with no Scala anywhere.
-    Q("sql_asof",
-      (s, dir) => {
-        Tables.events(s, dir).createOrReplaceTempView("graft_events")
-        s.sql(
-          """WITH p AS (SELECT event_id, user_id, ts FROM graft_events
-            |           WHERE event_type = 'purchase'),
-            |     c AS (SELECT user_id AS c_user, ts AS c_ts,
-            |                  max(event_id) AS click_id
-            |           FROM graft_events WHERE event_type = 'click'
-            |           GROUP BY 1, 2)
-            |SELECT p.event_id, p.user_id, unix_micros(p.ts) AS ts_us, click_id
-            |FROM p LEFT JOIN c ON p.user_id = c_user AND asof_le(c_ts, p.ts)
-            |ORDER BY event_id""".stripMargin)
-      },
-      Some("""SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us, c.click_id
-             |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-             |ASOF LEFT JOIN (SELECT user_id, ts, max(event_id) AS click_id
-             |                FROM events WHERE event_type = 'click'
-             |                GROUP BY 1, 2) c
-             |  ON p.user_id = c.user_id AND p.ts >= c.ts
-             |ORDER BY p.event_id""".stripMargin)),
+    sqlAsofQ("sql_asof", "asof_le", WindowQueries.asofSql(">=")),
 
     // Forward as-of in pure SQL text: the asof_ge marker plans the same
     // merge AsofJoinExec in the Forward direction (FIRST click at or
     // after each purchase). DuckDB's ASOF JOIN with the inequality
     // reversed (p.ts <= c.ts) is the exact same semantics, so the family
     // keeps a hash oracle.
-    Q("sql_asof_fwd",
-      (s, dir) => {
-        Tables.events(s, dir).createOrReplaceTempView("graft_events")
-        s.sql(
-          """WITH p AS (SELECT event_id, user_id, ts FROM graft_events
-            |           WHERE event_type = 'purchase'),
-            |     c AS (SELECT user_id AS c_user, ts AS c_ts,
-            |                  max(event_id) AS click_id
-            |           FROM graft_events WHERE event_type = 'click'
-            |           GROUP BY 1, 2)
-            |SELECT p.event_id, p.user_id, unix_micros(p.ts) AS ts_us, click_id
-            |FROM p LEFT JOIN c ON p.user_id = c_user AND asof_ge(c_ts, p.ts)
-            |ORDER BY event_id""".stripMargin)
-      },
-      Some("""SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us, c.click_id
-             |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-             |ASOF LEFT JOIN (SELECT user_id, ts, max(event_id) AS click_id
-             |                FROM events WHERE event_type = 'click'
-             |                GROUP BY 1, 2) c
-             |  ON p.user_id = c.user_id AND p.ts <= c.ts
-             |ORDER BY p.event_id""".stripMargin)),
+    sqlAsofQ("sql_asof_fwd", "asof_ge", WindowQueries.asofSql("<=")),
 
     // Nearest as-of in pure SQL text: asof_near picks the closer of the
     // backward/forward matches, ties to the backward one — the ONE
@@ -131,39 +99,23 @@ object SqlQueries {
     // no nearest ASOF, so the oracle composes its backward and forward
     // ASOF joins and applies the identical tie rule over exact integer
     // microsecond gaps.
-    Q("sql_asof_near",
-      (s, dir) => {
-        Tables.events(s, dir).createOrReplaceTempView("graft_events")
-        s.sql(
-          """WITH p AS (SELECT event_id, user_id, ts FROM graft_events
-            |           WHERE event_type = 'purchase'),
-            |     c AS (SELECT user_id AS c_user, ts AS c_ts,
-            |                  max(event_id) AS click_id
-            |           FROM graft_events WHERE event_type = 'click'
-            |           GROUP BY 1, 2)
-            |SELECT p.event_id, p.user_id, unix_micros(p.ts) AS ts_us, click_id
-            |FROM p LEFT JOIN c ON p.user_id = c_user AND asof_near(c_ts, p.ts)
-            |ORDER BY event_id""".stripMargin)
-      },
-      Some("""WITH p AS (SELECT event_id, user_id, ts FROM events
-             |           WHERE event_type = 'purchase'),
-             |     c AS (SELECT user_id, ts, max(event_id) AS click_id
-             |           FROM events WHERE event_type = 'click' GROUP BY 1, 2),
-             |     b AS (SELECT p.event_id, epoch_us(c.ts) AS b_us,
-             |                  c.click_id AS b_id
-             |           FROM p ASOF LEFT JOIN c
-             |             ON p.user_id = c.user_id AND p.ts >= c.ts),
-             |     f AS (SELECT p.event_id, epoch_us(c.ts) AS f_us,
-             |                  c.click_id AS f_id
-             |           FROM p ASOF LEFT JOIN c
-             |             ON p.user_id = c.user_id AND p.ts <= c.ts)
-             |SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us,
-             |  CASE WHEN b_id IS NULL THEN f_id
-             |       WHEN f_id IS NULL THEN b_id
-             |       WHEN epoch_us(p.ts) - b_us <= f_us - epoch_us(p.ts) THEN b_id
-             |       ELSE f_id END AS click_id
-             |FROM p JOIN b USING (event_id) JOIN f USING (event_id)
-             |ORDER BY p.event_id""".stripMargin)),
+    sqlAsofQ("sql_asof_near", "asof_near",
+      s"""${WindowQueries.asofSidesSql},
+         |     b AS (SELECT p.event_id, epoch_us(c.ts) AS b_us,
+         |                  c.click_id AS b_id
+         |           FROM p ASOF LEFT JOIN c
+         |             ON p.user_id = c.user_id AND p.ts >= c.ts),
+         |     f AS (SELECT p.event_id, epoch_us(c.ts) AS f_us,
+         |                  c.click_id AS f_id
+         |           FROM p ASOF LEFT JOIN c
+         |             ON p.user_id = c.user_id AND p.ts <= c.ts)
+         |SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us,
+         |  CASE WHEN b_id IS NULL THEN f_id
+         |       WHEN f_id IS NULL THEN b_id
+         |       WHEN epoch_us(p.ts) - b_us <= f_us - epoch_us(p.ts) THEN b_id
+         |       ELSE f_id END AS click_id
+         |FROM p JOIN b USING (event_id) JOIN f USING (event_id)
+         |ORDER BY p.event_id""".stripMargin),
 
     // k-means-style cell assignment in pure SQL — the table-valued
     // argmin contract for the embedding family: cross-join the (small,
@@ -191,7 +143,7 @@ object SqlQueries {
       },
       Some(s"""WITH cb AS (SELECT vec_id AS cell, embedding AS ctr
               |            FROM embeddings WHERE vec_id < 8),
-              |d AS (SELECT vec_id, cell, ${distSq("embedding", "ctr")} AS d
+              |d AS (SELECT vec_id, cell, ${distSqSql("embedding", "ctr")} AS d
               |      FROM embeddings CROSS JOIN cb),
               |r AS (SELECT vec_id, cell, d,
               |        row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
@@ -281,7 +233,7 @@ object SqlQueries {
 
     // The stored near-dup index probed in PURE SQL TEXT — the dedup
     // family's last Scala-only surface closed. The Scala side only
-    // ensures the STORED index exists (Dedup.nearDupIndexIfAbsent —
+    // ensures the STORED index exists (DedupQueries.incrementalIndex —
     // shares dedup_incremental's index dir: whichever runs first builds,
     // and this index never carries append roots, so the base table IS
     // the whole corpus side); everything else is spark.sql: the injected
@@ -299,10 +251,8 @@ object SqlQueries {
       (s, dir) => {
         val docs = Tables.documents(s, dir)
         docs.createOrReplaceTempView("graft_documents")
+        DedupQueries.incrementalIndex(s, dir, docs)
         val ixDir = Dedup.nearDupIndexDir(s, dir)
-        Dedup.nearDupIndexIfAbsent(
-          docs.filter(org.apache.spark.sql.functions.col("doc_id") % 10 =!= 0),
-          "doc_id", "text", ixDir)
         val tbl = Dedup.NearDup.table(ixDir)
         s.sql(
           s"""WITH bw AS (
@@ -337,7 +287,7 @@ object SqlQueries {
     // The stored EMBED near-dup index probed in PURE SQL TEXT — the
     // semantic-dedup family's last Scala-only surface closed, completing
     // what sql_neardup_probe did for the text family. The Scala side
-    // only ensures the STORED index exists (Dedup.embedDupIndexIfAbsent
+    // only ensures the STORED index exists (DedupQueries.embedIncrementalIndex
     // — shares dedup_embed_incremental's index dir: whichever runs first
     // builds, and this index never carries append roots, so the base
     // table IS the whole corpus side) and splices the manifest's FROZEN
@@ -357,12 +307,10 @@ object SqlQueries {
     // bit-identical in DuckDB).
     Q("sql_embed_probe",
       (s, dir) => {
-        val emb = Tables.embeddings(s, dir).select("vec_id", "label", "embedding")
+        val emb = DedupQueries.embedVectors(s, dir)
         emb.createOrReplaceTempView("graft_embeddings")
+        DedupQueries.embedIncrementalIndex(s, dir, emb)
         val ixDir = Dedup.embedDupIndexDir(s, dir)
-        Dedup.embedDupIndexIfAbsent(
-          emb.filter(org.apache.spark.sql.functions.col("vec_id") % 10 =!= 0),
-          "vec_id", "embedding", Seq("label"), ixDir)
         val m = Dedup.EmbedDup.read(ixDir).getOrElse(sys.error(
           s"sql_embed_probe: no manifest under $ixDir"))
         val tbl = Dedup.EmbedDup.table(ixDir)

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core._
 import graft.sources.Tables
@@ -26,6 +28,56 @@ object TextQueries {
     "de" -> Seq("der", "die", "und", "das", "nicht", "ist", "ein"),
     "fr" -> Seq("le", "la", "les", "des", "est", "une", "dans"))
 
+  /** The quality signals over a document's non-empty space-split words —
+    * word, stopword and distinct-word counts — and the bounded [0,1]
+    * score combined from them: one definition for text_quality,
+    * docs_pipeline and docs_curate. */
+  private final case class Quality(nWords: Column, nStop: Column, nUniq: Column) {
+    def ratio(c: Column): Column = c.cast("double") / nWords
+    def score: Column = least(nWords.cast("double") / 100.0, lit(1.0)) * 0.4 +
+      (lit(1.0) - ratio(nStop)) * 0.3 + ratio(nUniq) * 0.3
+  }
+  private def quality(): Quality = {
+    val words = filter(split(col("text"), " "), w => w =!= "")
+    Quality(size(words),
+      size(filter(words, w => w.isin(Stopwords.map(x => x: Any): _*))),
+      size(array_distinct(words)))
+  }
+
+  /** [[quality]] in DuckDB: `n_words`, `n_stop` and `n_uniq` next to
+    * `cols`, per document. */
+  private def qualitySignalsSql(cols: String): String =
+    s"""(SELECT $cols,
+       |  CAST(len(list_filter(string_split(text, ' '), w -> w <> '')) AS INTEGER) AS n_words,
+       |  CAST(len(list_filter(string_split(text, ' '), w -> w IN ($stopSqlList))) AS INTEGER) AS n_stop,
+       |  CAST(len(list_distinct(list_filter(string_split(text, ' '), w -> w <> ''))) AS INTEGER) AS n_uniq
+       |FROM documents)""".stripMargin
+
+  private val qualityScoreSql =
+    """least(CAST(n_words AS DOUBLE) / 100.0, 1.0) * 0.4
+      |  + (1.0 - CAST(n_stop AS DOUBLE) / n_words) * 0.3
+      |  + CAST(n_uniq AS DOUBLE) / n_words * 0.3""".stripMargin
+
+  /** Whitespace-token count (text_tokens' n_ws_tokens). */
+  private def wsTokens: Column = size(filter(split(col("text"), "\\s+"), w => w =!= ""))
+
+  /** The prep pipelines' filter: quality `q` >= 0.5, then the earliest
+    * doc_id per normalized-text hash (exact-dup removal). */
+  private def qualityKept(docs: DataFrame): DataFrame =
+    docs.withColumn("q", quality().score)
+      .filter(col("q") >= 0.5)
+      .withColumn("text_hash", md5(lower(trim(col("text"))).cast("binary")))
+      .withColumn("rn", row_number().over(Window.partitionBy("text_hash").orderBy("doc_id")))
+      .filter(col("rn") === 1)
+
+  /** [[qualityKept]] in DuckDB over a `scored` CTE carrying `q`. */
+  private def keptSql(cols: String): String =
+    s"""kept AS (
+       |  SELECT $cols,
+       |    row_number() OVER (PARTITION BY md5(lower(trim(text)))
+       |                       ORDER BY doc_id) AS rn
+       |  FROM scored WHERE q >= 0.5)""".stripMargin
+
   val all: Seq[Q] = Seq(
     // Word-frequency stats: the explode → groupBy shape (REF has no aggs;
     // NS text analysis). Map-side partial aggregation keeps the shuffle at
@@ -50,7 +102,7 @@ object TextQueries {
       (s, dir) => Tables.documents(s, dir)
         .select(col("doc_id"),
           length(col("text")).as("n_chars"),
-          size(filter(split(col("text"), "\\s+"), w => w =!= "")).as("n_ws_tokens"),
+          wsTokens.as("n_ws_tokens"),
           size(regexp_extract_all(col("text"), lit("[a-z0-9]+|[^a-z0-9\\s]"), lit(0)))
             .as("n_re_tokens"),
           ceil(length(col("text")) / 4.0).as("n_bpe_est"))
@@ -107,33 +159,22 @@ object TextQueries {
     // bounded [0,1] score — the pre-training filter shape.
     Q("text_quality",
       (s, dir) => {
-        val words = filter(split(col("text"), " "), w => w =!= "")
-        val nWords = size(words)
-        val nStop = size(filter(words, w => w.isin(Stopwords.map(x => x: Any): _*)))
-        val nUniq = size(array_distinct(words))
+        val q = quality()
         Tables.documents(s, dir)
           .select(col("doc_id"),
-            nWords.as("n_words"),
-            r6(length(col("text")).cast("double") / nWords).as("avg_word_len"),
-            r6(nStop.cast("double") / nWords).as("stop_ratio"),
-            r6(nUniq.cast("double") / nWords).as("uniq_ratio"),
-            r6(least(nWords.cast("double") / 100.0, lit(1.0)) * 0.4
-              + (lit(1.0) - nStop.cast("double") / nWords) * 0.3
-              + nUniq.cast("double") / nWords * 0.3).as("quality"))
+            q.nWords.as("n_words"),
+            r6(q.ratio(length(col("text")))).as("avg_word_len"),
+            r6(q.ratio(q.nStop)).as("stop_ratio"),
+            r6(q.ratio(q.nUniq)).as("uniq_ratio"),
+            r6(q.score).as("quality"))
           .orderBy("doc_id")
       },
       Some(s"""SELECT doc_id, n_words,
               |  round(CAST(length(text) AS DOUBLE) / n_words, 6) AS avg_word_len,
               |  round(CAST(n_stop AS DOUBLE) / n_words, 6) AS stop_ratio,
               |  round(CAST(n_uniq AS DOUBLE) / n_words, 6) AS uniq_ratio,
-              |  round(least(CAST(n_words AS DOUBLE) / 100.0, 1.0) * 0.4
-              |    + (1.0 - CAST(n_stop AS DOUBLE) / n_words) * 0.3
-              |    + CAST(n_uniq AS DOUBLE) / n_words * 0.3, 6) AS quality
-              |FROM (SELECT doc_id, text,
-              |        CAST(len(list_filter(string_split(text, ' '), w -> w <> '')) AS INTEGER) AS n_words,
-              |        CAST(len(list_filter(string_split(text, ' '), w -> w IN ($stopSqlList))) AS INTEGER) AS n_stop,
-              |        CAST(len(list_distinct(list_filter(string_split(text, ' '), w -> w <> ''))) AS INTEGER) AS n_uniq
-              |      FROM documents)
+              |  round($qualityScoreSql, 6) AS quality
+              |FROM ${qualitySignalsSql("doc_id, text")}
               |ORDER BY doc_id""".stripMargin)),
 
     // Data-mixing accounting: per-source token mass, natural share, and
@@ -300,42 +341,13 @@ object TextQueries {
     // is the end-to-end shape a 100 TB corpus run uses, and it is fully
     // oracle-checked.
     Q("docs_pipeline",
-      (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        val words = filter(split(col("text"), " "), w => w =!= "")
-        val nWords = size(words)
-        val nStop = size(filter(words, w => w.isin(Stopwords.map(x => x: Any): _*)))
-        val nUniq = size(array_distinct(words))
-        val quality = least(nWords.cast("double") / 100.0, lit(1.0)) * 0.4 +
-          (lit(1.0) - nStop.cast("double") / nWords) * 0.3 +
-          nUniq.cast("double") / nWords * 0.3
-        val w = Window.partitionBy("text_hash").orderBy("doc_id")
-        Tables.documents(s, dir)
-          .withColumn("q", quality)
-          .filter(col("q") >= 0.5)
-          .withColumn("text_hash", md5(lower(trim(col("text"))).cast("binary")))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .select(col("doc_id"), col("lang"),
-            size(filter(split(col("text"), "\\s+"), x => x =!= "")).as("n_tokens"),
-            r6(col("q")).as("quality"))
-          .orderBy("doc_id")
-      },
+      (s, dir) => qualityKept(Tables.documents(s, dir))
+        .select(col("doc_id"), col("lang"), wsTokens.as("n_tokens"), r6(col("q")).as("quality"))
+        .orderBy("doc_id"),
       Some(s"""WITH scored AS (
-              |  SELECT doc_id, lang, text,
-              |    least(CAST(n_words AS DOUBLE) / 100.0, 1.0) * 0.4
-              |      + (1.0 - CAST(n_stop AS DOUBLE) / n_words) * 0.3
-              |      + CAST(n_uniq AS DOUBLE) / n_words * 0.3 AS q
-              |  FROM (SELECT doc_id, lang, text,
-              |          len(list_filter(string_split(text, ' '), w -> w <> '')) AS n_words,
-              |          len(list_filter(string_split(text, ' '), w -> w IN ($stopSqlList))) AS n_stop,
-              |          len(list_distinct(list_filter(string_split(text, ' '), w -> w <> ''))) AS n_uniq
-              |        FROM documents)),
-              |kept AS (
-              |  SELECT doc_id, lang, text, q,
-              |    row_number() OVER (PARTITION BY md5(lower(trim(text)))
-              |                       ORDER BY doc_id) AS rn
-              |  FROM scored WHERE q >= 0.5)
+              |  SELECT doc_id, lang, text, $qualityScoreSql AS q
+              |  FROM ${qualitySignalsSql("doc_id, lang, text")}),
+              |${keptSql("doc_id, lang, text, q")}
               |SELECT doc_id, lang,
               |  CAST(len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS INTEGER) AS n_tokens,
               |  round(q * 1e6) / 1e6 AS quality
@@ -351,25 +363,10 @@ object TextQueries {
     // composition is oracle-checked end-to-end too.
     Q("docs_curate",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        val words = filter(split(col("text"), " "), w => w =!= "")
-        val nWords = size(words)
-        val nStop = size(filter(words, w => w.isin(Stopwords.map(x => x: Any): _*)))
-        val nUniq = size(array_distinct(words))
-        val quality = least(nWords.cast("double") / 100.0, lit(1.0)) * 0.4 +
-          (lit(1.0) - nStop.cast("double") / nWords) * 0.3 +
-          nUniq.cast("double") / nWords * 0.3
-        val w = Window.partitionBy("text_hash").orderBy("doc_id")
-        val kept = Sampling.hashSplit(Tables.documents(s, dir), col("doc_id"),
+        val kept = qualityKept(Sampling.hashSplit(Tables.documents(s, dir), col("doc_id"),
             Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-          .filter(col("split") === "train")
-          .withColumn("q", quality)
-          .filter(col("q") >= 0.5)
-          .withColumn("text_hash", md5(lower(trim(col("text"))).cast("binary")))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .select(col("doc_id"), col("q"),
-            size(filter(split(col("text"), "\\s+"), x => x =!= "")).as("n_tokens"))
+          .filter(col("split") === "train"))
+          .select(col("doc_id"), col("q"), wsTokens.as("n_tokens"))
         Sampling.packBySize(kept, col("doc_id"), col("n_tokens"),
             nBuckets = 8, shardSize = 4096L)
           .select(col("doc_id"), col("n_tokens"), r6(col("q")).as("quality"),
@@ -380,24 +377,13 @@ object TextQueries {
         val t1 = Sampling.splitCuts(
           Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)).head
         s"""WITH scored AS (
-           |  SELECT doc_id, text,
-           |    least(CAST(n_words AS DOUBLE) / 100.0, 1.0) * 0.4
-           |      + (1.0 - CAST(n_stop AS DOUBLE) / n_words) * 0.3
-           |      + CAST(n_uniq AS DOUBLE) / n_words * 0.3 AS q
-           |  FROM (SELECT doc_id, text,
-           |          len(list_filter(string_split(text, ' '), w -> w <> '')) AS n_words,
-           |          len(list_filter(string_split(text, ' '), w -> w IN ($stopSqlList))) AS n_stop,
-           |          len(list_distinct(list_filter(string_split(text, ' '), w -> w <> ''))) AS n_uniq
-           |        FROM documents
-           |        WHERE ${Sampling.keyHash60Sql("doc_id", "split")} < $t1)),
-           |kept AS (
+           |  SELECT doc_id, text, $qualityScoreSql AS q
+           |  FROM ${qualitySignalsSql("doc_id, text")}
+           |  WHERE ${Sampling.keyHash60Sql("doc_id", "split")} < $t1),
+           |${keptSql("doc_id, text, q")},
+           |bucketed AS (
            |  SELECT doc_id, q,
            |    CAST(len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS BIGINT) AS n_tokens,
-           |    row_number() OVER (PARTITION BY md5(lower(trim(text)))
-           |                       ORDER BY doc_id) AS rn
-           |  FROM scored WHERE q >= 0.5),
-           |bucketed AS (
-           |  SELECT doc_id, q, n_tokens,
            |    CAST(${Sampling.keyHash60Sql("doc_id", "pack")} % 8 AS INTEGER) AS bucket
            |  FROM kept WHERE rn = 1),
            |packed AS (

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -51,6 +51,71 @@ object WindowQueries {
        |  count(*) AS n, ${dsumSql("value")} AS sum_value
        |FROM sess GROUP BY user_id, sid
        |ORDER BY user_id, session_start_us""".stripMargin
+
+  /** The window as-of spellings: each event's user-ordered frame, the
+    * click time a purchase looks for, and the purchases with `matched`,
+    * that time taken over the frame, as `name`. */
+  private def byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
+  private def clickUs = when(col("event_type") === "click", unix_micros(col("ts")))
+  private def windowAsof(events: DataFrame, name: String, matched: Column): DataFrame =
+    events.withColumn(name, matched)
+      .filter(col("event_type") === "purchase")
+      .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"), col(name))
+      .orderBy("event_id")
+
+  /** DuckDB twins of the backward (strictly prior) and forward (strictly
+    * later) click over the frame. */
+  private val prevClickSql =
+    """last_value(CASE WHEN event_type = 'click' THEN epoch_us(ts) END IGNORE NULLS)
+      |      OVER (PARTITION BY user_id ORDER BY ts, event_id
+      |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)""".stripMargin
+  private val nextClickSql =
+    """first_value(CASE WHEN event_type = 'click' THEN epoch_us(ts) END IGNORE NULLS)
+      |      OVER (PARTITION BY user_id ORDER BY ts, event_id
+      |            ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)""".stripMargin
+  private def windowAsofSql(name: String, matched: String): String =
+    s"""SELECT event_id, user_id, epoch_us(ts) AS ts_us, $name FROM (
+       |  SELECT event_id, user_id, ts, event_type,
+       |    $matched AS $name
+       |  FROM events)
+       |WHERE event_type = 'purchase'
+       |ORDER BY event_id""".stripMargin
+
+  /** The as-of family's two sides: purchases, and clicks reduced to ONE
+    * row per (user, ts), max click_id — "last write wins" — because
+    * neither AsofJoinExec nor DuckDB's ASOF JOIN defines which of several
+    * equal-time rows survives; the pre-aggregation makes the tie-break
+    * an explicit, engine-independent part of the query. */
+  private def asofSides(events: DataFrame): (DataFrame, DataFrame) = (
+    events.filter(col("event_type") === "purchase").select("event_id", "user_id", "ts"),
+    events.filter(col("event_type") === "click")
+      .groupBy("user_id", "ts")
+      .agg(max(col("event_id")).as("click_id")))
+
+  private def asofOut(joined: DataFrame): DataFrame =
+    joined.select(col("event_id"), col("user_id"),
+      unix_micros(col("ts")).as("ts_us"), col("r_click_id").as("click_id"))
+
+  /** [[asofSides]] as DuckDB CTEs `p` and `c`. */
+  private[operators] val asofSidesSql =
+    """WITH p AS (SELECT event_id, user_id, ts FROM events
+      |           WHERE event_type = 'purchase'),
+      |     c AS (SELECT user_id, ts, max(event_id) AS click_id
+      |           FROM events WHERE event_type = 'click' GROUP BY 1, 2)""".stripMargin
+
+  /** The as-of oracle: DuckDB's ASOF LEFT JOIN of the sides on
+    * `p.ts <cmp> c.ts` — `>=` the latest click at or before each
+    * purchase, `<=` the first at or after. */
+  private[operators] def asofSql(cmp: String): String =
+    s"""$asofSidesSql
+       |SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us, c.click_id
+       |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts $cmp c.ts
+       |ORDER BY p.event_id""".stripMargin
+
+  private val tumblingSql =
+    s"""SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS ws, event_type,
+       |  count(*) AS n, ${dsumSql("value")} AS sum_value
+       |FROM events GROUP BY 1, 2 ORDER BY ws, event_type""".stripMargin
 
   val all: Seq[Q] = Seq(
     Q("win_rank",
@@ -166,62 +231,26 @@ object WindowQueries {
     // at or before now"): for each purchase, the most recent strictly-prior
     // click by the same user.
     Q("join_asof",
-      (s, dir) => {
-        val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-          .rowsBetween(Window.unboundedPreceding, -1)
-        Tables.events(s, dir)
-          .withColumn("last_click_us",
-            last(when(col("event_type") === "click", unix_micros(col("ts"))), ignoreNulls = true)
-              .over(w))
-          .filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"),
-                  unix_micros(col("ts")).as("ts_us"), col("last_click_us"))
-          .orderBy("event_id")
-      },
-      Some("""SELECT event_id, user_id, epoch_us(ts) AS ts_us, last_click_us FROM (
-             |  SELECT event_id, user_id, ts, event_type,
-             |    last_value(CASE WHEN event_type = 'click' THEN epoch_us(ts) END IGNORE NULLS)
-             |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-             |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS last_click_us
-             |  FROM events)
-             |WHERE event_type = 'purchase'
-             |ORDER BY event_id""".stripMargin)),
+      (s, dir) => windowAsof(Tables.events(s, dir), "last_click_us",
+        last(clickUs, ignoreNulls = true).over(byUser.rowsBetween(Window.unboundedPreceding, -1))),
+      Some(windowAsofSql("last_click_us", prevClickSql))),
 
     // Forward as-of: the NEXT matching event at-or-after each probe row —
     // the mirrored frame (current row → unbounded following, first
     // non-null). Completes the merge-asof direction pair (pandas
     // direction='forward'); nearest = coalesce of both by smaller gap.
     Q("join_asof_fwd",
-      (s, dir) => {
-        val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-          .rowsBetween(1, Window.unboundedFollowing)
-        Tables.events(s, dir)
-          .withColumn("next_click_us",
-            first(when(col("event_type") === "click", unix_micros(col("ts"))), ignoreNulls = true)
-              .over(w))
-          .filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"),
-                  unix_micros(col("ts")).as("ts_us"), col("next_click_us"))
-          .orderBy("event_id")
-      },
-      Some("""SELECT event_id, user_id, epoch_us(ts) AS ts_us, next_click_us FROM (
-             |  SELECT event_id, user_id, ts, event_type,
-             |    first_value(CASE WHEN event_type = 'click' THEN epoch_us(ts) END IGNORE NULLS)
-             |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-             |            ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS next_click_us
-             |  FROM events)
-             |WHERE event_type = 'purchase'
-             |ORDER BY event_id""".stripMargin)),
+      (s, dir) => windowAsof(Tables.events(s, dir), "next_click_us",
+        first(clickUs, ignoreNulls = true).over(byUser.rowsBetween(1, Window.unboundedFollowing))),
+      Some(windowAsofSql("next_click_us", nextClickSql))),
 
     // Nearest as-of: closer of the previous and next match, ties to the
     // previous (pandas direction='nearest'). Both candidates come from
     // the same sorted window pass — no extra shuffle over join_asof.
     Q("join_asof_near",
       (s, dir) => {
-        val base = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        val wPrev = base.rowsBetween(Window.unboundedPreceding, -1)
-        val wNext = base.rowsBetween(1, Window.unboundedFollowing)
-        val clickUs = when(col("event_type") === "click", unix_micros(col("ts")))
+        val wPrev = byUser.rowsBetween(Window.unboundedPreceding, -1)
+        val wNext = byUser.rowsBetween(1, Window.unboundedFollowing)
         Tables.events(s, dir)
           .withColumn("prev_us", last(clickUs, ignoreNulls = true).over(wPrev))
           .withColumn("next_us", first(clickUs, ignoreNulls = true).over(wNext))
@@ -236,52 +265,32 @@ object WindowQueries {
           .select(col("event_id"), col("user_id"), col("ts_us"), col("near_click_us"))
           .orderBy("event_id")
       },
-      Some("""SELECT event_id, user_id, ts_us,
-             |  CASE WHEN prev_us IS NULL THEN next_us
-             |       WHEN next_us IS NULL THEN prev_us
-             |       WHEN ts_us - prev_us <= next_us - ts_us THEN prev_us
-             |       ELSE next_us END AS near_click_us
-             |FROM (
-             |  SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us,
-             |    last_value(CASE WHEN event_type = 'click' THEN epoch_us(ts) END IGNORE NULLS)
-             |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-             |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_us,
-             |    first_value(CASE WHEN event_type = 'click' THEN epoch_us(ts) END IGNORE NULLS)
-             |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-             |            ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS next_us
-             |  FROM events)
-             |WHERE event_type = 'purchase'
-             |ORDER BY event_id""".stripMargin)),
+      Some(s"""SELECT event_id, user_id, ts_us,
+              |  CASE WHEN prev_us IS NULL THEN next_us
+              |       WHEN next_us IS NULL THEN prev_us
+              |       WHEN ts_us - prev_us <= next_us - ts_us THEN prev_us
+              |       ELSE next_us END AS near_click_us
+              |FROM (
+              |  SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us,
+              |    $prevClickSql AS prev_us,
+              |    $nextClickSql AS next_us
+              |  FROM events)
+              |WHERE event_type = 'purchase'
+              |ORDER BY event_id""".stripMargin)),
 
     // The same as-of semantics through the custom merge operator
     // (graft.plans.AsofJoinPlan): one shuffle+sort per side, streamed
     // merge, no windowed row widening. Oracle: DuckDB's native ASOF JOIN
     // (inclusive <=, like this operator; join_asof above is the
-    // strictly-prior window formulation). The right side is reduced to
-    // ONE row per (key, time) first — max click_id, "last write wins" —
-    // because neither AsofJoinExec nor DuckDB's ASOF JOIN defines which
-    // of several equal-time rows survives; the pre-aggregation makes the
-    // tie-break an explicit, engine-independent part of the query.
+    // strictly-prior window formulation), over the sides asofSides
+    // reduces.
     Q("join_asof_custom",
       (s, dir) => {
-        val events = Tables.events(s, dir)
-        val purchases = events.filter(col("event_type") === "purchase")
-          .select("event_id", "user_id", "ts")
-        val clicks = events.filter(col("event_type") === "click")
-          .groupBy("user_id", "ts")
-          .agg(max(col("event_id")).as("click_id"))
-        Asof.join(purchases, clicks, "user_id", "ts")
-          .select(col("event_id"), col("user_id"),
-                  unix_micros(col("ts")).as("ts_us"), col("r_click_id").as("click_id"))
+        val (purchases, clicks) = asofSides(Tables.events(s, dir))
+        asofOut(Asof.join(purchases, clicks, "user_id", "ts"))
           .orderBy("event_id")
       },
-      Some("""SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us, c.click_id
-             |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-             |ASOF LEFT JOIN (SELECT user_id, ts, max(event_id) AS click_id
-             |                FROM events WHERE event_type = 'click'
-             |                GROUP BY 1, 2) c
-             |  ON p.user_id = c.user_id AND p.ts >= c.ts
-             |ORDER BY p.event_id""".stripMargin)),
+      Some(asofSql(">="))),
 
     // REF:O9/O23 — event-time tumbling window (1 hour), batch view. The
     // streaming surface uses the identical window() operator.
@@ -292,9 +301,7 @@ object WindowQueries {
         .select(unix_timestamp(col("window.start")).as("ws"),
                 col("event_type"), col("n"), col("sum_value"))
         .orderBy("ws", "event_type"),
-      Some(s"""SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS ws, event_type,
-              |  count(*) AS n, ${dsumSql("value")} AS sum_value
-              |FROM events GROUP BY 1, 2 ORDER BY ws, event_type""".stripMargin)),
+      Some(tumblingSql)),
 
     // win_tumbling as a STREAMING fact: WeatherStream.hourlyStats, the
     // identical window()+dsum, run as a watermarked query over the chunked
@@ -318,9 +325,7 @@ object WindowQueries {
           .filter(!(col("event_type") <=> "__sentinel"))
           .orderBy("ws", "event_type")
       },
-      Some(s"""SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS ws, event_type,
-              |  count(*) AS n, ${dsumSql("value")} AS sum_value
-              |FROM events GROUP BY 1, 2 ORDER BY ws, event_type""".stripMargin)),
+      Some(tumblingSql)),
 
     // STREAM-STREAM inner join: purchase stream ⋈ click stream on user
     // with an event-time range (click within the hour before the
@@ -406,32 +411,17 @@ object WindowQueries {
     StreamQ("join_asof_stream",
       (s, dir) => {
         import graft.streaming.WeatherStream
-        val events = Tables.events(s, dir)
-        val purchases = events.filter(col("event_type") === "purchase")
-          .select("event_id", "user_id", "ts")
-        // the dim snapshot: one row per (user, ts) with an explicit
-        // keeper (max click_id), computed ONCE and reused per micro-batch
-        val clicks = events.filter(col("event_type") === "click")
-          .groupBy("user_id", "ts")
-          .agg(max(col("event_id")).as("click_id"))
-          .localCheckpoint(true)
+        val (purchases, clickSide) = asofSides(Tables.events(s, dir))
+        // the dim snapshot, computed ONCE and reused per micro-batch
+        val clicks = clickSide.localCheckpoint(true)
         val input = WeatherStream.chunkedFileFeedDF(purchases, "ts",
           WeatherStream.stagingDir("asof_stream", dir))
         WeatherStream.drain(input.df, "join_asof_stream",
-          WeatherStream.PerBatch(b => Asof.join(b, clicks, "user_id", "ts")
-            .select(col("event_id"), col("user_id"),
-              unix_micros(col("ts")).as("ts_us"),
-              col("r_click_id").as("click_id"))),
+          WeatherStream.PerBatch(b => asofOut(Asof.join(b, clicks, "user_id", "ts"))),
           input)
           .orderBy("event_id")
       },
-      Some("""SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us, c.click_id
-             |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-             |ASOF LEFT JOIN (SELECT user_id, ts, max(event_id) AS click_id
-             |                FROM events WHERE event_type = 'click'
-             |                GROUP BY 1, 2) c
-             |  ON p.user_id = c.user_id AND p.ts >= c.ts
-             |ORDER BY p.event_id""".stripMargin)),
+      Some(asofSql(">="))),
 
     // Running top-k per key over a STREAM: StreamingTopK.runningTopK,
     // whose state is the same bounded TopKAggregator buffer batch ranking

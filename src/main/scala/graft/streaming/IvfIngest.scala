@@ -55,8 +55,9 @@ object IvfIngest {
     * full rebuild. Production passes `false`: the retained checkpoint
     * resumes exactly after the last committed micro-batch, which with
     * the sink's replay idempotence is the exactly-once contract
-    * (IvfIngestSpec pins that a reused checkpoint RESUMES — zero new
-    * appends on a re-run over an already-drained feed).
+    * (SimilaritySpec's `freshCheckpoint = false` re-run pins that a
+    * reused checkpoint RESUMES — zero new appends on a re-run over an
+    * already-drained feed).
     *
     * CAVEAT — with THIS chunked harness feed the resume guarantee holds
     * only within a single JVM/session: the feed caches its staged chunk

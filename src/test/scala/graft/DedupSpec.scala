@@ -236,7 +236,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   test("stored near-dup index: load-probe ≡ in-session; bucketed scan survives a fresh catalog") {
     val corpus = docs.filter(col("doc_id") % 10 =!= 0)
     val batch = docs.filter(col("doc_id") % 10 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("ndix_").toFile.getAbsolutePath
+    val dir = scratchDir("ndix_").getAbsolutePath
     val inSession = probeRows(Dedup.probeNearDups(
       Dedup.nearDupIndex(corpus, "doc_id", "text"), batch, "text"))
     assert(inSession.nonEmpty)
@@ -271,7 +271,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val base = corpus.filter(col("doc_id") % 2 === 1)
     val grow = corpus.filter(col("doc_id") % 2 === 0)
     val batch = docs.filter(col("doc_id") % 10 === 0)
-    def tmp() = java.nio.file.Files.createTempDirectory("ndix_a_").toFile.getAbsolutePath
+    def tmp() = scratchDir("ndix_a_").getAbsolutePath
     val dirA = tmp(); val dirR = tmp()
     Dedup.nearDupIndexWrite(base, "doc_id", "text", dirA)
     Dedup.nearDupAppend(grow, dirA)
@@ -301,7 +301,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val corpus = (1 to 30).map(i =>
       (i.toLong, (1 to 12).map(j => s"w${i}_$j").mkString(" ")))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("ndix_s_").toFile.getAbsolutePath
+    val dir = scratchDir("ndix_s_").getAbsolutePath
     Dedup.nearDupIndexWrite(corpus.filter(col("doc_id") <= 20), "doc_id", "text", dir)
     Dedup.nearDupAppend(corpus.filter(col("doc_id") > 20), dir)
     val r = Dedup.nearDupStats(spark, dir).head()
@@ -318,7 +318,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val corpus = docs.filter(col("doc_id") % 10 =!= 0)
     val batch = docs.filter(col("doc_id") % 10 === 0)
     def slice(r: Int) = corpus.filter(col("doc_id") % 3 === r)
-    def tmp() = java.nio.file.Files.createTempDirectory("ndix_c_").toFile.getAbsolutePath
+    def tmp() = scratchDir("ndix_c_").getAbsolutePath
     val dirC = tmp(); val dirU = tmp() // folded vs never-compacted twin
     for (d <- Seq(dirC, dirU)) {
       Dedup.nearDupIndexWrite(slice(1), "doc_id", "text", d)
@@ -459,7 +459,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       .select("vec_id", "label", "embedding")
     val corpus = emb.filter(col("vec_id") % 10 =!= 0)
     val batch = emb.filter(col("vec_id") % 10 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("edix_").toFile.getAbsolutePath
+    val dir = scratchDir("edix_").getAbsolutePath
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
     // threshold -1 (the registered report form): every batch vector's
@@ -538,8 +538,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val corpus = docs.filter(col("doc_id") % 10 =!= 0)
     val b1 = docs.filter(col("doc_id") % 20 === 0)
     val b2 = docs.filter(col("doc_id") % 20 === 10)
-    val dir = java.nio.file.Files.createTempDirectory("ndix_cas_")
-      .toFile.getAbsolutePath
+    val dir = scratchDir("ndix_cas_").getAbsolutePath
     Dedup.nearDupIndexWrite(corpus, "doc_id", "text", dir)
     val m0 = Dedup.NearDup.read(dir).get
     // writer A lands normally (claims m<m0.mseq+1>)
@@ -580,8 +579,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       .withColumn("price_band", (col("label") % 3).cast("decimal(10,2)"))
     val corpus = emb.filter(col("vec_id") % 10 =!= 0)
     val batch = emb.filter(col("vec_id") % 10 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("edix_dec_")
-      .toFile.getAbsolutePath
+    val dir = scratchDir("edix_dec_").getAbsolutePath
     Dedup.embedDupIndexWrite(corpus, "vec_id", "embedding",
       Seq("label", "price_band"), dir)
     val m = Dedup.EmbedDup.read(dir).get
@@ -602,7 +600,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val corpus = emb.filter(col("vec_id") % 10 =!= 0)
     val batch = emb.filter(col("vec_id") % 10 === 0)
     def slice(r: Int) = corpus.filter(col("vec_id") % 3 === r)
-    def tmp() = java.nio.file.Files.createTempDirectory("edix_c_").toFile.getAbsolutePath
+    def tmp() = scratchDir("edix_c_").getAbsolutePath
     val dirC = tmp(); val dirU = tmp() // folded vs never-compacted twin
     for (d <- Seq(dirC, dirU)) {
       Dedup.embedDupIndexWrite(slice(1), "vec_id", "embedding", Seq("label"), d)

@@ -48,6 +48,27 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
       s"executed empty micro-batches: ${batches.emptyBatches}")
   }
 
+  test("twin registrations share one DuckDB oracle") {
+    // each group spells one computation several ways (batch, streaming,
+    // SQL text, another operator), so all of its members must be held
+    // to the same oracle text
+    val twins = Seq(
+      Seq("sim_knn", "sim_knn_topk"),
+      Seq("docs_decontam", "docs_decontam_bloom"),
+      Seq("dedup_incremental", "dedup_incremental_stream", "sql_neardup_probe"),
+      Seq("dedup_embed_incremental", "dedup_embed_incremental_stream"),
+      Seq("join_asof_custom", "join_asof_stream", "sql_asof"),
+      Seq("win_tumbling", "win_tumbling_stream"),
+      Seq("win_session", "win_session_stream"),
+      Seq("wx_rain_daily", "wx_rain_daily_stream", "wx_rain_daily_stream_restart"))
+    for (group <- twins) {
+      val oracles = group.map(n => n -> SparkEntry.oracleSql.get(n))
+      assert(oracles.forall(_._2.isDefined),
+        s"no oracle for ${oracles.filter(_._2.isEmpty).map(_._1)}")
+      assert(oracles.map(_._2).distinct.size === 1, s"oracles differ within $group")
+    }
+  }
+
   test("every oracle key has a matching query") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracle SQL without queries: $orphans")

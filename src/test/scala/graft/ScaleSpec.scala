@@ -60,7 +60,7 @@ class ScaleSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("partitioned write enables partition pruning at the scan") {
-    val path = "/tmp/graft_events_partitioned"
+    val path = scratchDir("graft_events_partitioned_").getAbsolutePath
     val events = Tables.events(spark, SF)
       .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
     Scale.writePartitioned(events, path, "day")

@@ -129,7 +129,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // data), same probe ranking, same tie-breaks — the index round-trip
     // loses nothing.
     val queries = emb.filter(col("vec_id") % 50 === 0)
-    val idx = java.nio.file.Files.createTempDirectory("ivf_idx_").toFile.getAbsolutePath
+    val idx = scratchDir("ivf_idx_").getAbsolutePath
     Similarity.ivfBuild(emb, idx, nlist = 16)
     val probed = Similarity.ivfProbe(spark, idx, queries, 5, nprobe = 2).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
@@ -153,7 +153,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     }
     val corpus = emb.select(col("vec_id"), col("embedding"))
       .union(planted.toSeq.toDF("vec_id", "embedding"))
-    val idx = java.nio.file.Files.createTempDirectory("ivf_idx_").toFile.getAbsolutePath
+    val idx = scratchDir("ivf_idx_").getAbsolutePath
     Similarity.ivfBuild(corpus, idx, nlist = 16)
     val res = Similarity.ivfProbe(spark, idx,
         planted.toSeq.toDF("vec_id", "embedding"), 1, nprobe = 2)
@@ -174,7 +174,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     }
     val corpus = emb.select(col("vec_id"), col("embedding"))
       .union(planted.toSeq.toDF("vec_id", "embedding"))
-    val idx = java.nio.file.Files.createTempDirectory("ivf_i8_").toFile.getAbsolutePath
+    val idx = scratchDir("ivf_i8_").getAbsolutePath
     Similarity.ivfBuild(corpus, idx, nlist = 16)
     // the int8 artifact exists and is cell-partitioned like the float one
     assert(new java.io.File(s"$idx/cells_i8.parquet/_SUCCESS").exists())
@@ -194,7 +194,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // (~1e-3 in cos) may only reorder near-ties, so pairwise recall
     // against the float probe stays >= 0.9
     val queries = emb.filter(col("vec_id") % 50 === 0)
-    val idx = java.nio.file.Files.createTempDirectory("ivf_i8r_").toFile.getAbsolutePath
+    val idx = scratchDir("ivf_i8r_").getAbsolutePath
     Similarity.ivfBuild(emb, idx, nlist = 16)
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
@@ -205,7 +205,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("ivfBuildIfAbsent rebuilds when the corpus mutates under the same tag") {
-    val idx = java.nio.file.Files.createTempDirectory("ivf_mf_").toFile.getAbsolutePath
+    val idx = scratchDir("ivf_mf_").getAbsolutePath
     val queries = emb.filter(col("vec_id") % 50 === 0)
     Similarity.ivfBuildIfAbsent(emb, idx, nlist = 16)
     val m1 = Similarity.Ivf.read(idx)
@@ -227,7 +227,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("ivfAppend assigns with the stored codebook; appended rows serve from both tiers") {
-    val idx = java.nio.file.Files.createTempDirectory("ivf_app_").toFile.getAbsolutePath
+    val idx = scratchDir("ivf_app_").getAbsolutePath
     val base = emb.filter(col("vec_id") % 10 =!= 0)
     val batch = emb.filter(col("vec_id") % 10 === 0)
     Similarity.ivfBuild(base, idx, nlist = 16)
@@ -264,7 +264,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("ivfAppend manifest additivity: the appended index validates for the union, fails closed otherwise") {
-    val idx = java.nio.file.Files.createTempDirectory("ivf_app2_").toFile.getAbsolutePath
+    val idx = scratchDir("ivf_app2_").getAbsolutePath
     val base = emb.filter(col("vec_id") % 10 =!= 0)
     val batch = emb.filter(col("vec_id") % 10 === 0)
     Similarity.ivfBuild(base, idx, nlist = 16)
@@ -276,7 +276,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // the appended manifest carries EXACTLY the (rows, fingerprint, dim) a
     // from-scratch build over the union stamps: rows add, and the
     // wraparound-SUM fingerprint is additive over the disjoint union
-    val idx2 = java.nio.file.Files.createTempDirectory("ivf_app3_").toFile.getAbsolutePath
+    val idx2 = scratchDir("ivf_app3_").getAbsolutePath
     Similarity.ivfBuild(emb, idx2, nlist = 16)
     val mu = Similarity.Ivf.read(idx2).get
     assert((mAfter.rows, mAfter.fingerprint, mAfter.dim) ===
@@ -305,8 +305,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   test("streaming ingest ≡ one-shot append ≡ union build (manifest-level, 7th stream≡batch fact)") {
     val base = emb.filter(col("vec_id") % 10 =!= 0)
     val batch = emb.filter(col("vec_id") % 10 === 0)
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toFile.getAbsolutePath
+    def tmp(p: String) = scratchDir(p).getAbsolutePath
     // stream-grown index: build on 90%, ingest the 10% through the
     // chunked feed — one ivfAppend per micro-batch
     val idxS = tmp("ivf_stream_")
@@ -343,7 +342,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("ivfCompact folds committed batches into one root: serving identical, manifest preserved") {
-    val idx = java.nio.file.Files.createTempDirectory("ivf_cmp_").toFile.getAbsolutePath
+    val idx = scratchDir("ivf_cmp_").getAbsolutePath
     val base = emb.filter(col("vec_id") % 10 =!= 0)
     Similarity.ivfBuild(base, idx, nlist = 16)
     // three separate appends -> three batch roots
@@ -420,7 +419,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("ivfCompact backfills the replay pair on a legacy manifest (no last_* fields)") {
-    val idx = java.nio.file.Files.createTempDirectory("ivf_leg_").toFile.getAbsolutePath
+    val idx = scratchDir("ivf_leg_").getAbsolutePath
     val base = emb.filter(col("vec_id") % 10 =!= 0)
     Similarity.ivfBuild(base, idx, nlist = 16)
     Seq(0, 10, 20).foreach(r =>
@@ -454,7 +453,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("ivfStats census arithmetic and the distribution-shift alert") {
-    val idx = java.nio.file.Files.createTempDirectory("ivf_stats_").toFile.getAbsolutePath
+    val idx = scratchDir("ivf_stats_").getAbsolutePath
     val base = emb.filter(col("vec_id") % 10 =!= 0)
     val batch = emb.filter(col("vec_id") % 10 === 0)
     Similarity.ivfBuild(base, idx, nlist = 16)
@@ -491,7 +490,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("ivfProbe pins a non-deterministic queries frame (collect == join view)") {
-    val idx = java.nio.file.Files.createTempDirectory("ivf_nd_").toFile.getAbsolutePath
+    val idx = scratchDir("ivf_nd_").getAbsolutePath
     Similarity.ivfBuild(emb, idx, nlist = 16)
     // rand()-gated queries: without the probeCells pin, the static
     // cell-set collect and the join side could compute DIFFERENT query
@@ -512,8 +511,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   test("streaming ingest with compaction serves identically; a reused checkpoint resumes") {
     val base = emb.filter(col("vec_id") % 10 =!= 0)
     val batch = emb.filter(col("vec_id") % 10 === 0)
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toFile.getAbsolutePath
+    def tmp(p: String) = scratchDir(p).getAbsolutePath
     // maxBatches = 1: every micro-batch beyond the first triggers a fold,
     // so the stream-grown index stays at <= 2 batch roots forever
     val idxC = tmp("ivf_cstream_")
@@ -545,7 +543,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("a torn ivfAppend is invisible to readers and a retry recovers at O(batch)") {
-    val idx = java.nio.file.Files.createTempDirectory("ivf_torn_").toFile.getAbsolutePath
+    val idx = scratchDir("ivf_torn_").getAbsolutePath
     val base = emb.filter(col("vec_id") % 10 =!= 0)
     val batch = emb.filter(col("vec_id") % 10 === 0)
     Similarity.ivfBuild(base, idx, nlist = 16)
@@ -624,7 +622,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("ivfCompact trusts a current-format (0,0) replay pair — no backfill on mv=2") {
-    val idx = java.nio.file.Files.createTempDirectory("ivf_mv2_").toFile.getAbsolutePath
+    val idx = scratchDir("ivf_mv2_").getAbsolutePath
     Similarity.ivfBuild(emb.filter(col("vec_id") % 10 =!= 0), idx, nlist = 16)
     Seq(0, 10).foreach(r =>
       Similarity.ivfAppend(emb.filter(col("vec_id") % 20 === r), idx))
@@ -654,7 +652,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("ivfProbe pins an RDD-backed queries frame (leaf Catalyst cannot see)") {
-    val idx = java.nio.file.Files.createTempDirectory("ivf_rdd_").toFile.getAbsolutePath
+    val idx = scratchDir("ivf_rdd_").getAbsolutePath
     Similarity.ivfBuild(emb, idx, nlist = 16)
     val sc = spark.sparkContext
     sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
@@ -681,7 +679,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("streamed query probes union to the one-shot ivfProbe (serving-side stream ≡ batch)") {
-    val idx = java.nio.file.Files.createTempDirectory("ivf_qstream_").toFile.getAbsolutePath
+    val idx = scratchDir("ivf_qstream_").getAbsolutePath
     Similarity.ivfBuild(emb, idx, nlist = 16)
     val queries = emb.filter(col("vec_id") % 50 === 0)
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -690,7 +688,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // the REAL streaming path the registered query runs: chunked feed,
     // one ivfProbe per micro-batch through foreachBatch, union read back
     import graft.streaming.WeatherStream
-    val feedDir = java.nio.file.Files.createTempDirectory("ivf_qfeed_").toFile.getAbsolutePath
+    val feedDir = scratchDir("ivf_qfeed_").getAbsolutePath
     val input = WeatherStream.chunkedFileFeedDF(queries, "vec_id", feedDir, nChunks = 3)
     val streamed = WeatherStream.drain(input.df, "spec_knn_stream",
       WeatherStream.PerBatch(b => Similarity.ivfProbe(spark, idx, b, 5, nprobe = 2)), input)
@@ -699,7 +697,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("ivfCompact splits hot cells on a shifted index (bounded task/file size)") {
-    val idx = java.nio.file.Files.createTempDirectory("ivf_hot_").toFile.getAbsolutePath
+    val idx = scratchDir("ivf_hot_").getAbsolutePath
     Similarity.ivfBuild(emb.filter(col("vec_id") % 10 =!= 0), idx, nlist = 16)
     val dim = emb.head().getSeq[Float](1).length
     // a tight far-off clump: 400 near-identical vectors co-assign to ONE
@@ -738,7 +736,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("ivfRefit splits hot cells: rows preserved, recall kept, concentration recovered") {
-    val idx = java.nio.file.Files.createTempDirectory("ivf_refit_").toFile.getAbsolutePath
+    val idx = scratchDir("ivf_refit_").getAbsolutePath
     Similarity.ivfBuild(emb.filter(col("vec_id") % 10 =!= 0), idx, nlist = 16)
     val dim = emb.head().getSeq[Float](1).length
     // the shifted regime: a tight far-off clump co-assigns to ONE cell
@@ -808,7 +806,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("manifest CAS: of two racing appends exactly one commits, the loser throws") {
-    val idx = java.nio.file.Files.createTempDirectory("ivf_cas_").toFile.getAbsolutePath
+    val idx = scratchDir("ivf_cas_").getAbsolutePath
     Similarity.ivfBuild(emb.filter(col("vec_id") % 10 =!= 0), idx, nlist = 16)
     val b1 = emb.filter(col("vec_id") % 20 === 0)
     val b2 = emb.filter(col("vec_id") % 20 === 10)
@@ -859,8 +857,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     val spread = (401L to 480L).map(i =>
       (i, Seq.tabulate(8)(j => ((i * 7 + j * 13) % 29).toFloat / 29f)))
     val corpus = (clump ++ spread).toDF("vec_id", "embedding")
-    val idx = java.nio.file.Files.createTempDirectory("ivf_clump_")
-      .toFile.getAbsolutePath
+    val idx = scratchDir("ivf_clump_").getAbsolutePath
     Similarity.ivfBuild(corpus, idx, nlist = 4)
     val m0 = Similarity.Ivf.read(idx).get
     // cap 2x the 120-row mean: the 400-row clump cell is the hot set

@@ -8,6 +8,15 @@ trait SparkTestBase {
   lazy val spark: SparkSession = SparkTestBase.session
   /** Smallest scale factor — unit tests verify semantics, not throughput. */
   val SF = "/root/testdata/sf0.001"
+
+  /** A new, uniquely named directory under the session's scratch root
+    * ([[core.scratchRoot]]), which the JVM-exit hook wipes, so specs
+    * leave nothing behind in `java.io.tmpdir`. */
+  def scratchDir(prefix: String): java.io.File = {
+    val root = core.scratchRoot(spark)
+    root.mkdirs()
+    java.nio.file.Files.createTempDirectory(root.toPath, prefix).toFile
+  }
 }
 
 object SparkTestBase {

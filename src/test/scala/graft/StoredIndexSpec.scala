@@ -50,8 +50,7 @@ class StoredIndexSpec extends AnyFunSuite with SparkTestBase {
     Dedup.embedDupAppendStage, Dedup.embedDupAppend,
     d => Dedup.embedDupIndexLoad(spark, d).vectors.select(col("vec_id").as("id")))
 
-  private def tmp(p: String) =
-    java.nio.file.Files.createTempDirectory(p).toFile.getAbsolutePath
+  private def tmp(p: String) = scratchDir(p).getAbsolutePath
 
   private def lifecycle[M <: StoredIndex.Manifest[M]](f: Family[M]): Unit = {
     def all = f.table()

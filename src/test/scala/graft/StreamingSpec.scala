@@ -89,7 +89,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       SensorReading(i.toLong, i.toLong % 3,
         new Timestamp(ts(0).getTime + i * 3600L * 1000L), (i % 7) * 0.5)
     }
-    val dir = java.nio.file.Files.createTempDirectory("chunk_feed_").toFile
+    val dir = scratchDir("chunk_feed_")
     val feed = WeatherStream.chunkedFileFeed(
       readings.toDF("event_id", "user_id", "ts", "value"),
       new java.io.File(dir, "src").getAbsolutePath, nChunks = 4)
@@ -128,7 +128,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val fillers = (0 until 16).map(h => (100L + h, 0L, at(h * 60L), 1.0))
     val pair = Seq((1L, 7L, at(8 * 60L - 5), 1.0), (2L, 7L, at(8 * 60L + 5), 1.0))
     val ev = (fillers ++ pair).toDF("event_id", "user_id", "ts", "value")
-    val dir = java.nio.file.Files.createTempDirectory("session_merge_").toFile
+    val dir = scratchDir("session_merge_")
     val staging = new java.io.File(dir, "src").getAbsolutePath
     val sentinel = Seq((99L, -1L, at(14L * 24 * 60), 0.0))
       .toDF("event_id", "user_id", "ts", "value")
@@ -168,7 +168,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       :+ ((1L, 7L, at(4 * 60L - 5)))).toDF("c_id", "c_user", "c_ts")
     val purchases = ((0 until 16).map(h => (200L + h, 0L, at(h * 60L + 30)))
       :+ ((2L, 7L, at(4 * 60L + 40)))).toDF("p_id", "user_id", "p_ts")
-    val dir = java.nio.file.Files.createTempDirectory("ssjoin_").toFile
+    val dir = scratchDir("ssjoin_")
     val cStage = new java.io.File(dir, "clicks").getAbsolutePath
     val pStage = new java.io.File(dir, "purchases").getAbsolutePath
     val cFeed = WeatherStream.chunkedFileFeedDF(clicks, "c_ts", cStage, nChunks = 4)
@@ -207,7 +207,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       val t = if (i < 24) ts(1) else ts(10 + (i - 24))
       SensorReading(i.toLong, i.toLong % 2, t, 1.0)
     }
-    val dir = java.nio.file.Files.createTempDirectory("tied_feed_").toFile
+    val dir = scratchDir("tied_feed_")
     val feed = WeatherStream.chunkedFileFeed(
       readings.toDF("event_id", "user_id", "ts", "value"),
       new java.io.File(dir, "src").getAbsolutePath, nChunks = 4)
@@ -240,7 +240,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       SensorReading(i.toLong, i.toLong % 3,
         new Timestamp(ts(0).getTime + i * 3600L * 1000L), (i % 7) * 0.5)
     }
-    val dir = java.nio.file.Files.createTempDirectory("restart_rain_").toFile
+    val dir = scratchDir("restart_rain_")
     val feed = WeatherStream.chunkedFileFeed(
       readings.toDF("event_id", "user_id", "ts", "value"),
       new java.io.File(dir, "src").getAbsolutePath, nChunks = 4)
@@ -278,7 +278,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val ev = ((0 until 48).map(i => (i.toLong, at(i * 15L), (i % 5) * 1.0))
       :+ ((99L, at(14L * 24 * 60), 0.0)))
       .toDF("event_id", "ts", "value")
-    val dir = java.nio.file.Files.createTempDirectory("restart_win_").toFile
+    val dir = scratchDir("restart_win_")
     val feed = WeatherStream.chunkedFileFeedDF(
       ev, "ts", new java.io.File(dir, "src").getAbsolutePath)
     val sink = new java.io.File(dir, "sink")
@@ -317,7 +317,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val ev = ((0 until 48).map(i => (i.toLong, at(i * 15L), (i % 5) * 1.0))
       :+ ((99L, at(14L * 24 * 60), 0.0)))
       .toDF("event_id", "ts", "value")
-    val dir = java.nio.file.Files.createTempDirectory("no_epilogue_").toFile
+    val dir = scratchDir("no_epilogue_")
     val feed = WeatherStream.chunkedFileFeedDF(
       ev, "ts", new java.io.File(dir, "src").getAbsolutePath)
     assert(!feed.hasEpilogue)
@@ -338,7 +338,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     // would otherwise get a feed whose final chunk publishes nothing, so
     // its closing watermark batch never runs and no window is emitted.
     val ev = (0 until 8).map(i => (i.toLong, ts(i), 1.0)).toDF("event_id", "ts", "value")
-    val dir = java.nio.file.Files.createTempDirectory("epilogue_").toFile
+    val dir = scratchDir("epilogue_")
     val src = new java.io.File(dir, "src").getAbsolutePath
     WeatherStream.chunkedFileFeedDF(ev, "ts", src)
     val epiDir = new java.io.File(src, "chunks/epilogue").getAbsolutePath

@@ -35,7 +35,7 @@ class TextAndAggSpec extends AnyFunSuite with SparkTestBase {
       (3L, "der hund und die katze ist nicht das problem", "?"),
       (4L, "le chat est dans les jardins des villes une fois", "?")
     ).toDF("doc_id", "text", "lang")
-    val dir = java.nio.file.Files.createTempDirectory("graft_lang").toString
+    val dir = scratchDir("graft_lang").toString
     df.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val res = SparkEntry.queries("text_lang")(spark, dir)
       .select("doc_id", "lang_pred").collect()
@@ -44,7 +44,7 @@ class TextAndAggSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("fingerprints: identical text -> identical fp; distinct text -> distinct fp") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fp").toString
+    val dir = scratchDir("graft_fp").toString
     Seq(
       (1L, "spark window function over partitioned event streams", "x"),
       (2L, "spark window function over partitioned event streams", "x"),
@@ -74,7 +74,7 @@ class TextAndAggSpec extends AnyFunSuite with SparkTestBase {
       (2L, cjk, "x"),                // 3 chars, 9 bytes
       (3L, party + "emoji", "x"),    // 6 chars, 9 bytes
       (4L, "", "x"))                 // empty: stub defaults
-    val dir = java.nio.file.Files.createTempDirectory("graft_mb").toString
+    val dir = scratchDir("graft_mb").toString
     rows.toDF("doc_id", "text", "lang")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
