@@ -125,8 +125,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
             val stride = intLit(es(4), "lsh_buckets: stride_bits")
             require(bits <= stride,
               s"lsh_buckets: bits ($bits) must be <= stride_bits ($stride)")
-            val ps = graft.operators.Similarity.planes(tables, stride, dim)
-            Array.tabulate(tables * bits)(k => ps(k / bits * stride + k % bits))
+            graft.operators.Similarity.planes(tables, bits, dim, stride)
           } else graft.operators.Similarity.planes(tables, bits, dim)
         LshBuckets(es.head, planes, bits)
       }))

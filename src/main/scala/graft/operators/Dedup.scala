@@ -601,35 +601,25 @@ object Dedup {
     * only — no float-text round-trip); `idType` is the id column's SQL
     * type, needed to re-register the bucketed shingle table in a NEW
     * session. */
-  final case class NearDupManifest(rows: Long, fingerprint: Long, k: Int,
+  final case class NearDupManifest(log: StoredIndex.CommitLog, k: Int,
                                    fracPpm: Long, buckets: Int,
                                    idCol: String, textCol: String,
-                                   idType: String,
-                                   appendedRows: Long = 0L,
-                                   batches: Seq[String] = Nil,
-                                   seq: Long = 0L,
-                                   lastRows: Long = 0L,
-                                   lastFp: Long = 0L,
-                                   mseq: Long = 0L)
+                                   idType: String)
       extends StoredIndex.Manifest[NearDupManifest] {
-    def withLog(l: StoredIndex.CommitLog): NearDupManifest =
-      copy(rows = l.rows, fingerprint = l.fingerprint, appendedRows = l.appendedRows,
-        batches = l.batches, seq = l.seq, lastRows = l.lastRows, lastFp = l.lastFp,
-        mseq = l.mseq)
+    def withLog(l: StoredIndex.CommitLog): NearDupManifest = copy(log = l)
   }
 
-  /** The near-dup family of [[StoredIndex]]: base `hot.parquet`,
+  /** The near-dup family of [[StoredIndex]], layout 1: base `hot.parquet`,
     * `sizes.parquet` and the bucketed `shingles/` table; batch roots hold
     * `shingles.parquet` and `sizes.parquet`. */
-  object NearDup extends StoredIndex[NearDupManifest]("ndix") {
-    protected def layoutVersion: Int = 1
+  object NearDup extends StoredIndex[NearDupManifest]("ndix", 1) {
     protected def params(m: NearDupManifest): Seq[(String, Any)] =
       Seq("k" -> m.k, "frac_ppm" -> m.fracPpm, "buckets" -> m.buckets,
         "id_col" -> m.idCol, "text_col" -> m.textCol, "id_type" -> m.idType)
     protected def decode(d: StoredIndex.Doc, l: StoredIndex.CommitLog): Option[NearDupManifest] =
       for (k <- d.int("k"); ppm <- d.long("frac_ppm"); b <- d.int("buckets");
            ic <- d.str("id_col"); tc <- d.str("text_col"); it <- d.str("id_type"))
-        yield NearDupManifest(l.rows, l.fingerprint, k, ppm, b, ic, tc, it).withLog(l)
+        yield NearDupManifest(l, k, ppm, b, ic, tc, it)
     protected def baseArtifacts(m: NearDupManifest): Seq[String] =
       Seq("hot.parquet", "sizes.parquet", "shingles")
     protected def batchArtifacts: Seq[String] = Seq("shingles.parquet", "sizes.parquet")
@@ -663,8 +653,8 @@ object Dedup {
     ix.hot.write.mode("overwrite").parquet(s"$dir/hot.parquet")
     ix.sizes.write.mode("overwrite").parquet(s"$dir/sizes.parquet")
     Scale.writeBucketed(ix.shingles, NearDup.table(dir), s"$dir/shingles", buckets, Seq("s"))
-    NearDup.publishBuild(dir, NearDupManifest(n, fp, k, fracPpm(maxDocFrac),
-      buckets, idCol, textCol, corpus.schema(idCol).dataType.sql),
+    NearDup.publishBuild(dir, NearDupManifest(StoredIndex.CommitLog(n, fp), k,
+      fracPpm(maxDocFrac), buckets, idCol, textCol, corpus.schema(idCol).dataType.sql),
       corpus, (idCol, textCol), k, fracPpm(maxDocFrac))
   }
 
@@ -805,46 +795,32 @@ object Dedup {
     * SQL types (JSON arrays — a parameterized type like DECIMAL(10,2)
     * contains a comma, so a comma-joined string would re-split into
     * garbage and corrupt the DDL [[embedDupIndexLoad]] issues) for the
-    * catalog DDL; the rest follows [[NearDupManifest]]. A legacy (mv:1)
-    * manifest's comma-joined `block_cols`/`block_types` strings still
-    * read, which was only ever correct for comma-free types. */
-  final case class EmbedDupManifest(rows: Long, fingerprint: Long,
+    * catalog DDL; the rest follows [[NearDupManifest]]. Only the array
+    * form reads: a document of another layout is unreadable
+    * ([[StoredIndex]]'s one-layout rule). */
+  final case class EmbedDupManifest(log: StoredIndex.CommitLog,
                                     bands: Int, bits: Int, dim: Int,
                                     buckets: Int, idCol: String,
                                     vecCol: String, idType: String,
                                     blockCols: Seq[String],
-                                    blockTypes: Seq[String],
-                                    appendedRows: Long = 0L,
-                                    batches: Seq[String] = Nil,
-                                    seq: Long = 0L,
-                                    lastRows: Long = 0L,
-                                    lastFp: Long = 0L,
-                                    mseq: Long = 0L)
+                                    blockTypes: Seq[String])
       extends StoredIndex.Manifest[EmbedDupManifest] {
-    def withLog(l: StoredIndex.CommitLog): EmbedDupManifest =
-      copy(rows = l.rows, fingerprint = l.fingerprint, appendedRows = l.appendedRows,
-        batches = l.batches, seq = l.seq, lastRows = l.lastRows, lastFp = l.lastFp,
-        mseq = l.mseq)
+    def withLog(l: StoredIndex.CommitLog): EmbedDupManifest = copy(log = l)
   }
 
-  /** The embed family of [[StoredIndex]]: base `vectors.parquet` and the
-    * bucketed `buckets/` table; batch roots hold `buckets.parquet` and
-    * `vectors.parquet`. */
-  object EmbedDup extends StoredIndex[EmbedDupManifest]("edix") {
-    protected def layoutVersion: Int = 2
+  /** The embed family of [[StoredIndex]], layout 2: base `vectors.parquet`
+    * and the bucketed `buckets/` table; batch roots hold `buckets.parquet`
+    * and `vectors.parquet`. */
+  object EmbedDup extends StoredIndex[EmbedDupManifest]("edix", 2) {
     protected def params(m: EmbedDupManifest): Seq[(String, Any)] =
       Seq("bands" -> m.bands, "bits" -> m.bits, "dim" -> m.dim, "buckets" -> m.buckets,
         "id_col" -> m.idCol, "vec_col" -> m.vecCol, "id_type" -> m.idType,
         "block_cols" -> m.blockCols, "block_types" -> m.blockTypes)
-    protected def decode(d: StoredIndex.Doc, l: StoredIndex.CommitLog): Option[EmbedDupManifest] = {
-      def list(k: String) = d.strs(k).orElse(d.str(k).map(
-        _.split(",").map(_.trim).filter(_.nonEmpty).toSeq)).getOrElse(Nil)
+    protected def decode(d: StoredIndex.Doc, l: StoredIndex.CommitLog): Option[EmbedDupManifest] =
       for (ba <- d.int("bands"); bi <- d.int("bits"); dim <- d.int("dim");
            bu <- d.int("buckets"); ic <- d.str("id_col"); vc <- d.str("vec_col");
-           it <- d.str("id_type"))
-        yield EmbedDupManifest(l.rows, l.fingerprint, ba, bi, dim, bu, ic, vc, it,
-          list("block_cols"), list("block_types")).withLog(l)
-    }
+           it <- d.str("id_type"); bc <- d.strs("block_cols"); bt <- d.strs("block_types"))
+        yield EmbedDupManifest(l, ba, bi, dim, bu, ic, vc, it, bc, bt)
     protected def baseArtifacts(m: EmbedDupManifest): Seq[String] =
       Seq("vectors.parquet", "buckets")
     protected def batchArtifacts: Seq[String] = Seq("buckets.parquet", "vectors.parquet")
@@ -887,10 +863,7 @@ object Dedup {
                         blockCols: Seq[String], bands: Int, bits: Int,
                         dim: Int): DataFrame = {
     import graft.functions.VectorFunctions.lshBuckets
-    val ps = Similarity.planes(bands, EmbedBitsMax, dim)
-    val bandPlanes = Array.tabulate(bands * bits) { k =>
-      ps(k / bits * EmbedBitsMax + k % bits)
-    }
+    val bandPlanes = Similarity.planes(bands, bits, dim, stride = EmbedBitsMax)
     base.select(col(idCol) +: blockCols.map(col) :+
         posexplode(lshBuckets(col(vecCol), bandPlanes, bits)): _*)
       .withColumn("bk", shiftleft(col("pos").cast("long"), EmbedBitsMax) +
@@ -986,8 +959,8 @@ object Dedup {
     ix.vectors.write.mode("overwrite").parquet(s"$dir/vectors.parquet")
     Scale.writeBucketed(ix.buckets, EmbedDup.table(dir), s"$dir/buckets", buckets,
       "bk" +: blockCols)
-    EmbedDup.publishBuild(dir, EmbedDupManifest(n, fp, bands, ix.bits, dim,
-      buckets, idCol, vecCol, corpus.schema(idCol).dataType.sql,
+    EmbedDup.publishBuild(dir, EmbedDupManifest(StoredIndex.CommitLog(n, fp), bands,
+      ix.bits, dim, buckets, idCol, vecCol, corpus.schema(idCol).dataType.sql,
       blockCols, blockCols.map(c => corpus.schema(c).dataType.sql)),
       corpus, (idCol, vecCol), blockCols, bands, targetOccupancy)
   }

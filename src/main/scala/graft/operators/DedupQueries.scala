@@ -200,8 +200,7 @@ object DedupQueries {
     // is partition-order-arbitrary, so the keyset is the part of the
     // contract that is deterministic (and it equals the batch DISTINCT —
     // the fourth streaming ≡ batch ≡ DuckDB fact, covering streaming
-    // dedup state; the watermarked bounded-state variant
-    // WeatherStream.dedupStream is pinned in StreamingSpec).
+    // dedup state).
     StreamQ("dedup_keys_stream",
       (s, dir) => {
         import graft.streaming.WeatherStream

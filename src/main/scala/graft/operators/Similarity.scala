@@ -24,10 +24,18 @@ object Similarity {
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Deterministic Gaussian hyperplanes (fixed seed — identical across
-    * sessions/executors). */
-  private[graft] def planes(tables: Int, bits: Int, dim: Int): Array[Array[Double]] = {
+    * sessions/executors): `tables` groups of `bits` planes, generated
+    * `stride` (default `bits`) per group, each group keeping its first
+    * `bits` (plane k ↔ generated plane k / bits · stride + k % bits). A
+    * stride past `bits` is the embed family's frozen-bits banding
+    * (`Dedup.embedSigs`, SQL `lsh_buckets` with `stride_bits`): the
+    * planes of a full-stride banding, cut to any frozen `bits`. */
+  private[graft] def planes(tables: Int, bits: Int, dim: Int,
+                            stride: Int = 0): Array[Array[Double]] = {
+    val st = if (stride > 0) stride else bits
     val rnd = new scala.util.Random(42)
-    Array.fill(tables * bits)(Array.fill(dim)(rnd.nextGaussian()))
+    val ps = Array.fill(tables * st)(Array.fill(dim)(rnd.nextGaussian()))
+    Array.tabulate(tables * bits)(k => ps(k / bits * st + k % bits))
   }
 
   /** Shared ranking tail: (q_id, neighbor_id, cos) scored candidates →
@@ -291,82 +299,41 @@ object Similarity {
     (n, fp, r.getInt(0))
   }
 
-  /** Fingerprint ALGORITHM version stamped into the manifest: 1 was the
-    * original bit_xor, 2 is the multiplicity-sensitive wraparound sum.
-    * An index whose manifest carries a different (or absent → 1) version
-    * is rebuilt EXPLICITLY for that reason, rather than the algorithm
-    * change masquerading as corpus drift. */
-  private[operators] val FingerprintVersion = 2
-
   /** The IVF manifest: the [[StoredIndex]] commit log plus what
-    * [[ivfBuild]] fitted — `nlist`/`dim`, `fpv` (fingerprint-algorithm
-    * version, absent → 1), `mv` (read-side layout version, see
-    * [[ManifestVersion]]), and the [[ivfRefit]] state: `cbv` (current
-    * codebook version), `nlist0` (the BUILT nlist), `refitRows` (base
-    * rows refits relocated into batch space) and `refits` (seq → split
-    * cells, the read rule of [[readRoot]]). `appendedRows / rows`
+    * [[ivfBuild]] fitted — `nlist`/`dim` — and the [[ivfRefit]] state:
+    * `cbv` (current codebook version), `nlist0` (the BUILT nlist),
+    * `refitRows` (base rows refits relocated into batch space) and
+    * `refits` (seq → split cells, the read rule of [[readRoot]]). Its
+    * replay pair is authoritative: (0, 0) means exactly "no append
+    * committed since the build". `log.appendedRows / log.rows`
     * (`Ivf.appendedFraction`) is the fraction of the index assigned
     * under drifted centroids — RECALL.md carries the measured
     * recall-vs-appended-fraction curve that calibrates the rebuild
     * threshold. */
-  final case class IvfManifest(rows: Long, fingerprint: Long, nlist: Int,
-                               dim: Int, fpv: Int = 1,
-                               appendedRows: Long = 0L,
-                               batches: Seq[String] = Nil,
-                               seq: Long = 0L,
-                               lastRows: Long = 0L,
-                               lastFp: Long = 0L,
-                               mv: Int = 1,
-                               mseq: Long = 0L,
-                               cbv: Long = 0L,
-                               nlist0: Int = 0,
-                               refitRows: Long = 0L,
+  final case class IvfManifest(log: StoredIndex.CommitLog, nlist: Int, dim: Int,
+                               nlist0: Int, cbv: Long = 0L, refitRows: Long = 0L,
                                refits: Seq[(Long, Seq[Int])] = Nil)
       extends StoredIndex.Manifest[IvfManifest] {
-    def withLog(l: StoredIndex.CommitLog): IvfManifest =
-      copy(rows = l.rows, fingerprint = l.fingerprint, appendedRows = l.appendedRows,
-        batches = l.batches, seq = l.seq, lastRows = l.lastRows, lastFp = l.lastFp,
-        mseq = l.mseq)
+    def withLog(l: StoredIndex.CommitLog): IvfManifest = copy(log = l)
   }
 
-  /** Manifest LAYOUT version. v1 = everything before the explicit field
-    * (including manifests that already carry last_rows/last_fp); v2 =
-    * the (lastRows, lastFp) replay pair is AUTHORITATIVE, where (0, 0)
-    * means exactly "no append committed since the build". The field
-    * exists because [[ivfCompact]]'s legacy-manifest backfill used to
-    * key on the `lastRows == 0` sentinel, which conflates "pre-upgrade
-    * manifest" with "last batch was empty" — unreachable today (an
-    * empty batch never commits) but one refactor away from wrong. `mv`
-    * is read-side state: every manifest write stamps the CURRENT
-    * version, so any manifest mutation upgrades it. */
-  private[graft] val ManifestVersion = 2
-
-  /** The IVF family of [[StoredIndex]]: base artifacts `cells.parquet`,
-    * `cells_i8.parquet` and the current codebook; every batch root holds
-    * both cell artifacts. On a legacy (v1) manifest without the replay
-    * pair, a batch whose fingerprint suffixes the last batch id is read
-    * as the replay (fingerprint-only; rows unknown). */
-  object Ivf extends StoredIndex[IvfManifest]("ivf") {
-    protected def layoutVersion: Int = ManifestVersion
+  /** The IVF family of [[StoredIndex]], layout 3: base artifacts
+    * `cells.parquet`, `cells_i8.parquet` and the current codebook; every
+    * batch root holds both cell artifacts. */
+  object Ivf extends StoredIndex[IvfManifest]("ivf", 3) {
     protected def params(m: IvfManifest): Seq[(String, Any)] =
-      Seq("nlist" -> m.nlist, "dim" -> m.dim, "fpv" -> m.fpv)
+      Seq("nlist" -> m.nlist, "dim" -> m.dim)
     override protected def trailer(m: IvfManifest): Seq[(String, Any)] =
       Seq("cbv" -> m.cbv, "nlist0" -> m.nlist0, "refit_rows" -> m.refitRows,
         "refits" -> m.refits.map { case (rs, cs) => StoredIndex.Obj("seq" -> rs, "cells" -> cs) })
     protected def decode(d: StoredIndex.Doc, l: StoredIndex.CommitLog): Option[IvfManifest] =
-      for (nl <- d.int("nlist"); dim <- d.int("dim"))
-        yield IvfManifest(l.rows, l.fingerprint, nl, dim, d.int("fpv").getOrElse(1),
-          mv = d.int("mv").getOrElse(1), cbv = d.long("cbv").getOrElse(0L),
-          nlist0 = d.int("nlist0").getOrElse(0),
-          refitRows = d.long("refit_rows").getOrElse(0L),
-          refits = d.docs("refits").flatMap(r => r.long("seq").map(_ -> r.ints("cells"))))
-          .withLog(l)
+      for (nl <- d.int("nlist"); dim <- d.int("dim"); cbv <- d.long("cbv");
+           nl0 <- d.int("nlist0"); rr <- d.long("refit_rows"))
+        yield IvfManifest(l, nl, dim, nl0, cbv, rr,
+          d.docs("refits").flatMap(r => r.long("seq").map(_ -> r.ints("cells"))))
     protected def baseArtifacts(m: IvfManifest): Seq[String] =
       Seq("cells.parquet", "cells_i8.parquet", codebookName(m))
     protected def batchArtifacts: Seq[String] = Seq("cells.parquet", "cells_i8.parquet")
-    override protected def legacyReplay(m: IvfManifest, fp: Long): Boolean =
-      m.mv < ManifestVersion && m.lastRows == 0 &&
-        m.batches.lastOption.exists(_.endsWith("_" + StoredIndex.hex(fp)))
   }
 
   /** ONE-ROW health report over a stored index — the operational gauge
@@ -415,15 +382,15 @@ object Similarity {
       val top = counts.sorted(Ordering[Long].reverse).take(topCells).sum
       (counts.length.toLong, if (total == 0) 0.0 else top.toDouble / total)
     }
-    val (occ, topShare) = census(ivfCells(s, indexDir).select("cell"), m.rows)
+    val (occ, topShare) = census(ivfCells(s, indexDir).select("cell"), m.log.rows)
     // batch-space census over LIVE rows (refit-superseded cells excluded
     // per root — same read rule as serving), so a refit visibly lowers
     // the concentration alert it exists to remedy; the denominator is
     // the live batch-space total (appends + refit-relocated rows)
     val (aOcc, aTopShare) =
-      if (m.batches.isEmpty) (0L, 0.0)
+      if (m.log.batches.isEmpty) (0L, 0.0)
       else census(liveCells(s, indexDir, m, "cells.parquet", batchesOnly = true)
-        .select("cell"), m.appendedRows + m.refitRows)
+        .select("cell"), m.log.appendedRows + m.refitRows)
     Ivf.stats(s, m, "nlist" -> m.nlist, "dim" -> m.dim, "occupied_cells" -> occ,
       "top_share" -> topShare, "appended_occupied_cells" -> aOcc,
       "appended_top_share" -> aTopShare)
@@ -467,7 +434,7 @@ object Similarity {
   private def liveCells(s: SparkSession, indexDir: String, m: IvfManifest,
                         a: String, batchesOnly: Boolean = false): DataFrame =
     ((if (batchesOnly) Nil else Seq((s"$indexDir/$a", 0L))) ++
-      m.batches.map(b => (s"$indexDir/batches/$b/$a", rootSeq(b))))
+      m.log.batches.map(b => (s"$indexDir/batches/$b/$a", rootSeq(b))))
       .map { case (p, sq) => readRoot(s, p, sq, m) }.reduce(_ unionByName _)
 
   /** The CURRENT codebook artifact: the build writes `codebook.parquet`
@@ -548,7 +515,7 @@ object Similarity {
     codebook.write.mode("overwrite").parquet(s"$indexDir/codebook.parquet")
     writeCells(cells, nlist, indexDir)
     Ivf.publishBuild(indexDir,
-      IvfManifest(n, fp, nlist, dim, FingerprintVersion, nlist0 = nlist),
+      IvfManifest(StoredIndex.CommitLog(n, fp), nlist, dim, nlist0 = nlist),
       c, ("id", "emb"), nlist)
   }
 
@@ -571,22 +538,20 @@ object Similarity {
     * [[ivfBuildIfAbsent]], public so callers composing their own build
     * policy (e.g. build-then-[[ivfAppend]] ingest pipelines) can test
     * validity without committing to a fit. Beyond [[StoredIndex.valid]]'s
-    * completeness and identity, the manifest's fingerprint algorithm must
-    * be current. nlist is compared against the BUILT codebook size
-    * (nlist0): [[ivfRefit]] grows the current nlist by splitting hot
-    * cells, and a refit index must keep serving the caller that built at
-    * the original nlist — a refit is maintenance, not a different index. */
+    * completeness and identity, nlist is compared against the BUILT
+    * codebook size (nlist0): [[ivfRefit]] grows the current nlist by
+    * splitting hot cells, and a refit index must keep serving the caller
+    * that built at the original nlist — a refit is maintenance, not a
+    * different index. */
   def ivfValid(corpus: DataFrame, indexDir: String, nlist: Int): Boolean =
-    Ivf.valid(indexDir, corpus.toDF("id", "emb"), ("id", "emb"), nlist) { m =>
-      m.fpv == FingerprintVersion && (if (m.nlist0 > 0) m.nlist0 else m.nlist) == nlist
-    }
+    Ivf.valid(indexDir, corpus.toDF("id", "emb"), ("id", "emb"), nlist)(_.nlist0 == nlist)
 
   /** [[ivfBuild]] unless a VALID index for exactly this corpus is already
     * present ([[ivfValid]]) — the registered query's spelling of "fit
     * offline once, probe every serving batch". Anything invalid (no
-    * manifest, a pre-manifest artifact, a stale fingerprint algorithm, a
-    * mutated or replaced corpus under the same tag) triggers a rebuild
-    * rather than silently serving a stale index; a deployment that
+    * manifest, a manifest of another layout, a mutated or replaced
+    * corpus under the same tag) triggers a rebuild rather than silently
+    * serving a stale index; a deployment that
     * versions corpus snapshot paths can skip the check entirely by
     * calling [[ivfBuild]] exactly once per snapshot. */
   def ivfBuildIfAbsent(corpus: DataFrame, indexDir: String, nlist: Int): Unit =
@@ -637,9 +602,6 @@ object Similarity {
       : Option[(IvfManifest, String, Long, Long)] = {
     val b = batch.toDF("id", "emb")
     val m = Ivf.load(indexDir, "ivfAppend")
-    require(m.fpv == FingerprintVersion,
-      s"ivfAppend: manifest fingerprint algorithm v${m.fpv} != current " +
-        s"v$FingerprintVersion — rebuild the index")
     val (bn, bfp, bdim) = corpusStats(b)
     Ivf.stage(indexDir, m, bn, bfp) { staging =>
       require(bdim == m.dim,
@@ -667,24 +629,14 @@ object Similarity {
     * IVF-only parts. The fold reads LIVE rows (a pre-refit root's split
     * cells are superseded) and must reproduce `appendedRows + refitRows`
     * of them. The re-cluster is SIZE-AWARE (see the inline census note;
-    * COMPACT.md carries the shifted-index measurement). And on a LEGACY
-    * manifest (layout `mv` < [[ManifestVersion]]) the fold would destroy
-    * the batch-id-suffix fallback replay check — the compact id's suffix
-    * encodes the WHOLE-INDEX fingerprint, not the last batch's — so the
-    * replay pair is BACKFILLED from the last committed batch's own data
-    * before the fold commits, and the commit stamps the current layout
-    * version. Keying on `mv` (not a `lastRows == 0` sentinel) keeps
-    * "pre-upgrade manifest" distinct from "no append since build": a v2
-    * manifest's (0, 0) pair is trusted as-is (SimilaritySpec pins both). */
+    * COMPACT.md carries the shifted-index measurement). The fold reads
+    * only the current layout, so the replay pair it carries through is
+    * the one the last append wrote — (0, 0) included (SimilaritySpec
+    * pins it); a manifest of another layout throws like a missing one. */
   def ivfCompact(s: SparkSession, indexDir: String): Unit =
-    Ivf.compact(s, indexDir, "ivfCompact", m0 =>
-      if (m0.mv < ManifestVersion) {
-        val (lr, lfp, _) = corpusStats(s.read.parquet(
-          s"$indexDir/batches/${m0.batches.last}/cells.parquet"))
-        m0.copy(lastRows = lr, lastFp = lfp)
-      } else m0) { (m, staging) =>
+    Ivf.compact(s, indexDir, "ivfCompact") { (m, staging) =>
       def foldRead(a: String) = liveCells(s, indexDir, m, a, batchesOnly = true)
-      val expectRows = m.appendedRows + m.refitRows
+      val expectRows = m.log.appendedRows + m.refitRows
       // SIZE-AWARE RE-CLUSTER (hot-cell task/file split): the fold hashes
       // cells into tasks so each cell lands in ONE task → one file per cell
       // per artifact (the writeCells layout rule) — the right layout while
@@ -788,9 +740,6 @@ object Similarity {
     import org.apache.spark.ml.functions.array_to_vector
     import s.implicits._
     val m = Ivf.load(indexDir, "ivfRefit")
-    require(m.fpv == FingerprintVersion,
-      s"ivfRefit: manifest fingerprint algorithm v${m.fpv} != current " +
-        s"v$FingerprintVersion — rebuild the index")
     require(capFactor > 0 && maxSplit > 0,
       s"ivfRefit: capFactor=$capFactor and maxSplit=$maxSplit must be > 0")
     // live-occupancy census: partition-column-only scan (footer reads,
@@ -798,7 +747,7 @@ object Similarity {
     val counts: Map[Int, Long] = liveCells(s, indexDir, m, "cells.parquet").groupBy("cell")
       .agg(count(lit(1)).as("cnt")).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val cap = (capFactor * math.max(1L, m.rows / math.max(1, m.nlist))).toLong
+    val cap = (capFactor * math.max(1L, m.log.rows / math.max(1, m.nlist))).toLong
     val hot: Seq[Int] = counts.toSeq.filter(_._2 > cap)
       .sortBy { case (c, n) => (-n, c) }.take(maxSplit).map(_._1)
     if (hot.isEmpty) {
@@ -852,7 +801,7 @@ object Similarity {
         when(argMinDistSq(col("emb"), two).getField("j") === 0, lit(c))
           .otherwise(lit(newId)).as("cell"))
     }
-    val refitId = f"r${m.seq + 1}%04d_${hotRows}_${StoredIndex.hex(m.fingerprint)}"
+    val refitId = f"r${m.log.seq + 1}%04d_${hotRows}_${StoredIndex.hex(m.log.fingerprint)}"
     val staging = Ivf.stagingDir(indexDir, refitId)
     // one task per output cell: a split cell's children land as one file each
     writeCells(pieces.reduce(_ unionByName _), 2 * split.size, staging)
@@ -897,13 +846,11 @@ object Similarity {
       java.nio.file.Paths.get(cbStagingPath), cbTarget)
     Ivf.promote(indexDir, refitId)
     Ivf.commit(indexDir, m, m.copy(
+      log = m.log.copy(batches = m.log.batches :+ refitId, seq = m.log.seq + 1),
       nlist = m.nlist + split.size,
-      nlist0 = if (m.nlist0 > 0) m.nlist0 else m.nlist,
       cbv = m.cbv + 1,
-      batches = m.batches :+ refitId,
-      seq = m.seq + 1,
       refitRows = m.refitRows + baseHotLive,
-      refits = m.refits :+ ((m.seq + 1) -> split)),
+      refits = m.refits :+ ((m.log.seq + 1) -> split)),
       token = refitId)
     log.info(s"ivfRefit: split ${split.size} hot cells ($hotRows rows, " +
       s"cap $cap) into $refitId under $indexDir — nlist ${m.nlist} -> " +

@@ -25,10 +25,17 @@ import graft.core.{rmTree, scratchRoot}
   * exactly the `batches` the manifest lists, so data that reached the dir
   * without its manifest update is invisible. The manifest is compact JSON
   * (snake_case keys), replaced atomically (sibling tmp + rename: a reader
-  * or a crash sees the old complete manifest or the new one). A document
-  * that does not parse as one complete JSON object is UNREADABLE — the
-  * same path as a missing manifest: validity fails closed into a rebuild,
-  * and load/append/compact throw "no readable manifest".
+  * or a crash sees the old complete manifest or the new one).
+  *
+  * ONE LAYOUT: every write stamps the family's `layoutVersion` as `mv`,
+  * and a family reads exactly the layout it writes — a document whose
+  * `mv` equals its `layoutVersion` and that carries every commit-log and
+  * family key. Anything else (torn, not one complete JSON object, another
+  * `mv`, a key missing) is UNREADABLE, the same path as a missing
+  * manifest: validity fails closed into a rebuild, and load/append/
+  * compact throw "no readable manifest". A change to the written fields
+  * or to the [[fingerprint]] algorithm bumps the family's
+  * `layoutVersion`.
   *
   * COMMIT-LOG FIELDS ([[CommitLog]]) and their update rules:
   *  - `rows`/`fingerprint` identify the corpus. The fingerprint is the
@@ -50,8 +57,6 @@ import graft.core.{rmTree, scratchRoot}
   * Ids are deterministic — `b<seq+1>_<rows>_<fp hex>` for an append,
   * `c<seq>_<appendedRows>_<index fp hex>` for a fold (IVF refits use
   * `r<seq+1>_…`) — so a retry overwrites its own torn leftovers.
-  * Legacy manifests read with defaults: absent `seq` = |batches|, absent
-  * `mseq` = seq, absent `appended_rows`/`last_*` = 0.
   *
   * CRASH RECOVERY — stage, promote, commit: a mutation writes its root
   * under `_staging/<id>/`, moves it to `batches/<id>/` (still invisible:
@@ -90,11 +95,9 @@ import graft.core.{rmTree, scratchRoot}
   * or parameter, an append, or a missing or torn manifest never reads a
   * stale acceptance. Corpus files mutating under an unchanged path
   * within one session are out of scope (version snapshot paths). */
-abstract class StoredIndex[M <: StoredIndex.Manifest[M]](val kind: String) {
+abstract class StoredIndex[M <: StoredIndex.Manifest[M]](val kind: String,
+                                                          val layoutVersion: Int) {
   import StoredIndex._
-
-  /** Manifest layout version stamped as `mv` on every write. */
-  protected def layoutVersion: Int
 
   /** Family keys written after `rows`/`fingerprint`, in order. */
   protected def params(m: M): Seq[(String, Any)]
@@ -103,7 +106,7 @@ abstract class StoredIndex[M <: StoredIndex.Manifest[M]](val kind: String) {
   protected def trailer(m: M): Seq[(String, Any)] = Nil
 
   /** The family manifest from a parsed document and its commit log; None
-    * when a required family key is absent. */
+    * when a family key is absent. */
   protected def decode(d: Doc, log: CommitLog): Option[M]
 
   /** The base build's committed artifacts, relative to the index dir. */
@@ -112,9 +115,6 @@ abstract class StoredIndex[M <: StoredIndex.Manifest[M]](val kind: String) {
   /** The artifacts every batch root holds. */
   protected def batchArtifacts: Seq[String]
 
-  /** An extra replay rule for manifests older than the replay pair. */
-  protected def legacyReplay(m: M, fp: Long): Boolean = false
-
   private lazy val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
   private def manifestPath(dir: String) = Paths.get(dir, "manifest.json")
@@ -122,18 +122,17 @@ abstract class StoredIndex[M <: StoredIndex.Manifest[M]](val kind: String) {
   def read(dir: String): Option[M] = {
     val p = manifestPath(dir)
     if (!Files.exists(p)) None
-    else parse(Files.readAllBytes(p)).flatMap { d =>
-      for (rows <- d.long("rows"); fp <- d.long("fingerprint");
-           m <- decode(d, commitLog(d, rows, fp))) yield m
-    }
+    else parse(Files.readAllBytes(p)).filter(_.int("mv").contains(layoutVersion))
+      .flatMap(d => commitLog(d).flatMap(decode(d, _)))
   }
 
-  /** The manifest, or a throw naming `what` when it is missing or torn. */
+  /** The manifest, or a throw naming `what` when it is unreadable. */
   def load(dir: String, what: String): M = read(dir).getOrElse(sys.error(
-    s"$what: no readable manifest under $dir (missing or torn) — build first"))
+    s"$what: no readable manifest under $dir (missing, torn or another layout) " +
+      "— build first"))
 
   private def write(dir: String, m: M): Unit = {
-    val l = m.commitLog
+    val l = m.log
     val fields = Seq("rows" -> l.rows, "fingerprint" -> l.fingerprint) ++
       params(m) ++ Seq("mv" -> layoutVersion, "mseq" -> l.mseq,
         "appended_rows" -> l.appendedRows, "seq" -> l.seq,
@@ -164,7 +163,7 @@ abstract class StoredIndex[M <: StoredIndex.Manifest[M]](val kind: String) {
 
   /** Artifact `a` of every committed batch root. */
   def batchPaths(dir: String, m: M, a: String): Seq[String] =
-    m.batches.map(b => s"$dir/batches/$b/$a")
+    m.log.batches.map(b => s"$dir/batches/$b/$a")
 
   /** Artifact `a` of every committed batch root, as one frame. */
   def readBatches(s: SparkSession, dir: String, m: M, a: String): DataFrame =
@@ -192,7 +191,7 @@ abstract class StoredIndex[M <: StoredIndex.Manifest[M]](val kind: String) {
       cur.exists { m =>
         val ok = accept(m) && complete(dir, m) && {
           val (n, fp, _) = fingerprint(corpus, cols._1, cols._2)
-          m.rows == n && m.fingerprint == fp
+          m.log.rows == n && m.log.fingerprint == fp
         }
         if (ok) validated.put(dir, memoKey(corpus, cols, memo, m))
         ok
@@ -201,7 +200,7 @@ abstract class StoredIndex[M <: StoredIndex.Manifest[M]](val kind: String) {
 
   private def memoKey(corpus: DataFrame, cols: (String, String), memo: Seq[Any],
                       m: M): Seq[Any] =
-    Seq(planKey(corpus), cols, memo, m.rows, m.fingerprint)
+    Seq(planKey(corpus), cols, memo, m.log.rows, m.log.fingerprint)
 
   private def complete(dir: String, m: M): Boolean =
     (baseArtifacts(m).map(a => s"$dir/$a") ++ batchArtifacts.flatMap(batchPaths(dir, m, _)))
@@ -226,18 +225,18 @@ abstract class StoredIndex[M <: StoredIndex.Manifest[M]](val kind: String) {
               "mutation detected; re-read the manifest and retry this " +
               "mutation against the fresh state")
     }
-    read(dir).filter(_.mseq > expectedMseq) match {
+    read(dir).filter(_.log.mseq > expectedMseq) match {
       case Some(cur) =>
         logger.info(s"$kind manifest CAS: commit seq $next under $dir already " +
-          s"published (live mseq ${cur.mseq}) — idempotent replay, not rewriting")
+          s"published (live mseq ${cur.log.mseq}) — idempotent replay, not rewriting")
       case None => publish(next)
     }
   }
 
   /** Replace the manifest read as `expected` with `next` through the CAS. */
   def commit(dir: String, expected: M, next: M, token: String): Unit =
-    casCommit(dir, expected.mseq, token)(ms =>
-      write(dir, next.withLog(next.commitLog.copy(mseq = ms))))
+    casCommit(dir, expected.log.mseq, token)(ms =>
+      write(dir, next.withLog(next.log.copy(mseq = ms))))
 
   /** Move a staged root under `batches/`. Unlisted, so no atomicity is
     * needed; a leftover target of a torn attempt is deleted first (ids
@@ -262,14 +261,14 @@ abstract class StoredIndex[M <: StoredIndex.Manifest[M]](val kind: String) {
   def stage(dir: String, m: M, rows: Long, fp: Long)(
       stageTo: String => Unit): Option[(M, String, Long, Long)] =
     if (rows == 0) None
-    else if ((m.lastRows == rows && m.lastFp == fp) || legacyReplay(m, fp)) {
+    else if (m.log.lastRows == rows && m.log.lastFp == fp) {
       logger.warn(s"$kind append: batch (rows=$rows, fp=$fp) matches the last " +
         s"committed batch under $dir — treating as an at-least-once replay, " +
         "skipping (re-ingest of identical consecutive batches is " +
         "indistinguishable from a replay by design)")
       None
     } else {
-      val id = f"b${m.seq + 1}%04d_${rows}_${hex(fp)}"
+      val id = f"b${m.log.seq + 1}%04d_${rows}_${hex(fp)}"
       stageTo(stagingDir(dir, id))
       Some((m, id, rows, fp))
     }
@@ -277,7 +276,7 @@ abstract class StoredIndex[M <: StoredIndex.Manifest[M]](val kind: String) {
   /** Append phase 3 — COMMIT a promoted batch: the append rule on the
     * commit log. */
   def commitAppend(dir: String, m: M, id: String, rows: Long, fp: Long): Unit = {
-    val l = m.commitLog
+    val l = m.log
     commit(dir, m, m.withLog(l.copy(rows = l.rows + rows,
       fingerprint = l.fingerprint + fp, appendedRows = l.appendedRows + rows,
       batches = l.batches :+ id, seq = l.seq + 1, lastRows = rows, lastFp = fp)),
@@ -293,8 +292,7 @@ abstract class StoredIndex[M <: StoredIndex.Manifest[M]](val kind: String) {
 
   /** FOLD every committed batch root into one — the file-count bound
     * continuous ingest needs (probes pay one scan or join per root).
-    * No-op below two roots. `prepare` may amend the manifest before the
-    * fold (IVF's legacy backfill); `fold` writes the folded root into the
+    * No-op below two roots. `fold` writes the folded root into the
     * staging dir it is given and returns (artifact, expected row count),
     * checked by a read-back so torn batch data fails the fold loudly. The
     * commit-log identity is unchanged by construction (the fold holds
@@ -302,37 +300,36 @@ abstract class StoredIndex[M <: StoredIndex.Manifest[M]](val kind: String) {
     * validated.
     * Commits against the manifest the fold READ: an append that landed
     * meanwhile makes this fold lose the CAS instead of being dropped. */
-  def compact(s: SparkSession, dir: String, what: String,
-              prepare: M => M = (m: M) => m)(
+  def compact(s: SparkSession, dir: String, what: String)(
       fold: (M, String) => (String, Long)): Unit = {
-    val m0 = load(dir, what)
-    if (m0.batches.size < 2) return
-    val m = prepare(m0)
-    val id = f"c${m.seq}%04d_${m.appendedRows}_${hex(m.fingerprint)}"
+    val m = load(dir, what)
+    val l = m.log
+    if (l.batches.size < 2) return
+    val id = f"c${l.seq}%04d_${l.appendedRows}_${hex(l.fingerprint)}"
     val (artifact, expect) = fold(m, stagingDir(dir, id))
     val folded = s.read.parquet(s"${stagingDir(dir, id)}/$artifact").count()
     require(folded == expect,
       s"$what: folded $folded rows of $artifact but the batch roots hold " +
         s"$expect — batch data under $dir is torn; not committing")
     promote(dir, id)
-    commit(dir, m0, m.withLog(m.commitLog.copy(batches = Seq(id))), token = id)
+    commit(dir, m, m.withLog(l.copy(batches = Seq(id))), token = id)
     // DEFERRED sweep: keep this fold's inputs for one more cycle
-    val keep = m.batches.toSet + id
+    val keep = l.batches.toSet + id
     Option(new java.io.File(s"$dir/batches").listFiles())
       .foreach(_.filterNot(f => keep(f.getName)).foreach(rmTree))
-    logger.info(s"$what: folded ${m.batches.size} batch roots " +
-      s"(${m.appendedRows} appended rows) into $id under $dir")
+    logger.info(s"$what: folded ${l.batches.size} batch roots " +
+      s"(${l.appendedRows} appended rows) into $id under $dir")
   }
 
   def appendedFraction(m: M): Double =
-    if (m.rows == 0) 0.0 else m.appendedRows.toDouble / m.rows
+    if (m.log.rows == 0) 0.0 else m.log.appendedRows.toDouble / m.log.rows
 
   /** The one-row health gauge: `rows`, `appended_rows`,
     * `appended_fraction`, `batch_roots` off the manifest, then the
     * family's `extra` columns (Int, Long or Double values). */
   def stats(s: SparkSession, m: M, extra: (String, Any)*): DataFrame = {
-    val cols = Seq("rows" -> m.rows, "appended_rows" -> m.appendedRows,
-      "appended_fraction" -> appendedFraction(m), "batch_roots" -> m.batches.size) ++ extra
+    val cols = Seq("rows" -> m.log.rows, "appended_rows" -> m.log.appendedRows,
+      "appended_fraction" -> appendedFraction(m), "batch_roots" -> m.log.batches.size) ++ extra
     val schema = StructType(cols.map { case (k, v) =>
       StructField(k, v match {
         case _: Int    => IntegerType
@@ -346,25 +343,17 @@ abstract class StoredIndex[M <: StoredIndex.Manifest[M]](val kind: String) {
 
 object StoredIndex {
 
-  /** The manifest fields every family shares; see [[StoredIndex]]. */
-  final case class CommitLog(rows: Long, fingerprint: Long, appendedRows: Long,
-                             batches: Seq[String], seq: Long, lastRows: Long,
-                             lastFp: Long, mseq: Long)
+  /** The manifest fields every family shares; see [[StoredIndex]]. The
+    * defaults are a fresh build's log. */
+  final case class CommitLog(rows: Long, fingerprint: Long, appendedRows: Long = 0L,
+                             batches: Seq[String] = Nil, seq: Long = 0L,
+                             lastRows: Long = 0L, lastFp: Long = 0L, mseq: Long = 0L)
 
-  /** A family manifest: its own parameters plus the commit-log fields. */
+  /** A family manifest: its own parameters plus one commit log. */
   trait Manifest[M <: Manifest[M]] {
-    def rows: Long
-    def fingerprint: Long
-    def appendedRows: Long
-    def batches: Seq[String]
-    def seq: Long
-    def lastRows: Long
-    def lastFp: Long
-    def mseq: Long
-    /** This manifest with its commit-log fields replaced by `l`'s. */
+    def log: CommitLog
+    /** This manifest with its commit log replaced by `l`. */
     def withLog(l: CommitLog): M
-    final def commitLog: CommitLog =
-      CommitLog(rows, fingerprint, appendedRows, batches, seq, lastRows, lastFp, mseq)
   }
 
   /** A nested JSON object in a manifest field list. */
@@ -413,16 +402,13 @@ object StoredIndex {
     o
   }
 
-  private def commitLog(d: Doc, rows: Long, fp: Long): CommitLog = {
-    val batches = d.strs("batches").getOrElse(Nil)
-    // pre-`seq` manifests never compacted, so |batches| IS the append
-    // count; pre-CAS manifests seed the sequencer there too — a mixed-era
-    // dir whose appends already claimed m1..mN must not re-claim them
-    val seq = d.long("seq").getOrElse(batches.size.toLong)
-    CommitLog(rows, fp, d.long("appended_rows").getOrElse(0L), batches, seq,
-      d.long("last_rows").getOrElse(0L), d.long("last_fp").getOrElse(0L),
-      d.long("mseq").getOrElse(seq))
-  }
+  /** The commit log of a parsed document; None when a key is absent. */
+  private def commitLog(d: Doc): Option[CommitLog] =
+    for (rows <- d.long("rows"); fp <- d.long("fingerprint");
+         appended <- d.long("appended_rows"); batches <- d.strs("batches");
+         seq <- d.long("seq"); lastRows <- d.long("last_rows");
+         lastFp <- d.long("last_fp"); mseq <- d.long("mseq"))
+      yield CommitLog(rows, fp, appended, batches, seq, lastRows, lastFp, mseq)
 
   /** Index dir → the (plan, columns, parameters, manifest identity) last
     * validated or built there, in this JVM. */

@@ -28,9 +28,10 @@ import graft.streaming.WeatherStream
 object WeatherQueries {
 
   // Site parameters, as set in the reference (MetOffice_WOW_Connect.txt:
-  // 39,45,65,66): 15-min cadence => freq 4, 5 m mast, 5 m altitude,
-  // latitude 61.8989°N.
-  private val ObsFreq = 4.0
+  // 45,65,66): 5 m mast, 5 m altitude, latitude 61.8989°N.
+  /** Readings per hour: the 15-min cadence (MetOffice_WOW_Connect.txt:
+    * 34-39) — the rain rate's mm/h scale, batch and streaming alike. */
+  private[graft] val ObsFreq = 4.0
   private val MastHeightM = 5.0
   private val AltitudeM = 5.0
   private val LatitudeDeg = 61.8989
@@ -242,6 +243,13 @@ object WeatherQueries {
       .withColumn("prev_counter", lag(col("counter"), 1).over(wDay))
   }
 
+  /** The two rain deltas over [[withRainWindows]]: rain since the day's
+    * first reading (mm), and the rate since the previous reading that day
+    * (mm/h; 0 on the day's first). */
+  private val dailyRainMm = (col("counter") - col("day_start")).cast("double")
+  private val rainRateMmh =
+    coalesce((col("counter") - col("prev_counter")) * lit(ObsFreq), lit(0.0)).cast("double")
+
   /** O9-O13 as windows over any (event_id, user_id, ts, value) frame —
     * the reusable library form; equivalence with a sequential simulation of
     * the reference state machine is pinned in RainStateMachineProps. */
@@ -249,9 +257,7 @@ object WeatherQueries {
     withRainWindows(events)
       .select(col("event_id"), col("user_id"), col("day"),
         col("counter").cast("double").as("total_rain_mm"),
-        (col("counter") - col("day_start")).cast("double").as("daily_rain_mm"),
-        coalesce((col("counter") - col("prev_counter")) * lit(ObsFreq), lit(0.0))
-          .cast("double").as("rain_rate_mmh"))
+        dailyRainMm.as("daily_rain_mm"), rainRateMmh.as("rain_rate_mmh"))
 
   /** The D4 12-field projection over any frame carrying (event_id, ts,
     * sensor channels, dailyrain_mm, rain_mmh) — shared by the batch
@@ -280,9 +286,8 @@ object WeatherQueries {
     * ([[wowWireFrom]]). */
   private def wowEnriched(events: DataFrame): DataFrame =
     withRainWindows(sensors(events))
-      .withColumn("dailyrain_mm", (col("counter") - col("day_start")).cast("double"))
-      .withColumn("rain_mmh",
-        coalesce((col("counter") - col("prev_counter")) * lit(ObsFreq), lit(0.0)).cast("double"))
+      .withColumn("dailyrain_mm", dailyRainMm)
+      .withColumn("rain_mmh", rainRateMmh)
 
   /** Batch flagship over any (event_id, user_id, ts, value) frame. */
   def wowRecordFrom(events: DataFrame): DataFrame =

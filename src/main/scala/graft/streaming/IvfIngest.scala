@@ -80,7 +80,7 @@ object IvfIngest {
       .foreachBatch { (b: Dataset[Row], _: Long) =>
         Similarity.ivfAppend(b.toDF(), indexDir)
         if (maxBatches > 0 && Similarity.Ivf.read(indexDir)
-            .exists(_.batches.size > maxBatches))
+            .exists(_.log.batches.size > maxBatches))
           Similarity.ivfCompact(b.sparkSession, indexDir)
       }
       .option("checkpointLocation", ckpt.getAbsolutePath)

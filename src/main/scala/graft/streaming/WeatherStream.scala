@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, EventTimeWatermar
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import graft.core.{dsum, rmTree, scratchRoot, withSessionConf}
+import graft.operators.WeatherQueries.ObsFreq
 
 /** Structured-Streaming surface of the engine (SURVEY.md §2A O8-O13, O23;
   * §7.1 step 7): the reference is a 15-minute-trigger micro-batch pipeline
@@ -91,8 +92,6 @@ object WeatherStream {
                            value: Double, day: String,
                            total_rain_mm: Double, daily_rain_mm: Double,
                            rain_rate_mmh: Double)
-
-  private val ObsFreq = 4.0 // 15-min cadence (MetOffice_WOW_Connect.txt:34-39)
 
   private def dayOf(ts: Timestamp): String =
     java.time.Instant.ofEpochMilli(ts.getTime)
@@ -461,14 +460,6 @@ object WeatherStream {
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
       .select(col("window.start").as("ws"), col("event_type"), col("n"), col("sum_value"))
-
-  /** Streaming exact dedup with bounded state: duplicate keys arriving
-    * within the watermark horizon are dropped, and per-key state is
-    * evicted once the watermark passes — O(distinct keys in horizon)
-    * state, the only dedup shape that survives an unbounded stream. */
-  def dedupStream(events: DataFrame, keys: Seq[String],
-                  lateness: String = "2 hours"): DataFrame =
-    events.withWatermark("ts", lateness).dropDuplicatesWithinWatermark(keys)
 
   /** Gap-based session aggregation (30 min) with watermark: session
     * state MERGES across micro-batches, so a session that starts in one

@@ -287,8 +287,8 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     // the appended manifest IS the union build's (fingerprint additivity)
     val ma = Dedup.NearDup.read(dirA).get
     val mr = Dedup.NearDup.read(dirR).get
-    assert((ma.rows, ma.fingerprint) === (mr.rows, mr.fingerprint))
-    assert(ma.appendedRows === grow.count() && ma.batches.size === 1)
+    assert((ma.log.rows, ma.log.fingerprint) === (mr.log.rows, mr.log.fingerprint))
+    assert(ma.log.appendedRows === grow.count() && ma.log.batches.size === 1)
     // ... so the union frame validates the appended index, no rebuild
     assert(Dedup.nearDupValid(corpus, "doc_id", "text", dirA))
     // at-least-once replay window: re-appending the LAST committed batch
@@ -328,15 +328,15 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val before = probeRows(Dedup.probeNearDups(Dedup.nearDupIndexLoad(spark, dirU), batch, "text"))
     assert(before.nonEmpty)
     val m1 = Dedup.NearDup.read(dirC).get
-    assert(m1.batches.size === 2)
+    assert(m1.log.batches.size === 2)
     Dedup.nearDupCompact(spark, dirC)
     val m2 = Dedup.NearDup.read(dirC).get
     // ONE compacted root; corpus identity and the staleness signal are
     // UNCHANGED (compaction is layout-only — the census stays frozen, so
     // the gauge must keep alerting)
-    assert(m2.batches.size === 1 && m2.batches.head.startsWith("c"))
-    assert((m2.rows, m2.fingerprint, m2.appendedRows, m2.seq) ===
-      (m1.rows, m1.fingerprint, m1.appendedRows, m1.seq))
+    assert(m2.log.batches.size === 1 && m2.log.batches.head.startsWith("c"))
+    assert((m2.log.rows, m2.log.fingerprint, m2.log.appendedRows, m2.log.seq) ===
+      (m1.log.rows, m1.log.fingerprint, m1.log.appendedRows, m1.log.seq))
     // probe-identical: pure layout fold needs NO stationarity assumption
     assert(probeRows(Dedup.probeNearDups(
       Dedup.nearDupIndexLoad(spark, dirC), batch, "text")) === before)
@@ -345,7 +345,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(Dedup.nearDupValid(corpus, "doc_id", "text", dirC))
     // DEFERRED sweep: the superseded roots survive this fold (a reader
     // planned against the pre-compact manifest keeps its files)...
-    for (b <- m1.batches)
+    for (b <- m1.log.batches)
       assert(new java.io.File(s"$dirC/batches/$b").exists(),
         s"superseded root $b must survive one compaction cycle")
     // ...and are removed only by the NEXT fold (append again → compact)
@@ -354,10 +354,10 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       .toDF("doc_id", "text")
     Dedup.nearDupAppend(again, dirC)
     Dedup.nearDupCompact(spark, dirC)
-    for (b <- m1.batches)
+    for (b <- m1.log.batches)
       assert(!new java.io.File(s"$dirC/batches/$b").exists(),
         s"root $b older than the new fold's inputs must be swept")
-    assert(Dedup.NearDup.read(dirC).get.batches.size === 1)
+    assert(Dedup.NearDup.read(dirC).get.log.batches.size === 1)
     // guard: fewer than two roots is a no-op (nothing to fold)
     val m3 = Dedup.NearDup.read(dirC).get
     Dedup.nearDupCompact(spark, dirC)
@@ -517,7 +517,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     // additivity validates the union, and appended vectors are findable
     Dedup.embedDupAppend(batch, dir)
     val ma = Dedup.EmbedDup.read(dir).get
-    assert(ma.appendedRows === batch.count() && ma.batches.size === 1)
+    assert(ma.log.appendedRows === batch.count() && ma.log.batches.size === 1)
     assert(Dedup.embedDupValid(emb, "vec_id", "embedding", Seq("label"), dir),
       "the union frame must validate the appended index (additive fingerprint)")
     val ix2 = Dedup.embedDupIndexLoad(spark, dir)
@@ -541,15 +541,15 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val dir = scratchDir("ndix_cas_").getAbsolutePath
     Dedup.nearDupIndexWrite(corpus, "doc_id", "text", dir)
     val m0 = Dedup.NearDup.read(dir).get
-    // writer A lands normally (claims m<m0.mseq+1>)
+    // writer A lands normally (claims m<m0.log.mseq+1>)
     Dedup.nearDupAppend(b1, dir)
     val m1 = Dedup.NearDup.read(dir).get
-    assert(m1.mseq === m0.mseq + 1 && m1.batches.size === 1)
+    assert(m1.log.mseq === m0.log.mseq + 1 && m1.log.batches.size === 1)
     // writer B raced A: staged against m0, commits with the STALE
     // expected mseq — must throw with A's token, manifest untouched
     // (before the CAS this silently erased A's delta)
     val e = intercept[IllegalStateException] {
-      Dedup.NearDup.casCommit(dir, m0.mseq, "b_stale_racer")(_ =>
+      Dedup.NearDup.casCommit(dir, m0.log.mseq, "b_stale_racer")(_ =>
         fail("the CAS loser must never publish"))
     }
     assert(e.getMessage.contains("CAS lost"))
@@ -558,13 +558,13 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     // nearDupAppend re-reads) and lands
     Dedup.nearDupAppend(b2, dir)
     val m2 = Dedup.NearDup.read(dir).get
-    assert(m2.mseq === m1.mseq + 1 && m2.batches.size === 2)
+    assert(m2.log.mseq === m1.log.mseq + 1 && m2.log.batches.size === 2)
     // own-token replay of an ALREADY-PUBLISHED commit: the marker holds
     // our token but the live manifest is past the expected mseq — the
     // replay must NOT rewrite (a rewrite would regress mseq and silently
     // erase m2's later commit)
     var published = false
-    Dedup.NearDup.casCommit(dir, m0.mseq, m1.batches.head)(_ => published = true)
+    Dedup.NearDup.casCommit(dir, m0.log.mseq, m1.log.batches.head)(_ => published = true)
     assert(!published, "stale own-token replay must be a no-op")
     assert(Dedup.NearDup.read(dir).get === m2)
     // the index stayed valid and serving through all of it
@@ -613,21 +613,21 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       Dedup.embedDupIndexLoad(spark, dirU), batch, -1.0))
     assert(before.nonEmpty)
     val m1 = Dedup.EmbedDup.read(dirC).get
-    assert(m1.batches.size === 2)
+    assert(m1.log.batches.size === 2)
     Dedup.embedDupCompact(spark, dirC)
     val m2 = Dedup.EmbedDup.read(dirC).get
     // ONE compacted root; corpus identity, frozen bits, and the
     // staleness signal are UNCHANGED (the fold is layout-only)
-    assert(m2.batches.size === 1 && m2.batches.head.startsWith("c"))
-    assert((m2.rows, m2.fingerprint, m2.appendedRows, m2.seq, m2.bits) ===
-      (m1.rows, m1.fingerprint, m1.appendedRows, m1.seq, m1.bits))
+    assert(m2.log.batches.size === 1 && m2.log.batches.head.startsWith("c"))
+    assert((m2.log.rows, m2.log.fingerprint, m2.log.appendedRows, m2.log.seq, m2.bits) ===
+      (m1.log.rows, m1.log.fingerprint, m1.log.appendedRows, m1.log.seq, m1.bits))
     // probe-identical: a pure layout fold needs NO stationarity assumption
     assert(key(Dedup.probeEmbedDups(
       Dedup.embedDupIndexLoad(spark, dirC), batch, -1.0)) === before)
     // the folded manifest still validates the union corpus
     assert(Dedup.embedDupValid(corpus, "vec_id", "embedding", Seq("label"), dirC))
     // DEFERRED sweep: superseded roots survive this fold...
-    for (b <- m1.batches)
+    for (b <- m1.log.batches)
       assert(new java.io.File(s"$dirC/batches/$b").exists(),
         s"superseded root $b must survive one compaction cycle")
     // ...and are removed only by the NEXT fold
@@ -636,19 +636,19 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
         col("embedding"))
     Dedup.embedDupAppend(again, dirC)
     Dedup.embedDupCompact(spark, dirC)
-    for (b <- m1.batches)
+    for (b <- m1.log.batches)
       assert(!new java.io.File(s"$dirC/batches/$b").exists(),
         s"root $b older than the new fold's inputs must be swept")
-    assert(Dedup.EmbedDup.read(dirC).get.batches.size === 1)
+    assert(Dedup.EmbedDup.read(dirC).get.log.batches.size === 1)
     // guard: fewer than two roots is a no-op
     val m3 = Dedup.EmbedDup.read(dirC).get
     Dedup.embedDupCompact(spark, dirC)
     assert(Dedup.EmbedDup.read(dirC).get === m3)
     // stats gauge arithmetic off the manifest and artifacts
     val st = Dedup.embedDupStats(spark, dirC).head()
-    assert(st.getLong(0) === m3.rows)
-    assert(st.getLong(1) === m3.appendedRows)
-    assert(st.getDouble(2) === m3.appendedRows.toDouble / m3.rows)
+    assert(st.getLong(0) === m3.log.rows)
+    assert(st.getLong(1) === m3.log.appendedRows)
+    assert(st.getDouble(2) === m3.log.appendedRows.toDouble / m3.log.rows)
     assert(st.getInt(3) === 1 && st.getInt(4) === m3.bands &&
       st.getInt(5) === m3.bits && st.getInt(6) === m3.dim)
     assert(st.getLong(7) ===

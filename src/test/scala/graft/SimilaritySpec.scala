@@ -217,7 +217,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     val mutated = emb.filter(col("vec_id") >= 100) // dropped rows: new fingerprint
     Similarity.ivfBuildIfAbsent(mutated, idx, nlist = 16)
     val m2 = Similarity.Ivf.read(idx)
-    assert(m2.isDefined && m2.get.rows < m1.get.rows,
+    assert(m2.isDefined && m2.get.log.rows < m1.get.log.rows,
       s"manifest not refreshed: $m1 -> $m2")
     // the rebuilt index serves the mutated corpus: no dropped id appears
     val served = Similarity.ivfProbe(spark, idx, queries.filter(col("vec_id") >= 100), 5, nprobe = 2)
@@ -279,8 +279,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     val idx2 = scratchDir("ivf_app3_").getAbsolutePath
     Similarity.ivfBuild(emb, idx2, nlist = 16)
     val mu = Similarity.Ivf.read(idx2).get
-    assert((mAfter.rows, mAfter.fingerprint, mAfter.dim) ===
-      (mu.rows, mu.fingerprint, mu.dim))
+    assert((mAfter.log.rows, mAfter.log.fingerprint, mAfter.dim) ===
+      (mu.log.rows, mu.log.fingerprint, mu.dim))
     // so the union frame validates against the appended index (build-once
     // + append-per-batch, probe-only thereafter)...
     assert(Similarity.ivfValid(emb, idx, nlist = 16))
@@ -295,10 +295,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // the staleness signal survives the append path: appended_rows counts
     // exactly the post-build ingested rows, and the fraction accessor
     // reads it back; a fresh full build resets it to zero
-    assert(mAfter.appendedRows === batch.count())
+    assert(mAfter.log.appendedRows === batch.count())
     assert(Similarity.Ivf.appendedFraction(Similarity.Ivf.read(idx).get) ===
       batch.count().toDouble / emb.count())
-    assert(Similarity.Ivf.read(idx2).get.appendedRows === 0L)
+    assert(Similarity.Ivf.read(idx2).get.log.appendedRows === 0L)
     assert(Similarity.Ivf.appendedFraction(Similarity.Ivf.read(idx2).get) === 0.0)
   }
 
@@ -320,10 +320,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     val (ms, ma, mu) = (Similarity.Ivf.read(idxS).get,
       Similarity.Ivf.read(idxA).get, Similarity.Ivf.read(idxU).get)
     // the corpus-identity fields agree across all three ingestion paths
-    assert((ms.rows, ms.fingerprint, ms.dim) === (ma.rows, ma.fingerprint, ma.dim))
-    assert((ms.rows, ms.fingerprint, ms.dim) === (mu.rows, mu.fingerprint, mu.dim))
+    assert((ms.log.rows, ms.log.fingerprint, ms.dim) === (ma.log.rows, ma.log.fingerprint, ma.dim))
+    assert((ms.log.rows, ms.log.fingerprint, ms.dim) === (mu.log.rows, mu.log.fingerprint, mu.dim))
     // the stream ingest committed multiple micro-batches, all counted
-    assert(ms.batches.size > 1 && ms.appendedRows === batch.count())
+    assert(ms.log.batches.size > 1 && ms.log.appendedRows === batch.count())
     // the union frame validates the stream-grown index: probe-only serving
     assert(Similarity.ivfValid(emb, idxS, nlist = 16))
     // same base build = same codebook = same assignment: the stream-grown
@@ -336,7 +336,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // foreachBatch at-least-once window), read back from its own batch
     // dir, is a no-op on the manifest
     Similarity.ivfAppend(
-      spark.read.parquet(s"$idxS/batches/${ms.batches.last}/cells.parquet")
+      spark.read.parquet(s"$idxS/batches/${ms.log.batches.last}/cells.parquet")
         .select(col("id").as("vec_id"), col("emb").as("embedding")), idxS)
     assert(Similarity.Ivf.read(idxS).get === ms)
   }
@@ -349,7 +349,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     Seq(0, 10, 20).foreach(r =>
       Similarity.ivfAppend(emb.filter(col("vec_id") % 30 === r), idx))
     val m0 = Similarity.Ivf.read(idx).get
-    assert(m0.batches.size === 3 && m0.seq === 3L)
+    assert(m0.log.batches.size === 3 && m0.log.seq === 3L)
     val queries = emb.filter(col("vec_id") % 50 === 0)
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
@@ -365,17 +365,18 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // ONLY the batch list changes (plus the CAS sequencer's mseq, which
     // every manifest mutation bumps): rows/fingerprint/appendedRows/seq/
     // lastRows/lastFp all survive (fingerprint-neutral by construction)
-    assert(m1.batches.size === 1)
-    assert(m1.mseq === m0.mseq + 1)
-    assert(m1.copy(batches = Nil, mseq = m0.mseq) === m0.copy(batches = Nil))
+    assert(m1.log.batches.size === 1)
+    assert(m1.log.mseq === m0.log.mseq + 1)
+    assert(m1.withLog(m1.log.copy(batches = Nil, mseq = m0.log.mseq)) ===
+      m0.withLog(m0.log.copy(batches = Nil)))
     // DEFERRED sweep (reader grace period): the just-superseded batch
     // dirs remain on disk alongside the fold — they vanish only at the
     // NEXT compact
     assert(new java.io.File(s"$idx/batches").listFiles().map(_.getName).toSet
-      === (m0.batches.toSet + m1.batches.head))
+      === (m0.log.batches.toSet + m1.log.batches.head))
     // ... so the pre-compact reader executes successfully and sees the
     // exact pre-compact row set (no delete-under-reader)
-    assert(preCompactReader.count() === m0.rows)
+    assert(preCompactReader.count() === m0.log.rows)
     // both serving tiers read IDENTICAL results through the folded root
     assert(pairs(Similarity.ivfProbe(spark, idx, queries, 5, nprobe = 2)) === pf0)
     assert(pairs(Similarity.ivfProbeI8(spark, idx, queries, 5, nprobe = 2)) === pi0)
@@ -397,8 +398,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     }
     Similarity.ivfAppend(planted.toSeq.toDF("vec_id", "embedding"), idx)
     val m2 = Similarity.Ivf.read(idx).get
-    assert(m2.batches.size === 2 && m2.seq === 4L)
-    assert(m2.rows === m1.rows + planted.length)
+    assert(m2.log.batches.size === 2 && m2.log.seq === 4L)
+    assert(m2.log.rows === m1.log.rows + planted.length)
     val got = Similarity.ivfProbe(spark, idx,
         planted.toSeq.toDF("vec_id", "embedding"), 1, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toMap
@@ -409,47 +410,13 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // grace period — the deferral is exactly one cycle, not unbounded
     Similarity.ivfCompact(spark, idx)
     val m3 = Similarity.Ivf.read(idx).get
-    assert(m3.batches.size === 1)
+    assert(m3.log.batches.size === 1)
     assert(new java.io.File(s"$idx/batches").listFiles().map(_.getName).toSet
-      === (m2.batches.toSet + m3.batches.head))
+      === (m2.log.batches.toSet + m3.log.batches.head))
     val got2 = Similarity.ivfProbe(spark, idx,
         planted.toSeq.toDF("vec_id", "embedding"), 1, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toMap
     assert(got2 === got)
-  }
-
-  test("ivfCompact backfills the replay pair on a legacy manifest (no last_* fields)") {
-    val idx = scratchDir("ivf_leg_").getAbsolutePath
-    val base = emb.filter(col("vec_id") % 10 =!= 0)
-    Similarity.ivfBuild(base, idx, nlist = 16)
-    Seq(0, 10, 20).foreach(r =>
-      Similarity.ivfAppend(emb.filter(col("vec_id") % 30 === r), idx))
-    val m = Similarity.Ivf.read(idx).get
-    assert(m.lastRows > 0L)
-    // rewrite the manifest in the LEGACY shape: no seq/last_* fields
-    // (Ivf.read then reports lastRows = lastFp = 0, seq = |batches|)
-    val batchesJson = m.batches.map("\"" + _ + "\"").mkString("[", ",", "]")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(idx, "manifest.json"),
-      (s"""{"rows":${m.rows},"fingerprint":${m.fingerprint},""" +
-        s""""nlist":${m.nlist},"dim":${m.dim},"fpv":${m.fpv},""" +
-        s""""appended_rows":${m.appendedRows},"batches":$batchesJson}""")
-        .getBytes("UTF-8"))
-    val legacy = Similarity.Ivf.read(idx).get
-    assert(legacy.lastRows === 0L && legacy.lastFp === 0L)
-    assert(legacy.seq === m.batches.size.toLong)
-
-    Similarity.ivfCompact(spark, idx)
-    val mc = Similarity.Ivf.read(idx).get
-    // the fold BACKFILLED the replay pair from the last batch's own data
-    assert(mc.batches.size === 1)
-    assert((mc.lastRows, mc.lastFp) === (m.lastRows, m.lastFp))
-    // ... so a streaming replay straddling the upgrading compact is a
-    // no-op, exactly like on a current-format manifest
-    Similarity.ivfAppend(emb.filter(col("vec_id") % 30 === 20), idx)
-    assert(Similarity.Ivf.read(idx).get === mc)
-    // and the corpus identity is untouched: the union frame validates
-    assert(Similarity.ivfValid(emb.filter(lit(true)), idx, nlist = 16))
   }
 
   test("ivfStats census arithmetic and the distribution-shift alert") {
@@ -520,15 +487,15 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     graft.streaming.IvfIngest.ingestChunked(batch, "vec_id", idxC, feedDir,
       maxBatches = 1)
     val mc = Similarity.Ivf.read(idxC).get
-    assert(mc.batches.size === 1, s"stream batches not folded: ${mc.batches}")
-    assert(mc.appendedRows === batch.count())
-    assert(mc.seq >= 2, "compaction must not hide that multiple appends committed")
+    assert(mc.log.batches.size === 1, s"stream batches not folded: ${mc.log.batches}")
+    assert(mc.log.appendedRows === batch.count())
+    assert(mc.log.seq >= 2, "compaction must not hide that multiple appends committed")
     // ≡ one-shot append: same corpus identity, same served results
     val idxA = tmp("ivf_coneshot_")
     Similarity.ivfBuild(base, idxA, nlist = 16)
     Similarity.ivfAppend(batch, idxA)
     val ma = Similarity.Ivf.read(idxA).get
-    assert((mc.rows, mc.fingerprint, mc.dim) === (ma.rows, ma.fingerprint, ma.dim))
+    assert((mc.log.rows, mc.log.fingerprint, mc.dim) === (ma.log.rows, ma.log.fingerprint, ma.dim))
     val queries = emb.filter(col("vec_id") % 50 === 0)
     def pairs(idx: String) = Similarity.ivfProbe(spark, idx, queries, 5, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
@@ -575,8 +542,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // overwrites its own leftovers, and commits — O(batch), no rebuild
     Similarity.ivfAppend(batch, idx)
     val m1 = Similarity.Ivf.read(idx).get
-    assert(m1.batches === Seq(id), "retry must reuse the deterministic id")
-    assert((m1.rows, m1.fingerprint) === (m.rows + bn, m.fingerprint + bfp))
+    assert(m1.log.batches === Seq(id), "retry must reuse the deterministic id")
+    assert((m1.log.rows, m1.log.fingerprint) === (m.log.rows + bn, m.log.fingerprint + bfp))
     assert(Similarity.ivfValid(emb, idx, nlist = 16))
     assert(Similarity.ivfCells(spark, idx).count() === emb.count())
     assert(Similarity.ivfCellsI8(spark, idx).count() === emb.count())
@@ -627,28 +594,27 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     Seq(0, 10).foreach(r =>
       Similarity.ivfAppend(emb.filter(col("vec_id") % 20 === r), idx))
     val m = Similarity.Ivf.read(idx).get
-    assert(m.mv === Similarity.ManifestVersion && m.lastRows > 0L)
-    // rewrite the manifest with the replay pair ZEROED but the CURRENT
-    // layout version: on v2, (0, 0) means "no append since build" — a
-    // state the fold must carry through untouched, where the old
-    // `lastRows == 0` sentinel would have read it as "pre-upgrade" and
-    // backfilled it into a replay referent it never was
+    val text = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(idx, "manifest.json")), "UTF-8")
+    assert(text.contains(s""""mv":${Similarity.Ivf.layoutVersion},""") && m.log.lastRows > 0L)
+    // rewrite the manifest with the replay pair ZEROED in the current
+    // layout: (0, 0) means "no append since build" — a state the fold
+    // must carry through untouched, never fill in from the last batch
     java.nio.file.Files.write(
       java.nio.file.Paths.get(idx, "manifest.json"),
-      new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(idx, "manifest.json")), "UTF-8")
-        .replace(s""""last_rows":${m.lastRows}""", """"last_rows":0""")
-        .replace(s""""last_fp":${m.lastFp}""", """"last_fp":0""")
+      text
+        .replace(s""""last_rows":${m.log.lastRows}""", """"last_rows":0""")
+        .replace(s""""last_fp":${m.log.lastFp}""", """"last_fp":0""")
         .getBytes("UTF-8"))
     Similarity.ivfCompact(spark, idx)
     val mc = Similarity.Ivf.read(idx).get
-    assert(mc.batches.size === 1)
-    assert((mc.lastRows, mc.lastFp) === (0L, 0L), "v2 pair must survive as-is")
+    assert(mc.log.batches.size === 1)
+    assert((mc.log.lastRows, mc.log.lastFp) === (0L, 0L), "v2 pair must survive as-is")
     // ... and with the pair meaning "no append", re-sending the last
     // batch is NOT read as a replay: it commits (multiplicity-sensitive
     // manifest), instead of being silently skipped off a backfilled pair
     Similarity.ivfAppend(emb.filter(col("vec_id") % 20 === 10), idx)
-    assert(Similarity.Ivf.read(idx).get.batches.size === 2)
+    assert(Similarity.Ivf.read(idx).get.log.batches.size === 2)
   }
 
   test("ivfProbe pins an RDD-backed queries frame (leaf Catalyst cannot see)") {
@@ -714,8 +680,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     val before = pairs()
     Similarity.ivfCompact(spark, idx)
     val mc = Similarity.Ivf.read(idx).get
-    assert(mc.batches.size === 1)
-    val foldRoot = new java.io.File(s"$idx/batches/${mc.batches.head}/cells.parquet")
+    assert(mc.log.batches.size === 1)
+    val foldRoot = new java.io.File(s"$idx/batches/${mc.log.batches.head}/cells.parquet")
     val filesPerCell = foldRoot.listFiles().filter(_.getName.startsWith("cell="))
       .map(d => d.getName ->
         d.listFiles().count(_.getName.startsWith("part-"))).toMap
@@ -724,7 +690,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
       s"hot cell not split: $filesPerCell")
     // bounded: rows per file ≤ ~cap (hash salting is uneven only by
     // small-sample noise; 2× headroom keeps the assertion honest)
-    val mean = math.max(1L, mc.appendedRows / mc.nlist)
+    val mean = math.max(1L, mc.log.appendedRows / mc.nlist)
     val maxFileRows = foldRoot.listFiles().filter(_.getName.startsWith("cell="))
       .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
       .map(f => spark.read.parquet(f.getAbsolutePath).count()).max
@@ -771,17 +737,17 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     val m1 = Similarity.Ivf.read(idx).get
     // a refit moves LABELS, never rows: corpus identity is untouched and
     // the union frame still validates at the BUILT nlist
-    assert((m1.rows, m1.fingerprint) === (m0.rows, m0.fingerprint))
+    assert((m1.log.rows, m1.log.fingerprint) === (m0.log.rows, m0.log.fingerprint))
     assert(m1.nlist === m0.nlist + splits && m1.nlist0 === 16 && m1.cbv === 1L)
     assert(m1.refits.nonEmpty && m1.refitRows >= 0L)
     assert(Similarity.ivfValid(union.filter(lit(true)), idx, nlist = 16),
       "refit index must keep validating for the same corpus at the built nlist")
     // exact row-multiset preservation through the exclusion read rule
     val live = Similarity.ivfCells(spark, idx)
-    assert(live.count() === m0.rows)
+    assert(live.count() === m0.log.rows)
     assert(live.groupBy("id").count().filter(col("count") > 1).count() === 0L,
       "pre-refit copies of split-cell rows must be excluded from serving")
-    assert(Similarity.ivfCellsI8(spark, idx).count() === m0.rows)
+    assert(Similarity.ivfCellsI8(spark, idx).count() === m0.log.rows)
     // concentration recovered: the hottest live cell shrank (the clump
     // split), codebook grew to match
     val after = liveCellCounts()
@@ -795,8 +761,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // relocated base rows (refitRows), and serving is unchanged
     Similarity.ivfCompact(spark, idx)
     val mc = Similarity.Ivf.read(idx).get
-    assert(mc.batches.size === 1)
-    assert(Similarity.ivfCells(spark, idx).count() === m0.rows)
+    assert(mc.log.batches.size === 1)
+    assert(Similarity.ivfCells(spark, idx).count() === m0.log.rows)
     assert(top1() === exactTop1, "probe unchanged through the post-refit fold")
     // a refit pass whose cap nothing reaches is a no-op (4.0 is NOT used
     // here: the real corpus's natural k-means cells can legitimately sit
@@ -823,7 +789,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     assert(e.getMessage.contains("CAS lost"))
     // the index is exactly build ∪ b1 — the loser's batch is invisible
     val m = Similarity.Ivf.read(idx).get
-    assert(m.batches === Seq(id1))
+    assert(m.log.batches === Seq(id1))
     assert(Similarity.ivfValid(
       emb.filter(col("vec_id") % 10 =!= 0 || col("vec_id") % 20 === 0),
       idx, nlist = 16))
@@ -839,9 +805,9 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     Similarity.Ivf.commitAppend(idx, m3, id3, n3, fp3)
     Similarity.Ivf.commitAppend(idx, m3, id3, n3, fp3) // retry: no throw
     val mPost = Similarity.Ivf.read(idx).get
-    assert(mPost.batches === mPre.batches :+ id3,
+    assert(mPost.log.batches === mPre.log.batches :+ id3,
       "an idempotent commit retry must not duplicate the batch")
-    assert(mPost.mseq === mPre.mseq + 1)
+    assert(mPost.log.mseq === mPre.log.mseq + 1)
   }
 
   test("ivfRefit: an exact-duplicate clump cell is unsplittable — skipped, never thrown") {
@@ -865,7 +831,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     val m1 = Similarity.Ivf.read(idx).get
     assert(n === 0, "a pure-duplicate clump admits no split")
     assert(m1 === m0, "a refit that split nothing must leave the manifest alone")
-    assert(Similarity.ivfCells(spark, idx).count() === m0.rows)
+    assert(Similarity.ivfCells(spark, idx).count() === m0.log.rows)
     // the index still serves
     val q = corpus.filter(col("vec_id") === 450L)
     assert(Similarity.ivfProbe(spark, idx, q, 3, 4).count() === 3)

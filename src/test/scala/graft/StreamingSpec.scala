@@ -402,23 +402,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     } finally q2.stop()
   }
 
-  test("streaming dedup drops in-horizon duplicates across micro-batches") {
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = MemoryStream[(Long, Timestamp, Double)]
-    val events = input.toDF().toDF("key", "ts", "value")
-    val q = WeatherStream.dedupStream(events, Seq("key"), lateness = "1 hour")
-      .writeStream.format("memory").queryName("dedup_out").outputMode("append").start()
-    try {
-      input.addData((1L, ts(10, 0), 1.0), (1L, ts(10, 5), 2.0), (2L, ts(10, 6), 3.0))
-      q.processAllAvailable()
-      input.addData((1L, ts(10, 20), 4.0)) // duplicate key, next batch, in horizon
-      q.processAllAvailable()
-      val rows = spark.table("dedup_out").collect()
-      assert(rows.length === 2, s"expected one row per key: ${rows.toSeq}")
-      assert(rows.map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L))
-    } finally q.stop()
-  }
-
   test("streaming running top-k folds batches into O(k) per-key state") {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[(Long, Double, Long)]
