@@ -127,6 +127,18 @@ object Bench {
     // (GraftExtensions.CodegenDefaults) or what differs run to run.
     def compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val compiles0 = compiles
+    // Spark jobs over the timed passes: every job a timed query starts
+    // (its streams' micro-batch threads inherit the local property) and
+    // none of the warm-up's, whose events may still sit in the listener
+    // bus. The bus drains at spark.stop(), before the count is read.
+    val timedPass = "graft.bench.timed"
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val sc = spark.sparkContext
+    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(timedPass) != null)) jobs.incrementAndGet()
+    })
+    sc.setLocalProperty(timedPass, "1")
     val p1 = names.map(n => n -> run(n)).toMap
     // Second pass only where noise can matter: a GC/JIT stall on a
     // sub-0.3s query moves the total by milliseconds, but the same stall
@@ -135,6 +147,13 @@ object Bench {
     // close to a single pass.
     val p2 = names.filter(p1(_) > 0.3).map(n => n -> run(n)).toMap
     val compiled = compiles - compiles0
+    sc.setLocalProperty(timedPass, null)
+    val appId = sc.applicationId
+    // stop() drains the listener bus (so `jobs` is final) and comes
+    // BEFORE the metric line: Spark shutdown must not interleave anything
+    // with (or after) the one JSON line the driver tails — only sbt's own
+    // [success] trailer follows it now.
+    spark.stop()
     // A transient pass-2 failure (-1) must not erase a valid pass-1
     // measurement: only min over non-negative timings.
     val results = names.map(n =>
@@ -186,7 +205,7 @@ object Bench {
     val otherCpu = (for ((w0, b0, o0) <- clockAtStart; (w1, b1, o1) <- cpuClock())
       yield math.max(0.0, ((b1 - b0) - (o1 - o0)) / math.max(1e-9, w1 - w0))).getOrElse(-1.0)
     val env = s""","load1":${num("%.2f", loadAtStart)},"other_jvms":$otherJvms,"cached_mb":$cachedMb,"other_cpu":${num("%.2f", otherCpu)}"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"elided":${ok.length - slowest.length},"failed":$failedJson,"n_queries":${names.length},"streaming_sec":$streamingSec,"streaming_n":$streamingN$prevRegistryJson,"compiles":$compiled$env,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"elided":${ok.length - slowest.length},"failed":$failedJson,"n_queries":${names.length},"streaming_sec":$streamingSec,"streaming_n":$streamingN$prevRegistryJson,"compiles":$compiled,"jobs":${jobs.get}$env,"sf":"$sfDir"}"""
     // Full-precision, uncapped dump for offline analysis (scaling curves):
     // SPARK_GRAFT_BENCH_OUT=path writes every query's timing to a file,
     // where the stdout line stays within the driver's tail budget. When
@@ -199,19 +218,15 @@ object Bench {
     // stdout schema is unchanged.
     val sidecar = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_bench_${spark.sparkContext.applicationId}.json").getAbsolutePath)
+        s"graft_bench_$appId.json").getAbsolutePath)
     val full = results.map { case (k, v) => "\"" + k + "\":" + num("%.3f", v) }
       .mkString("{", ",", "}")
-    val json = s"""{"total":$total,"queries":$full,"failed":$failedJson,"streaming_sec":$streamingSec,"streaming_n":$streamingN$prevRegistryJson,"compiles":$compiled$env,"sf":"$sfDir","cpus":$cpus}"""
+    val json = s"""{"total":$total,"queries":$full,"failed":$failedJson,"streaming_sec":$streamingSec,"streaming_n":$streamingN$prevRegistryJson,"compiles":$compiled,"jobs":${jobs.get}$env,"sf":"$sfDir","cpus":$cpus}"""
     scala.util.Try(java.nio.file.Files.write(java.nio.file.Paths.get(sidecar),
       json.getBytes("UTF-8"))) match {
       case scala.util.Success(_) => System.err.println(s"[bench] sidecar: $sidecar")
       case scala.util.Failure(e) => System.err.println(s"[bench] sidecar write to $sidecar failed: $e")
     }
-    // stop() BEFORE the metric line: Spark shutdown must not interleave
-    // anything with (or after) the one JSON line the driver tails —
-    // only sbt's own [success] trailer follows it now.
-    spark.stop()
     println(line)
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.sql.types.{IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.expressions.{BloomMightContainLong, CharGramHash, JsNumberString, JsToFixed, LshBuckets, ShingleHash, TokenMask, TokenMatchCount, VecCosine, VecDistSq, VecDiv, VecDot, VecMaxAbs, VecQuantize}
-import graft.plans.{AsofGE, AsofJoinStrategy, AsofLE, AsofNear, AsofSqlRule}
+import graft.plans.{AsofGE, AsofJoinStrategy, AsofLE, AsofNear, AsofSqlRule, SingleSplitScanStrategy}
 
 /** Production registration path: build the session with
   *
@@ -20,7 +20,12 @@ import graft.plans.{AsofGE, AsofJoinStrategy, AsofLE, AsofNear, AsofSqlRule}
   *  - `vec_dot(a, b)` / `vec_cosine(a, b)` as native SQL functions
   *    (same codegen'd expressions the Scala API uses), and
   *  - the merge as-of join strategy, so `graft.plans.AsofJoin` logical
-  *    nodes plan without calling `Asof.join`'s self-registration.
+  *    nodes plan without calling `Asof.join`'s self-registration, and
+  *  - the one-split scan strategy ([[graft.plans.SingleSplitScanStrategy]]):
+  *    a batch file scan whose files pack into one split plans as one
+  *    partition, so a small query's aggregates, windows, sorts and joins
+  *    run without exchanges. Multi-split, streaming and bucketed scans
+  *    plan as Spark plans them.
   *
   * It also fits Spark's generated-code cache to the registry
   * ([[GraftExtensions.CodegenDefaults]]), as JVM defaults that a `-D`
@@ -39,6 +44,12 @@ import graft.plans.{AsofGE, AsofJoinStrategy, AsofLE, AsofNear, AsofSqlRule}
   *    30 KB each: after one registry pass the JVM holds 41 MB more live
   *    heap than on the default cache, and after two passes of the
   *    perfbench batch set (176 classes) 1.8 MB more.
+  *
+  * In the same way it makes [[graft.streaming.LocalCheckpointFileManager]]
+  * the JVM default checkpoint manager
+  * ([[GraftExtensions.CheckpointDefaults]]): streams checkpoint through the
+  * Hadoop `FileSystem` API on `file:` paths, whose rename forks no
+  * `readlink`, and through `FileContext` elsewhere.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -66,7 +77,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.CodegenDefaults.foreach { case (k, v) => sys.props.getOrElseUpdate(k, v) }
+    (GraftExtensions.CodegenDefaults ++ GraftExtensions.CheckpointDefaults)
+      .foreach { case (k, v) => sys.props.getOrElseUpdate(k, v) }
     ext.injectFunction(fn("vec_dot", es => VecDot(es(0), es(1))))
     ext.injectFunction(fn("vec_cosine", es => VecCosine(es(0), es(1))))
     ext.injectFunction(fn("vec_distsq", es => VecDistSq(es(0), es(1))))
@@ -154,6 +166,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(fn("asof_near", es => AsofNear(es(0), es(1))))
     ext.injectResolutionRule(_ => AsofSqlRule)
     ext.injectPlannerStrategy(_ => AsofJoinStrategy)
+    ext.injectPlannerStrategy(_ => SingleSplitScanStrategy)
   }
 }
 
@@ -179,4 +192,11 @@ object GraftExtensions {
   val CodegenDefaults: Seq[(String, String)] = Seq(
     "spark.sql.codegen.cache.maxEntries" -> "2000",
     "spark.sql.codegen.useIdInClassName" -> "false")
+
+  /** The manager Spark's `CheckpointFileManager.create` instantiates for
+    * every offset log, commit log and state store: commits on `file:`
+    * paths fork no `readlink` ([[graft.streaming.LocalCheckpointFileManager]]). */
+  val CheckpointDefaults: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[graft.streaming.LocalCheckpointFileManager].getName)
 }

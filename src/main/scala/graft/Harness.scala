@@ -38,8 +38,12 @@ object Harness {
       // rely on the per-operator widen() (Similarity.scala), which
       // repartitions only when a scan yields fewer splits than cores.
       // openCost=1m keeps many-small-file dirs from collapsing into a
-      // single packed partition for the same reason. See README
-      // "Operational notes".
+      // single packed partition for the same reason. A scan whose files
+      // still pack into one split plans as one partition
+      // (graft.plans.SingleSplitScanStrategy): the query above it runs
+      // without exchanges, and widen() still repartitions heavy per-row
+      // work. At scale every scan is multi-split and that rule never
+      // fires. See README "Operational notes".
       .config("spark.sql.files.maxPartitionBytes", "8m")
       .config("spark.sql.files.openCostInBytes", "1m")
       .config("spark.sql.session.timeZone", "UTC")

@@ -433,9 +433,14 @@ object Similarity {
     * [[probedCellSet]]) — runtime DPP cannot reach scans under a Union. */
   private def liveCells(s: SparkSession, indexDir: String, m: IvfManifest,
                         a: String, batchesOnly: Boolean = false): DataFrame =
+    liveRoots(s, indexDir, m, a, batchesOnly).reduce(_ unionByName _)
+
+  /** [[liveCells]]'s roots, one frame each, base first. */
+  private def liveRoots(s: SparkSession, indexDir: String, m: IvfManifest,
+                        a: String, batchesOnly: Boolean = false): Seq[DataFrame] =
     ((if (batchesOnly) Nil else Seq((s"$indexDir/$a", 0L))) ++
       m.log.batches.map(b => (s"$indexDir/batches/$b/$a", rootSeq(b))))
-      .map { case (p, sq) => readRoot(s, p, sq, m) }.reduce(_ unionByName _)
+      .map { case (p, sq) => readRoot(s, p, sq, m) }
 
   /** The CURRENT codebook artifact: the build writes `codebook.parquet`
     * (version 0); every [[ivfRefit]] stages a new
@@ -755,7 +760,8 @@ object Similarity {
       return 0
     }
     val cbCtrs = centroids(s, indexDir, m, "ivfRefit")
-    val live = liveCells(s, indexDir, m, "cells.parquet").select("id", "emb", "cell")
+    val roots = liveRoots(s, indexDir, m, "cells.parquet")
+    val live = roots.reduce(_ unionByName _).select("id", "emb", "cell")
     val target = fitSampleSize(2)
     val M = 1L << 40
     // per hot cell: sample-fit a 2-means on the cell's own rows. A cell
@@ -765,7 +771,14 @@ object Similarity {
     // is UNSPLITTABLE by geometry: skip it (logged) rather than throw,
     // so the O(hot-cells) remedy stays usable on the remaining cells.
     val fits: Seq[(Int, Array[Array[Double]])] = hot.flatMap { c =>
-      val rowsC = live.filter(col("cell") === c).select("id", "emb")
+      // k-means|| seeds its centers per input partition, so the fit reads
+      // the cell with each root's own partitions, as an RDD union. A SQL
+      // union of one-split roots plans as ONE partition (UnionExec keeps
+      // its children's equal SinglePartition), which would move the
+      // fitted centers with the planner.
+      val perRoot = roots.map(_.filter(col("cell") === c).select("id", "emb"))
+      val rowsC = s.createDataFrame(
+        s.sparkContext.union(perRoot.map(_.rdd)), perRoot.head.schema)
       val nC = counts(c)
       val fitBase =
         if (nC <= target) rowsC

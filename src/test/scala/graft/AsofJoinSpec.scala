@@ -172,15 +172,30 @@ class AsofJoinSpec extends AnyFunSuite with SparkTestBase {
     assert(got === "ahead", s"overflow flipped the nearest pick: got $got")
   }
 
-  test("plan shape: one exchange+sort per side, no blow-up operators") {
-    val events = Tables.events(spark, SF)
+  /** Executed plan of the purchase-to-click as-of join over `events`. */
+  private def asofPlan(events: org.apache.spark.sql.DataFrame): String = {
     val l = events.filter(col("event_type") === "purchase")
     val r = events.filter(col("event_type") === "click")
-    val planStr = Asof.join(l, r, "user_id", "ts")
-      .queryExecution.executedPlan.toString
+    Asof.join(l, r, "user_id", "ts").queryExecution.executedPlan.toString
+  }
+
+  test("plan shape: one exchange+sort per side, no blow-up operators") {
+    // the same events written as two files: a multi-split scan, which the
+    // one-split scan rule leaves to Spark's exchanges
+    val dir = scratchDir("asof_events_").getAbsolutePath + "/events"
+    Tables.events(spark, SF).repartition(2).write.parquet(dir)
+    val planStr = asofPlan(spark.read.parquet(dir))
     assert(planStr.contains("AsofJoin"), planStr) // nodeName strips "Exec"
     assert(planStr.split("Exchange hashpartitioning").length == 3,
       s"expected exactly one shuffle per side:\n$planStr")
+    assert(!planStr.contains("CartesianProduct") && !planStr.contains("BroadcastNestedLoop"),
+      s"asof must not plan a product:\n$planStr")
+  }
+
+  test("plan shape: a one-split events scan plans the as-of join with no exchange") {
+    val planStr = asofPlan(Tables.events(spark, SF))
+    assert(planStr.contains("AsofJoin"), planStr)
+    assert(!planStr.contains("Exchange"), s"one split needs no shuffle:\n$planStr")
     assert(!planStr.contains("CartesianProduct") && !planStr.contains("BroadcastNestedLoop"),
       s"asof must not plan a product:\n$planStr")
   }

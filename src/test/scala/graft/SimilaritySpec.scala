@@ -588,8 +588,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     assert(a === b)
   }
 
-  test("ivfCompact trusts a current-format (0,0) replay pair — no backfill on mv=2") {
-    val idx = scratchDir("ivf_mv2_").getAbsolutePath
+  test("ivfCompact carries a zeroed (0,0) replay pair through unchanged") {
+    val idx = scratchDir("ivf_zero_pair_").getAbsolutePath
     Similarity.ivfBuild(emb.filter(col("vec_id") % 10 =!= 0), idx, nlist = 16)
     Seq(0, 10).foreach(r =>
       Similarity.ivfAppend(emb.filter(col("vec_id") % 20 === r), idx))
@@ -609,7 +609,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     Similarity.ivfCompact(spark, idx)
     val mc = Similarity.Ivf.read(idx).get
     assert(mc.log.batches.size === 1)
-    assert((mc.log.lastRows, mc.log.lastFp) === (0L, 0L), "v2 pair must survive as-is")
+    assert((mc.log.lastRows, mc.log.lastFp) === (0L, 0L), "a zeroed replay pair must survive as-is")
     // ... and with the pair meaning "no append", re-sending the last
     // batch is NOT read as a replay: it commits (multiplicity-sensitive
     // manifest), instead of being silently skipped off a backfilled pair

@@ -1,10 +1,7 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Tables
 
@@ -12,43 +9,12 @@ import graft.sources.Tables
   * on later reads. This spec pins the memo's contract: a repeat read runs
   * no job and returns the same frame, a table rewritten in place is
   * re-inferred, and a missing table fails the same way every time. */
-class TablesSchemaSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll {
+class TablesSchemaSpec extends AnyFunSuite with JobCounting {
 
-  /** Descriptions of every job started on the shared context. Listener
-    * events arrive asynchronously, so [[jobsDuring]] ends with a fence job
-    * and waits for it: the bus delivers in order, so once the fence is
-    * seen every job `body` started has been counted. */
-  private val started = new ConcurrentLinkedQueue[String]()
-  private val listener = new SparkListener {
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      started.add(Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-  }
-  private var fences = 0
   private val tmpRoot = java.nio.file.Files.createTempDirectory("graft_schema_").toFile
 
-  override def beforeAll(): Unit = spark.sparkContext.addSparkListener(listener)
-
-  override def afterAll(): Unit = {
-    spark.sparkContext.removeSparkListener(listener)
-    core.rmTree(tmpRoot)
-  }
-
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    started.clear()
-    val out = body
-    fences += 1
-    val fence = s"tables-schema-fence-$fences"
-    val sc = spark.sparkContext
-    sc.setJobDescription(fence)
-    try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    while (!started.contains(fence)) {
-      assert(System.nanoTime() < deadline, s"fence job $fence never reached the listener")
-      Thread.sleep(10)
-    }
-    (out, started.size - 1)
-  }
+  override def afterAll(): Unit =
+    try core.rmTree(tmpRoot) finally super.afterAll()
 
   test("a repeat read runs no job and returns the same schema and rows") {
     // a fresh session has a cold memo whatever the earlier suites read
